@@ -7,7 +7,8 @@ Prints ONE JSON line:
    "queries": {...per-query seconds...}, "sf": ...}
 
 The headline metric follows BASELINE.md: probe images joined+tiled per
-second on the flagship spatial cell-join (J7).
+second on the flagship spatial cell-join (J7). The rows are the
+registry's ``bench=True`` entries, each timed by ``queries.time_query``.
 """
 
 from __future__ import annotations
@@ -15,97 +16,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 from osm_io_spark import queries as Q
-from osm_io_spark.session import get_spark
-
-# Trimmed per the byte-budget rule (CLAUDE.md): the seven pure-Column
-# text transforms were dropped from the BENCH list when trip_segments
-# pushed the centisecond-precision stdout line past the driver's
-# 1900-byte tail capture (77 entries = 2004 bytes; 70 = 1836). They
-# remain fully parity-gated in pytest; their sub-0.1s timings carried
-# no diagnostic value. test_registry_contract now pins the TIER-2
-# (centisecond) line under budget, the invariant this incident showed
-# actually matters.
-BENCH_QUERIES = [
-    "j7_spatial_cell_join",
-    "j8_pip_refine",
-    "j9_knn_ring_expansion",
-    "j10_raster_vector",
-    "c1_zorder_tile",
-    "agg_cell_rollup",
-    "a2_bounding_box",
-    "j1_sortmerge_group_join",
-    "j4_broadcast_lookup",
-    "a4_ordered_assembly",
-    "a5_latest_version",
-    "w1_hourly_window",
-    "w2_sessionize_batch",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_embedding_ivf",
-    "dedup_phash_hamming",
-    "mm_phash_near_dup",
-    "ann_topk_cosine",
-    "ann_ivf_topk",
-    "knn_graph",
-    "knn_graph_ivf",
-    "text_chunks",
-    "sample_mixture",
-    "corpus_curation",
-    "rollup_multires",
-    "o5_topk_per_group",
-    "j2_threeway_assembly",
-    "mm_decode_stats",
-    "image_curation",
-    "mm_embed_near_dup",
-    "pack_sequences",
-    "dedup_substring",
-    "mm_caption_audit",
-    "text_pii_scrub",
-    "s2_cellid",
-    "s2_containment_join",
-    "s2_distance_join",
-    "s2_cap_cover_join",
-    "s2_polygon_cover_join",
-    "s2_knn_join",
-    "s2_multires_rollup",
-    "tile_point_assign",
-    "tile_cover_assign",
-    "tile_quadkey",
-    "tile_geohash",
-    "zonal_stats",
-    "coverage_audit",
-    "overlap_join",
-    "overlap_dissolve",
-    "trip_segments",
-    "idw_interpolation",
-    "spatial_dbscan",
-    "hotspot_gistar",
-    "vector_tiles",
-    "tile_pyramid",
-    "mvt_tiles",
-    "heatmap_tiles",
-    "heatmap_pyramid",
-    "tile_retile",
-    "ctx_reverse_index",
-    "ctx_cascade_discard",
-    "ctx_relation_closure",
-    "vector_tile_points",
-    "vector_tile_lines",
-    "mvt_layered_tiles",
-]
-
-
-# Timing methodology (construct-in-timer set + per-entry overrides)
-# lives in osm_io_spark.benchdefs so the remeasure tool times EXACTLY
-# what this harness times — see that module's docstring.
-from osm_io_spark.benchdefs import BENCH_OVERRIDES, CONSTRUCT_IN_TIMER
+from osm_io_spark.session import get_bench_spark
 
 
 def main() -> None:
@@ -118,18 +31,9 @@ def main() -> None:
     sys.stdout = sys.stderr
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_spark("osm-io-spark-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Python-worker warm-up: the first pandas-UDF stage of a session
-    # pays worker-pool spawn + per-worker numpy/pandas import — a
-    # once-per-executor cost on a real cluster, not a per-query cost.
-    # Pay it before the timing loop (same rationale as the j7 warm-up).
-    wdf = spark.range(0, 256, 1, int(cpus))
-    wdf.mapInPandas(lambda it: it, wdf.schema).count()
+    spark = get_bench_spark("osm-io-spark-bench", cpus)
 
     # best-of-2 by default: this box is a shared VM with bursty outside
     # load (observed loadavg 7 with zero local processes); a single cold
@@ -137,21 +41,13 @@ def main() -> None:
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
-    construct_in_timer = CONSTRUCT_IN_TIMER
-    for name in BENCH_QUERIES:
-        fn = BENCH_OVERRIDES.get(name, Q.QUERIES[name])
-        df = None if name in construct_in_timer else fn(spark, sf_dir)
-        best = None
+    for name in Q.BENCH_QUERIES:
         # the headline query gets a warm-up (JIT/broadcast/codegen are
         # once-per-cluster costs at real scale, not per-query)
-        n_runs = repeats + 1 if name == "j7_spatial_cell_join" else repeats
-        for i in range(n_runs):
-            t0 = time.perf_counter()
-            rows[name] = (df if df is not None else fn(spark, sf_dir)).count()
-            el = time.perf_counter() - t0
-            if i > 0 or n_runs == repeats:
-                best = el if best is None else min(best, el)
-        timings[name] = round(best, 4)
+        warmup = 1 if name == "j7_spatial_cell_join" else 0
+        samples, rows[name] = Q.time_query(spark, sf_dir, name, repeats,
+                                           warmup)
+        timings[name] = round(min(samples), 4)
         print(f"# {name}: {timings[name]:.2f}s rows={rows[name]}", file=sys.stderr)
 
     n_images = Q.images_probe(spark, sf_dir).count()
@@ -163,37 +59,22 @@ def main() -> None:
     # no longer parsed and the headline metric never reached the gate).
     print(f"# rows: {json.dumps(rows)}", file=sys.stderr)
 
-    line = json.dumps({
-        "metric": "images_joined_tiled_per_sec",
-        "value": round(throughput, 2),
-        "unit": "sec",
-        "queries": timings,
-        "n_images": n_images,
-        "cpus": int(cpus),
-        "sf": float(sf),
-    }, separators=(",", ":"))
-    if len(line) > 1900:  # stay inside the driver's tail-capture window
-        # first fallback: keep EVERY per-query timing, at centisecond
-        # precision (full resolution stays in the BENCH md files) —
-        # dropping the dict is the last resort, not the first
+    # Stay inside the driver's 1900-byte tail capture: first keep EVERY
+    # per-query timing at centisecond precision (full resolution stays
+    # in the BENCH md files); dropping the dict is the last resort.
+    for queries in (timings, {k: round(v, 2) for k, v in timings.items()},
+                    None):
         line = json.dumps({
             "metric": "images_joined_tiled_per_sec",
             "value": round(throughput, 2),
             "unit": "sec",
-            "queries": {k: round(v, 2) for k, v in timings.items()},
+            **({} if queries is None else {"queries": queries}),
             "n_images": n_images,
-            "cpus": int(cpus),
+            "cpus": cpus,
             "sf": float(sf),
         }, separators=(",", ":"))
-    if len(line) > 1900:
-        line = json.dumps({
-            "metric": "images_joined_tiled_per_sec",
-            "value": round(throughput, 2),
-            "unit": "sec",
-            "n_images": n_images,
-            "cpus": int(cpus),
-            "sf": float(sf),
-        }, separators=(",", ":"))
+        if len(line) <= 1900:
+            break
     os.write(real_stdout, (line + "\n").encode())
 
 

@@ -22,7 +22,7 @@ oracle generation). Unit tests assert all three agree.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_RES = 29  # 2*29+1 = 59 bits < 63 (signed long safe)
@@ -210,6 +210,27 @@ def cell_at_col(lat: Column, lon: Column, res: int) -> Column:
 
 def cell_parent_col(cell: Column, steps: int = 1) -> Column:
     return F.shiftright(cell, 2 * steps)
+
+
+def disk3_fanout(df: DataFrame, res: int, x: str, y: str,
+                 out_x: str, out_y: str) -> DataFrame:
+    """One row per cell (``out_x``, ``out_y``) of each row's 3×3
+    Chebyshev disk around (``x``, ``y``) on the res-``res`` grid:
+    longitude wraps mod 2^res, latitude clamps (offsets past a pole are
+    dropped). Raises ValueError below 3 grid columns, where the ±1
+    x-offsets wrap onto the same column and one neighbour would be
+    emitted two or three times."""
+    n = 1 << res
+    if n < 3:
+        raise ValueError(
+            f"3x3 cell fan-out needs >= 3 grid columns; res {res} has {n}")
+    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    return (df.withColumn("_o", F.explode(off))
+            .withColumn(out_y, F.col(y) + F.col("_o.dy"))
+            .filter((F.col(out_y) >= 0) & (F.col(out_y) < n))
+            .withColumn(out_x, F.pmod(F.col(x) + F.col("_o.dx"), F.lit(n)))
+            .drop("_o"))
 
 
 # ---------------------------------------------------------------------------

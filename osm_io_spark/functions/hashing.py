@@ -5,15 +5,13 @@ functions, so oracle-checked dedup/LSH operators derive integer hashes
 from MD5 (identical bytes→hex in every engine): the top 15 hex chars give
 a deterministic non-negative 60-bit integer.
 
-Three synchronized forms: numpy/pandas kernel, PySpark Column, SQL text.
+Three synchronized forms: Python scalar, PySpark Column, SQL text.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -22,37 +20,9 @@ def hash64_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def hash64_pd(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: hash64_py(v) if v is not None else None).astype("int64")
-
-
 def hash64_col(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
 
 def hash64_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5(CAST(({expr}) AS VARCHAR)), 1, 15)) AS BIGINT)"
-
-
-def minhash_perm_col(token: Column, seed: int) -> Column:
-    """Seeded hash family h_seed(token) for MinHash signatures."""
-    return hash64_col(F.concat(F.lit(f"{seed}:"), token))
-
-
-def minhash_perm_sql(token_expr: str, seed: int) -> str:
-    return hash64_sql(f"'{seed}:' || ({token_expr})")
-
-
-def simhash_bits_np(hashes: np.ndarray, nbits: int = 64) -> np.ndarray:
-    """SimHash: given per-token 64-bit hashes for ONE document, fold into
-    an nbits fingerprint (bit b set iff majority of tokens have bit b)."""
-    h = np.asarray(hashes, np.uint64)
-    acc = np.zeros(nbits, np.int64)
-    for b in range(nbits):
-        bits = (h >> np.uint64(b)) & np.uint64(1)
-        acc[b] = int(2 * bits.sum() - len(h))  # +1 / -1 votes
-    out = np.uint64(0)
-    for b in range(nbits):
-        if acc[b] > 0:
-            out |= np.uint64(1) << np.uint64(b)
-    return np.int64(out)

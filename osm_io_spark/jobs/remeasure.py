@@ -1,12 +1,9 @@
 """Targeted best-of-N re-measurement of specific bench entries.
 
-Round-4 verdict item #3/#6: three entries regressed ≥15% in the r4
-driver bench run in the same session where ten others regressed and
-twelve improved — the signature of ambient load on this shared VM, not
-of a code change. This job re-times ONLY the named entries on demand
-with the exact bench.py methodology (same session config, same
-construct-in-timer set, same warm-up) at a higher repeat count, and
-records uptime/loadavg alongside so the number is interpretable.
+Re-times ONLY the named registry entries, with the bench.py timing
+(``queries.time_query``, the same session setup) at a higher repeat
+count, and records loadavg alongside so the number is interpretable on
+a shared box — for telling ambient noise from a code change.
 
     python -m osm_io_spark.jobs.remeasure \
         --queries dedup_embedding_ivf,corpus_curation,dedup_phash_hamming \
@@ -18,10 +15,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import time
 
-from ..benchdefs import BENCH_OVERRIDES, CONSTRUCT_IN_TIMER
-from ..session import get_spark
+from ..queries import time_query
+from ..session import get_bench_spark
+
+
+def _loadavg() -> list[str]:
+    with open("/proc/loadavg") as f:
+        return f.read().split()[:3]
 
 
 def run(argv: list[str] | None = None) -> dict:
@@ -30,35 +31,20 @@ def run(argv: list[str] | None = None) -> dict:
                     help="comma-separated registry names")
     ap.add_argument("--repeats", type=int, default=5)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--out", default=None)
     args = ap.parse_args(argv)
 
-    with open("/proc/loadavg") as f:
-        load_before = f.read().split()[:3]
-
-    spark = get_spark("remeasure", master=f"local[{args.cpus}]",
-                      shuffle_partitions=args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    wdf = spark.range(0, 256, 1, args.cpus)
-    wdf.mapInPandas(lambda it: it, wdf.schema).count()  # worker warm-up
-
-    from .. import queries as Q
-
+    load_before = _loadavg()
+    spark = get_bench_spark("remeasure", args.cpus)
     results = {}
     for name in args.queries.split(","):
-        fn = BENCH_OVERRIDES.get(name, Q.QUERIES[name])
-        df = None if name in CONSTRUCT_IN_TIMER else fn(spark, args.sf_dir)
-        samples = []
-        for _ in range(args.repeats):
-            t0 = time.perf_counter()
-            n = (df if df is not None else fn(spark, args.sf_dir)).count()
-            samples.append(round(time.perf_counter() - t0, 3))
+        samples, n = time_query(spark, args.sf_dir, name, args.repeats)
+        samples = [round(s, 3) for s in samples]
         results[name] = {"best": min(samples), "all": samples, "rows": n}
         print(f"# {name}: best={min(samples)} all={samples}", flush=True)
+    load_after = _loadavg()
 
-    with open("/proc/loadavg") as f:
-        load_after = f.read().split()[:3]
     out = {"results": results, "cpus": args.cpus, "sf_dir": args.sf_dir,
            "loadavg_before": load_before, "loadavg_after": load_after}
     print(json.dumps(out))
@@ -68,7 +54,7 @@ def run(argv: list[str] | None = None) -> dict:
         md = ["# BENCH/R5_REMEASURE — targeted re-timing of r4 bench "
               "regressions", "",
               f"bench.py methodology (local[{args.cpus}], `{args.sf_dir}`, "
-              f"construct-in-timer per bench.py), best of {args.repeats}; "
+              f"built inside the timer), best of {args.repeats}; "
               f"loadavg before {' '.join(load_before)} / after "
               f"{' '.join(load_after)} (CLAUDE.md: check load before "
               "timing anything).", "",

@@ -75,6 +75,8 @@ def _fine_res(eps: float, max_res: int = 30) -> int | None:
     it)."""
     need = 180.0 * math.sqrt(5.0) / eps
     r = math.ceil(math.log2(need)) if need > 1 else 0
+    if 180.0 * math.sqrt(5.0) / (1 << r) > eps:  # log2 rounded down
+        r += 1
     return r if r <= max_res else None
 
 
@@ -152,7 +154,8 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     CC contraction treat two far-apart invalid points as same-cell
     neighbors. ``eps`` is in degrees under the planar
     squared-euclidean metric (see module docstring), ``min_pts``
-    counts the point itself.
+    counts the point itself. eps > 45° raises ValueError: its grid is
+    narrower than the 3 columns the neighbour fan-out needs.
     """
     if eps <= 0:
         raise ValueError(f"eps must be positive, got {eps}")
@@ -187,14 +190,8 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     # Σ_{cells c,d adjacent} count(c)·count(d) including c = d.
     cellcounts = pts.groupBy("_gx", "_gy").agg(
         F.count(F.lit(1)).alias("_n"))
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    probe_cells = (cellcounts
-                   .withColumn("_o", F.explode(off))
-                   .withColumn("_ny", F.col("_gy") + F.col("_o.dy"))
-                   .filter((F.col("_ny") >= 0) & (F.col("_ny") < n))
-                   .withColumn("_nx", F.pmod(F.col("_gx") + F.col("_o.dx"),
-                                             F.lit(n)))
+    probe_cells = (C.disk3_fanout(cellcounts, res, "_gx", "_gy",
+                                  "_nx", "_ny")
                    .select((F.col("_nx") * n + F.col("_ny")).alias("_key"),
                            F.col("_n").alias("_np")))
     build_cells = cellcounts.select(
@@ -215,12 +212,7 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
 
     # --- directed candidate pairs: probe fans out to its 3×3 disk,
     # build stays on its own cell; refine with the exact metric.
-    probe = (pts
-             .withColumn("_o", F.explode(off))
-             .withColumn("_py", F.col("_gy") + F.col("_o.dy"))
-             .filter((F.col("_py") >= 0) & (F.col("_py") < n))
-             .withColumn("_px", F.pmod(F.col("_gx") + F.col("_o.dx"),
-                                       F.lit(n)))
+    probe = (C.disk3_fanout(pts, res, "_gx", "_gy", "_px", "_py")
              .select(F.col("_id").alias("_ida"),
                      F.col("_lat").alias("_lata"),
                      F.col("_lon").alias("_lona"),

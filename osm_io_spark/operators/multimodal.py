@@ -2,10 +2,9 @@
 metadata (w, h, fmt), processed with Arrow-batched mapInPandas kernels.
 
 Real codecs for the in-repo formats (raw, q5 — functions.images);
-jpeg/png/webp/audio/video decode is STUBBED with NotImplementedError
-because no media libraries exist in this container — the Spark-side
-plumbing (schema, batch shape, partitioning) is identical and is what
-these operators test.
+jpeg/png/webp decode raises NotImplementedError (no media libraries are
+installed) — the Spark-side plumbing (schema, batch shape,
+partitioning) is identical and is what these operators test.
 """
 
 from __future__ import annotations
@@ -151,35 +150,6 @@ def image_embed(images: DataFrame, grid: int = 4) -> DataFrame:
 
     return (images.select("image_id", "bytes", "w", "h", "fmt")
             .mapInPandas(_embed, schema=schema))
-
-
-def frame_sample(videos: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling — container has no video codec; the operator
-    exists to pin the schema/signature. Raises on execution."""
-
-    def _sample(batches):
-        for pdf in batches:
-            if len(pdf):
-                raise NotImplementedError(
-                    "video decode unavailable in this environment "
-                    "(no ffmpeg/cv2); plumbing-only stub")
-            yield pdf
-
-    return videos.mapInPandas(_sample, schema=videos.schema)
-
-
-def audio_features(audio: DataFrame) -> DataFrame:
-    """Audio feature extraction stub (no soundfile/librosa here)."""
-
-    def _feat(batches):
-        for pdf in batches:
-            if len(pdf):
-                raise NotImplementedError(
-                    "audio decode unavailable in this environment; "
-                    "plumbing-only stub")
-            yield pdf
-
-    return audio.mapInPandas(_feat, schema=audio.schema)
 
 
 INVARIANTS = T.StructType([

@@ -72,15 +72,3 @@ def pack_sequences(docs: DataFrame, seq_len: int,
                F.col("_cum_before") - F.col("seq_id") * seq_len)))
     return out.select(id_col, "n_tokens", "seq_id", "tok_start",
                       "tok_len", "seq_offset")
-
-
-def pack_stats(packed: DataFrame, seq_len: int) -> DataFrame:
-    """Per-sequence fill audit over :func:`pack_sequences` output:
-    (seq_id, n_docs, n_tokens, full) — every sequence must hold
-    exactly seq_len tokens except the final partial one; ``full`` is
-    the precomputed n_tokens == seq_len flag. One groupBy on seq_id
-    (bounded: total_tokens/seq_len groups)."""
-    return (packed.groupBy("seq_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("tok_len").alias("n_tokens"),
-                 (F.sum("tok_len") == F.lit(seq_len)).alias("full")))

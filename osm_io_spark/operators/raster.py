@@ -42,7 +42,7 @@ def gi_star(points: DataFrame, res: int,
     scale; the statistic is defined over that universe and documented
     as such). Weights: binary 3×3 Chebyshev disk including self
     (longitude wraps mod 2^res, latitude clamps — the J9/DBSCAN grid
-    convention). For cell i with count x_i, k_i occupied neighbors and
+    convention); res < 2 raises ValueError (fewer than 3 columns). For cell i with count x_i, k_i occupied neighbors and
     neighbor sum s_i, over n occupied cells with Σx, Σx²:
 
         x̄  = Σx/n,   S = sqrt(Σx²/n − x̄²)
@@ -61,7 +61,6 @@ def gi_star(points: DataFrame, res: int,
 
     Returns (gx, gy, x, k_nbrs, nbr_sum, gi_z) sorted nowhere —
     order-insensitive consumers only."""
-    n_grid = 1 << res
     x, y = C.xy_at_col(F.col(lat_col), F.col(lon_col), res)
     cells = (points.select(x.alias("_gx"), y.alias("_gy"))
              .groupBy("_gx", "_gy").agg(F.count(F.lit(1)).alias("_x"))
@@ -72,14 +71,7 @@ def gi_star(points: DataFrame, res: int,
         F.sum("_x").alias("_sx"),
         F.sum(F.col("_x") * F.col("_x")).alias("_sxx"))
 
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                    for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    probe = (cells
-             .withColumn("_o", F.explode(off))
-             .withColumn("_ny", F.col("_gy") + F.col("_o.dy"))
-             .filter((F.col("_ny") >= 0) & (F.col("_ny") < n_grid))
-             .withColumn("_nx", F.pmod(F.col("_gx") + F.col("_o.dx"),
-                                       F.lit(n_grid)))
+    probe = (C.disk3_fanout(cells, res, "_gx", "_gy", "_nx", "_ny")
              .select("_gx", "_gy",
                      F.col("_nx").alias("_jx"), F.col("_ny").alias("_jy")))
     nbr = (probe.join(cells.select(F.col("_gx").alias("_jx"),
@@ -96,10 +88,11 @@ def gi_star(points: DataFrame, res: int,
     num = d("_s") - xbar * d("_k")
     den = s_dev * F.sqrt((d("_n") * d("_k") - d("_k") * d("_k"))
                          / (d("_n") - F.lit(1.0)))
-    # degenerate universes (every occupied cell neighbors every other,
-    # k = n, or all counts equal, S = 0) have no defined z — NULL, not
-    # a divide-by-zero (ANSI mode raises) or an engine-dependent ±inf
-    gi = F.when(den != F.lit(0.0), num / den)
+    # degenerate universes (one occupied cell, n = 1; every occupied
+    # cell neighbors every other, k = n; or all counts equal, S = 0)
+    # have no defined z — NULL, not a divide-by-zero (ANSI mode raises)
+    # or an engine-dependent NaN / ±inf
+    gi = F.when((d("_n") > F.lit(1.0)) & (den != F.lit(0.0)), num / den)
     return (cells.join(nbr, ["_gx", "_gy"])
             .crossJoin(F.broadcast(glob))
             .select(F.col("_gx").alias("gx"), F.col("_gy").alias("gy"),

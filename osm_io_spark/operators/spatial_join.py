@@ -127,14 +127,6 @@ def cover_polygon_cells_json(polygons: DataFrame, res: int,
     return covered.mapInPandas(_refine, schema=schema)
 
 
-def cover_polygon_cells(polygons: DataFrame, res: int, refine: bool = True,
-                        out: str = "cell") -> DataFrame:
-    """Struct-rings façade over cover_polygon_cells_json."""
-    c = cover_polygon_cells_json(polygons, res, refine=refine, out=out)
-    return (c.withColumn("rings", F.from_json("_rings_json", _RINGS_TYPE))
-            .drop("_rings_json"))
-
-
 # ---------------------------------------------------------------------------
 # refinement predicates
 # ---------------------------------------------------------------------------
@@ -173,16 +165,6 @@ def refine_pip_json(df: DataFrame, lat: str = "lat",
             yield pdf[keep]
 
     return df.mapInPandas(_pip, schema=schema)
-
-
-def refine_pip(df: DataFrame, lat: str = "lat", lon: str = "lon",
-               rings_col: str = "rings") -> DataFrame:
-    """Struct-rings façade over refine_pip_json."""
-    jsonified = (df.withColumn("_rings_json", F.to_json(rings_col))
-                 .drop(rings_col))
-    refined = refine_pip_json(jsonified, lat=lat, lon=lon)
-    return (refined.withColumn(rings_col, F.from_json("_rings_json", _RINGS_TYPE))
-            .drop("_rings_json"))
 
 
 # ---------------------------------------------------------------------------

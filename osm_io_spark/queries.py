@@ -20,6 +20,10 @@ comparison sound:
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -2718,9 +2722,9 @@ gstats AS (
          CAST(sum(x * x) AS BIGINT) AS sxx
   FROM cells)
 SELECT gx, gy, x, k_nbrs, nbr_sum,
-       CASE WHEN den <> 0e0 THEN num / den END AS gi_z
+       CASE WHEN n > 1 AND den <> 0e0 THEN num / den END AS gi_z
 FROM (
-  SELECT gx, gy, x, k AS k_nbrs, s AS nbr_sum,
+  SELECT gx, gy, x, k AS k_nbrs, s AS nbr_sum, n,
          (CAST(s AS DOUBLE)
           - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(k AS DOUBLE))
            AS num,
@@ -3794,339 +3798,236 @@ GROUP BY etype, action
 # registry
 # ---------------------------------------------------------------------------
 
-QUERIES = {
-    # spatial engine core
-    "j7_spatial_cell_join": q_j7_spatial_cell_join,
-    "j8_pip_refine": q_j8_pip_refine,
-    "j9_knn_ring_expansion": q_j9_knn,
-    "j10_raster_vector": q_j10_raster_vector,
-    "c1_zorder_tile": q_c1_zorder_tile,
-    # true S2 index — rotated INTO the driver window in round 5 (the
-    # r4 flagship capability deserves hard-gate visibility; see the
-    # swap policy note above the rows-only tail)
-    "s2_cellid": q_s2_cellid,
-    "s2_containment_join": q_s2_containment_join,
-    # Web-Mercator slippy tiling — rotated INTO the window in round 5
-    # (swap policy below: text_repetition / text_vocab moved out; the
-    # tile fan-out has explode/partition failure modes the driver can
-    # actually catch, the two text Columns don't)
-    "tile_point_assign": q_tile_point_assign,
-    "tile_cover_assign": q_tile_cover_assign,
-    # context index — rotated INTO the window in round 5c (the
-    # reference's second roadmap item; README.md:46-48). These three
-    # carry the failure modes the window exists to catch — a gated
-    # broadcast + bool_and liveness agg (cascade), an iterative
-    # frontier join vs a genuine recursive-CTE oracle (closure), and
-    # null-safe anti joins (dangling). Rotated out per the swap policy
-    # below: text_token_count / text_token_count_bpe / text_language_id
-    # (pure Column transforms, oracles kept).
-    "ctx_cascade_discard": q_ctx_cascade_discard,
-    "ctx_relation_closure": q_ctx_relation_closure,
-    "ctx_dangling_refs": q_ctx_dangling_refs,
-    "agg_cell_rollup": q_agg_cell_rollup,
-    "a2_bounding_box": q_a2_bounding_box,
-    # relational / reference operator analogues
-    "a1_count_by_type": q_a1_count_by_type,
-    "a3_block_bbox": q_a3_block_bbox,
-    "a4_ordered_assembly": q_a4_ordered_assembly,
-    "a5_latest_version": q_a5_latest_version,
-    "a6_distinct_dims": q_a6_distinct_dims,
-    "a7_stats": q_a7_stats,
-    "o2_global_order": q_o2_global_order,
-    "o5_topk_per_group": q_o5_topk_per_group,
-    # round-5e rotation (swap policy below): the S2 distance join — the
-    # first ORACLED spherical geo-join (cap covers + containment +
-    # haversine refine vs an index-free DuckDB cross join, so the hard
-    # gate checks cover COMPLETENESS end-to-end) — and the distributed
-    # ring centroid (windowed edge-wrap decomposition vs a closed-form
-    # oracle). Rotated out: c2_fixed_point / c5_timestamp_convert
-    # (single-projection Column casts, zero join/partition risk,
-    # oracles kept for pytest parity).
-    "s2_distance_join": q_s2_distance_join,
-    "ring_centroid": q_ring_centroid,
-    # round-5f rotation (swap policy below): distributed DBSCAN — a
-    # grid self-join + distributed CC + border assignment, all failure
-    # modes the hard gate can actually catch, proven against a
-    # recursive-CTE closure oracle. Rotated out: sample_mixture (pure
-    # Column hash filter, zero join/partition risk, oracle kept).
-    "spatial_dbscan": q_spatial_dbscan,
-    # round-5f rotation #2: Gi* hotspot statistic — a cell fan-out
-    # self-join + broadcast global aggregate whose float z-score is
-    # hash-compared end-to-end. Rotated out: f1_token_filter (pure
-    # pushed-down filter, zero join/partition risk, oracle kept).
-    "hotspot_gistar": q_hotspot_gistar,
-    "f4_current_visible": q_f4_current_visible,
-    "rollup_multires": q_rollup_multires,
-    "j1_sortmerge_group_join": q_j1_sortmerge_group_join,
-    "j2_threeway_assembly": q_j2_threeway_assembly,
-    "j3_member_assembly": q_j3_member_assembly,
-    "j4_broadcast_lookup": q_j4_broadcast_lookup,
-    "w1_hourly_window": q_w1_hourly_window,
-    "w2_sessionize_batch": q_w2_sessionize_batch,
-    # text analysis
-    "text_chunks": q_text_chunks,
-    # dedup family
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_clusters": q_dedup_clusters,
-    "corpus_curation": q_corpus_curation,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_embedding_cosine": q_dedup_embedding,
-    "dedup_embedding_ivf": q_dedup_embedding_ivf,
-    "dedup_phash_hamming": q_dedup_phash_hamming,
-    "ann_topk_cosine": q_ann_topk,
-    "knn_graph": q_knn_graph,
-    # streaming queries WITH batch-SQL oracles — kept with the oracled
-    # block: the driver runs ~50 registry entries in dict order, so every
-    # ORACLES-backed entry must precede the rows-only tail (round-2
-    # lesson: these two sat past the window and got no CORRECTNESS row)
-    "stream_hourly_window": q_stream_hourly_window,
-    "stream_dedup": q_stream_dedup,
-    # multimodal invariant queries: oracled via literal expected-value
-    # tables (SQL_MM_INV/SQL_MM_STATS — the deterministic corpus makes
-    # the correct output a constant); they lead the engine-native block
-    # because the per-row PSNR/caption invariant is part of the north
-    # rule and must stay inside the driver's run window
-    "mm_row_invariants": q_mm_row_invariants,
-    "mm_decode_stats": q_mm_decode_stats,
-    # -------------------------------------------------------------
-    # DRIVER-WINDOW SWAP POLICY (round-5, verdict task #8): the driver
-    # hard-gates only the FIRST 50 entries above, in dict order; every
-    # entry below still gets full oracle parity in pytest
-    # (tests/test_oracle_parity.py runs ALL registry entries) but only
-    # a rows-only (or no) driver check. When a new oracled capability
-    # lands, rotate it INTO the window by moving out entries that are
-    # (a) cheap pure-Column transforms with no join/shuffle/partition
-    # risk, and (b) already parity-covered in pytest — the window
-    # should spend its 50 slots on operators whose failure modes the
-    # driver could actually catch (joins, covers, partitioning, codecs),
-    # not on trivial projections. Rotated out so far (r5): text_quality,
-    # text_fingerprint (both single-projection Column ops; their
-    # ORACLES entries remain, so pytest still hash-checks them).
-    # test_registry_contract.py pins the windowing invariant executably.
-    # -------------------------------------------------------------
-    # oracled-but-rotated-out (pytest parity; past the driver window)
-    "text_quality": q_text_quality,
-    "text_fingerprint": q_text_fingerprint,
-    # rotated out in round 5b for the slippy-tile pair (same policy:
-    # pure Column text transforms, zero join/partition risk, oracles
-    # kept so pytest still hash-checks them)
-    "text_repetition": q_text_repetition,
-    "text_vocab": q_text_vocab,
-    # rotated out in round 5c for the context-index trio (same policy)
-    "text_token_count": q_text_token_count,
-    "text_token_count_bpe": q_text_token_count_bpe,
-    "text_language_id": q_text_language_id,
-    # rotated out in round 5e for the S2 distance join + ring centroid
-    # (same policy: single-projection Column casts, oracles kept)
-    "c2_fixed_point": q_c2_fixed_point,
-    "c5_timestamp_convert": q_c5_timestamp_convert,
-    # rotated out in round 5f for spatial_dbscan (same policy: pure
-    # Column hash filter, oracle kept)
-    "sample_mixture": q_sample_mixture,
-    # rotated out in round 5f for hotspot_gistar (same policy: pure
-    # pushed-down filter, oracle kept)
-    "f1_token_filter": q_f1_token_filter,
-    # round-5c: the context-index reverse lookup itself — oracled,
-    # pytest-parity past the window (its three consumers above hold the
-    # window slots; this is the same one-agg plan shape)
-    "ctx_reverse_index": q_ctx_reverse_index,
-    # round-5c: OsmChange replication-diff application (oracled,
-    # pytest parity past the window; delete = visible=false per the
-    # reference's history model)
-    "osm_apply_diff": q_osm_apply_diff,
-    "osm_diff_stats": q_osm_diff_stats,
-    # round-5: cascaded S2 multires rollup — oracled (cascade proven ==
-    # direct-from-leaves), parity-gated in pytest past the window
-    "s2_multires_rollup": q_s2_multires_rollup,
-    # round-5e: Bing quadkey addressing — oracled (substring ancestor
-    # vs the oracle's arithmetic ancestor proves the prefix property),
-    # pytest parity past the window
-    "tile_quadkey": q_tile_quadkey,
-    # round-5e: zonal statistics over the flagship spatial join —
-    # oracled (exact aggregates + a single-op density divide),
-    # pytest parity past the window
-    "zonal_stats": q_zonal_stats,
-    # round-5e: geohash addressing — oracled (arithmetic-ancestor
-    # proves the prefix property), pytest parity past the window
-    "tile_geohash": q_tile_geohash,
-    # round-5 final: spatial anti-join / coverage audit — oracled
-    # (NOT EXISTS twin, integer-only output), pytest parity past the
-    # window
-    "coverage_audit": q_coverage_audit,
-    # round-5 final: rect overlap join — oracled (index-free cross-join
-    # twin proves the corner-ownership dedup exactly-once), pytest
-    # parity past the window
-    "overlap_join": q_overlap_join,
-    # round-5f: conflation dissolve — oracled (cross-join edges +
-    # recursive-CTE closure prove the distributed components), pytest
-    # parity past the window (its window-slot failure modes are the
-    # same family spatial_dbscan already holds a slot for)
-    "overlap_dissolve": q_overlap_dissolve,
-    # round-5f: trajectory segmentation — oracled (lag + running-sum
-    # window twin, w2 epoch idiom, exact-double spatial break), pytest
-    # parity past the window (window-function risk profile is w2's,
-    # which already holds a slot)
-    "trip_segments": q_trip_segments,
-    # engine-native tail (rows-only driver check; no SQL equivalent) —
-    # every ORACLES-backed key above MUST precede every key below ONLY
-    # within the 50-slot window; the rotated-out oracled entries sit
-    # here by design
-    "mm_phash_near_dup": q_mm_phash_near_dup,
-    "image_curation": q_image_curation,
-    "mm_embed_near_dup": q_mm_embed_near_dup,
-    "pbf_roundtrip_counts": q_pbf_roundtrip_counts,
-    "polygon_assembly": q_polygon_assembly,
-    "pbf_spatial_join": q_pbf_spatial_join,
-    "apidb_roundtrip_counts": q_apidb_roundtrip,
-    "ref_fixture_parity": q_ref_fixture_parity,
-    "stream_sessionize": q_stream_sessionize,
-    "stream_cell_enrich": q_stream_cell_enrich,
-    "stream_image_dedup": q_stream_image_dedup,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "knn_graph_ivf": q_knn_graph_ivf,
-    # round-4 additions (engine-native tail: DuckDB parity for the two
-    # text ops lives in tests/test_packing.py — adding a 51st+ ORACLES
-    # entry would push an existing oracled entry out of the driver's
-    # 50-entry window, so their parity is pytest-pinned instead)
-    "pack_sequences": q_pack_sequences,
-    "dedup_substring": q_dedup_substring,
-    "mm_caption_audit": q_mm_caption_audit,
-    "text_pii_scrub": q_text_pii_scrub,
-    # spherical cover joins: rows-only (cover planning is driver-side
-    # numpy; brute-force-verified in tests/test_s2.py)
-    "s2_cap_cover_join": q_s2_cap_cover_join,
-    "s2_polygon_cover_join": q_s2_polygon_cover_join,
-    # round-5: OSM-assembled polygons through the S2 spine (distributed
-    # covers + holes; brute-force-verified in tests/test_s2_osm_join.py)
-    "s2_osm_polygon_join": q_s2_osm_polygon_join,
-    # round-5: exact spherical kNN on the S2 index (brute-force parity
-    # in tests/test_s2_knn.py)
-    "s2_knn_join": q_s2_knn_join,
-    # round-5 final: IDW interpolation over the spherical kNN —
-    # rows-only (float trig output); numpy all-pairs referee in
-    # tests/test_idw.py
-    "idw_interpolation": q_idw_interpolation,
-    # round-5: streaming enrichment on the S2 index (stateless encode +
-    # stream-static hierarchical containment join)
-    "stream_s2_enrich": q_stream_s2_enrich,
-    # round-5: vector-tile building (clip+simplify+quantize kernels are
-    # recursive numpy — no SQL equivalent; brute-force parity vs a
-    # pure-Python reference in tests/test_tiles.py)
-    "vector_tiles": q_vector_tiles,
-    # round-5: slippy heatmap pyramid (oracled: cascade proven ==
-    # direct-from-leaves per level; pytest parity past the window)
-    "tile_pyramid": q_tile_pyramid,
-    # round-5: MVT binary tile sink (rows-only; golden wire bytes +
-    # roundtrip decode in tests/test_tiles.py)
-    "mvt_tiles": q_mvt_tiles,
-    # round-5: PNG heatmap raster sink (oracled on the binning stats;
-    # pixel parity pytest-proven) + incremental re-tile (rows-only)
-    "heatmap_tiles": q_heatmap_tiles,
-    "heatmap_pyramid": q_heatmap_pyramid,
-    "tile_retile": q_tile_retile,
-    # round-5: streaming spatio-temporal tile density (oracled:
-    # watermarked windowed counts == batch SQL; pytest parity)
-    "stream_tile_heatmap": q_stream_tile_heatmap,
-    # round-5c: the roadmap's cascade-discard example on the real OSM
-    # path (PBF fixture; brute-force pandas parity in
-    # tests/test_context.py)
-    "ctx_pbf_discard": q_ctx_pbf_discard,
-    # round-5: geodesic measures (ST_Length/ST_Area analogues) over the
-    # assembled OSM fixture — rows-only (trig is not cross-engine
-    # bit-exact); analytic goldens + independent Girard referee in
-    # tests/test_measures.py
-    "osm_geodesic_stats": q_osm_geodesic_stats,
-    # round-5d: the MVT geometry types the polygon path lacked — point
-    # features (oracled: pure Column fan-out, DuckDB VALUES cross
-    # join), line features (open-polyline clip kernel, dual-refereed in
-    # tests/test_tile_lines.py), and the complete multi-layer tile blob
-    "vector_tile_points": q_vector_tile_points,
-    "vector_tile_lines": q_vector_tile_lines,
-    "mvt_layered_tiles": q_mvt_layered_tiles,
-}
 
-ORACLES = {
-    "j7_spatial_cell_join": SQL_J7,
-    "j8_pip_refine": SQL_J8,
-    "j9_knn_ring_expansion": SQL_J9,
-    "j10_raster_vector": SQL_J10,
-    "c1_zorder_tile": SQL_C1,
-    "agg_cell_rollup": SQL_ROLLUP,
-    "a2_bounding_box": SQL_A2,
-    "a1_count_by_type": SQL_A1,
-    "a3_block_bbox": SQL_A3,
-    "a4_ordered_assembly": SQL_A4,
-    "a5_latest_version": SQL_A5,
-    "a6_distinct_dims": SQL_A6,
-    "a7_stats": SQL_A7,
-    "o2_global_order": SQL_O2,
-    "o5_topk_per_group": SQL_O5,
-    "c2_fixed_point": SQL_C2,
-    "c5_timestamp_convert": SQL_C5,
-    "f4_current_visible": SQL_F4,
-    "rollup_multires": SQL_ROLLUP_MR,
-    "j1_sortmerge_group_join": SQL_J1,
-    "j2_threeway_assembly": SQL_J2,
-    "j3_member_assembly": SQL_J3,
-    "j4_broadcast_lookup": SQL_J4,
-    "w1_hourly_window": SQL_W1,
-    "w2_sessionize_batch": SQL_W2,
-    "f1_token_filter": SQL_F1,
-    "text_token_count": SQL_TOKENS,
-    "text_token_count_bpe": SQL_TOKENS_BPE,
-    "sample_mixture": SQL_SAMPLE_MIX,
-    "text_chunks": SQL_TEXT_CHUNKS,
-    "text_language_id": SQL_LANG,
-    "text_quality": SQL_QUALITY,
-    "text_fingerprint": SQL_FINGERPRINT,
-    "s2_multires_rollup": SQL_S2_MRR,
-    "ring_centroid": SQL_RING_CENTROID,
-    "tile_point_assign": SQL_TILE_PT,
-    "tile_cover_assign": SQL_TILE_COVER,
-    "tile_quadkey": SQL_TILE_QK,
-    "zonal_stats": SQL_ZONAL,
-    "tile_geohash": SQL_TILE_GH,
-    "coverage_audit": SQL_COVERAGE,
-    "overlap_join": SQL_OVERLAP,
-    "overlap_dissolve": SQL_DISSOLVE,
-    "trip_segments": SQL_TRIPS,
-    "tile_pyramid": SQL_TILE_PYR,
-    "heatmap_tiles": SQL_HEATMAP,
-    "heatmap_pyramid": SQL_HEAT_PYR,
-    "stream_tile_heatmap": SQL_STREAM_TILEHEAT,
-    "text_repetition": SQL_TEXT_REP,
-    "text_vocab": SQL_TEXT_VOCAB,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_minhash_lsh": SQL_DEDUP_MINHASH,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "corpus_curation": SQL_CURATION,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_ngram_jaccard": SQL_DEDUP_NGRAM,
-    "dedup_embedding_cosine": SQL_DEDUP_EMB,
-    "dedup_embedding_ivf": SQL_DEDUP_EMB,
-    "dedup_phash_hamming": SQL_DEDUP_HAMMING,
-    "ann_topk_cosine": SQL_ANN,
-    "knn_graph": SQL_KNN_GRAPH,
-    "stream_hourly_window": SQL_STREAM_W,
-    "stream_dedup": SQL_STREAM_DD,
-    "mm_row_invariants": SQL_MM_INV,
-    "mm_decode_stats": SQL_MM_STATS,
-    "s2_cellid": SQL_S2CELL,
-    "s2_containment_join": SQL_S2CONTAIN,
-    "s2_distance_join": SQL_S2_DIST,
-    "spatial_dbscan": SQL_DBSCAN,
-    "hotspot_gistar": SQL_GISTAR,
-    # context index (round 5c)
-    "ctx_reverse_index": SQL_CTX_RIDX,
-    "ctx_cascade_discard": SQL_CTX_CASCADE,
-    "ctx_dangling_refs": SQL_CTX_DANGLING,
-    "ctx_relation_closure": SQL_CTX_CLOSURE,
-    # replication diffs (round 5c)
-    "osm_apply_diff": SQL_APPLY_DIFF,
-    "osm_diff_stats": SQL_DIFF_STATS,
-    # MVT point features (round 5d)
-    "vector_tile_points": SQL_TILE_POINTS,
-}
+class Entry(NamedTuple):
+    """One registry row. ``build(spark, sf_dir)`` returns the query's
+    DataFrame; ``oracle`` is the DuckDB SQL whose result must hash-match
+    it. ``window`` puts the entry inside the driver's hard-gated window,
+    ``bench`` makes it a bench.py row, and ``bench_build`` replaces
+    ``build`` when the bench should time a different (larger or leaner)
+    computation than the parity fixture."""
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None = None
+    window: bool = False
+    bench: bool = False
+    bench_build: Callable[[SparkSession, str], DataFrame] | None = None
+
+
+# The registry's knn_graph_ivf also computes the EXACT graph for its
+# recall column; timing that would make the IVF scale path look slower
+# than the exact knn_graph row it exists to beat. Bench the scale path
+# alone, same parameters.
+def _bench_knn_graph_ivf(spark, sf_dir):
+    return ANN.knn_graph_ivf(_t(spark, sf_dir, "embeddings"),
+                             k=5, n_centroids=16, n_probe=8)
+
+
+# The registry's vector_tiles / mvt_tiles run over the small PBF fixture
+# so their brute-force parity stays cheap; the bench tiles every
+# part-table rect + triangle polygon at z=12 instead, so the rows
+# reflect kernel + fan-out throughput, not fixture decode.
+def _bench_tile_features(spark, sf_dir):
+    from .jobs.tile_export import source_polygons  # imports this module
+    from .operators import tiles as TL
+
+    return TL.build_vector_tiles(source_polygons(spark, sf_dir, None),
+                                 zoom=12)
+
+
+def _bench_vector_tiles(spark, sf_dir):
+    from .operators import tiles as TL
+
+    return TL.tile_layer_stats(_bench_tile_features(spark, sf_dir))
+
+
+def _bench_mvt_tiles(spark, sf_dir):
+    from .operators import tiles as TL
+
+    return TL.encode_mvt_tiles(_bench_tile_features(spark, sf_dir)).select(
+        "z", "x", "y", "n_features", F.length("mvt").alias("mvt_bytes"))
+
+
+# The driver hard-gates only the first 50 QUERIES entries (its window);
+# every oracled entry also gets full parity in tests/test_oracle_parity.py.
+# Spend the window on operators whose failure modes the driver can catch
+# (joins, covers, partitioning, codecs, iterative plans); cheap
+# pure-Column transforms live past it with their oracles kept.
+# Cheap pure-Column rows stay off the bench (bench=False) so bench.py's
+# stdout line fits the driver's 1900-byte capture (tier-2 line pinned
+# by tests/test_registry_contract.py).
+REGISTRY = [
+    Entry("j7_spatial_cell_join", q_j7_spatial_cell_join, SQL_J7,
+          window=True, bench=True),
+    Entry("j8_pip_refine", q_j8_pip_refine, SQL_J8, window=True, bench=True),
+    Entry("j9_knn_ring_expansion", q_j9_knn, SQL_J9, window=True, bench=True),
+    Entry("j10_raster_vector", q_j10_raster_vector, SQL_J10,
+          window=True, bench=True),
+    Entry("c1_zorder_tile", q_c1_zorder_tile, SQL_C1, window=True, bench=True),
+    Entry("s2_cellid", q_s2_cellid, SQL_S2CELL, window=True, bench=True),
+    Entry("s2_containment_join", q_s2_containment_join, SQL_S2CONTAIN,
+          window=True, bench=True),
+    Entry("tile_point_assign", q_tile_point_assign, SQL_TILE_PT,
+          window=True, bench=True),
+    Entry("tile_cover_assign", q_tile_cover_assign, SQL_TILE_COVER,
+          window=True, bench=True),
+    Entry("ctx_cascade_discard", q_ctx_cascade_discard, SQL_CTX_CASCADE,
+          window=True, bench=True),
+    Entry("ctx_relation_closure", q_ctx_relation_closure, SQL_CTX_CLOSURE,
+          window=True, bench=True),
+    Entry("ctx_dangling_refs", q_ctx_dangling_refs, SQL_CTX_DANGLING,
+          window=True),
+    Entry("agg_cell_rollup", q_agg_cell_rollup, SQL_ROLLUP,
+          window=True, bench=True),
+    Entry("a2_bounding_box", q_a2_bounding_box, SQL_A2,
+          window=True, bench=True),
+    Entry("a1_count_by_type", q_a1_count_by_type, SQL_A1, window=True),
+    Entry("a3_block_bbox", q_a3_block_bbox, SQL_A3, window=True),
+    Entry("a4_ordered_assembly", q_a4_ordered_assembly, SQL_A4,
+          window=True, bench=True),
+    Entry("a5_latest_version", q_a5_latest_version, SQL_A5,
+          window=True, bench=True),
+    Entry("a6_distinct_dims", q_a6_distinct_dims, SQL_A6, window=True),
+    Entry("a7_stats", q_a7_stats, SQL_A7, window=True),
+    Entry("o2_global_order", q_o2_global_order, SQL_O2, window=True),
+    Entry("o5_topk_per_group", q_o5_topk_per_group, SQL_O5,
+          window=True, bench=True),
+    Entry("s2_distance_join", q_s2_distance_join, SQL_S2_DIST,
+          window=True, bench=True),
+    Entry("ring_centroid", q_ring_centroid, SQL_RING_CENTROID, window=True),
+    Entry("spatial_dbscan", q_spatial_dbscan, SQL_DBSCAN,
+          window=True, bench=True),
+    Entry("hotspot_gistar", q_hotspot_gistar, SQL_GISTAR,
+          window=True, bench=True),
+    Entry("f4_current_visible", q_f4_current_visible, SQL_F4, window=True),
+    Entry("rollup_multires", q_rollup_multires, SQL_ROLLUP_MR,
+          window=True, bench=True),
+    Entry("j1_sortmerge_group_join", q_j1_sortmerge_group_join, SQL_J1,
+          window=True, bench=True),
+    Entry("j2_threeway_assembly", q_j2_threeway_assembly, SQL_J2,
+          window=True, bench=True),
+    Entry("j3_member_assembly", q_j3_member_assembly, SQL_J3, window=True),
+    Entry("j4_broadcast_lookup", q_j4_broadcast_lookup, SQL_J4,
+          window=True, bench=True),
+    Entry("w1_hourly_window", q_w1_hourly_window, SQL_W1,
+          window=True, bench=True),
+    Entry("w2_sessionize_batch", q_w2_sessionize_batch, SQL_W2,
+          window=True, bench=True),
+    Entry("text_chunks", q_text_chunks, SQL_TEXT_CHUNKS,
+          window=True, bench=True),
+    Entry("dedup_exact", q_dedup_exact, SQL_DEDUP_EXACT,
+          window=True, bench=True),
+    Entry("dedup_minhash_lsh", q_dedup_minhash_lsh, SQL_DEDUP_MINHASH,
+          window=True, bench=True),
+    Entry("dedup_clusters", q_dedup_clusters, SQL_DEDUP_CLUSTERS,
+          window=True, bench=True),
+    Entry("corpus_curation", q_corpus_curation, SQL_CURATION,
+          window=True, bench=True),
+    Entry("dedup_simhash", q_dedup_simhash, SQL_DEDUP_SIMHASH,
+          window=True, bench=True),
+    Entry("dedup_ngram_jaccard", q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM,
+          window=True, bench=True),
+    Entry("dedup_embedding_cosine", q_dedup_embedding, SQL_DEDUP_EMB,
+          window=True, bench=True),
+    Entry("dedup_embedding_ivf", q_dedup_embedding_ivf, SQL_DEDUP_EMB,
+          window=True, bench=True),
+    Entry("dedup_phash_hamming", q_dedup_phash_hamming, SQL_DEDUP_HAMMING,
+          window=True, bench=True),
+    Entry("ann_topk_cosine", q_ann_topk, SQL_ANN, window=True, bench=True),
+    Entry("knn_graph", q_knn_graph, SQL_KNN_GRAPH, window=True, bench=True),
+    Entry("stream_hourly_window", q_stream_hourly_window, SQL_STREAM_W,
+          window=True),
+    Entry("stream_dedup", q_stream_dedup, SQL_STREAM_DD, window=True),
+    Entry("mm_row_invariants", q_mm_row_invariants, SQL_MM_INV, window=True),
+    Entry("mm_decode_stats", q_mm_decode_stats, SQL_MM_STATS,
+          window=True, bench=True),
+    # -- past the driver window: oracled, hash-checked by pytest parity
+    Entry("text_quality", q_text_quality, SQL_QUALITY),
+    Entry("text_fingerprint", q_text_fingerprint, SQL_FINGERPRINT),
+    Entry("text_repetition", q_text_repetition, SQL_TEXT_REP),
+    Entry("text_vocab", q_text_vocab, SQL_TEXT_VOCAB),
+    Entry("text_token_count", q_text_token_count, SQL_TOKENS),
+    Entry("text_token_count_bpe", q_text_token_count_bpe, SQL_TOKENS_BPE),
+    Entry("text_language_id", q_text_language_id, SQL_LANG),
+    Entry("c2_fixed_point", q_c2_fixed_point, SQL_C2),
+    Entry("c5_timestamp_convert", q_c5_timestamp_convert, SQL_C5),
+    Entry("sample_mixture", q_sample_mixture, SQL_SAMPLE_MIX, bench=True),
+    Entry("f1_token_filter", q_f1_token_filter, SQL_F1),
+    Entry("ctx_reverse_index", q_ctx_reverse_index, SQL_CTX_RIDX, bench=True),
+    Entry("osm_apply_diff", q_osm_apply_diff, SQL_APPLY_DIFF),
+    Entry("osm_diff_stats", q_osm_diff_stats, SQL_DIFF_STATS),
+    Entry("s2_multires_rollup", q_s2_multires_rollup, SQL_S2_MRR, bench=True),
+    Entry("tile_quadkey", q_tile_quadkey, SQL_TILE_QK, bench=True),
+    Entry("zonal_stats", q_zonal_stats, SQL_ZONAL, bench=True),
+    Entry("tile_geohash", q_tile_geohash, SQL_TILE_GH, bench=True),
+    Entry("coverage_audit", q_coverage_audit, SQL_COVERAGE, bench=True),
+    Entry("overlap_join", q_overlap_join, SQL_OVERLAP, bench=True),
+    Entry("overlap_dissolve", q_overlap_dissolve, SQL_DISSOLVE, bench=True),
+    Entry("trip_segments", q_trip_segments, SQL_TRIPS, bench=True),
+    # -- engine-native, no SQL equivalent: the driver checks rows only;
+    # each entry is refereed (brute force, numpy or golden bytes) in its
+    # operator's tests/ module
+    Entry("mm_phash_near_dup", q_mm_phash_near_dup, bench=True),
+    Entry("image_curation", q_image_curation, bench=True),
+    Entry("mm_embed_near_dup", q_mm_embed_near_dup, bench=True),
+    Entry("pbf_roundtrip_counts", q_pbf_roundtrip_counts),
+    Entry("polygon_assembly", q_polygon_assembly),
+    Entry("pbf_spatial_join", q_pbf_spatial_join),
+    Entry("apidb_roundtrip_counts", q_apidb_roundtrip),
+    Entry("ref_fixture_parity", q_ref_fixture_parity),
+    Entry("stream_sessionize", q_stream_sessionize),
+    Entry("stream_cell_enrich", q_stream_cell_enrich),
+    Entry("stream_image_dedup", q_stream_image_dedup),
+    Entry("ann_lsh_topk", q_ann_lsh_topk),
+    Entry("ann_ivf_topk", q_ann_ivf_topk, bench=True),
+    Entry("knn_graph_ivf", q_knn_graph_ivf,
+          bench=True, bench_build=_bench_knn_graph_ivf),
+    Entry("pack_sequences", q_pack_sequences, bench=True),
+    Entry("dedup_substring", q_dedup_substring, bench=True),
+    Entry("mm_caption_audit", q_mm_caption_audit, bench=True),
+    Entry("text_pii_scrub", q_text_pii_scrub, bench=True),
+    Entry("s2_cap_cover_join", q_s2_cap_cover_join, bench=True),
+    Entry("s2_polygon_cover_join", q_s2_polygon_cover_join, bench=True),
+    Entry("s2_osm_polygon_join", q_s2_osm_polygon_join),
+    Entry("s2_knn_join", q_s2_knn_join, bench=True),
+    Entry("idw_interpolation", q_idw_interpolation, bench=True),
+    Entry("stream_s2_enrich", q_stream_s2_enrich),
+    Entry("vector_tiles", q_vector_tiles,
+          bench=True, bench_build=_bench_vector_tiles),
+    Entry("tile_pyramid", q_tile_pyramid, SQL_TILE_PYR, bench=True),
+    Entry("mvt_tiles", q_mvt_tiles, bench=True, bench_build=_bench_mvt_tiles),
+    Entry("heatmap_tiles", q_heatmap_tiles, SQL_HEATMAP, bench=True),
+    Entry("heatmap_pyramid", q_heatmap_pyramid, SQL_HEAT_PYR, bench=True),
+    Entry("tile_retile", q_tile_retile, bench=True),
+    Entry("stream_tile_heatmap", q_stream_tile_heatmap, SQL_STREAM_TILEHEAT),
+    Entry("ctx_pbf_discard", q_ctx_pbf_discard),
+    Entry("osm_geodesic_stats", q_osm_geodesic_stats),
+    Entry("vector_tile_points", q_vector_tile_points, SQL_TILE_POINTS,
+          bench=True),
+    Entry("vector_tile_lines", q_vector_tile_lines, bench=True),
+    Entry("mvt_layered_tiles", q_mvt_layered_tiles, bench=True),
+]
+
+QUERIES = {e.name: e.build
+           for e in sorted(REGISTRY, key=lambda e: not e.window)}
+ORACLES = {e.name: e.oracle for e in REGISTRY if e.oracle is not None}
+BENCH_QUERIES = [e.name for e in REGISTRY if e.bench]
+BENCH_BUILD = {e.name: e.bench_build or e.build for e in REGISTRY}
+
+
+def time_query(spark, sf_dir: str, name: str, runs: int,
+               warmup: int = 0) -> tuple[list[float], int]:
+    """Time ``BENCH_BUILD[name](spark, sf_dir).count()`` ``runs`` times
+    after ``warmup`` untimed runs; return (seconds per run, row count).
+    The query is built INSIDE the timer on every run: some builds do
+    eager work (index builds, guard counts, lazy checkpoints) and a
+    reused DataFrame would replay checkpoints or AQE shuffle stages
+    and time only the tail — so every bench row is timed the same way."""
+    build = BENCH_BUILD[name]
+    samples, rows = [], 0
+    for i in range(warmup + runs):
+        t0 = time.perf_counter()
+        rows = build(spark, sf_dir).count()
+        if i >= warmup:
+            samples.append(time.perf_counter() - t0)
+    return samples, rows

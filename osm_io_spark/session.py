@@ -70,3 +70,16 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def get_bench_spark(app_name: str, cpus: int) -> SparkSession:
+    """local[cpus] session for timing runs (bench.py, jobs.remeasure),
+    with the Python worker pool already spawned: the first pandas-UDF
+    stage of a session pays worker spawn + numpy/pandas import — a
+    once-per-executor cost on a real cluster, not a per-query cost."""
+    spark = get_spark(app_name, master=f"local[{cpus}]",
+                      shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    wdf = spark.range(0, 256, 1, cpus)
+    wdf.mapInPandas(lambda it: it, wdf.schema).count()
+    return spark

@@ -22,7 +22,6 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import proto as P
@@ -388,17 +387,3 @@ def read_pbf(spark: SparkSession, path: str,
         parallelism = max(spark.sparkContext.defaultParallelism, n // 8)
     parts = min(n, parallelism) or 1
     return manifest.repartition(parts).mapInPandas(_decode_batches, schema=ELEMENTS)
-
-
-def split_elements(elements: DataFrame) -> dict[str, DataFrame]:
-    """Unified frame → typed nodes/ways/relations DataFrames."""
-    meta = ["id", "version", "timestamp", "changeset", "uid", "user",
-            "visible", "tags"]
-    return {
-        "nodes": elements.filter(F.col("etype") == "node")
-                         .select("id", "version", "lat", "lon", *meta[2:]),
-        "ways": elements.filter(F.col("etype") == "way")
-                        .select(*meta[:2], "refs", *meta[2:]),
-        "relations": elements.filter(F.col("etype") == "relation")
-                             .select(*meta[:2], "members", *meta[2:]),
-    }

@@ -10,6 +10,8 @@ caught.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -137,6 +139,29 @@ def test_grid_res_covering_bound():
         assert 180.0 / (1 << res) >= eps
         if res < 15:
             assert 180.0 / (1 << (res + 1)) < eps
+
+
+def test_fine_res_diagonal_bound_at_powers_of_two():
+    """At eps on a power-of-two boundary, and one ulp below it, the
+    chosen fine cell's diagonal must be ≤ eps (a float log2 that rounds
+    down picks a cell one level too coarse) and the next coarser cell's
+    diagonal must exceed it (coarsest valid)."""
+    for k in (3, 7, 10, 13, 17, 20, 24):
+        edge = 180.0 * math.sqrt(5.0) / 2 ** k
+        for eps in (edge, math.nextafter(edge, 0.0)):
+            r = CL._fine_res(eps)
+            assert 180.0 * math.sqrt(5.0) / (1 << r) <= eps, (k, eps, r)
+            assert 180.0 * math.sqrt(5.0) / (1 << (r - 1)) > eps, (k, r)
+
+
+def test_eps_too_wide_for_3x3_fanout_raises(spark):
+    """eps > 45° gives a grid of fewer than 3 columns, where the ±1
+    longitude offsets wrap onto the same column and would double-count
+    neighbours: rejected before any job runs."""
+    df = spark.createDataFrame([(1, 0.0, 0.0), (2, 0.0, 60.0)],
+                               "pt_id LONG, lat DOUBLE, lon DOUBLE")
+    with pytest.raises(ValueError, match="3 grid columns"):
+        CL.dbscan(df, eps=50.0, min_pts=2)
 
 
 def test_dissolve_hand_fixture(spark):

@@ -6,6 +6,7 @@ independent numpy referee + structural cases. The registry entry
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from osm_io_spark import queries as Q
 from osm_io_spark.operators import raster as RAS
@@ -82,3 +83,30 @@ def test_antimeridian_x_wrap(spark):
     assert (got.k_nbrs == 2).all()
     assert (got.nbr_sum == 40).all()
     assert got.gi_z.isna().all()
+
+
+def test_res_too_coarse_for_3x3_fanout_raises(spark):
+    """res 1 is a 2-column grid: the ±1 longitude offsets wrap onto the
+    same column and would double-count k_nbrs / nbr_sum — rejected."""
+    df = spark.createDataFrame([(0.0, 0.0), (10.0, 100.0)],
+                               "lat DOUBLE, lon DOUBLE")
+    with pytest.raises(ValueError, match="3 grid columns"):
+        RAS.gi_star(df, res=1)
+
+
+def test_single_occupied_cell_is_null_in_both_engines(spark, duck):
+    """One occupied cell (n = 1): the z denominator divides by n − 1 = 0,
+    so the z-score is NULL by contract in Spark AND in the DuckDB
+    oracle (not NaN there) — the oracle SQL runs on the same points."""
+    rows = [(10.0 + i * 1e-3, 20.0 + i * 1e-3) for i in range(5)]
+    got = RAS.gi_star(spark.createDataFrame(rows, "lat DOUBLE, lon DOUBLE"),
+                      res=Q._GISTAR_RES).collect()
+    assert [(r.x, r.k_nbrs, r.nbr_sum, r.gi_z) for r in got] == [
+        (5, 1, 5, None)]
+    duck.sql("CREATE OR REPLACE TABLE one_cell AS SELECT * FROM "
+             "(VALUES " + ", ".join(f"({a}, {b})" for a, b in rows)
+             + ") t(lat, lon)")
+    sql = Q.SQL_GISTAR.replace(Q.DBSCAN_PTS_SQL, "SELECT * FROM one_cell")
+    assert sql != Q.SQL_GISTAR
+    assert duck.sql(sql).fetchall() == [
+        (got[0].gx, got[0].gy, 5, 1, 5, None)]

@@ -1,10 +1,10 @@
 """Executable gate-visibility invariants — the two round-2 regressions
 that silently blinded the driver, pinned as tests:
 
-1. ordering: the driver runs ~50 registry entries in dict order, so
-   every ORACLES-backed key must precede every rows-only key in
-   QUERIES (r2: two oracled streaming entries sat past the window and
-   got no CORRECTNESS row at all).
+1. window: the driver hard-gates the first 50 registry entries in
+   QUERIES order, so those must be exactly the ``window=True`` entries
+   and every one of them oracled (r2: two oracled streaming entries
+   sat past the window and got no CORRECTNESS row at all).
 2. bench stdout line: the driver tail-captures stdout, so the JSON
    line must stay under ~1900 bytes even in the fallback shape
    (r2: the rows dict grew the line past the capture window and the
@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from osm_io_spark import queries as Q
 
 
@@ -22,81 +24,48 @@ DRIVER_WINDOW = 50  # entries the driver's gate runs, in dict order
 
 
 def test_every_oracled_key_precedes_every_rows_only_key():
-    """The gate must never burn a window slot on a rows-only entry
-    while an oracled entry sits outside. Since round 4 there are MORE
-    oracled entries than window slots, so the invariant is: the first
-    DRIVER_WINDOW entries are all oracled; oracled entries past the
-    window are allowed (they are rotated-out per the swap policy in
-    queries.py and hash-checked by tests/test_oracle_parity.py)."""
-    names = list(Q.QUERIES)
-    window = names[:DRIVER_WINDOW]
-    not_oracled = [n for n in window if n not in Q.ORACLES]
+    """The gate must never burn a window slot on a rows-only entry.
+    There are more oracled entries than window slots, so the contract
+    is: exactly DRIVER_WINDOW entries carry ``window=True``, all of them
+    oracled, and they lead QUERIES; oracled entries past the window are
+    hash-checked by tests/test_oracle_parity.py."""
+    window = [e.name for e in Q.REGISTRY if e.window]
+    assert len(window) == DRIVER_WINDOW, len(window)
+    not_oracled = [e.name for e in Q.REGISTRY if e.window and not e.oracle]
     assert not not_oracled, (
         f"rows-only entries occupy driver-window slots: {not_oracled}")
+    assert list(Q.QUERIES)[:DRIVER_WINDOW] == window
 
 
-def test_round5_window_rotation():
-    """Round-5 swap (verdict task #2): the S2 flagship pair sits INSIDE
-    the driver window; the two rotated-out Column transforms sit
-    outside but keep their oracles (pytest parity)."""
-    names = list(Q.QUERIES)
-    window = set(names[:DRIVER_WINDOW])
-    assert {"s2_cellid", "s2_containment_join"} <= window
-    for rotated in ("text_quality", "text_fingerprint"):
-        assert rotated in Q.ORACLES and rotated not in window, rotated
+# Named window memberships: operators whose failure modes (joins,
+# covers, partitioning, iterative plans, the north-rule per-row
+# invariant) the driver gate exists to catch stay inside the window;
+# single-projection Column transforms sit outside it, oracles kept.
+WINDOW_MEMBERSHIP = [
+    *[(n, True) for n in (
+        "s2_cellid", "s2_containment_join",
+        "tile_point_assign", "tile_cover_assign",
+        "mm_row_invariants", "mm_decode_stats",
+        "ctx_cascade_discard", "ctx_relation_closure", "ctx_dangling_refs",
+        "s2_distance_join", "ring_centroid",
+        "spatial_dbscan", "hotspot_gistar")],
+    *[(n, False) for n in (
+        "text_quality", "text_fingerprint",
+        "text_repetition", "text_vocab",
+        "text_token_count", "text_token_count_bpe", "text_language_id",
+        "ctx_reverse_index",
+        "c2_fixed_point", "c5_timestamp_convert",
+        "sample_mixture", "f1_token_filter")],
+]
 
 
-def test_round5b_window_rotation():
-    """Round-5b swap: the slippy-tile pair (fan-out/partition failure
-    modes the driver can catch) sits inside the window; the two
-    rotated-out text Column transforms keep their oracles outside it.
-    The mm invariant pair must never be displaced (north-rule row)."""
-    names = list(Q.QUERIES)
-    window = set(names[:DRIVER_WINDOW])
-    assert {"tile_point_assign", "tile_cover_assign"} <= window
-    assert {"mm_row_invariants", "mm_decode_stats"} <= window
-    for rotated in ("text_repetition", "text_vocab"):
-        assert rotated in Q.ORACLES and rotated not in window, rotated
-
-
-def test_round5c_window_rotation():
-    """Round-5c swap: the context-index trio (gated broadcast +
-    bool_and agg, iterative closure vs recursive-CTE oracle, null-safe
-    anti joins — failure modes the driver can catch) sits inside the
-    window; the three rotated-out text Column transforms keep their
-    oracles outside it."""
-    names = list(Q.QUERIES)
-    window = set(names[:DRIVER_WINDOW])
-    assert {"ctx_cascade_discard", "ctx_relation_closure",
-            "ctx_dangling_refs"} <= window
-    for rotated in ("text_token_count", "text_token_count_bpe",
-                    "text_language_id", "ctx_reverse_index"):
-        assert rotated in Q.ORACLES and rotated not in window, rotated
-
-
-def test_round5e_window_rotation():
-    """Round-5e swap: the S2 distance join (the first fully-ORACLED
-    spherical geo-join — cover completeness is what the hard gate can
-    catch) and the distributed ring centroid (windowed edge-wrap
-    decomposition vs a closed-form oracle) sit inside the window; the
-    two rotated-out single-projection casts keep their oracles."""
-    names = list(Q.QUERIES)
-    window = set(names[:DRIVER_WINDOW])
-    assert {"s2_distance_join", "ring_centroid"} <= window
-    for rotated in ("c2_fixed_point", "c5_timestamp_convert"):
-        assert rotated in Q.ORACLES and rotated not in window, rotated
-
-
-def test_round5f_window_rotation():
-    """Round-5f swap: distributed DBSCAN (grid self-join + distributed
-    CC + border assignment vs a recursive-CTE closure oracle — exactly
-    the failure modes the hard gate exists to catch) sits inside the
-    window; the rotated-out pure-Column hash filter keeps its oracle."""
-    names = list(Q.QUERIES)
-    window = set(names[:DRIVER_WINDOW])
-    assert {"spatial_dbscan", "hotspot_gistar"} <= window
-    for rotated in ("sample_mixture", "f1_token_filter"):
-        assert rotated in Q.ORACLES and rotated not in window, rotated
+@pytest.mark.parametrize("name,inside", WINDOW_MEMBERSHIP,
+                         ids=[n for n, _ in WINDOW_MEMBERSHIP])
+def test_window_membership(name, inside):
+    window = set(list(Q.QUERIES)[:DRIVER_WINDOW])
+    assert (name in window) is inside, name
+    if not inside:
+        assert name in Q.ORACLES, f"{name} left the window without its oracle"
 
 
 def test_every_oracle_key_is_a_registry_key():
@@ -108,9 +77,7 @@ def test_bench_json_line_fits_driver_capture():
     """Both the full line (current BENCH_QUERIES at realistic timing
     widths) and the fallback shape must stay under the 1900-byte
     driver tail-capture bound bench.py enforces."""
-    import bench
-
-    timings = {name: 12345.6789 for name in bench.BENCH_QUERIES}
+    timings = {name: 12345.6789 for name in Q.BENCH_QUERIES}
     full = json.dumps({
         "metric": "images_joined_tiled_per_sec", "value": 1234567.89,
         "unit": "sec", "queries": timings, "n_images": 600000,
@@ -129,12 +96,12 @@ def test_bench_json_line_fits_driver_capture():
     tier2 = json.dumps({
         "metric": "images_joined_tiled_per_sec", "value": 1234567.89,
         "unit": "sec",
-        "queries": {k: 12.81 for k in bench.BENCH_QUERIES},
+        "queries": {k: 12.81 for k in Q.BENCH_QUERIES},
         "n_images": 600000, "cpus": 32, "sf": 0.1},
         separators=(",", ":"))
     assert len(tier2) <= 1860, (
-        f"tier-2 bench line {len(tier2)} bytes — trim BENCH_QUERIES "
-        "(CLAUDE.md byte-budget rule) before tier-3 silently drops "
+        f"tier-2 bench line {len(tier2)} bytes — clear bench=True flags "
+        "on cheap registry rows before tier-3 silently drops "
         "the per-query dict")
     # the full line is allowed to exceed 1900 only because bench.py
     # swaps in the tier-2 shape — but warn-by-failure if it ever grows
@@ -143,18 +110,21 @@ def test_bench_json_line_fits_driver_capture():
 
 
 def test_bench_methodology_is_shared_and_valid():
-    """r5 review: remeasure once carried a stale hand-copy of the
-    construct-in-timer set and ignored BENCH_OVERRIDES, so a targeted
-    're-measurement' could time a different computation than the bench
-    row it claimed to re-check. Both harnesses must consume the SAME
-    objects from osm_io_spark.benchdefs, and every name must resolve."""
+    """bench.py and jobs.remeasure time rows through the one
+    queries.time_query, which builds from BENCH_BUILD; every bench name
+    and every bench_build entry must resolve in the single table."""
     import bench
-    from osm_io_spark import benchdefs
     from osm_io_spark.jobs import remeasure
 
-    assert bench.CONSTRUCT_IN_TIMER is benchdefs.CONSTRUCT_IN_TIMER
-    assert bench.BENCH_OVERRIDES is benchdefs.BENCH_OVERRIDES
-    assert remeasure.CONSTRUCT_IN_TIMER is benchdefs.CONSTRUCT_IN_TIMER
-    assert remeasure.BENCH_OVERRIDES is benchdefs.BENCH_OVERRIDES
-    assert benchdefs.CONSTRUCT_IN_TIMER <= set(bench.BENCH_QUERIES)
-    assert set(benchdefs.BENCH_OVERRIDES) <= set(Q.QUERIES)
+    assert remeasure.time_query is Q.time_query
+    assert "Q.time_query(" in open(bench.__file__).read()
+    names = [e.name for e in Q.REGISTRY]
+    assert len(names) == len(set(names)), "duplicate registry names"
+    assert set(Q.BENCH_QUERIES) <= set(Q.QUERIES)
+    assert set(Q.BENCH_BUILD) == set(Q.QUERIES)
+    for e in Q.REGISTRY:
+        assert callable(e.build), e.name
+        want = e.bench_build or e.build
+        assert callable(want) and Q.BENCH_BUILD[e.name] is want, e.name
+        if e.bench_build is not None:
+            assert e.bench, f"{e.name}: bench_build on a non-bench entry"
