@@ -20,12 +20,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..queries import time_runs
 from ..session import get_spark
 from ..sources.pbf import decode as PD
 from ..sources.pbf import encode as PE
@@ -98,13 +98,8 @@ def main(argv: list[str] | None = None) -> dict:
     els = spark.read.parquet(staged_dir)
 
     def best_of(fn, reps=2):
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            out = fn()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        return best, out
+        samples, out = time_runs(fn, reps)
+        return min(samples), out
 
     if args.read_only and os.path.exists(path):
         t_write, n_blocks = float("nan"), -1
@@ -122,8 +117,11 @@ def main(argv: list[str] | None = None) -> dict:
         .filter(F.exists("tags", lambda t: (t["k"] == F.lit("natural"))
                          & (t["v"] == F.lit("tree")))).count()))
 
-    assert counts["node"] == args.n_nodes and counts["way"] == args.n_ways
-    assert n_trees == args.n_nodes // 10
+    if (counts.get("node"), counts.get("way"), n_trees) != (
+            args.n_nodes, args.n_ways, args.n_nodes // 10):
+        raise RuntimeError(f"ingest counts {counts}, {n_trees} trees do not "
+                           f"match the {args.n_nodes} nodes / {args.n_ways} "
+                           "ways written")
 
     res = {
         "metric": "pbf_ingest",

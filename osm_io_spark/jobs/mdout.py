@@ -1,6 +1,6 @@
 """Regeneration-safe markdown output for the bench jobs.
 
-`scaling_bench`/`ingest_bench --out` regenerate only their measured
+`stagebench` and `ingest_bench --out` regenerate only their measured
 tables, but BENCH/*.md also carries hand-appended evidence sections
 (band salting, batched kernels, read scaling, conversions) that used
 to be silently destroyed on regeneration (bitten in round 2 — see

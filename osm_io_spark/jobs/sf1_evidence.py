@@ -145,9 +145,8 @@ def run(argv: list[str] | None = None) -> dict:
     results = {}
 
     def timed(name, fn):
-        t0 = time.perf_counter()
-        n = fn()
-        dt = round(time.perf_counter() - t0, 2)
+        (dt,), n = Q.time_runs(fn, 1)
+        dt = round(dt, 2)
         results[name] = {"s": dt, "rows": n}
         print(f"# {name}: {dt}s rows={n}", flush=True)
         return n

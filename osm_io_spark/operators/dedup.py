@@ -56,7 +56,7 @@ def minhash_lsh_pairs(docs: DataFrame, n_perm: int = 8, band_size: int = 2,
     """(id_a, id_b) candidate near-dup pairs sharing ≥1 LSH band.
     ``salt='auto'`` salts Zipf-head bands (boilerplate-heavy corpora
     collapse many docs into one band key) exactly like hot spatial
-    cells; identical pair sets either way (tested + skew_bench)."""
+    cells; identical pair sets either way (tested + stagebench SKEW)."""
     sig = minhash_signatures(docs, n_perm, shingle_n, id_col, text_col)
     n_bands = n_perm // band_size
     # ONE projection with an exploded band array — a unionByName of

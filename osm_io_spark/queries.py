@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from typing import NamedTuple
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +33,7 @@ from .functions import geohash as _GH
 from .functions import s2 as S2
 from .functions import webmercator as _WM
 from .functions.hashing import hash64_sql
+from .jobs.engine_zip import build_engine_zip
 from .operators import ann as ANN
 from .operators import dedup as DD
 from .operators import knn as KNN
@@ -122,31 +123,7 @@ def ensure_shipped(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if id(sc) in _SHIPPED:
         return
-    import hashlib
-    import os
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                sources.append(os.path.join(root, fn))
-    h = hashlib.md5()
-    for s in sorted(sources):
-        with open(s, "rb") as fh:
-            h.update(fh.read())
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"osm_io_spark_{h.hexdigest()[:12]}.zip")
-    if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for s in sorted(sources):
-                rel = os.path.relpath(s, os.path.dirname(pkg_dir))
-                z.write(s, rel)
-        os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
+    sc.addPyFile(build_engine_zip())
     _SHIPPED.add(id(sc))
 
 
@@ -4015,19 +3992,25 @@ BENCH_QUERIES = [e.name for e in REGISTRY if e.bench]
 BENCH_BUILD = {e.name: e.bench_build or e.build for e in REGISTRY}
 
 
-def time_query(spark, sf_dir: str, name: str, runs: int,
-               warmup: int = 0) -> tuple[list[float], int]:
-    """Time ``BENCH_BUILD[name](spark, sf_dir).count()`` ``runs`` times
-    after ``warmup`` untimed runs; return (seconds per run, row count).
-    The query is built INSIDE the timer on every run: some builds do
-    eager work (index builds, guard counts, lazy checkpoints) and a
-    reused DataFrame would replay checkpoints or AQE shuffle stages
-    and time only the tail — so every bench row is timed the same way."""
-    build = BENCH_BUILD[name]
-    samples, rows = [], 0
+def time_runs(run, runs: int, warmup: int = 0) -> tuple[list[float], Any]:
+    """Call ``run()`` ``warmup`` untimed then ``runs`` timed times;
+    return (seconds per timed call, the last call's result). ``run``
+    must build its query INSIDE the call: some builds do eager work
+    (index builds, guard counts, lazy checkpoints) and a reused
+    DataFrame would replay checkpoints or AQE shuffle stages and time
+    only the tail — so every measurement is timed the same way."""
+    samples, out = [], None
     for i in range(warmup + runs):
         t0 = time.perf_counter()
-        rows = build(spark, sf_dir).count()
+        out = run()
         if i >= warmup:
             samples.append(time.perf_counter() - t0)
-    return samples, rows
+    return samples, out
+
+
+def time_query(spark, sf_dir: str, name: str, runs: int,
+               warmup: int = 0) -> tuple[list[float], int]:
+    """Time ``BENCH_BUILD[name](spark, sf_dir).count()``; return
+    (seconds per run, row count)."""
+    build = BENCH_BUILD[name]
+    return time_runs(lambda: build(spark, sf_dir).count(), runs, warmup)
