@@ -17,8 +17,9 @@ trailing 1 sentinel at position 2·(30-level):
 Hierarchy is pure bit math — ``lsb = id & -id`` gives the level,
 ``(id & -lsb') | lsb'`` the ancestor, ``id ± (lsb-1)`` the descendant
 range — so containment joins become BETWEEN range predicates (oracle
-path) or, scale-safe, one equi-join per distinct ancestor level
-(operators use the decomposed form; see queries.q_s2_containment_join).
+path) or, scale-safe, one equi-join on each point's ancestors at the
+cover levels (operators use the equi form; see
+operators/spatial_join.s2_containment_join).
 
 Three synchronized implementations, bit-identical (unit-tested against
 each other and against Hilbert bijection/adjacency invariants): numpy

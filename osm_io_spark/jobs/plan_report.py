@@ -50,26 +50,29 @@ REPORT_QUERIES = [
     ("s2_cellid", "true S2 encode: Hilbert scan 4 levels per LOOKUP4 "
      "step, ~9 chained projections in one fused codegen stage small "
      "enough to JIT — no UDF, no shuffle"),
-    ("s2_containment_join", "mixed-level S2 containment: one broadcast "
-     "hash equi-join per distinct cover level — never a nested-loop "
-     "range join"),
+    ("s2_containment_join", "mixed-level S2 containment: each point's "
+     "ancestors at the distinct cover levels exploded into one key, ONE "
+     "broadcast hash equi-join on it — never a nested-loop range join, "
+     "never a Union of per-level joins"),
     ("s2_distance_join", "spherical distance join / ST_DWithin (r5e): "
-     "per-site cap covers broadcast, per-level containment equi-join "
-     "candidates (probe side never shuffles), haversine refine as "
-     "codegen trig Columns in the same stage — never a cross join; "
-     "the DuckDB oracle runs the index-free cross join and hash "
+     "per-site cap covers broadcast, one ancestor-key containment "
+     "equi-join for candidates (probe side never shuffles), haversine "
+     "refine as codegen trig Columns in the same stage — never a cross "
+     "join; the DuckDB oracle runs the index-free cross join and hash "
      "equality proves the cover pruning lossless"),
     ("s2_cap_cover_join", "spherical cap cover+refine: driver-side "
-     "mixed-level covers broadcast, per-level equi-join candidates, "
-     "dot-product refine inside the same stage"),
+     "mixed-level covers broadcast, one ancestor-key equi-join for "
+     "candidates, dot-product refine inside the same stage"),
     ("s2_polygon_cover_join", "spherical polygon cover+refine: "
-     "driver-side mixed-level polygon covers broadcast, per-level "
-     "equi-join candidates, winding-number PIP refine as a batched "
-     "numpy mapInPandas (no shuffle after the candidate join)"),
+     "driver-side mixed-level polygon covers broadcast, one "
+     "ancestor-key equi-join for candidates, winding-number PIP refine "
+     "as a batched numpy mapInPandas (no shuffle after the candidate "
+     "join)"),
     ("s2_osm_polygon_join", "OSM-assembled polygons through the S2 "
      "spine (r5): DISTRIBUTED per-polygon covers (mapInPandas — no "
-     "driver-side planning), per-level equi-join candidates, "
-     "broadcast rings dim, even-odd winding refine with holes"),
+     "driver-side planning), one ancestor-key equi-join for "
+     "candidates, broadcast rings dim, even-odd winding refine with "
+     "holes"),
     ("tile_cover_assign", "slippy tile fan-out (r5): bbox→tile-range "
      "Column math + two explodes in the scan's stage — zero shuffle, "
      "no driver collect, scale-guarded per polygon"),

@@ -308,50 +308,73 @@ def s2_containment_join(points: DataFrame, covers: DataFrame,
     Semantically this is the 1-D range join
     ``point.cell BETWEEN range_min(cover) AND range_max(cover)`` (the
     Hilbert prefix property; the DuckDB oracle runs exactly that), but a
-    range predicate forces a nested-loop/IEJoin physical plan. Because a
-    cover at level L contains a leaf iff the leaf's level-L ancestor
-    EQUALS the cover id, the join decomposes into one hash equi-join per
-    distinct cover level — at most 31 joins, each shuffle-partitioned on
-    the ancestor key (salting-compatible, AQE-friendly), which is the
-    shape that survives 10^12 probe rows. The distinct-level collect is
-    bounded by 31 rows.
+    range predicate forces a nested-loop/IEJoin physical plan. A cover
+    at level L contains a leaf iff the leaf's level-L ancestor EQUALS
+    the cover id — the ancestor is the range's encoded prefix — so each
+    point explodes into its ancestors at the distinct cover levels (at
+    most 31, read in the same aggregate as the cover row count) and ONE
+    hash equi-join matches that ``_s2anc`` key against ``cover`` (both
+    sides folded by :func:`_fold_key`, so the ids spread over the hash
+    relation's slots). The levels are distinct, so a (point, cover) pair matches at most once.
+    The plan has one branch whatever the level mix, so the driver
+    analyzes and optimizes the probe's encode chain once.
 
-    ``broadcast_covers='auto'`` (default) broadcasts each per-level
-    cover slice only when the WHOLE cover table holds at most
-    ``max_broadcast_rows`` rows (counted once on the pinned
-    checkpoint); larger covers degrade to a shuffled hash join per
-    level instead of OOMing the driver (ADVICE r4).
+    ``broadcast_covers='auto'`` (default) broadcasts the cover table
+    only when it holds at most ``max_broadcast_rows`` rows (counted
+    once on the pinned checkpoint); larger covers degrade to one
+    shuffled join on the ancestor key instead of OOMing the driver
+    (ADVICE r4).
 
     Skew: on the broadcast path the probe side never shuffles at all,
     so hot cells (one cover cell over a dense city at 10^12 images)
     cost nothing beyond their row count — no reducer ever owns a key.
-    On the shuffled path the join keys are level-L ancestors whose
-    fan-in is bounded by cover granularity, and AQE skew-join splits
-    any oversized probe partition (inner join: build rows duplicate
-    across splits), so no explicit salting layer is needed here —
-    unlike the banded self-joins, where a single band key explodes
-    quadratically (salted_self_band_join)."""
+    On the shuffled path the probe shuffles once (L·N exploded rows for
+    L cover levels); the keys are ancestors whose fan-in is bounded by
+    cover granularity, and AQE skew-join splits any oversized probe
+    partition (inner join: build rows duplicate across splits), so no
+    explicit salting layer is needed here — unlike the banded
+    self-joins, where a single band key explodes quadratically
+    (salted_self_band_join)."""
     from ..functions import s2 as S2
-    # covers fans out: the level collect + one filtered branch per level
-    # would re-execute its upstream plan each time (CLAUDE.md fan-out
-    # rule) — pin it once
+    if "_s2anc" in points.columns:
+        raise ValueError(
+            "s2_containment_join scratch column _s2anc collides with a "
+            "points column; rename it first")
+    # covers fans out (the stats aggregate + the join) and may sit on
+    # an expensive upstream plan, which each consumer would re-run —
+    # pin it once
     covers = covers.localCheckpoint(eager=False)
-    if broadcast_covers == "auto":
-        broadcast_covers = covers.count() <= max_broadcast_rows
-    lv = covers.select(S2.s2_level_col(F.col(cover)).alias("_lv")).distinct()
-    levels = sorted(r["_lv"] for r in lv.collect())
-    out = None
-    for l in levels:
-        cov_l = covers.filter(
-            S2.s2_level_col(F.col(cover)) == F.lit(l))
-        if broadcast_covers:
-            cov_l = F.broadcast(cov_l)
-        hit = points.join(
-            cov_l, S2.s2_parent_col(F.col(cell), l) == F.col(cover), "inner")
-        out = hit if out is None else out.unionByName(hit)
-    if out is None:
+    stats = covers.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set(S2.s2_level_col(F.col(cover))).alias("levels")).first()
+    levels = sorted(stats["levels"])
+    if not levels:
         return points.limit(0).crossJoin(covers.limit(0))
-    return out
+    if broadcast_covers == "auto":
+        broadcast_covers = stats["n"] <= max_broadcast_rows
+    if broadcast_covers:
+        covers = F.broadcast(covers)
+    anc = F.explode(F.array(*[_fold_key(S2.s2_parent_col(F.col(cell), l))
+                              for l in levels]))
+    return (points.select("*", anc.alias("_s2anc"))
+            .join(covers, F.col("_s2anc") == _fold_key(F.col(cover)),
+                  "inner")
+            .drop("_s2anc"))
+
+
+def _fold_key(cid: Column) -> Column:
+    """``cid ^ (cid >>> 32)``: a bijection on longs, so equality of
+    folded keys is equality of ids. Spark's long-keyed hash relation
+    (broadcast and shuffled hash joins) takes a key's slot from the
+    low bits of ``h ^ (h >> 32)``, ``h = key * 0x9E3779B9``. A level-L
+    S2 id ends in 2·(30-L) zero bits and ``h`` keeps them, so at coarse
+    levels those slot bits are (nearly) all zero: the cover ids pile
+    into a few slots and every probe walks one long run (measured on a
+    4-vCPU VM at local[4]: 4.2M probes against 899 level-4..10
+    cap-cover ids took 3.75 s raw and 0.30 s folded). Folding the high
+    half into the low half puts the Hilbert position bits where the
+    slot is taken."""
+    return cid.bitwiseXOR(F.shiftrightunsigned(cid, 32))
 
 
 def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
@@ -375,12 +398,11 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
       mixed-level cell set per site, unioned into a
       ``(site_id, cover_id)`` table of ≤ n_sites·max_cells rows;
     * probe → leaf S2 cell per row (with_s2_cell, pure codegen'd
-      Columns), pinned ONCE with a lazy localCheckpoint — the
-      containment join fans the encode out per distinct cover level
-      (CLAUDE.md fan-out rule);
-    * candidates → hierarchical containment join (one broadcast
-      equi-join per distinct cover level; the probe side never
-      shuffles on the broadcast path);
+      Columns), consumed once by the containment join;
+    * candidates → hierarchical containment join (each probe row's
+      ancestors at the distinct cover levels, one broadcast equi-join
+      against the cover ids; the probe side never shuffles on the
+      broadcast path);
     * refine → exact ``haversine_m <= radius_m`` (codegen trig
       Columns, JVM-side).
 
@@ -422,8 +444,7 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
     covers = spark.createDataFrame(
         cover_rows, f"{site_id} {sid_dt}, cover_id long")
     x, y, z = S2.latlon_xyz_cols(F.col(probe_lat), F.col(probe_lon))
-    pts = S2.with_s2_cell(
-        probe, x, y, z).localCheckpoint(eager=False)
+    pts = S2.with_s2_cell(probe, x, y, z)
     cand = s2_containment_join(pts, covers, cell="s2_cell",
                                cover="cover_id")
     site_pos = F.broadcast(head)
@@ -577,9 +598,10 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
                  chain, functions/s2.with_s2_cell)
       polygons → mixed-level covers, DISTRIBUTED per polygon
                  (s2_cover_polygons, mapInPandas numpy kernel)
-      join     → hierarchical containment: one hash equi-join per
-                 distinct cover level, broadcast auto-gated on cover
-                 size (s2_containment_join). Cover cells of one polygon
+      join     → hierarchical containment: each image's ancestors at
+                 the distinct cover levels, ONE hash equi-join against
+                 the cover ids, broadcast auto-gated on cover size
+                 (s2_containment_join). Cover cells of one polygon
                  are disjoint (the descend emits a cell XOR its
                  children), so each (image, polygon) candidate appears
                  at most once — no post-join dedup shuffle.

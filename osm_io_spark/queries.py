@@ -2166,13 +2166,14 @@ def q_s2_containment_join(spark, sf_dir):
     """Mixed-level S2 cell-cover containment join. Covers are distinct
     level-4 / level-8 ancestors of two point subsets (a stand-in for a
     real region cover, which unions cells at different levels); the
-    operator decomposes containment into one broadcast hash equi-join
-    per distinct cover level (operators/spatial_join.s2_containment_join)
-    — the shape that scales, vs the BETWEEN range join the DuckDB oracle
-    runs. Hash equality of the two proves the decomposition exact."""
+    operator answers containment as ONE broadcast hash equi-join of
+    each point's ancestors at the distinct cover levels against the
+    cover ids (operators/spatial_join.s2_containment_join) — the shape
+    that scales, vs the BETWEEN range join the DuckDB oracle runs.
+    Hash equality of the two proves the equi form exact."""
     from .operators import spatial_join as SJ
-    # pts feeds both cover branches and both per-level join probes —
-    # pin the 30-level encode chain so it runs (and compiles) once
+    # pts feeds both cover branches and the join probe — pin the
+    # 30-level encode chain so it runs (and compiles) once
     pts = (_s2_points(spark, sf_dir, ("l_orderkey", "l_quantity"))
            .localCheckpoint(eager=False))
     cov4 = (pts.filter(F.col("l_orderkey") % 97 == 0)
@@ -2818,12 +2819,9 @@ def q_s2_cap_cover_join(spark, sf_dir):
                                  "cap_lon DOUBLE, cap_r DOUBLE")
     img = images_probe(spark, sf_dir)
     x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
-    # pin: the encode chain feeds one join branch per distinct cover
-    # level — unpinned, the replicated 90-projection analysis tree OOMs
-    # a default-heap driver session
     pts = S2.with_s2_cell(
         img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
-        F.col("px"), F.col("py"), F.col("pz")).localCheckpoint(eager=False)
+        F.col("px"), F.col("py"), F.col("pz"))
     cand = SJ.s2_containment_join(pts, covers)
     qx, qy, qz = S2.latlon_xyz_cols(F.col("cap_lat"), F.col("cap_lon"))
     dot = (F.col("px") * qx + F.col("py") * qy + F.col("pz") * qz)
@@ -2871,10 +2869,9 @@ def q_s2_polygon_cover_join(spark, sf_dir):
     covers = spark.createDataFrame(cover_rows, "poly_id INT, cover_id LONG")
     img = images_probe(spark, sf_dir)
     x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
-    # pin: the encode feeds one join branch per distinct cover level
     pts = S2.with_s2_cell(
         img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
-        F.col("px"), F.col("py"), F.col("pz")).localCheckpoint(eager=False)
+        F.col("px"), F.col("py"), F.col("pz"))
     cand = SJ.s2_containment_join(pts, covers)
     polys = {pid: np.stack(S2._latlon_xyz_np(np.asarray(las),
                                              np.asarray(los)), axis=1)

@@ -244,10 +244,10 @@ def stream_s2_enrich(events: DataFrame, covers: DataFrame) -> DataFrame:
     stream_cell_enrich), leaf S2 cell via the pure-Column LOOKUP4
     encode — a stateless projection chain, so it runs unchanged under
     Structured Streaming — then the hierarchical containment join
-    against a STATIC cover table (one stream-static broadcast
-    equi-join per distinct cover level; the level collect and the
-    broadcast-gate count run on the static side before the stream is
-    wired)."""
+    against a STATIC cover table (each event's ancestors at the
+    distinct cover levels, one stream-static broadcast equi-join on
+    them; the level collect and the broadcast-gate count run as one
+    aggregate on the static side before the stream is wired)."""
     from ..functions import s2 as S2
     from ..operators.spatial_join import s2_containment_join
     lat = (F.col("user_id") * 2654435761 % 120000000) / 1e6 - 60.0

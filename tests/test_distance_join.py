@@ -104,8 +104,9 @@ def test_max_sites_guard_raises(spark):
 
 def test_plan_is_broadcast_only_no_cartesian(spark):
     """The scale contract: every join in the plan is a broadcast hash
-    equi-join (covers per level + the site-position lookup); the probe
-    side never meets a cartesian/nested-loop or sort-merge node."""
+    equi-join (the ancestor-key containment join + the site lookup);
+    the probe side never meets a cartesian/nested-loop or sort-merge
+    node."""
     df = Q.QUERIES["s2_distance_join"](spark, "/root/testdata/sf0.001")
     plan = A.formatted_plan(df)
     assert A.count_op(plan, "CartesianProduct") == 0

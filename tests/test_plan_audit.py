@@ -191,3 +191,25 @@ def test_vector_tile_points_zero_shuffle_pruned(spark):
             max_scan_cols={"lineitem.parquet": 2})
     plan = A.formatted_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+
+
+def test_s2_containment_join_one_equi_join(spark):
+    """Mixed-level S2 containment is ONE broadcast equi-join on each
+    point's ancestors at the cover levels — no Union of per-level
+    joins; the probe never shuffles, and the one exchange is the
+    query's per-cover aggregate."""
+    df = Q.q_s2_containment_join(spark, SF_DIR)
+    rep = A.audit(df, max_shuffles=1, min_broadcast_joins=1,
+                  forbid_sort_merge_join=True)
+    assert rep["broadcast_joins"] == 1
+    assert A.count_op(A.formatted_plan(df), "Union") == 0
+
+
+def test_s2_distance_join_two_broadcast_joins(spark):
+    """ST_DWithin on the S2 index: the containment equi-join plus the
+    site-position lookup, both broadcast; the probe never shuffles,
+    and the one exchange is the site table's distinct."""
+    df = Q.q_s2_distance_join(spark, SF_DIR)
+    rep = A.audit(df, max_shuffles=1, min_broadcast_joins=2,
+                  forbid_sort_merge_join=True)
+    assert rep["broadcast_joins"] == 2

@@ -1,6 +1,6 @@
 """True S2 cell index: table derivation, curve invariants, three-way
 implementation parity (numpy / Column / DuckDB SQL), hierarchy bit math,
-and the containment-join decomposition plan shape.
+and the containment-join equi plan shape.
 
 The engine goes beyond the reference's single-resolution tile key
 (/root/reference/src/osm/apidb_dump/sql.rs:50-61) here; constants and
@@ -133,15 +133,36 @@ def test_hierarchy_invariants():
     assert (pole.view(np.uint64) >> np.uint64(61)) == 2  # +z face
 
 
-def test_containment_join_plan_is_equi_broadcast(spark):
-    """The scale path must be hash equi-joins (one per distinct cover
-    level), never a nested-loop range join."""
-    from osm_io_spark.operators.spatial_join import s2_containment_join
-    x, y, z = _random_dirs(n=2000, seed=5)
+def _leaf_points(spark, n, seed):
+    x, y, z = _random_dirs(n=n, seed=seed)
     df = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(len(x)), "x": x, "y": y, "z": z}))
-    pts = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
-           .localCheckpoint(eager=False))
+    return (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
+            .localCheckpoint(eager=False))
+
+
+def _between_pairs(pts, cover_ids):
+    """The BETWEEN brute force: sorted (pid, cover_id) for every leaf
+    inside a cover's descendant id range."""
+    p = pts.select("pid", "s2_cell").toPandas()
+    pid, cells = p.pid.to_numpy(), p.s2_cell.to_numpy()
+    cover_ids = np.asarray(cover_ids, np.int64)
+    rn, rx = s2.s2_range_np(cover_ids)
+    return sorted((int(i), int(c)) for c, lo, hi in zip(cover_ids, rn, rx)
+                  for i in pid[(cells >= lo) & (cells <= hi)])
+
+
+def _join_pairs(joined):
+    return sorted(map(tuple, joined.select("pid", "cover_id").collect()))
+
+
+def test_containment_join_plan_is_equi_broadcast(spark):
+    """The scale path is ONE hash equi-join on each point's ancestors at
+    the distinct cover levels — never a nested-loop range join, never a
+    Union of per-level joins."""
+    from osm_io_spark.operators.spatial_join import s2_containment_join
+    from osm_io_spark.plans import audit as A
+    pts = _leaf_points(spark, 2000, 5)
     covers = (pts.filter(F.col("pid") % 41 == 0)
               .select(s2.s2_parent_col(F.col("s2_cell"), 6).alias("cover_id"))
               .distinct()
@@ -150,42 +171,61 @@ def test_containment_join_plan_is_equi_broadcast(spark):
                   .select(s2.s2_parent_col(F.col("s2_cell"), 10)
                           .alias("cover_id")).distinct()))
     joined = s2_containment_join(pts, covers)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    plan = A.formatted_plan(joined)
+    assert A.count_op(plan, "BroadcastHashJoin") == 1
+    assert A.count_op(plan, "Union") == 0
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    # decomposition == BETWEEN semantics, brute-forced in pandas
-    got = (joined.groupBy("cover_id").count()
-           .toPandas().sort_values("cover_id").reset_index(drop=True))
-    pts_pd = pts.select("s2_cell").toPandas()
-    cov_pd = covers.toPandas()
-    cells = pts_pd.s2_cell.to_numpy()
-    rows = []
-    for cid in cov_pd.cover_id.to_numpy():
-        rn, rx = s2.s2_range_np(np.array([cid]))
-        cnt = int(((cells >= rn[0]) & (cells <= rx[0])).sum())
-        if cnt:
-            rows.append((cid, cnt))
-    want = (pd.DataFrame(rows, columns=["cover_id", "count"])
-            .sort_values("cover_id").reset_index(drop=True))
-    assert got.equals(want)
+    assert _join_pairs(joined) == _between_pairs(
+        pts, covers.toPandas().cover_id.to_numpy())
+
+
+def test_containment_join_empty_covers(spark):
+    """No cover rows ⇒ zero rows, still with the points + cover columns."""
+    from osm_io_spark.operators.spatial_join import s2_containment_join
+    pts = _leaf_points(spark, 200, 9)
+    covers = spark.createDataFrame([], "cover_id long, tag string")
+    joined = s2_containment_join(pts, covers)
+    assert joined.columns == pts.columns + ["cover_id", "tag"]
+    assert _join_pairs(joined) == _between_pairs(pts, []) == []
+
+
+def test_containment_join_face_and_leaf_covers(spark):
+    """The level extremes: a level-0 cover (a whole cube face) and a
+    level-30 cover (a leaf id itself, whose range is the id alone)."""
+    from osm_io_spark.operators.spatial_join import s2_containment_join
+    pts = _leaf_points(spark, 600, 17)
+    cells = pts.select("s2_cell").toPandas().s2_cell.to_numpy()
+    faces = np.unique(s2.s2_parent_np(cells[:40], 0))[:2]
+    leaves = cells[::97]
+    cover_ids = np.concatenate([faces, leaves])
+    assert set(s2.s2_level_np(cover_ids).tolist()) == {0, 30}
+    covers = spark.createDataFrame(
+        pd.DataFrame({"cover_id": cover_ids.astype(np.int64)}))
+    got = _join_pairs(s2_containment_join(pts, covers))
+    assert got == _between_pairs(pts, cover_ids)
+    hit = {c for _, c in got}
+    assert set(faces.tolist()) <= hit and set(leaves.tolist()) <= hit
+
+
+def test_containment_join_scratch_column_clash_raises(spark):
+    from osm_io_spark.operators.spatial_join import s2_containment_join
+    pts = _leaf_points(spark, 50, 3).withColumn("_s2anc", F.lit(0))
+    covers = spark.createDataFrame([(1 << 60,)], "cover_id long")
+    with pytest.raises(ValueError, match="_s2anc"):
+        s2_containment_join(pts, covers)
 
 
 def test_containment_join_shuffled_path_degrades_not_fails(spark):
     """The ADVICE-r4 scale guard: covers past ``max_broadcast_rows``
-    must degrade to shuffled hash joins (per-level equi keys, AQE
+    must degrade to one shuffled join (ancestor equi key, AQE
     skew-splittable) — same rows as the broadcast plan, no broadcast
     of the cover side, still never a nested loop."""
     from osm_io_spark.operators.spatial_join import s2_containment_join
-    x, y, z = _random_dirs(n=1500, seed=11)
-    df = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(len(x)), "x": x, "y": y, "z": z}))
-    pts = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
-           .localCheckpoint(eager=False))
+    pts = _leaf_points(spark, 1500, 11)
     covers = (pts.filter(F.col("pid") % 37 == 0)
               .select(s2.s2_parent_col(F.col("s2_cell"), 7).alias("cover_id"))
               .distinct())
-    want = sorted(map(tuple, s2_containment_join(pts, covers)
-                      .select("pid", "cover_id").collect()))
+    want = _join_pairs(s2_containment_join(pts, covers))
     # without the operator's explicit hint, Catalyst still auto-
     # broadcasts a side this small — disable the threshold so the test
     # sees the physical plan a genuinely large cover table would get
@@ -201,9 +241,7 @@ def test_containment_join_shuffled_path_degrades_not_fails(spark):
                     or "ShuffledHashJoin" in plan), kw
             assert ("NestedLoop" not in plan
                     and "CartesianProduct" not in plan)
-            got = sorted(map(tuple,
-                             joined.select("pid", "cover_id").collect()))
-            assert got == want, kw
+            assert _join_pairs(joined) == want, kw
         # the operator's own hint must still win over the threshold
         forced = s2_containment_join(pts, covers, broadcast_covers=True)
         assert "BroadcastHashJoin" in (forced._jdf.queryExecution()
