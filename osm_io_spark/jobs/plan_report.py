@@ -83,10 +83,11 @@ REPORT_QUERIES = [
      "adds only the deliberate round-robin widen before the kernel — "
      "pinned in tests/test_tiles.py::test_vector_tiles_single_widen_"
      "plan"),
-    ("mvt_tiles", "MVT sink (r5): one hash repartition on the tile "
-     "key + in-partition sort + single mapInPandas encode pass — "
-     "never a tiny-group applyInPandas. As with vector_tiles, the "
-     "fixture assembly owns every other exchange in this plan"),
+    ("mvt_tiles", "MVT sink (r5): encode_mvt_layers with one polygon "
+     "layer — one hash repartition on the tile key + in-partition sort "
+     "+ single mapInPandas encode pass, never a tiny-group "
+     "applyInPandas. As with vector_tiles, the fixture assembly owns "
+     "every other exchange in this plan"),
     ("tile_pyramid", "slippy heatmap pyramid (r5) — NOTE the plan "
      "below shows only the final cascade step: each level's partial "
      "is pinned by a lazy localCheckpoint (fan-out rule), which "
@@ -120,11 +121,11 @@ REPORT_QUERIES = [
      "cover→widen→mapInPandas shape as vector_tiles with the "
      "open-polyline split kernel; every other exchange belongs to "
      "the fixture way assembly"),
-    ("mvt_layered_tiles", "multi-layer MVT sink (r5d): three "
-     "normalized feature frames union into ONE tile-key repartition "
-     "+ in-partition sort + single encode pass; the per-layer "
-     "attribute joins are key equi-joins planned by Catalyst "
-     "(broadcast at fixture scale)"),
+    ("mvt_layered_tiles", "multi-layer MVT sink (r5d): the same "
+     "encoder over three normalized feature frames, unioned into ONE "
+     "tile-key repartition + in-partition sort + single encode pass; "
+     "the per-layer attribute joins are key equi-joins planned by "
+     "Catalyst (broadcast at fixture scale)"),
     ("osm_geodesic_stats", "geodesic measures (r5 final): way length "
      "+ ring area as codegen trig Columns over per-way/ring window "
      "lags — no Python eval in the measure stages, never a global "

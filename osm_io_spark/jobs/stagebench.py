@@ -202,8 +202,9 @@ def _tile_lines(spark, copies):
 def _tile_mvt(spark, copies):
     # clip + tile-key shuffle + per-tile MVT blob encode
     from ..operators import tiles as TL
-    return {"tiles": TL.encode_mvt_tiles(TL.build_vector_tiles(
-        _polys(spark, SF_DIR, copies), _ZOOM)).count()}
+    feats = TL.build_vector_tiles(_polys(spark, SF_DIR, copies), _ZOOM)
+    return {"tiles": TL.encode_mvt_layers(
+        [("osm", feats, "polygon")]).count()}
 
 
 # ---------------------------------------------------------------------------

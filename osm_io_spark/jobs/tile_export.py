@@ -72,6 +72,7 @@ def source_layers(spark, sf_dir: str | None, pbf: str | None, zoom: int):
         from ..operators.current import current_view
         from ..sources.pbf import decode as PD
 
+        # three branches consume the decode — pin it once (fan-out rule)
         els = PD.read_pbf(spark, pbf).localCheckpoint(eager=False)
         nodes = current_view(els.filter(F.col("etype") == "node"))
         ways = current_view(els.filter(F.col("etype") == "way"))
@@ -84,6 +85,9 @@ def source_layers(spark, sf_dir: str | None, pbf: str | None, zoom: int):
                 .select(F.col("id").alias("point_id"), "lon", "lat"))
 
         def _kv(df, idcol):
+            # OSM tags → the layer attribute frame shape. Deterministic
+            # min-struct dedupe: polygon ids conflate the way and
+            # relation namespaces, and attrs need one row per fid
             d = df.select(
                 F.col(idcol).alias("fid"),
                 F.transform("tags", lambda t: t["k"]).alias("tag_ks"),
@@ -145,13 +149,12 @@ def main(argv: list[str] | None = None) -> dict:
     if args.layered:
         layer_defs = source_layers(spark, args.sf_dir, args.pbf,
                                    args.zoom)
-        blobs = TL.encode_mvt_layers(layer_defs).withColumn(
-            "m", TL.tile_morton_col("x", "y"))
     else:
         polys = source_polygons(spark, args.sf_dir, args.pbf)
-        feats = TL.build_vector_tiles(polys, args.zoom)
-        blobs = TL.encode_mvt_tiles(feats).withColumn(
-            "m", TL.tile_morton_col("x", "y"))
+        layer_defs = [("osm", TL.build_vector_tiles(polys, args.zoom),
+                       "polygon")]
+    blobs = TL.encode_mvt_layers(layer_defs).withColumn(
+        "m", TL.tile_morton_col("x", "y"))
     if args.shard_by == "morton":
         # contiguous Morton ranges: shard k holds m ∈ [k, k+1)·4^z/N —
         # 2-D tile locality becomes per-shard m min/max manifest stats,

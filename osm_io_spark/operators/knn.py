@@ -78,6 +78,9 @@ def knn_join(probe: DataFrame, build: DataFrame, k: int, res: int,
     dist_sq = ((F.col("_plat") - F.col("_blat")) * (F.col("_plat") - F.col("_blat"))
                + (F.col("_plon") - F.col("_blon")) * (F.col("_plon") - F.col("_blon")))
 
+    # per-probe (dist_sq, build id) order: the rank of the result
+    w = Window.partitionBy("_pid").orderBy(F.col("_dist_sq").asc(),
+                                           F.col("_bid").asc())
     acc: DataFrame | None = None
     # geometric annuli: [0,1], [2,3], [4,7], [8,15], ... up to the grid
     bounds = [(0, 1)]
@@ -114,17 +117,14 @@ def knn_join(probe: DataFrame, build: DataFrame, k: int, res: int,
         # top-k can never re-enter it (distances are fixed), and the
         # prune bounds the checkpointed state at k·|probe| rows — the
         # difference between bounded and unbounded memory at 10^12 scale
-        wk = Window.partitionBy("_pid").orderBy(F.col("_dist_sq").asc(),
-                                                F.col("_bid").asc())
-        acc = (acc.withColumn("_rn", F.row_number().over(wk))
+        acc = (acc.withColumn("_rn", F.row_number().over(w))
                .filter(F.col("_rn") <= k).drop("_rn"))
         acc = acc.localCheckpoint(eager=True)  # truncate lineage per round
 
+        # acc already holds each probe's unique top-k: its size and
+        # largest distance are the settle statistics
         safe = (r_hi * min_sz) ** 2
-        w = Window.partitionBy("_pid").orderBy(F.col("_dist_sq").asc(), F.col("_bid").asc())
-        stats = (acc.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") <= k)
-                 .groupBy("_pid")
+        stats = (acc.groupBy("_pid")
                  .agg(F.count("*").alias("_cnt"), F.max("_dist_sq").alias("_kth")))
         # STRICT <: an unseen point exactly ON the annulus boundary
         # gridline can tie _kth and win the (dist, bid) tie-break —
@@ -135,11 +135,8 @@ def knn_join(probe: DataFrame, build: DataFrame, k: int, res: int,
         if r_hi >= n or unsettled.isEmpty():
             break
 
-    w = Window.partitionBy("_pid").orderBy(F.col("_dist_sq").asc(), F.col("_bid").asc())
     return (acc
-            .dropDuplicates(["_pid", "_bid"])
             .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
             .select(F.col("_pid").alias(probe_id), "rank",
                     F.col("_bid").alias(build_id),
                     F.col("_dist_sq").alias("dist_sq")))
@@ -335,6 +332,9 @@ def s2_knn_join(probe: DataFrame, build: DataFrame, k: int,
                 + (F.col("_pz") - F.col("_bz")) * (F.col("_pz") - F.col("_bz")))
     wk = Window.partitionBy("_pid").orderBy(F.col("_chord_sq").asc(),
                                             F.col("_bid").asc())
+    # per-probe (dist_sq, build id) order: the rank of the result
+    w = Window.partitionBy("_pid").orderBy(F.col("_dist_sq").asc(),
+                                           F.col("_bid").asc())
     acc: DataFrame | None = None
 
     def prune_topk(df: DataFrame) -> DataFrame:

@@ -11,11 +11,12 @@ the tile's pixel resolution, and quantize to integer tile-local
 coordinates on a fixed extent grid (4096 is the published MVT default).
 
 Spark-first layout — the whole pipeline is ONE shuffle (the final
-per-tile aggregation, when the caller asks for it):
+per-tile aggregation or MVT encode, when the caller asks for it):
 
   polygons ──(Column math: bbox → tile range)──► explode x ──►
   explode y ──(mapInPandas numpy kernel: clip+simplify+quantize)──►
-  per-(tile, polygon) features
+  per-(tile, polygon) features ──(encode_mvt_layers: tile-key
+  repartition + sorted-run mapInPandas)──► one MVT blob per tile
 
 The fan-out explode and the kernel pipeline in the SAME stage (no
 exchange in between — pinned in tests/test_plan_audit.py), so a
@@ -379,6 +380,29 @@ def tile_cover(polys: DataFrame, zoom: int,
              .drop("_xr", "_r", "_y0", "_y1"))
 
 
+def _tile_frame(pts: np.ndarray, row_of_pt: np.ndarray, xr: np.ndarray,
+                yr: np.ndarray, zoom: int, extent: int, buffer_px: int):
+    """Per-row buffered tile rect in degree space → (lon_l, lon_r,
+    lat_b, lat_t), and the vertices of ``pts`` (row ``row_of_pt``)
+    re-centred IN PLACE into their tile's frame (±360 shift): an
+    antimeridian-crossing feature reaches tiles on both sides of ±180°,
+    where half its vertices sit a full wrap away from the tile rect.
+    For non-crossing data every shift is 0 and the write is skipped —
+    bit-identical to the unshifted path."""
+    n = float(1 << zoom)
+    fb = buffer_px / float(extent)
+    lon_l = (xr - fb) / n * 360.0 - 180.0
+    lon_r = (xr + 1 + fb) / n * 360.0 - 180.0
+    lat_t = _inv_merc_lat_np(yr - fb, zoom)
+    lat_b = _inv_merc_lat_np(yr + 1 + fb, zoom)
+    if len(pts):
+        ctr = 0.5 * (lon_l + lon_r)
+        k = np.round((ctr[row_of_pt] - pts[:, 0]) / 360.0)
+        if k.any():
+            pts[:, 0] = pts[:, 0] + 360.0 * k
+    return lon_l, lon_r, lat_b, lat_t
+
+
 def _feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
                   buffer_px: int, tol_px: float):
     """Kernel: one (polygon, tile) row → 0 or 1 clipped feature row.
@@ -392,8 +416,6 @@ def _feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
     nrows = len(pdf)
     if nrows == 0:
         return pd.DataFrame(out)
-    n = float(1 << zoom)
-    fb = buffer_px / float(extent)
     ext = float(extent)
 
     # ---- flatten the whole batch: all rings of all rows, one array ----
@@ -423,26 +445,13 @@ def _feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
         drop[eidx[closed]] = True
         pts, seg = pts[~drop], seg[~drop]
 
-    # ---- per-row buffered tile rects in degree space ----
-    lon_l = (xr - fb) / n * 360.0 - 180.0
-    lon_r = (xr + 1 + fb) / n * 360.0 - 180.0
-    lat_t = _inv_merc_lat_np(yr - fb, zoom)
-    lat_b = _inv_merc_lat_np(yr + 1 + fb, zoom)
-
     # ---- 4 half-plane passes over EVERY ring at once ----
+    lon_l, lon_r, lat_b, lat_t = _tile_frame(pts, seg_row[seg], xr, yr,
+                                             zoom, extent, buffer_px)
     rl = lon_l[seg_row]
     rr = lon_r[seg_row]
     rb = lat_b[seg_row]
     rt = lat_t[seg_row]
-    # re-centre each vertex lon into its tile's frame (±360 shift):
-    # an antimeridian-crossing polygon reaches tiles on both sides of
-    # ±180°, where half its vertices sit a full wrap away from the
-    # tile rect. For non-crossing data every shift is 0 and the branch
-    # is skipped — bit-identical to the unshifted path.
-    if len(pts):
-        k = np.round(((0.5 * (rl + rr))[seg] - pts[:, 0]) / 360.0)
-        if k.any():
-            pts[:, 0] = pts[:, 0] + 360.0 * k
     pts, seg = _clip_half_batch(pts, seg, rl, 0, True)
     pts, seg = _clip_half_batch(pts, seg, rr, 0, False)
     pts, seg = _clip_half_batch(pts, seg, rb, 1, True)
@@ -504,12 +513,42 @@ def _feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
     return pd.DataFrame(out)
 
 
+def _fan_out(flat: DataFrame, zoom: int, max_tiles: int, id_col: str,
+             only_tiles: DataFrame | None, kernel, schema) -> DataFrame:
+    """The shared vector-tile shape: tile_cover → optional dirty-tile
+    semi-join → widen → one mapInPandas ``kernel(pdf)`` pass."""
+    cov = tile_cover(flat, zoom, max_tiles, id_col=id_col).drop(
+        "z", "left", "bottom", "right", "top")
+    if only_tiles is not None:
+        # Incremental re-tile: keep only (feature, tile) pairs whose
+        # tile is dirty, BEFORE the expensive kernel. A left-semi join
+        # against the (small) dirty set; broadcast when the set is
+        # driver-sized (count gate — same convention as the S2
+        # containment join's broadcast gate), shuffled otherwise.
+        keys = only_tiles.select("x", "y").distinct()
+        if keys.count() <= 1_000_000:
+            keys = F.broadcast(keys)
+        cov = cov.join(keys, ["x", "y"], "left_semi")
+    # The (feature, tile) fan-out inherits the SOURCE's partitioning —
+    # 1-2 parquet splits at bench scale would pin the Python kernel to
+    # 1-2 cores (CLAUDE.md widen rule; measured 55s → ~4s at sf0.1).
+    # widen() is a no-op at production split counts, so the extra
+    # shuffle is only paid when it is trivially cheap; it also spreads
+    # a hot giant polygon's tiles across the cluster.
+    cov = widen(cov)
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield kernel(pdf)
+
+    return cov.mapInPandas(run, schema)
+
+
 def build_vector_tiles(polys: DataFrame, zoom: int, extent: int = 4096,
                        buffer_px: int = 16, tol_px: float = 1.0,
                        max_tiles_per_polygon: int = 4096,
-                       only_tiles: DataFrame | None = None,
-                       broadcast_tiles: bool | None = None,
-                       antimeridian: str = "split") -> DataFrame:
+                       only_tiles: DataFrame | None = None) -> DataFrame:
     """Polygons (polygon_id, rings, left/bottom/right/top) → per-tile
     clipped + simplified + quantized features (FEATURE_SCHEMA).
 
@@ -518,9 +557,10 @@ def build_vector_tiles(polys: DataFrame, zoom: int, extent: int = 4096,
     ``buffer_px`` is the published MVT overzoom margin (vertices up to
     that many pixels outside the tile are kept so adjacent tiles render
     seamless borders); ``tol_px`` the Douglas–Peucker tolerance in
-    pixel units (0 disables).  ``antimeridian`` as in
-    :func:`tile_cover` — crossing rings fan out to both sides of ±180°
-    and the kernel re-centres their longitudes per tile."""
+    pixel units (0 disables).  Antimeridian-crossing rings fan out to
+    both sides of ±180° (:func:`tile_cover`) and the kernel re-centres
+    their longitudes per tile.  ``only_tiles``: restrict the build to
+    that (x, y) tile set (see :func:`retile`)."""
     # Flatten rings to primitive arrays BEFORE the tile fan-out: the
     # higher-order transform/flatten Columns are interpreted (CLAUDE.md
     # rule), so they must run once per polygon, not once per
@@ -535,34 +575,10 @@ def build_vector_tiles(polys: DataFrame, zoom: int, extent: int = 4096,
         F.flatten(F.transform(
             "rings", lambda r: F.transform(r, lambda p: p["lat"])))
         .alias("lats"))
-    cov = tile_cover(flat, zoom, max_tiles_per_polygon, antimeridian)
-    cov = cov.select("polygon_id", "x", "y", "ring_len", "lons", "lats")
-    if only_tiles is not None:
-        # Incremental re-tile: keep only (polygon, tile) pairs whose
-        # tile is dirty, BEFORE the expensive kernel. A left-semi join
-        # against the (small) dirty set; broadcast by default when the
-        # set is driver-sized (auto count gate — same convention as the
-        # S2 containment join's broadcast gate), shuffled otherwise.
-        keys = only_tiles.select("x", "y").distinct()
-        if broadcast_tiles is None:
-            broadcast_tiles = keys.count() <= 1_000_000
-        if broadcast_tiles:
-            keys = F.broadcast(keys)
-        cov = cov.join(keys, ["x", "y"], "left_semi")
-    # The (polygon, tile) fan-out inherits the SOURCE's partitioning —
-    # 1-2 parquet splits at bench scale would pin the Python kernel to
-    # 1-2 cores (CLAUDE.md widen rule; measured 55s → ~4s at sf0.1).
-    # widen() is a no-op at production split counts, so the extra
-    # shuffle is only paid when it is trivially cheap; it also spreads
-    # a hot giant polygon's tiles across the cluster.
-    cov = widen(cov)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield _feature_rows(pdf, zoom, extent, buffer_px, tol_px)
-
-    return cov.mapInPandas(run, FEATURE_SCHEMA)
+    return _fan_out(
+        flat, zoom, max_tiles_per_polygon, "polygon_id", only_tiles,
+        lambda pdf: _feature_rows(pdf, zoom, extent, buffer_px, tol_px),
+        FEATURE_SCHEMA)
 
 
 def tile_layer_stats(features: DataFrame) -> DataFrame:
@@ -601,8 +617,6 @@ def _line_feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
     nrows = len(pdf)
     if nrows == 0:
         return pd.DataFrame(out)
-    n = float(1 << zoom)
-    fb = buffer_px / float(extent)
     ext = float(extent)
     xr = pdf["x"].to_numpy().astype(np.float64)
     yr = pdf["y"].to_numpy().astype(np.float64)
@@ -613,17 +627,8 @@ def _line_feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
     seg = np.repeat(np.arange(nrows), lens)   # one part per row initially
     seg2row = np.arange(nrows)
 
-    lon_l = (xr - fb) / n * 360.0 - 180.0
-    lon_r = (xr + 1 + fb) / n * 360.0 - 180.0
-    lat_t = _inv_merc_lat_np(yr - fb, zoom)
-    lat_b = _inv_merc_lat_np(yr + 1 + fb, zoom)
-
-    # antimeridian re-centre, as in _feature_rows
-    if len(pts):
-        ctr = 0.5 * (lon_l + lon_r)
-        k = np.round((ctr[seg2row[seg]] - pts[:, 0]) / 360.0)
-        if k.any():
-            pts[:, 0] = pts[:, 0] + 360.0 * k
+    lon_l, lon_r, lat_b, lat_t = _tile_frame(pts, seg, xr, yr, zoom,
+                                             extent, buffer_px)
     pts, seg, seg2row = _clip_polyline_half_batch(
         pts, seg, seg2row, lon_l, 0, True)
     pts, seg, seg2row = _clip_polyline_half_batch(
@@ -687,10 +692,7 @@ def _line_feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
 def build_vector_tile_lines(lines: DataFrame, zoom: int,
                             extent: int = 4096, buffer_px: int = 16,
                             tol_px: float = 1.0,
-                            max_tiles_per_line: int = 4096,
-                            only_tiles: DataFrame | None = None,
-                            broadcast_tiles: bool | None = None,
-                            antimeridian: str = "split") -> DataFrame:
+                            max_tiles_per_line: int = 4096) -> DataFrame:
     """Polylines (way_id, line array<struct<lon,lat>>,
     left/bottom/right/top) → per-tile clipped + simplified + quantized
     MULTIlinestring features (LINE_FEATURE_SCHEMA) — the rendering path
@@ -705,25 +707,11 @@ def build_vector_tile_lines(lines: DataFrame, zoom: int,
         "way_id", "left", "bottom", "right", "top",
         F.transform("line", lambda p: p["lon"]).alias("lons"),
         F.transform("line", lambda p: p["lat"]).alias("lats"))
-    cov = tile_cover(flat, zoom, max_tiles_per_line, antimeridian,
-                     id_col="way_id")
-    cov = cov.select("way_id", "x", "y", "lons", "lats")
-    if only_tiles is not None:
-        keys = only_tiles.select("x", "y").distinct()
-        if broadcast_tiles is None:
-            broadcast_tiles = keys.count() <= 1_000_000
-        if broadcast_tiles:
-            keys = F.broadcast(keys)
-        cov = cov.join(keys, ["x", "y"], "left_semi")
-    cov = widen(cov)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield _line_feature_rows(pdf, zoom, extent, buffer_px,
-                                         tol_px)
-
-    return cov.mapInPandas(run, LINE_FEATURE_SCHEMA)
+    return _fan_out(
+        flat, zoom, max_tiles_per_line, "way_id", None,
+        lambda pdf: _line_feature_rows(pdf, zoom, extent, buffer_px,
+                                       tol_px),
+        LINE_FEATURE_SCHEMA)
 
 
 def tile_points(points: DataFrame, zoom: int, extent: int = 4096,
@@ -767,96 +755,36 @@ def tile_points(points: DataFrame, zoom: int, extent: int = 4096,
                     F.floor(py + F.lit(0.5)).cast("int").alias("py")))
 
 
-MVT_SCHEMA = T.StructType([
-    T.StructField("z", T.IntegerType()),
-    T.StructField("x", T.LongType()),
-    T.StructField("y", T.LongType()),
-    T.StructField("n_features", T.IntegerType()),
-    T.StructField("mvt", T.BinaryType()),
-])
-
-
-def encode_mvt_tiles(features: DataFrame, name: str = "osm",
-                     extent: int = 4096) -> DataFrame:
-    """FEATURE_SCHEMA frame → one MVT 2.1 binary blob per tile
-    (functions/mvt.py hand-encodes the published protobuf layout).
-
-    One shuffle, same as tile_layer_stats would pay — but NOT a
-    groupBy().applyInPandas(): typical tiles hold 1-3 features, and a
-    pandas frame per group costs ~0.5 ms, 90s for 185k tiles at sf0.1.
-    Instead: hash-repartition on the tile key, sortWithinPartitions
-    (tile, polygon_id), then ONE mapInPandas pass whose kernel walks
-    the sorted stream and cuts groups with numpy change-detection
-    (4.4s measured, 20x). A tile's rows are contiguous within a
-    partition but may straddle an Arrow batch boundary, so the kernel
-    carries the trailing (possibly incomplete) tile into the next
-    batch. The in-tile polygon_id sort makes every blob
-    byte-deterministic regardless of upstream partitioning."""
-    from ..functions import mvt as MVT
-
-    cols = ["z", "x", "y", "polygon_id", "ring_lens", "pxs", "pys"]
-    src = (features.select(*cols)
-           .repartition("z", "x", "y")
-           .sortWithinPartitions("z", "x", "y", "polygon_id"))
-
-    def _emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        z = pdf["z"].to_numpy()
-        x = pdf["x"].to_numpy()
-        y = pdf["y"].to_numpy()
-        pid = pdf["polygon_id"].to_numpy()
-        # batch-encode EVERY feature message of the Arrow batch at once
-        # (the per-feature numpy path costs more than it saves on ~20
-        # command ints — same tiny-input lesson as the clip kernel)
-        lens_col = pdf["ring_lens"].to_numpy()
-        rpr = np.array([len(v) for v in lens_col], np.int64)
-        feat_of_ring = np.repeat(np.arange(len(pdf)), rpr)
-        ring_lens = (np.concatenate(lens_col).astype(np.int64)
-                     if rpr.sum() else np.empty(0, np.int64))
-        q = np.column_stack([
-            np.concatenate(pdf["pxs"].to_numpy()).astype(np.int64),
-            np.concatenate(pdf["pys"].to_numpy()).astype(np.int64),
-        ]) if rpr.sum() else np.empty((0, 2), np.int64)
-        feat_msgs = MVT.encode_features_batch(q, ring_lens, feat_of_ring,
-                                              pid)
-        change = np.empty(len(pdf), bool)
-        change[0] = True
-        change[1:] = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | \
-                     (y[1:] != y[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        out = {"z": [], "x": [], "y": [], "n_features": [], "mvt": []}
-        for s, e in zip(starts, ends):
-            blob = MVT.encode_tile(MVT.encode_layer(
-                name, b"".join(feat_msgs[s:e]), extent))
-            out["z"].append(int(z[s]))
-            out["x"].append(int(x[s]))
-            out["y"].append(int(y[s]))
-            out["n_features"].append(e - s)
-            out["mvt"].append(blob)
-        return pd.DataFrame(out)
+def _sorted_runs(df: DataFrame, keys, order, emit, schema) -> DataFrame:
+    """Key-grouped batch kernel without tiny-group applyInPandas: one
+    hash repartition on ``keys``, sortWithinPartitions(``keys`` +
+    ``order``), then ONE mapInPandas pass. A key's rows are contiguous
+    within a partition but may straddle an Arrow batch boundary, so the
+    trailing (possibly incomplete) run is carried into the next batch.
+    ``emit(pdf, starts, ends)`` gets whole runs only: run i is rows
+    ``starts[i]:ends[i]``, cut by numpy change detection."""
+    src = df.repartition(*keys).sortWithinPartitions(*keys, *order)
 
     def run(batches):
         carry = None
         for pdf in batches:
-            if carry is not None and len(carry):
+            if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
             if not len(pdf):
                 continue
-            lz, lx, ly = (pdf["z"].iat[-1], pdf["x"].iat[-1],
-                          pdf["y"].iat[-1])
-            tail = ((pdf["z"] == lz) & (pdf["x"] == lx)
-                    & (pdf["y"] == ly)).to_numpy()
-            # the trailing tile may continue in the next batch — its
-            # rows are contiguous at the end of the sorted stream
-            ntail = int(tail.sum())
-            carry = pdf.iloc[len(pdf) - ntail:]
-            body = pdf.iloc[:len(pdf) - ntail]
-            if len(body):
-                yield _emit(body)
-        if carry is not None and len(carry):
-            yield _emit(carry)
+            change = np.zeros(len(pdf), bool)
+            change[0] = True
+            for k in keys:
+                v = pdf[k].to_numpy()
+                change[1:] |= v[1:] != v[:-1]
+            starts = np.flatnonzero(change)
+            carry = pdf.iloc[starts[-1]:]
+            if len(starts) > 1:
+                yield emit(pdf.iloc[:starts[-1]], starts[:-1], starts[1:])
+        if carry is not None:
+            yield emit(carry, np.array([0]), np.array([len(carry)]))
 
-    return src.mapInPandas(run, MVT_SCHEMA)
+    return src.mapInPandas(run, schema)
 
 
 MVT_LAYERED_SCHEMA = T.StructType([
@@ -872,9 +800,10 @@ _LAYER_KINDS = {"polygon": 3, "line": 2, "point": 1}  # mvt geom types
 
 
 def encode_mvt_layers(layers, extent: int = 4096) -> DataFrame:
-    """[(layer_name, frame, kind[, attrs])] → ONE multi-layer MVT 2.1
-    blob per tile — the complete tile a real map server emits: polygon,
-    line, and point layers in a single protobuf (spec: a Tile is
+    """[(layer_name, frame, kind[, attrs])] → ONE MVT 2.1 blob per tile
+    (functions/mvt.py hand-encodes the published protobuf layout) — a
+    single polygon layer, or the complete tile a real map server emits:
+    polygon, line, and point layers in one protobuf (spec: a Tile is
     repeated Layer messages; each Feature carries its geometry type and
     tag-index pairs into the layer's key/value dictionaries).
 
@@ -886,19 +815,33 @@ def encode_mvt_layers(layers, extent: int = 4096) -> DataFrame:
     (one extra key-equi-join per attributed layer; featureless ids get
     no tags field). Per-tile-layer key/value dictionaries are built in
     feature-sorted first-seen order, so blobs stay byte-deterministic.
+    Layer names must be distinct (MVT 2.1 §4.1).
 
     Frames normalize to one shared (z, x, y, layer, fid, part_lens,
     pxs, pys, tag_ks, tag_vs) shape and union; one shuffle (tile-key
     repartition) + sortWithinPartitions (tile, layer, fid) + one
-    mapInPandas pass with the same numpy change-detection and
-    batch-straddle carry as :func:`encode_mvt_tiles` (layer order
-    inside a tile = caller order)."""
+    mapInPandas pass (:func:`_sorted_runs`) — never a tiny-group
+    applyInPandas (~0.5 ms of pandas overhead per 1-3-feature tile).
+    Layer order inside a tile = caller order; the in-tile fid sort
+    makes every blob byte-deterministic regardless of upstream
+    partitioning."""
     from ..functions import mvt as MVT
 
+    layers = list(layers)
+    if not layers:
+        raise ValueError("encode_mvt_layers: no layers")
+    for t in layers:
+        if len(t) not in (3, 4) or t[2] not in _LAYER_KINDS:
+            raise ValueError(
+                f"encode_mvt_layers: layer {t!r} is not (name, frame, "
+                f"kind[, attrs]) with kind in {sorted(_LAYER_KINDS)}")
     names = [t[0] for t in layers]
-    gts = [_LAYER_KINDS[t[2]] for t in layers]
+    if len(set(names)) != len(names):
+        raise ValueError(f"encode_mvt_layers: duplicate layer names "
+                         f"{names} (MVT 2.1 §4.1)")
+    gts = np.array([_LAYER_KINDS[t[2]] for t in layers])
     empty_s = F.array().cast("array<string>")
-    norm = []
+    src = None
     for li, t in enumerate(layers):
         _name, df, kind = t[0], t[1], t[2]
         attrs = t[3] if len(t) > 3 else None
@@ -923,114 +866,79 @@ def encode_mvt_layers(layers, extent: int = 4096) -> DataFrame:
         else:
             d = (d.withColumn("tag_ks", empty_s)
                  .withColumn("tag_vs", empty_s))
-        norm.append(d.withColumn("layer", F.lit(li).cast("int")))
-    src = norm[0]
-    for d in norm[1:]:
-        src = src.unionByName(d)
-    src = (src.repartition("z", "x", "y")
-           .sortWithinPartitions("z", "x", "y", "layer", "fid"))
+        d = d.withColumn("layer", F.lit(li).cast("int"))
+        src = d if src is None else src.unionByName(d)
 
-    def _emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        z = pdf["z"].to_numpy()
-        x = pdf["x"].to_numpy()
-        y = pdf["y"].to_numpy()
+    def _emit(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
+        nrow = len(pdf)
         li = pdf["layer"].to_numpy()
-        fid = pdf["fid"].to_numpy()
-        change = np.empty(len(pdf), bool)
-        change[0] = True
-        change[1:] = (z[1:] != z[:-1]) | (x[1:] != x[:-1]) | \
-                     (y[1:] != y[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        # pass 1 — per-(tile, layer) key/value dictionaries and the
-        # per-feature packed tag bytes (indices are dictionary-local,
-        # so this precedes the batch geometry encode)
+        # (tile, layer) runs: a tile start or a layer change
+        lchange = np.zeros(nrow, bool)
+        lchange[starts] = True
+        lchange[1:] |= li[1:] != li[:-1]
+        lstarts = np.flatnonzero(lchange)
+        lends = np.append(lstarts[1:], nrow)
+        run_of_row = np.cumsum(lchange) - 1
+        # per-(tile, layer) key/value dictionaries and the per-feature
+        # packed tag bytes, over the tagged rows only (indices are
+        # dictionary-local, so this precedes the geometry encode)
         ks_col = pdf["tag_ks"].to_numpy()
         vs_col = pdf["tag_vs"].to_numpy()
-        tag_bytes: list = [b""] * len(pdf)
+        tagged = np.flatnonzero(np.fromiter(map(len, ks_col), np.int64,
+                                            nrow))
+        tag_bytes = [b""] * nrow if len(tagged) else None
         run_dicts: dict = {}
-        for s, e in zip(starts, ends):
-            lrun = li[s:e]
-            lchange = np.empty(e - s, bool)
-            lchange[0] = True
-            lchange[1:] = lrun[1:] != lrun[:-1]
-            ls = np.flatnonzero(lchange) + s
-            le = np.append(ls[1:], e)
-            for s2, e2 in zip(ls, le):
-                kd: dict = {}
-                vd: dict = {}
-                for i in range(s2, e2):
-                    pairs = []
-                    for k_, v_ in zip(ks_col[i], vs_col[i]):
-                        pairs.append(kd.setdefault(k_, len(kd)))
-                        pairs.append(vd.setdefault(v_, len(vd)))
-                    if pairs:
-                        tag_bytes[i] = MVT.encode_tags_packed(pairs)
-                run_dicts[s2] = (list(kd), list(vd))
-        # pass 2 — batch-encode feature messages per geometry type
-        # (messages are independent; only the layer wrapper needs the
-        # tile grouping)
-        feat_msgs: list = [None] * len(pdf)
+        for i in tagged:
+            kd, vd = run_dicts.setdefault(int(run_of_row[i]), ({}, {}))
+            pairs = []
+            for k_, v_ in zip(ks_col[i], vs_col[i]):
+                pairs.append(kd.setdefault(k_, len(kd)))
+                pairs.append(vd.setdefault(v_, len(vd)))
+            tag_bytes[i] = MVT.encode_tags_packed(pairs)
+        # batch-encode feature messages per geometry type (messages are
+        # independent; only the layer wrapper needs the tile grouping)
+        gt = gts[li]
+        fid = pdf["fid"].to_numpy()
         lens_col = pdf["part_lens"].to_numpy()
-        for lv in np.unique(li):
-            m = np.flatnonzero(li == lv)
-            sub = lens_col[m]
-            rpr = np.array([len(v) for v in sub], np.int64)
-            part_lens = (np.concatenate(sub).astype(np.int64)
-                         if rpr.sum() else np.empty(0, np.int64))
-            feat_of = np.repeat(np.arange(len(m)), rpr)
-            q = np.column_stack([
-                np.concatenate(pdf["pxs"].to_numpy()[m]).astype(np.int64),
-                np.concatenate(pdf["pys"].to_numpy()[m]).astype(np.int64),
-            ]) if rpr.sum() else np.empty((0, 2), np.int64)
+        pxs_col = pdf["pxs"].to_numpy()
+        pys_col = pdf["pys"].to_numpy()
+        feat_msgs: list = [None] * nrow
+        for g in np.unique(gt):
+            m = np.flatnonzero(gt == g)
+            rpr = np.fromiter(map(len, lens_col[m]), np.int64, len(m))
+            if rpr.sum():
+                part_lens = np.concatenate(lens_col[m]).astype(np.int64)
+                q = np.column_stack([
+                    np.concatenate(pxs_col[m]).astype(np.int64),
+                    np.concatenate(pys_col[m]).astype(np.int64)])
+            else:
+                part_lens = np.empty(0, np.int64)
+                q = np.empty((0, 2), np.int64)
             msgs = MVT.encode_features_batch(
-                q, part_lens, feat_of, fid[m], geom_type=gts[lv],
-                tag_bytes=[tag_bytes[i] for i in m])
+                q, part_lens, np.repeat(np.arange(len(m)), rpr), fid[m],
+                geom_type=int(g),
+                tag_bytes=(None if tag_bytes is None
+                           else [tag_bytes[i] for i in m]))
             for i, mi in enumerate(m):
                 feat_msgs[mi] = msgs[i]
-        # pass 3 — assemble tiles
-        out = {"z": [], "x": [], "y": [], "n_layers": [],
-               "n_features": [], "mvt": []}
-        for s, e in zip(starts, ends):
-            lrun = li[s:e]
-            lchange = np.empty(e - s, bool)
-            lchange[0] = True
-            lchange[1:] = lrun[1:] != lrun[:-1]
-            ls = np.flatnonzero(lchange) + s
-            le = np.append(ls[1:], e)
-            blob = b"".join(
-                MVT.encode_tile(MVT.encode_layer(
-                    names[int(li[s2])], b"".join(feat_msgs[s2:e2]),
-                    extent, *run_dicts[s2]))
-                for s2, e2 in zip(ls, le))
-            out["z"].append(int(z[s]))
-            out["x"].append(int(x[s]))
-            out["y"].append(int(y[s]))
-            out["n_layers"].append(len(ls))
-            out["n_features"].append(e - s)
-            out["mvt"].append(blob)
-        return pd.DataFrame(out)
+        # one Layer message per (tile, layer) run, joined per tile
+        lblobs = [
+            MVT.encode_tile(MVT.encode_layer(
+                names[li[s]], b"".join(feat_msgs[s:e]), extent,
+                *run_dicts.get(r, ((), ()))))
+            for r, (s, e) in enumerate(zip(lstarts, lends))]
+        lcut = np.searchsorted(lstarts, starts)
+        lcut_end = np.append(lcut[1:], len(lstarts))
+        return pd.DataFrame({
+            "z": pdf["z"].to_numpy()[starts],
+            "x": pdf["x"].to_numpy()[starts],
+            "y": pdf["y"].to_numpy()[starts],
+            "n_layers": (lcut_end - lcut).astype(np.int32),
+            "n_features": (ends - starts).astype(np.int32),
+            "mvt": [b"".join(lblobs[a:b]) for a, b in zip(lcut, lcut_end)]})
 
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            lz, lx, ly = (pdf["z"].iat[-1], pdf["x"].iat[-1],
-                          pdf["y"].iat[-1])
-            tail = ((pdf["z"] == lz) & (pdf["x"] == lx)
-                    & (pdf["y"] == ly)).to_numpy()
-            ntail = int(tail.sum())
-            carry = pdf.iloc[len(pdf) - ntail:]
-            body = pdf.iloc[:len(pdf) - ntail]
-            if len(body):
-                yield _emit(body)
-        if carry is not None and len(carry):
-            yield _emit(carry)
-
-    return src.mapInPandas(run, MVT_LAYERED_SCHEMA)
+    return _sorted_runs(src, ["z", "x", "y"], ["layer", "fid"], _emit,
+                        MVT_LAYERED_SCHEMA)
 
 
 def tile_morton_col(x, y) -> "F.Column":
@@ -1171,8 +1079,8 @@ def dirty_tiles(changed_polys: DataFrame, zoom: int,
     return cov.select("z", "x", "y").distinct()
 
 
-def retile(polys: DataFrame, changed_polys: DataFrame, zoom: int,
-           **kwargs) -> tuple[DataFrame, DataFrame]:
+def retile(polys: DataFrame, changed_polys: DataFrame,
+           zoom: int) -> tuple[DataFrame, DataFrame]:
     """Incremental tile maintenance: (dirty_tiles, rebuilt_features).
 
     A tile's content depends on EVERY polygon overlapping it, not just
@@ -1184,7 +1092,7 @@ def retile(polys: DataFrame, changed_polys: DataFrame, zoom: int,
     returned tiles in its tile store (blobs are deterministic, so an
     unchanged tile rewrites byte-identically)."""
     dirty = dirty_tiles(changed_polys, zoom).localCheckpoint(eager=False)
-    feats = build_vector_tiles(polys, zoom, only_tiles=dirty, **kwargs)
+    feats = build_vector_tiles(polys, zoom, only_tiles=dirty)
     return dirty, feats
 
 
@@ -1291,22 +1199,11 @@ def _paint_bins(bins: DataFrame, zoom: int, size: int) -> DataFrame:
     tail of render_heatmap_tiles and render_heatmap_pyramid)."""
     from ..functions import png as PNG
 
-    src = (bins.repartition("x", "y")
-           .sortWithinPartitions("x", "y", "py", "px"))
-
-    def _paint(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf["x"].to_numpy()
-        y = pdf["y"].to_numpy()
-        change = np.empty(len(pdf), bool)
-        change[0] = True
-        change[1:] = (x[1:] != x[:-1]) | (y[1:] != y[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
+    def _paint(pdf: pd.DataFrame, starts, ends) -> pd.DataFrame:
         px = pdf["px"].to_numpy()
         py = pdf["py"].to_numpy()
         n = pdf["n"].to_numpy()
-        out = {"z": [], "x": [], "y": [], "n_points": [], "max_count": [],
-               "png": []}
+        out = {"n_points": [], "max_count": [], "png": []}
         for s, e in zip(starts, ends):
             img = np.zeros((size, size), np.float64)
             img[py[s:e], px[s:e]] = n[s:e]
@@ -1314,32 +1211,15 @@ def _paint_bins(bins: DataFrame, zoom: int, size: int) -> DataFrame:
             scaled = np.round(
                 255.0 * np.log1p(img) / math.log1p(mx)).astype(np.uint8) \
                 if mx > 0 else img.astype(np.uint8)
-            out["z"].append(zoom)
-            out["x"].append(int(x[s]))
-            out["y"].append(int(y[s]))
             out["n_points"].append(int(n[s:e].sum()))
             out["max_count"].append(mx)
             out["png"].append(PNG.encode_gray(scaled))
-        return pd.DataFrame(out)
+        return pd.DataFrame({"z": np.full(len(starts), zoom, np.int32),
+                             "x": pdf["x"].to_numpy()[starts],
+                             "y": pdf["y"].to_numpy()[starts], **out})
 
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            lx, ly = pdf["x"].iat[-1], pdf["y"].iat[-1]
-            tail = ((pdf["x"] == lx) & (pdf["y"] == ly)).to_numpy()
-            ntail = int(tail.sum())
-            carry = pdf.iloc[len(pdf) - ntail:]
-            body = pdf.iloc[:len(pdf) - ntail]
-            if len(body):
-                yield _paint(body)
-        if carry is not None and len(carry):
-            yield _paint(carry)
-
-    return src.mapInPandas(run, HEATMAP_SCHEMA)
+    return _sorted_runs(bins, ["x", "y"], ["py", "px"], _paint,
+                        HEATMAP_SCHEMA)
 
 
 def tile_pyramid_rollup(df: DataFrame, zooms, aggs,

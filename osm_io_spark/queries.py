@@ -3253,7 +3253,7 @@ def q_mvt_tiles(spark, sf_dir):
     path = _fixture_pbf_path(spark)
     polys = ASM.assemble_polygons(PD.read_pbf(spark, path))
     feats = TL.build_vector_tiles(polys, zoom=13)
-    out = TL.encode_mvt_tiles(feats)
+    out = TL.encode_mvt_layers([("osm", feats, "polygon")])
     return (out.select("z", "x", "y", "n_features",
                        F.length("mvt").alias("mvt_bytes"))
             .orderBy("z", "x", "y"))
@@ -3344,50 +3344,15 @@ def q_mvt_layered_tiles(spark, sf_dir):
     each tile in ONE multi-layer MVT 2.1 blob (spec: a Tile is repeated
     Layer messages; features carry their geometry type — POLYGON=3 for
     assembled areas, LINESTRING=2 for ways, POINT=1 for tagged-node
-    POIs). One shuffle total (the tile-key repartition); blobs
+    POIs), with OSM tags as feature attributes — the PBF layers of
+    jobs/tile_export.source_layers. One tile-key repartition; blobs
     byte-deterministic. Rows-only; wire bytes, decode roundtrip, and
     layer ordering proven in tests/test_tile_lines.py."""
-    from .operators import assemble as ASM
-    from .operators import current as CUR
+    from .jobs.tile_export import source_layers  # imports this module
     from .operators import tiles as TL
-    from .sources.pbf import decode as PD
 
-    path = _fixture_pbf_path(spark)
-    # three branches consume the decode — pin it once (fan-out rule)
-    els = PD.read_pbf(spark, path).localCheckpoint(eager=False)
-    nodes = CUR.current_view(els.filter(F.col("etype") == "node"))
-    ways = CUR.current_view(els.filter(F.col("etype") == "way"))
-    polys = ASM.assemble_polygons(els)
-    lines = (ASM.way_lines(ways, nodes)
-             .select(F.col("id").alias("way_id"),
-                     F.col("ring").alias("line"),
-                     "left", "bottom", "right", "top"))
-    pois = (nodes.filter(F.size("tags") > 0)
-            .select(F.col("id").alias("point_id"), "lon", "lat"))
-
-    def _kv(df, idcol):
-        """OSM tags → the layer attribute frame shape. Deterministic
-        min-struct dedupe: polygon ids conflate the way and relation
-        namespaces (same caveat as the feature ids themselves), and the
-        attrs contract requires one row per fid."""
-        d = df.select(
-            F.col(idcol).alias("fid"),
-            F.transform("tags", lambda t: t["k"]).alias("tag_ks"),
-            F.transform("tags", lambda t: t["v"]).alias("tag_vs"))
-        return (d.groupBy("fid")
-                .agg(F.min(F.struct("tag_ks", "tag_vs")).alias("_s"))
-                .select("fid", F.col("_s.tag_ks").alias("tag_ks"),
-                        F.col("_s.tag_vs").alias("tag_vs")))
-
-    zoom = 13
-    tiles = TL.encode_mvt_layers([
-        ("areas", TL.build_vector_tiles(polys, zoom), "polygon",
-         _kv(polys, "polygon_id")),
-        ("roads", TL.build_vector_tile_lines(lines, zoom), "line",
-         _kv(ways, "id")),
-        ("pois", TL.tile_points(pois, zoom), "point",
-         _kv(nodes, "id")),
-    ])
+    tiles = TL.encode_mvt_layers(
+        source_layers(spark, None, _fixture_pbf_path(spark), 13))
     return (tiles.select("z", "x", "y", "n_layers", "n_features",
                          F.length("mvt").alias("mvt_bytes"))
             .orderBy("z", "x", "y"))
@@ -3818,7 +3783,8 @@ def _bench_vector_tiles(spark, sf_dir):
 def _bench_mvt_tiles(spark, sf_dir):
     from .operators import tiles as TL
 
-    return TL.encode_mvt_tiles(_bench_tile_features(spark, sf_dir)).select(
+    return TL.encode_mvt_layers(
+        [("osm", _bench_tile_features(spark, sf_dir), "polygon")]).select(
         "z", "x", "y", "n_features", F.length("mvt").alias("mvt_bytes"))
 
 

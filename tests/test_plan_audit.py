@@ -213,3 +213,23 @@ def test_s2_distance_join_two_broadcast_joins(spark):
     rep = A.audit(df, max_shuffles=1, min_broadcast_joins=2,
                   forbid_sort_merge_join=True)
     assert rep["broadcast_joins"] == 2
+
+
+@pytest.mark.parametrize("name, cap", [("mvt_tiles", 23),
+                                       ("mvt_layered_tiles", 42)])
+def test_mvt_sink_exchange_budget(spark, name, cap):
+    """The MVT sinks stay within the exchange counts BENCH/PLANS.md
+    records; all but the encoder's one belong to the fixture PBF
+    assembly and the per-layer attribute joins."""
+    A.audit(Q.QUERIES[name](spark, SF_DIR), max_shuffles=cap)
+
+
+def test_mvt_encoder_adds_one_exchange(spark):
+    """encode_mvt_layers adds exactly one shuffle above its feature
+    frame: the tile-key repartition feeding the sorted-run kernel."""
+    from osm_io_spark.operators import tiles as TL
+
+    feats = Q._bench_tile_features(spark, SF_DIR)
+    blobs = TL.encode_mvt_layers([("osm", feats, "polygon")])
+    before = A.count_op(A.formatted_plan(feats), "Exchange")
+    assert A.count_op(A.formatted_plan(blobs), "Exchange") == before + 1

@@ -571,6 +571,24 @@ def test_mvt_roundtrip_random_rings():
             assert (np.asarray(g) == np.asarray(r)).all()
 
 
+def _encode_osm(feats):
+    """One polygon layer named 'osm' — the single-layer tile sink."""
+    return TL.encode_mvt_layers([("osm", feats, "polygon")])
+
+
+def _collect_batched(df, rows_per_batch):
+    """Collect ``df`` with Arrow batches capped at ``rows_per_batch``
+    rows, so key runs straddle batch boundaries."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = conf.get(key)
+    try:
+        conf.set(key, str(rows_per_batch))
+        return df.collect()
+    finally:
+        conf.set(key, old)
+
+
 def test_encode_mvt_tiles_deterministic_and_decodable(spark):
     """The Spark sink: per-tile blobs decode back to the exact
     quantized rings of the features frame, independent of input
@@ -579,9 +597,9 @@ def test_encode_mvt_tiles_deterministic_and_decodable(spark):
     df = _square_poly_df(spark, -169.9, -19.1, 0.07, pid=5).unionByName(
         _square_poly_df(spark, -169.93, -19.13, 0.05, pid=9))
     feats = TL.build_vector_tiles(df, 13)
-    tiles1 = {(r.z, r.x, r.y): r for r in TL.encode_mvt_tiles(feats).collect()}
+    tiles1 = {(r.z, r.x, r.y): r for r in _encode_osm(feats).collect()}
     tiles2 = {(r.z, r.x, r.y): r
-              for r in TL.encode_mvt_tiles(feats.repartition(7)).collect()}
+              for r in _encode_osm(feats.repartition(7)).collect()}
     assert tiles1.keys() == tiles2.keys() and len(tiles1) >= 4
     by_tile = {}
     for r in feats.collect():
@@ -612,13 +630,8 @@ def test_encode_mvt_tiles_batch_straddle(spark):
                             pid=pid)
         df = d if df is None else df.unionByName(d)
     feats = TL.build_vector_tiles(df, 11)
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-        rows = TL.encode_mvt_tiles(feats.coalesce(1)).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    baseline = TL.encode_mvt_tiles(feats).collect()
+    rows = _collect_batched(_encode_osm(feats.coalesce(1)), 3)
+    baseline = _encode_osm(feats).collect()
     got = {(r.z, r.x, r.y): (r.n_features, bytes(r.mvt)) for r in rows}
     want = {(r.z, r.x, r.y): (r.n_features, bytes(r.mvt)) for r in baseline}
     assert len(rows) == len(got), "duplicate tile emitted"
@@ -627,6 +640,64 @@ def test_encode_mvt_tiles_batch_straddle(spark):
     assert total == feats.count()
     for r in rows:
         assert len(MVT.decode_mvt(bytes(r.mvt))["features"]) == r.n_features
+
+
+def test_encode_mvt_layers_batch_straddle_attributed(spark):
+    """3-row Arrow batches over a three-layer attributed input: tiles
+    and their (tile, layer) runs straddle batch boundaries, yet every
+    blob — layer dictionaries included — equals the default-batch one."""
+    from osm_io_spark.functions import mvt as MVT
+    polys = None
+    for pid in range(6):
+        d = _square_poly_df(spark, 13.40 + pid * 1e-4, 52.50, 0.05,
+                            pid=pid)
+        polys = d if polys is None else polys.unionByName(d)
+    lines = polys.select(F.col("polygon_id").alias("way_id"),
+                         F.element_at("rings", 1).alias("line"),
+                         "left", "bottom", "right", "top")
+    pts = polys.select(F.col("polygon_id").alias("point_id"),
+                       F.col("left").alias("lon"),
+                       F.col("bottom").alias("lat"))
+    attrs = spark.createDataFrame(
+        [(i, ["name", "kind"], [f"n{i % 3}", "k"]) for i in range(0, 6, 2)],
+        "fid long, tag_ks array<string>, tag_vs array<string>")
+    zoom = 11
+    layers = [
+        ("areas", TL.build_vector_tiles(polys, zoom), "polygon", attrs),
+        ("roads", TL.build_vector_tile_lines(lines, zoom), "line", attrs),
+        ("pois", TL.tile_points(pts, zoom), "point", attrs)]
+    rows = _collect_batched(TL.encode_mvt_layers(layers), 3)
+    want = {(r.z, r.x, r.y): (r.n_layers, r.n_features, bytes(r.mvt))
+            for r in TL.encode_mvt_layers(layers).collect()}
+    got = {(r.z, r.x, r.y): (r.n_layers, r.n_features, bytes(r.mvt))
+           for r in rows}
+    assert len(rows) == len(got), "duplicate tile emitted"
+    assert got == want
+    assert max(n for n, _f, _b in got.values()) == 3
+    assert max(f for _n, f, _b in got.values()) > 3
+    for n_layers, n_features, blob in got.values():
+        dec = MVT.decode_mvt(blob)
+        assert len(dec["layers"]) == n_layers
+        assert len(dec["features"]) == n_features
+        for L in dec["layers"]:
+            for (fid, _g), a in zip(L["features"], L["attrs"]):
+                assert a == ({"name": f"n{fid % 3}", "kind": "k"}
+                             if fid % 2 == 0 else {})
+
+
+@pytest.mark.parametrize("layers, match", [
+    ([], "no layers"),
+    ([("a", None)], "is not"),
+    ([("a", None, "polygon", None, None)], "is not"),
+    ([("a", None, "raster")], "is not"),
+    ([("a", None, "polygon"), ("a", None, "line")], "duplicate"),
+])
+def test_encode_mvt_layers_rejects_bad_layers(layers, match):
+    """Malformed ``layers`` fail fast with ValueError before any frame
+    is touched: an empty list, a tuple that is not 3 or 4 long, an
+    unknown kind, and duplicate layer names (MVT 2.1 §4.1)."""
+    with pytest.raises(ValueError, match=match):
+        TL.encode_mvt_layers(layers)
 
 
 # ---------------------------------------------------------------------------
@@ -662,7 +733,10 @@ def test_render_heatmap_tiles_matches_numpy(spark):
     import pandas as pd
     sdf = spark.createDataFrame(pd.DataFrame({"lat": lat, "lon": lon}))
     zoom, size = 3, 64
-    rows = TL.render_heatmap_tiles(sdf, zoom, size).collect()
+    tiles = TL.render_heatmap_tiles(sdf, zoom, size)
+    rows = tiles.collect()
+    # 3-row Arrow batches: every tile's bins straddle batch boundaries
+    assert sorted(_collect_batched(tiles, 3)) == sorted(rows)
     # independent reference
     X, Y = TL._merc_xy_np(lon, lat, zoom)
     tx, ty = np.floor(X).astype(int), np.floor(Y).astype(int)
