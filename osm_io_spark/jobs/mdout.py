@@ -1,10 +1,10 @@
 """Regeneration-safe markdown output for the bench jobs.
 
-`stagebench` and `ingest_bench --out` regenerate only their measured
-tables, but BENCH/*.md also carries hand-appended evidence sections
-(band salting, batched kernels, read scaling, conversions) that used
-to be silently destroyed on regeneration (bitten in round 2 — see
-CLAUDE.md). Everything at and below HAND_MARKER survives a rewrite.
+`stagebench` regenerates only its measured tables, but BENCH/*.md
+also carries hand-appended evidence sections (band salting, batched
+kernels, conversions) that used to be silently destroyed on
+regeneration (bitten in round 2 — see CLAUDE.md). Everything at and
+below HAND_MARKER survives a rewrite.
 """
 from __future__ import annotations
 

@@ -101,8 +101,8 @@ def run(argv: list[str] | None = None) -> dict:
         salt = int(args.salt)
         if salt > 1:
             probe_cells = SJ.tag_probe_cells(images, args.res)
-            hot = SJ.hot_cells(probe_cells,
-                               threshold_rows=bucket_threshold)
+            hot = SJ.resolve_salt(probe_cells, "auto", None,
+                                  threshold_rows=bucket_threshold)[1]
 
     catalog = SnapshotCatalog(args.catalog)
     table = catalog.table(args.table)

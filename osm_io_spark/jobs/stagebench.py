@@ -1,7 +1,8 @@
 """One stage bench: the scaling and method evidence behind
-BENCH/{BASELINE,TILES,CONTEXT,CLUSTER,S2,CC,IVF,NGRAM,SKEW}.md.
+BENCH/{BASELINE,INGEST,TILES,CONTEXT,CLUSTER,S2,CC,IVF,NGRAM,SKEW}.md.
 
     python -m osm_io_spark.jobs.stagebench [--only TILES,S2] [--sf-dir DIR]
+    python -m osm_io_spark.jobs.stagebench --only mvt_tiles
 
 Without a multi-node cluster, the north rule's N-vs-4N scaling
 criterion is evidenced on one host: the IDENTICAL job runs at two
@@ -23,12 +24,18 @@ Each (stage, parallelism) cell runs in its own JVM (``--cell``): a
 stage measured after a heavy stage in the same JVM inherits its
 heap/GC state (clip at 4 threads swung 14.7-25.7 s, and a superset
 stage once ran faster than its subset). A cell does 1 warm-up and 3
-timed runs, records loadavg before and after, and prints ONE JSON
+timed runs, records loadavg before and after and the seconds of each
+phase (session setup, warm-up, timed runs, check), and prints ONE JSON
 line; a failed check exits non-zero and the orchestrator raises with
-the cell's stderr tail. The pure-codegen control cell runs once per
+the cell's stderr tail. Per file, the orchestrator prints the cells'
+wall and phase totals to stderr. The pure-codegen control cell runs once per
 level; its efficiency sits next to every row's, since on a shared
 host the engine-vs-control ratio, not a single wall number, decides.
 Polygon and registry stages read the tables under ``--sf-dir``.
+
+``--only`` also takes any ``queries.BENCH_BUILD`` name: that entry runs
+as an unlisted stage at both levels, one JVM per cell, and its table
+goes to stdout; no BENCH file is written.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from dataclasses import dataclass
 from typing import Callable
@@ -49,10 +57,12 @@ from pyspark.sql import functions as F
 
 from .. import queries as Q
 from ..session import get_spark
+from ..sources.pbf import decode as PD
+from ..sources.pbf import encode as PE
 from .mdout import write_preserving
-from .sf1_evidence import SRC
+from .tile_export import source_polygons
 
-SF_DIR = SRC          # the input tables; --sf-dir overrides it
+SF_DIR = "/root/testdata/sf0.1"   # the input tables; --sf-dir overrides it
 RUNS, WARMUP = 3, 1
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
@@ -119,6 +129,123 @@ def _j7(spark, n):
 
 
 # ---------------------------------------------------------------------------
+# INGEST — the PBF codec
+# ---------------------------------------------------------------------------
+# A planet-shaped synthetic extract: ``size`` DenseNodes (every 10th a
+# natural=tree) and size/20 five-ref ways, delta+dictionary, zlib — the
+# wire format of the reference's fixtures. Its parquet and its .osm.pbf
+# are staged once per size under _CACHE (generator cost is not codec
+# cost), so the first cell's untimed warm-up pays for them. File bytes
+# and block counts are not compared across levels: the encode splits
+# by the session's parallelism, and a partition-edge block may hold
+# fewer than 8,000 elements (encode._encode_partitions).
+
+_CACHE = os.path.join(tempfile.gettempdir(), "stagebench_ingest")
+
+
+def synth_elements(spark, n_nodes: int, n_ways: int, parts: int):
+    """Distributed deterministic planet-shaped element table."""
+    import pandas as pd
+
+    def gen_nodes(batches):
+        for pdf in batches:
+            ids = pdf["id"].to_numpy(np.int64) + 1
+            lat = ((ids * 2654435761) % 120000000) / 1e6 - 60.0
+            lon = ((ids * 2971215073) % 360000000) / 1e6 - 180.0
+            rows = []
+            for i, la, lo in zip(ids, lat, lon):
+                i = int(i)
+                tags = ([{"k": "natural", "v": "tree"}] if i % 10 == 0 else [])
+                rows.append(("node", i, 1, float(la), float(lo),
+                             1600000000000 + i * 1000, i % 1000 + 1,
+                             i % 500 + 1, f"u{i % 500 + 1}", True,
+                             tags, None, None))
+            yield pd.DataFrame(rows, columns=PD._COLS)
+
+    def gen_ways(batches):
+        for pdf in batches:
+            ids = pdf["id"].to_numpy(np.int64) + 1
+            rows = []
+            for i in ids:
+                i = int(i)
+                refs = [(i * 7 + j) % n_nodes + 1 for j in range(5)]
+                rows.append(("way", i, 1, None, None,
+                             1600000000000 + i * 1000, i % 1000 + 1,
+                             i % 500 + 1, f"u{i % 500 + 1}", True,
+                             [{"k": "highway", "v": "residential"}],
+                             refs, None))
+            yield pd.DataFrame(rows, columns=PD._COLS)
+
+    nodes = (spark.range(0, n_nodes, 1, parts)
+             .mapInPandas(gen_nodes, schema=PD.ELEMENTS))
+    ways = (spark.range(0, n_ways, 1, max(1, parts // 4))
+            .mapInPandas(gen_ways, schema=PD.ELEMENTS))
+    return nodes.unionByName(ways)
+
+
+def _staged(spark, n):
+    """(elements, .osm.pbf path) of the size-n extract, staged on first
+    use; each file appears under its final name only once complete."""
+    pq, pbf = (os.path.join(_CACHE, f"{n}{ext}")
+               for ext in (".parquet", ".osm.pbf"))
+    if not os.path.exists(pq):
+        synth_elements(spark, n, n // 20, _parts(spark)).write.mode(
+            "overwrite").parquet(pq + ".tmp")
+        os.replace(pq + ".tmp", pq)
+    els = spark.read.parquet(pq)
+    if not os.path.exists(pbf):
+        PE.write_pbf(els, pbf + ".tmp")
+        os.replace(pbf + ".tmp", pbf)
+    return els, pbf
+
+
+def _written(n):
+    return os.path.join(_CACHE, f"{n}.written.osm.pbf")
+
+
+def _is_tree():
+    return F.exists("tags", lambda t: (t["k"] == F.lit("natural"))
+                    & (t["v"] == F.lit("tree")))
+
+
+def _pbf_write(spark, n):
+    # encode + ordered sink of the staged elements
+    path = _written(n)
+    blocks = PE.write_pbf(_staged(spark, n)[0], path)
+    return {"blocks": blocks, "bytes": os.path.getsize(path)}
+
+
+def _pbf_read(spark, n):
+    # full decode → count by type
+    rows = (PD.read_pbf(spark, _staged(spark, n)[1])
+            .groupBy("etype").count().collect())
+    return dict(sorted((r["etype"], r["count"]) for r in rows))
+
+
+def _pbf_filtered_read(spark, n):
+    # a tag predicate over the decode stream
+    return {"trees": PD.read_pbf(spark, _staged(spark, n)[1])
+            .filter(_is_tree()).count()}
+
+
+def _check_read(spark, n, counts):
+    # the exact generated element counts, for every one the row saw
+    want = {"node": n, "way": n // 20, "trees": n // 10}
+    got = {k: v for k, v in counts.items() if k in want}
+    _require(bool(got) and all(want[k] == v for k, v in got.items()),
+             f"ingest: counted {got}, generated {want}")
+    return {}
+
+
+def _check_written(spark, n, counts):
+    # the written file decodes to exactly the generated elements
+    return _check_read(spark, n, PD.read_pbf(spark, _written(n)).agg(
+        F.count_if(F.col("etype") == "node").alias("node"),
+        F.count_if(F.col("etype") == "way").alias("way"),
+        F.count_if(_is_tree()).alias("trees")).first().asDict())
+
+
+# ---------------------------------------------------------------------------
 # TILES
 # ---------------------------------------------------------------------------
 
@@ -126,19 +253,10 @@ _ZOOM = 12
 
 
 def _polys(spark, sf_dir: str, copies: int):
-    """The bench rect+tri set replicated ``copies`` times with distinct
-    ids, sized so kernel compute dominates fixed per-stage overheads."""
-    rects = Q.rect_polygons(spark, sf_dir)
-    ring = F.array(
-        F.struct(F.col("left").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("top").alias("lat")),
-        F.struct(F.col("left").alias("lon"), F.col("top").alias("lat")))
-    rr = rects.select("polygon_id", F.array(ring).alias("rings"),
-                      "left", "bottom", "right", "top")
-    tr = Q.tri_polygons_ringed(spark, sf_dir).select(
-        "polygon_id", "rings", "left", "bottom", "right", "top")
-    polys = rr.unionByName(tr)
+    """The bench rect+tri set (tile_export.source_polygons) replicated
+    ``copies`` times with distinct ids, sized so kernel compute
+    dominates fixed per-stage overheads."""
+    polys = source_polygons(spark, sf_dir, None)
     if copies > 1:
         polys = (polys.withColumn(
             "_c", F.explode(F.sequence(F.lit(0), F.lit(copies - 1))))
@@ -592,8 +710,10 @@ def _ivf(ivf: bool):
 
 
 def _check_ivf(spark, n, counts):
-    # recall vs the exact kernel, and the candidate fraction: pairs
-    # sharing ≥1 of n_probe clusters over the n²/2 pair space
+    # recall vs the exact kernel, and the candidate fraction: Σ C(s, 2)
+    # over the n_probe-assigned cluster sizes s, over the n²/2 pair
+    # space — an upper bound, since a pair sharing k clusters counts k
+    # times
     from ..operators.ann import ivf_build
     with _vectors(spark, n) as vecs:
         exact, got = ({tuple(r) for r in _ivf_pairs(vecs, n, ivf)
@@ -671,8 +791,8 @@ def _check_ngram(spark, n, counts):
 # hot build rows n_salt x and scatters their probe rows BEFORE the
 # shuffle under any join strategy. The hot BAND case is one giant join
 # key (m² candidates from ONE reducer) that AQE cannot split at all
-# (it splits partitions, not keys). The AQE on/off pairs are per-row
-# session conf.
+# (it splits partitions, not keys). Every row runs with AQE skew-join
+# on (per-row session conf).
 
 _HOT_LAT, _HOT_LON, _SKEW_RES = 48.85, 2.35, 10    # one Zipf-head cell
 
@@ -770,25 +890,25 @@ def _salting(join, hot, salted):
     return run, check
 
 
-_SKEW_KINDS = (   # (kind, join, size, rows grouped by the join key)
-    ("cell", _cell_join, 6_000_000,
-     lambda spark, n: _skew_probe(spark, n).groupBy("cell")),
-    ("bands", _band_join, 500_000,
-     lambda spark, n: _fingerprints(spark, n).groupBy(
-         F.col("fp").bitwiseAND(F.lit((1 << 22) - 1)))),
-)
+_SKEW_KINDS = {   # kind: (join, size, rows grouped by the join key)
+    "cell": (_cell_join, 6_000_000,
+             lambda spark, n: _skew_probe(spark, n).groupBy("cell")),
+    "bands": (_band_join, 500_000,
+              lambda spark, n: _fingerprints(spark, n).groupBy(
+                  F.col("fp").bitwiseAND(F.lit((1 << 22) - 1)))),
+}
 
 
 def _skew_stages():
-    for aqe in ("on", "off"):
-        conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
-                "spark.sql.adaptive.skewJoin.enabled":
-                    str(aqe == "on").lower()}
-        for kind, join, size, hot in _SKEW_KINDS:
-            for salted in (False, True):
-                run, check = _salting(join, hot, salted)
-                yield Stage("SKEW", f"{kind}_{'salted' if salted else 'unsalted'}"
-                            f"_aqe_{aqe}", size, run, check, conf)
+    # AQE skew-join stays on: each AQE-off row repeated its AQE-on
+    # twin within the rows' spread (git show e3f41bb:BENCH/SKEW.md)
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.enabled": "true"}
+    for kind, (join, size, hot) in _SKEW_KINDS.items():
+        for salted in (False, True):
+            run, check = _salting(join, hot, salted)
+            yield Stage("SKEW", f"{kind}_{'salted' if salted else 'unsalted'}"
+                        f"_aqe_on", size, run, check, conf)
 
 
 # ---------------------------------------------------------------------------
@@ -797,8 +917,14 @@ def _skew_stages():
 
 CONTROL = Stage("", "control", 300_000_000, _control)
 
+_CODEC_NODES = 100_000
+
 STAGES = [
     Stage("BASELINE", "j7_rect_join", 150_000_000, _j7),
+    Stage("INGEST", "write", _CODEC_NODES, _pbf_write, _check_written),
+    Stage("INGEST", "read", _CODEC_NODES, _pbf_read, _check_read),
+    Stage("INGEST", "filtered_read", _CODEC_NODES, _pbf_filtered_read,
+          _check_read),
     Stage("TILES", "encode", 6_000_000, _tile_encode),
     Stage("TILES", "fanout", 4, _tile_fanout),
     Stage("TILES", "clip", 1, _tile_clip),
@@ -806,9 +932,9 @@ STAGES = [
     Stage("TILES", "mvt", 1, _tile_mvt),
     Stage("CONTEXT", "ridx", 12_000_000, _ridx),
     Stage("CONTEXT", "cascade", 12_000_000, _cascade),
-    Stage("CONTEXT", "closure", 100_000, _closure),
-    Stage("CLUSTER", "dbscan", 80_000, _dbscan, _check_dbscan),
-    Stage("CLUSTER", "dissolve", 40_000, _dissolve, _check_dissolve),
+    Stage("CONTEXT", "closure", 30_000, _closure),
+    Stage("CLUSTER", "dbscan", 16_000, _dbscan, _check_dbscan),
+    Stage("CLUSTER", "dissolve", 8_000, _dissolve, _check_dissolve),
     Stage("S2", "encode", 20_000_000, _s2_encode),
     Stage("S2", "cap_cover_precision", 400_000, _cap_covers, _check_cover),
     Stage("S2", "polygon_cover_precision", 400_000, _polygon_covers,
@@ -816,12 +942,12 @@ STAGES = [
     *(Stage("S2", name, None, _registry(name))
       for name in ("s2_containment_join", "s2_cap_cover_join",
                    "s2_polygon_cover_join", "s2_distance_join")),
-    Stage("CC", "chain_star", 10_000, *_cc(_chain, "star")),
-    Stage("CC", "chain_auto", 10_000, *_cc(_chain, "auto")),
-    *(Stage("CC", f"near_clique_{m}", 200_000, *_cc(_near_clique, m))
+    Stage("CC", "chain_star", 500, *_cc(_chain, "star")),
+    Stage("CC", "chain_auto", 500, *_cc(_chain, "auto")),
+    *(Stage("CC", f"near_clique_{m}", 40_000, *_cc(_near_clique, m))
       for m in ("propagation", "star", "auto")),
-    Stage("IVF", "exact", 8_000, _ivf(False)),
-    Stage("IVF", "ivf", 8_000, _ivf(True), _check_ivf),
+    Stage("IVF", "exact", 2_000, _ivf(False)),
+    Stage("IVF", "ivf", 2_000, _ivf(True), _check_ivf),
     Stage("NGRAM", "inverted_n", 200, _ngram("inverted"), _check_ngram),
     Stage("NGRAM", "prefix_n", 200, _ngram("prefix"), _check_ngram),
     Stage("NGRAM", "prefix_10n", 2_000, _ngram("prefix"), _check_ngram),
@@ -832,6 +958,8 @@ STAGES = [
 
 TITLES = {
     "BASELINE": "flagship j7 rect join, two-parallelism scaling",
+    "INGEST": "PBF codec write, read and filtered read (size: nodes; "
+              "plus size/20 ways)",
     "TILES": "tiling pipeline stages (size: probe images for encode, "
              "copies of the input polygons otherwise)",
     "CONTEXT": "context-index operators",
@@ -867,14 +995,21 @@ def session_conf(spark, conf: dict | None):
 def measure(spark, stage: Stage, size=None, runs: int = RUNS,
             warmup: int = WARMUP) -> dict:
     """Warm-up + timed runs of ``stage`` at ``size`` (default: its own),
-    then its check, outside the timed region."""
+    then its check, outside the timed region; ``phases`` holds the
+    seconds of each."""
     size = stage.size if size is None else size
+    t = [time.perf_counter()]
     with session_conf(spark, stage.conf):
-        samples, counts = Q.time_runs(lambda: stage.run(spark, size),
-                                      runs, warmup)
+        Q.time_runs(lambda: stage.run(spark, size), 0, warmup)
+        t.append(time.perf_counter())
+        samples, counts = Q.time_runs(lambda: stage.run(spark, size), runs)
+        t.append(time.perf_counter())
         if stage.check is not None:
             counts = {**counts, **stage.check(spark, size, counts)}
-    return {"samples": samples, "counts": counts}
+        t.append(time.perf_counter())
+    return {"samples": samples, "counts": counts,
+            "phases": dict(zip(("warmup", "timed", "check"),
+                               np.diff(t).round(3).tolist()))}
 
 
 def levels() -> tuple[int, int]:
@@ -892,6 +1027,17 @@ def efficiency(t_lo: float, t_hi: float, lo: int, hi: int) -> float:
     return (t_lo / t_hi) / (hi / lo)
 
 
+def resolve(sid: str) -> Stage:
+    """The STAGES row (or the control) with id ``sid``, else the
+    ``queries.BENCH_BUILD`` entry ``sid`` as an unlisted stage."""
+    listed = {s.id: s for s in [CONTROL, *STAGES]}
+    if sid in listed:
+        return listed[sid]
+    if sid not in Q.BENCH_BUILD:
+        raise KeyError(f"no stage or registry entry {sid!r}")
+    return Stage("", sid, None, _registry(sid))
+
+
 def _cell(spec: str) -> None:
     # exactly ONE JSON line on stdout: the JVM shares fd 1 and can write
     # GC/log noise there, so move fd 1 to stderr before it starts
@@ -899,20 +1045,25 @@ def _cell(spec: str) -> None:
     os.dup2(2, 1)
     sys.stdout = sys.stderr
     sid, cpus = spec.rsplit(":", 1)
-    stage = {s.id: s for s in [CONTROL, *STAGES]}[sid]
+    st = resolve(sid)
     load = [os.getloadavg()[0]]
+    t0 = time.perf_counter()
     spark = get_spark(f"stagebench-{sid}", master=f"local[{cpus}]",
                       shuffle_partitions=int(cpus) * 8)
     spark.sparkContext.setLogLevel("ERROR")
     Q.ensure_shipped(spark)
-    out = measure(spark, stage)
+    setup = round(time.perf_counter() - t0, 3)
+    out = measure(spark, st)
     load.append(os.getloadavg()[0])
-    out.update(stage=sid, cpus=int(cpus), load=load)
+    out.update(stage=sid, cpus=int(cpus), load=load,
+               phases={"setup": setup, **out["phases"]})
     os.write(real_stdout, (json.dumps(out) + "\n").encode())
 
 
 def run_cell(stage: Stage, cpus: int, sf_dir: str) -> dict:
-    """One (stage, parallelism) cell in its own JVM."""
+    """One (stage, parallelism) cell in its own JVM; ``wall`` is the
+    subprocess's seconds, phases plus interpreter start and exit."""
+    t0 = time.perf_counter()
     p = subprocess.run(
         [sys.executable, "-m", "osm_io_spark.jobs.stagebench",
          "--cell", f"{stage.id}:{cpus}", "--sf-dir", sf_dir],
@@ -921,10 +1072,19 @@ def run_cell(stage: Stage, cpus: int, sf_dir: str) -> dict:
         raise RuntimeError(f"cell {stage.id} at local[{cpus}] exited "
                            f"{p.returncode}:\n{p.stderr[-4000:]}")
     out = json.loads(p.stdout)
+    out["wall"] = round(time.perf_counter() - t0, 3)
     lo, med, _ = summary(out["samples"])
     print(f"# {stage.id} local[{cpus}]: min {lo:.2f}s median {med:.2f}s "
-          f"{out['counts']}", file=sys.stderr, flush=True)
+          f"wall {out['wall']:.1f}s {out['counts']}", file=sys.stderr,
+          flush=True)
     return out
+
+
+def phase_totals(cells: list[dict]) -> dict:
+    """Summed wall and phase seconds over ``cells``."""
+    keys = ["wall", *cells[0]["phases"]]
+    return {k: round(sum(c[k] if k == "wall" else c["phases"][k]
+                         for c in cells), 1) for k in keys}
 
 
 def _fmt(v) -> str:
@@ -947,7 +1107,9 @@ def render(file: str, rows: list, control: dict,
         mn, med, spread = summary(cell["samples"])
         return f"{mn:.2f} / {med:.2f} ({spread:.0%})"
 
-    out = [f"# BENCH/{file} — {TITLES[file]}", "",
+    head = (f"# BENCH/{file} — {TITLES[file]}" if file in TITLES else
+            f"# {file} — registry entry `queries.BENCH_BUILD[{file!r}]`")
+    out = [head, "",
            f"`python -m osm_io_spark.jobs.stagebench --only {file}`; stage "
            "definitions and corpus notes: `STAGES` in "
            "osm_io_spark/jobs/stagebench.py. One JVM per (stage, "
@@ -978,7 +1140,8 @@ def main(argv: list[str] | None = None) -> None:
     global SF_DIR
     files = list(dict.fromkeys(s.file for s in STAGES))
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--only", help=f"comma-separated subset of {files}")
+    ap.add_argument("--only", help=f"comma-separated subset of {files}, "
+                    "or queries.BENCH_BUILD names (table to stdout)")
     ap.add_argument("--sf-dir", default=SF_DIR)
     ap.add_argument("--cell", help=argparse.SUPPRESS)
     args = ap.parse_args(argv)
@@ -986,19 +1149,28 @@ def main(argv: list[str] | None = None) -> None:
     if args.cell:
         return _cell(args.cell)
     only = args.only.split(",") if args.only else files
-    if set(only) - set(files):
-        ap.error(f"unknown --only files: {sorted(set(only) - set(files))}")
+    unknown = [n for n in only if n not in files and n not in Q.BENCH_BUILD]
+    if unknown:
+        ap.error(f"unknown --only names {unknown}: neither a BENCH file "
+                 f"{files} nor a registry name {sorted(Q.BENCH_BUILD)}")
 
     lv = levels()
     control = {c: run_cell(CONTROL, c, SF_DIR) for c in lv}
-    for file in only:
-        t0 = time.time()
+    print(f"# control {phase_totals(list(control.values()))}",
+          file=sys.stderr, flush=True)
+    for name in only:
+        stages = ([s for s in STAGES if s.file == name] if name in files
+                  else [resolve(name)])
         rows = [(s, {c: run_cell(s, c, SF_DIR) for c in lv})
-                for s in STAGES if s.file == file]
-        path = os.path.join(_REPO, "BENCH", f"{file}.md")
-        write_preserving(path, render(file, rows, control, lv, SF_DIR))
-        print(f"# wrote {path} in {time.time() - t0:.0f}s", file=sys.stderr,
-              flush=True)
+                for s in stages]
+        md = render(name, rows, control, lv, SF_DIR)
+        if name in files:
+            write_preserving(os.path.join(_REPO, "BENCH", f"{name}.md"), md)
+        else:
+            print(md, flush=True)
+        totals = phase_totals([c for _, cells in rows
+                               for c in cells.values()])
+        print(f"# {name} {totals}", file=sys.stderr, flush=True)
 
 
 if __name__ == "__main__":

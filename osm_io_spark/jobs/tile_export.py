@@ -40,7 +40,8 @@ from pyspark.sql import functions as F
 
 from ..operators import tiles as TL
 from ..plans.snapshots import ResumableJob, SnapshotCatalog
-from ..queries import ensure_shipped, rect_polygons, tri_polygons_ringed
+from ..queries import (ensure_shipped, rect_polygons_ringed,
+                       tri_polygons_ringed)
 from ..session import get_spark
 
 
@@ -49,17 +50,8 @@ def source_polygons(spark, sf_dir: str | None, pbf: str | None):
         from ..operators import assemble as ASM
         from ..sources.pbf import decode as PD
         return ASM.assemble_polygons(PD.read_pbf(spark, pbf))
-    rects = rect_polygons(spark, sf_dir)
-    ring = F.array(
-        F.struct(F.col("left").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("top").alias("lat")),
-        F.struct(F.col("left").alias("lon"), F.col("top").alias("lat")))
-    rr = rects.select("polygon_id", F.array(ring).alias("rings"),
-                      "left", "bottom", "right", "top")
-    tr = tri_polygons_ringed(spark, sf_dir).select(
-        "polygon_id", "rings", "left", "bottom", "right", "top")
-    return rr.unionByName(tr)
+    return rect_polygons_ringed(spark, sf_dir).unionByName(
+        tri_polygons_ringed(spark, sf_dir))
 
 
 def source_layers(spark, sf_dir: str | None, pbf: str | None, zoom: int):

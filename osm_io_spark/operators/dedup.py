@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import hash64_col
 from .ann import cosine_q, dot_q, norm_sq_q, quantize
+from .spatial_join import resolve_salt
 from .util import widen
 
 
@@ -72,7 +73,7 @@ def minhash_lsh_pairs(docs: DataFrame, n_perm: int = 8, band_size: int = 2,
     # lazy local checkpoint: the self-join reads allbands twice; without
     # it each side recomputes the signatures from raw text
     allbands = allbands.localCheckpoint(eager=False)
-    n_salt, hot_keys = resolve_band_salt(
+    n_salt, hot_keys = resolve_salt(
         allbands, salt, hot, "_band", threshold_rows=salt_threshold_rows)
     left = allbands.select(F.col("_id").alias("id_a"), "_band")
     right = allbands.select(F.col("_id").alias("id_b"), "_band")
@@ -166,8 +167,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, min_pct: int = 12,
     loses nothing. Exact inter is then computed only for surviving
     candidates via array_intersect on the per-doc shingle arrays —
     the quadratic pair-COUNT shuffle never happens. On duplicate-
-    SATURATED corpora (the 10x replica bench) output ≈ candidates and
-    the win narrows to 1.4x (108.8s vs 154.6s, BENCH/SF1.md).
+    SATURATED corpora (a 10x replica of the sf0.1 documents) output ≈
+    candidates and the win narrows to 1.4x (108.8s vs 154.6s at
+    local[32]; `git show e3f41bb:BENCH/SF1.md`).
 
     ``method='inverted'``: the round-1 inverted-index join on ALL
     shingles + lossless length filter + pair-count groupBy; its
@@ -502,18 +504,6 @@ def salted_self_band_join(a: DataFrame, b: DataFrame, band_col: str,
     return hot_j.unionByName(cold_j)
 
 
-def resolve_band_salt(bands: DataFrame, salt, hot: list[int] | None,
-                      band_col: str,
-                      threshold_rows: int = 2_000_000,
-                      max_salt: int = 64) -> tuple[int, list[int]]:
-    """salt='auto' → measure per-band row counts once and salt only the
-    bands whose count exceeds the threshold (one aggregation; driver
-    side bounded). Mirrors spatial_join.resolve_salt."""
-    from .spatial_join import resolve_salt
-    return resolve_salt(bands, salt, hot, cell=band_col,
-                        threshold_rows=threshold_rows, max_salt=max_salt)
-
-
 def hamming_near_dup_pairs(df: DataFrame, max_k: int = 2, nbits: int = 16,
                            fp_col: str = "fp",
                            id_col: str = "doc_id",
@@ -555,7 +545,7 @@ def hamming_near_dup_pairs(df: DataFrame, max_k: int = 2, nbits: int = 16,
                      F.explode(keys).alias("_bks"))
              .select("_id", "_fp", F.xxhash64("_bks").alias("_bk"))
              .localCheckpoint(eager=False))
-    n_salt, hot_keys = resolve_band_salt(
+    n_salt, hot_keys = resolve_salt(
         bands, salt, hot, "_bk", threshold_rows=salt_threshold_rows)
     a = bands.select(F.col("_id").alias("id_a"), F.col("_fp").alias("_fpa"), "_bk")
     b = bands.select(F.col("_id").alias("id_b"), F.col("_fp").alias("_fpb"), "_bk")

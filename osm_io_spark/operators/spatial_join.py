@@ -180,16 +180,6 @@ def cell_join(probe: DataFrame, build_cells: DataFrame,
     return probe.join(b, on=cell, how="inner")
 
 
-def hot_cells(probe: DataFrame, cell: str = "cell",
-              threshold_rows: int = 2_000_000, top_n: int = 1024) -> list[int]:
-    """Cells whose probe-row count exceeds ``threshold_rows`` (Zipf heads).
-    One cheap count aggregation; result is driver-side (bounded by top_n)."""
-    rows = (probe.groupBy(cell).count()
-            .filter(F.col("count") > threshold_rows)
-            .orderBy(F.desc("count")).limit(top_n).collect())
-    return [r[cell] for r in rows]
-
-
 def salted_cell_join(probe: DataFrame, build_cells: DataFrame,
                      n_salt: int, hot: list[int],
                      cell: str = "cell", probe_key: str = "image_id") -> DataFrame:

@@ -171,6 +171,18 @@ def tri_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_V3X).alias("x3"), F.expr(_V3Y).alias("y3"))
 
 
+def rect_polygons_ringed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rects in the general-polygon schema (rings + bbox cols)."""
+    ring = F.array(
+        F.struct(F.col("left").alias("lon"), F.col("bottom").alias("lat")),
+        F.struct(F.col("right").alias("lon"), F.col("bottom").alias("lat")),
+        F.struct(F.col("right").alias("lon"), F.col("top").alias("lat")),
+        F.struct(F.col("left").alias("lon"), F.col("top").alias("lat")))
+    return rect_polygons(spark, sf_dir).select(
+        "polygon_id", F.array(ring).alias("rings"),
+        "left", "bottom", "right", "top")
+
+
 def tri_polygons_ringed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles in the general-polygon schema (rings + bbox cols)."""
     tri = tri_polygons(spark, sf_dir)
@@ -3223,14 +3235,7 @@ def q_tile_retile(spark, sf_dir):
     incremental == full-rebuild-restricted proven in test_tiles.py."""
     from .operators import tiles as TL
 
-    rects = rect_polygons(spark, sf_dir)
-    ring = F.array(
-        F.struct(F.col("left").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("bottom").alias("lat")),
-        F.struct(F.col("right").alias("lon"), F.col("top").alias("lat")),
-        F.struct(F.col("left").alias("lon"), F.col("top").alias("lat")))
-    polys = rects.select("polygon_id", F.array(ring).alias("rings"),
-                         "left", "bottom", "right", "top")
+    polys = rect_polygons_ringed(spark, sf_dir)
     changed = polys.filter(F.expr("polygon_id % 100 = 0"))
     dirty, feats = TL.retile(polys, changed, TILE_Z_COVER + 2)
     return (feats.groupBy("z", "x", "y")

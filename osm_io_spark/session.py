@@ -73,10 +73,10 @@ def get_spark(
 
 
 def get_bench_spark(app_name: str, cpus: int) -> SparkSession:
-    """local[cpus] session for timing runs (bench.py, jobs.remeasure),
-    with the Python worker pool already spawned: the first pandas-UDF
-    stage of a session pays worker spawn + numpy/pandas import — a
-    once-per-executor cost on a real cluster, not a per-query cost."""
+    """local[cpus] session for bench.py timing runs, with the Python
+    worker pool already spawned: the first pandas-UDF stage of a
+    session pays worker spawn + numpy/pandas import — a once-per-
+    executor cost on a real cluster, not a per-query cost."""
     spark = get_spark(app_name, master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

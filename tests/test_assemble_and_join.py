@@ -93,7 +93,7 @@ def test_join_invariant_to_resolution(spark, assembled, probe, res):
 def test_salted_join_identical(spark, assembled, probe):
     plain = SJ.spatial_join_polygons(probe, assembled, res=10)
     probe_cells = SJ.tag_probe_cells(probe, 10)
-    hot = SJ.hot_cells(probe_cells, threshold_rows=100)
+    hot = SJ.resolve_salt(probe_cells, "auto", None, threshold_rows=100)[1]
     assert hot, "fixture probe should have hot cells at res 10"
     salted = SJ.spatial_join_polygons(probe.withColumnRenamed("img_id", "image_id"),
                                       assembled, res=10, salt=4, hot=hot)

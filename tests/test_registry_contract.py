@@ -110,14 +110,30 @@ def test_bench_json_line_fits_driver_capture():
 
 
 def test_bench_methodology_is_shared_and_valid():
-    """bench.py and jobs.remeasure time rows through the one
-    queries.time_query, which builds from BENCH_BUILD; every bench name
-    and every bench_build entry must resolve in the single table."""
+    """bench.py times rows through the one queries.time_query and
+    stagebench runs a registry name as a stage; both build from
+    BENCH_BUILD, and every bench name and every bench_build entry must
+    resolve in the single table."""
     import bench
-    from osm_io_spark.jobs import remeasure
+    from osm_io_spark.jobs import stagebench as SB
 
-    assert remeasure.time_query is Q.time_query
     assert "Q.time_query(" in open(bench.__file__).read()
+
+    class Built:
+        def count(self):
+            return 3
+
+    calls = []
+    with pytest.MonkeyPatch.context() as mp:
+        for name in Q.BENCH_BUILD:
+            mp.setitem(Q.BENCH_BUILD, name, lambda spark, sf_dir, name=name:
+                       calls.append((name, spark, sf_dir)) or Built())
+        for name in Q.BENCH_BUILD:
+            st = SB.resolve(name)
+            assert (st.file, st.id, st.size, st.check) == (
+                "", name, None, None)
+            assert st.run("session", 0) == {"rows": 3}
+    assert calls == [(n, "session", SB.SF_DIR) for n in Q.BENCH_BUILD]
     names = [e.name for e in Q.REGISTRY]
     assert len(names) == len(set(names)), "duplicate registry names"
     assert set(Q.BENCH_QUERIES) <= set(Q.QUERIES)

@@ -65,7 +65,8 @@ def test_stage_table_shape():
     ids = [s.id for s in SB.STAGES]
     assert len(ids) == len(set(ids))
     assert {s.file for s in SB.STAGES} == set(SB.TITLES)
-    assert sum(s.file == "SKEW" for s in SB.STAGES) == 8
+    # {cell, bands} x {unsalted, salted}; the AQE-off twins are dropped
+    assert sum(s.file == "SKEW" for s in SB.STAGES) == 4
     for s in SB.STAGES:
         assert s.conf is None or s.file == "SKEW", s.id
 
@@ -113,3 +114,28 @@ def test_cell_subprocess_prints_one_json_line():
     assert out["stage"] == "control" and out["cpus"] == 4
     assert len(out["samples"]) == SB.RUNS and min(out["samples"]) > 0
     assert out["counts"]["sum"] > 0 and len(out["load"]) == 2
+    phases = out["phases"]
+    assert list(phases) == ["setup", "warmup", "timed", "check"]
+    assert phases["setup"] > 0 and phases["warmup"] > 0
+    assert phases["timed"] == pytest.approx(sum(out["samples"]), abs=0.01)
+    assert phases["check"] >= 0
+    # run_cell adds the subprocess wall; totals sum it and each phase
+    totals = SB.phase_totals([{**out, "wall": 10.0}, {**out, "wall": 5.0}])
+    assert totals == {"wall": 15.0, **{k: round(2 * v, 1)
+                                       for k, v in phases.items()}}
+
+
+def test_only_resolves_registry_names(capsys):
+    # argparse level, no JVM: a registry name is an unlisted stage at
+    # the tables' size; an unknown name lists both kinds of name
+    st = SB.resolve("mvt_tiles")
+    assert (st.id, st.file, st.size) == ("mvt_tiles", "", None)
+    assert SB.resolve("TILES/mvt") is next(
+        s for s in SB.STAGES if s.id == "TILES/mvt")
+    with pytest.raises(KeyError):
+        SB.resolve("no_such_query")
+    with pytest.raises(SystemExit):
+        SB.main(["--only", "TILES,no_such_query"])
+    err = capsys.readouterr().err
+    assert "unknown --only names ['no_such_query']" in err
+    assert "'INGEST'" in err and "'mvt_tiles'" in err
