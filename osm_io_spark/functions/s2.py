@@ -323,6 +323,49 @@ def _angle(ax, ay, az, bx, by, bz):
     return np.arccos(dot)
 
 
+def _cover_descent(classify, max_level: int, max_cells: int) -> np.ndarray:
+    """The region-cover descent shared by the cap and polygon covers:
+    descend from the 6 face cells; ``classify(ids)`` returns boolean
+    (disjoint, contained) arrays for a frontier. A disjoint cell is
+    pruned; a cell is emitted when contained, at ``max_level``, or when
+    descending would break the ``max_cells`` budget; otherwise its 4
+    children join the next frontier. Returns the sorted cover."""
+    def children(cell):
+        lsb = cell & -cell
+        child_lsb = lsb >> 2
+        base = cell - lsb + child_lsb
+        return [base + 2 * k * child_lsb for k in range(4)]
+
+    def wrap64(v: int) -> int:
+        return v - (1 << 64) if v >= (1 << 63) else v
+
+    out: list[int] = []
+    # level-0 face cells: face<<61 | sentinel at bit 60 (faces 4-5 wrap
+    # into the signed representation)
+    frontier = [wrap64(((f << 1) | 1) << 60) for f in range(6)]
+    while frontier:
+        ids = np.array(frontier, np.int64)
+        disjoint, contained = classify(ids)
+        lvl = s2_level_np(ids)
+        nxt: list[int] = []
+        for n, cell in enumerate(frontier):
+            if disjoint[n]:
+                continue
+            # budget check BEFORE descending: a descend raises the
+            # projected total (out + remaining frontier + nxt) by +3,
+            # so gate on projected+3 to keep the final cover a hard
+            # <= max_cells (ADVICE r4: the old post-hoc check could
+            # overshoot by 2)
+            if (contained[n] or lvl[n] >= max_level
+                    or len(out) + (len(frontier) - n) + len(nxt) + 3
+                    >= max_cells):
+                out.append(cell)
+            else:
+                nxt.extend(children(cell))
+        frontier = nxt
+    return np.array(sorted(out), np.int64)
+
+
 def s2_cover_cap_np(lat: float, lon: float, radius_rad: float,
                     max_level: int = 10, max_cells: int = 256) -> np.ndarray:
     """Mixed-level S2 cell cover of a spherical cap (simplified
@@ -342,21 +385,7 @@ def s2_cover_cap_np(lat: float, lon: float, radius_rad: float,
     qy = np.cos(phi) * np.sin(theta)
     qz = np.sin(phi)
 
-    def children(cell):
-        lsb = cell & -cell
-        child_lsb = lsb >> 2
-        base = cell - lsb + child_lsb
-        return [base + 2 * k * child_lsb for k in range(4)]
-
-    def wrap64(v: int) -> int:
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    out: list[int] = []
-    # level-0 face cells: face<<61 | sentinel at bit 60 (faces 4-5 wrap
-    # into the signed representation)
-    frontier = [wrap64(((f << 1) | 1) << 60) for f in range(6)]
-    while frontier:
-        ids = np.array(frontier, np.int64)
+    def classify(ids):
         cx, cy, cz, corners = s2_cell_corners_np(ids)
         ctr_ang = _angle(qx, qy, qz, cx, cy, cz)
         corner_ang = _angle(qx, qy, qz,
@@ -365,26 +394,10 @@ def s2_cover_cap_np(lat: float, lon: float, radius_rad: float,
         circ = _angle(cx[:, None], cy[:, None], cz[:, None],
                       corners[:, :, 0], corners[:, :, 1],
                       corners[:, :, 2]).max(axis=1)
-        lvl = s2_level_np(ids)
-        disjoint = ctr_ang - circ > radius_rad
-        contained = corner_ang.max(axis=1) <= radius_rad
-        nxt: list[int] = []
-        for n, cell in enumerate(frontier):
-            if disjoint[n]:
-                continue
-            # budget check BEFORE descending: a descend raises the
-            # projected total (out + remaining frontier + nxt) by +3,
-            # so gate on projected+3 to keep the final cover a hard
-            # <= max_cells (ADVICE r4: the old post-hoc check could
-            # overshoot by 2)
-            if (contained[n] or lvl[n] >= max_level
-                    or len(out) + (len(frontier) - n) + len(nxt) + 3
-                    >= max_cells):
-                out.append(cell)
-            else:
-                nxt.extend(children(cell))
-        frontier = nxt
-    return np.array(sorted(out), np.int64)
+        return (ctr_ang - circ > radius_rad,
+                corner_ang.max(axis=1) <= radius_rad)
+
+    return _cover_descent(classify, max_level, max_cells)
 
 
 def _latlon_xyz_np(lat, lon):
@@ -493,22 +506,11 @@ def s2_cover_polygon_np(lats, lons, max_level: int = 10,
     verts = np.stack([vx, vy, vz], axis=1)
     vleaf = s2_from_xyz_np(vx, vy, vz)
 
-    def children(cell):
-        lsb = cell & -cell
-        child_lsb = lsb >> 2
-        base = cell - lsb + child_lsb
-        return [base + 2 * k * child_lsb for k in range(4)]
-
-    def wrap64(v: int) -> int:
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    out: list[int] = []
-    frontier = [wrap64(((f << 1) | 1) << 60) for f in range(6)]
     # closed edge loops for the crossing test
     e_a = verts
     e_b = np.roll(verts, -1, axis=0)
-    while frontier:
-        ids = np.array(frontier, np.int64)
+
+    def classify(ids):
         _, _, _, corners = s2_cell_corners_np(ids)          # (n, 4, 3)
         inside = point_in_spherical_polygon_np(
             corners[:, :, 0], corners[:, :, 1], corners[:, :, 2], verts)
@@ -520,22 +522,10 @@ def s2_cover_polygon_np(lats, lons, max_level: int = 10,
         cross = _arcs_cross_np(ca[:, :, None, :], cb[:, :, None, :],
                                e_a[None, None, :, :],
                                e_b[None, None, :, :]).any(axis=(1, 2))
-        disjoint = ~inside.any(axis=1) & ~vert_in_cell & ~cross
-        contained = inside.all(axis=1) & ~cross & ~vert_in_cell
-        lvl = s2_level_np(ids)
-        nxt: list[int] = []
-        for n, cell in enumerate(frontier):
-            if disjoint[n]:
-                continue
-            # same pre-descend budget gate as s2_cover_cap_np (ADVICE r4)
-            if (contained[n] or lvl[n] >= max_level
-                    or len(out) + (len(frontier) - n) + len(nxt) + 3
-                    >= max_cells):
-                out.append(cell)
-            else:
-                nxt.extend(children(cell))
-        frontier = nxt
-    return np.array(sorted(out), np.int64)
+        return (~inside.any(axis=1) & ~vert_in_cell & ~cross,
+                inside.all(axis=1) & ~cross & ~vert_in_cell)
+
+    return _cover_descent(classify, max_level, max_cells)
 
 
 def s2_cell_union_normalize_np(cells: np.ndarray) -> np.ndarray:

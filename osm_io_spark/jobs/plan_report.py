@@ -47,6 +47,15 @@ REPORT_QUERIES = [
     ("mm_caption_audit", "cross-modal audit: pigeonhole phash bands ∪ "
      "md5(caption) equi-join candidates, one pinned decode feeding "
      "every branch"),
+    ("j9_knn_ring_expansion", "planar exact kNN: the build side is "
+     "small here, so the shared kNN driver runs one broadcast numpy "
+     "top-k mapInPandas pass over the deduped probes — the one "
+     "exchange is that dedup, no join, no window (pinned in "
+     "tests/test_plan_audit.py)"),
+    ("s2_knn_join", "spherical exact kNN: the same driver and the same "
+     "one-pass shape as j9_knn_ring_expansion over unit xyz "
+     "coordinates; the S2 ancestor rounds run only past 4096 build "
+     "rows"),
     ("s2_cellid", "true S2 encode: Hilbert scan 4 levels per LOOKUP4 "
      "step, ~9 chained projections in one fused codegen stage small "
      "enough to JIT — no UDF, no shuffle"),
@@ -147,7 +156,7 @@ REPORT_QUERIES = [
      "scanned twice, never collected, and no broadcast grows with "
      "the probe side"),
     ("idw_interpolation", "IDW interpolation (r5 final): s2_knn_join "
-     "neighbor pairs (size-gated exact router) broadcast against ONE "
+     "neighbor pairs (the shared exact kNN driver) broadcast against ONE "
      "scan of the sample table, chord→arc + 1/d^p weights as codegen "
      "Columns, |sites|-row final agg — no sample-side shuffle "
      "anywhere downstream of the kNN"),

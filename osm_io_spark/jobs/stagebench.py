@@ -140,7 +140,7 @@ def _j7(spark, n):
 # by the session's parallelism, and a partition-edge block may hold
 # fewer than 8,000 elements (encode._encode_partitions).
 
-_CACHE = os.path.join(tempfile.gettempdir(), "stagebench_ingest")
+_CACHE = os.path.join(tempfile.gettempdir(), "stagebench_cache")
 
 
 def synth_elements(spark, n_nodes: int, n_ways: int, parts: int):
@@ -655,8 +655,6 @@ def clustered_embeddings(spark, n: int, centers: int, seed: int = 7):
     import pandas as pd
     from pyspark.sql import types as T
 
-    parts = spark.sparkContext.defaultParallelism * 2
-
     schema = T.StructType([
         T.StructField("vec_id", T.LongType(), False),
         T.StructField("embedding", T.ArrayType(T.FloatType()), False),
@@ -677,20 +675,19 @@ def clustered_embeddings(spark, n: int, centers: int, seed: int = 7):
                 rows.append((int(i), v.astype(np.float32)))
             yield pd.DataFrame(rows, columns=["vec_id", "embedding"])
 
-    return spark.range(0, n, 1, parts).mapInPandas(gen, schema)
+    return spark.range(0, n, 1, 8).mapInPandas(gen, schema)
 
 
-@contextlib.contextmanager
 def _vectors(spark, n):
-    from pyspark import StorageLevel
-
-    # persisted: both kernels read the corpus more than once
-    vecs = clustered_embeddings(spark, n, max(1, n // 100)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield vecs
-    finally:
-        vecs.unpersist()
+    """The size-n corpus, staged as parquet under _CACHE on first use
+    (the generator is not what the IVF rows measure), in 8 files at
+    every level; it appears under its final name only once complete."""
+    path = os.path.join(_CACHE, f"ivf_{n}.parquet")
+    if not os.path.exists(path):
+        clustered_embeddings(spark, n, max(1, n // 100)).write.mode(
+            "overwrite").parquet(path + ".tmp")
+        os.replace(path + ".tmp", path)
+    return spark.read.parquet(path)
 
 
 def _ivf_pairs(vecs, n, ivf: bool):
@@ -704,8 +701,7 @@ def _ivf_pairs(vecs, n, ivf: bool):
 
 def _ivf(ivf: bool):
     def run(spark, n):
-        with _vectors(spark, n) as vecs:
-            return {"pairs": _ivf_pairs(vecs, n, ivf).count()}
+        return {"pairs": _ivf_pairs(_vectors(spark, n), n, ivf).count()}
     return run
 
 
@@ -715,14 +711,14 @@ def _check_ivf(spark, n, counts):
     # space — an upper bound, since a pair sharing k clusters counts k
     # times
     from ..operators.ann import ivf_build
-    with _vectors(spark, n) as vecs:
-        exact, got = ({tuple(r) for r in _ivf_pairs(vecs, n, ivf)
-                       .select("id_a", "id_b").collect()}
-                      for ivf in (False, True))
-        _, index = ivf_build(vecs, int(n ** 0.5), n_assign=_IVF_PROBE)
-        sizes = np.array([r["count"] for r in
-                          index.groupBy("centroid_id").count().collect()],
-                         np.int64)
+    vecs = _vectors(spark, n)
+    exact, got = ({tuple(r) for r in _ivf_pairs(vecs, n, ivf)
+                   .select("id_a", "id_b").collect()}
+                  for ivf in (False, True))
+    _, index = ivf_build(vecs, int(n ** 0.5), n_assign=_IVF_PROBE)
+    sizes = np.array([r["count"] for r in
+                      index.groupBy("centroid_id").count().collect()],
+                     np.int64)
     return {"recall": round(len(exact & got) / max(1, len(exact)), 4),
             "candidate_fraction": round(
                 int((sizes * (sizes - 1) // 2).sum()) / (n * (n - 1) // 2),

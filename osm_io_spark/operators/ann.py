@@ -225,6 +225,24 @@ def _rows_topk_partial(row_ids, cos, nbr_ids, k: int, out) -> None:
     out[2].extend(np.take_along_axis(cs, top, axis=1)[rr, cc])
 
 
+def block_pair_sides(q: DataFrame, n_blocks: int) -> DataFrame:
+    """The blocked pair grid of the exact GEMM kernels: (_id, _v, _n)
+    rows hash into ``n_blocks`` blocks; block b serves as the A side
+    (_side 0) of pairs (b, j≥b) and the B side (_side 1) of pairs
+    (i≤b, b), pair key _pair = i*n_blocks + j — one group per
+    unordered block pair."""
+    blk = F.pmod(F.xxhash64("_id"), F.lit(n_blocks))
+    a_keys = F.transform(F.sequence(blk, F.lit(n_blocks - 1)),
+                         lambda j: blk * n_blocks + j)
+    b_keys = F.transform(F.sequence(F.lit(0), blk),
+                         lambda i: i * n_blocks + blk)
+    return (q.select("_id", "_v", "_n", F.explode(a_keys).alias("_pair"),
+                     F.lit(0).alias("_side"))
+            .unionByName(q.select("_id", "_v", "_n",
+                                  F.explode(b_keys).alias("_pair"),
+                                  F.lit(1).alias("_side"))))
+
+
 def knn_graph(vecs: DataFrame, k: int, id_col: str = "vec_id",
               vec_col: str = "embedding",
               block_rows: int = 1024,
@@ -287,20 +305,7 @@ def knn_graph(vecs: DataFrame, k: int, id_col: str = "vec_id",
             "the exact path is quadratic in the input shuffle, not "
             "just in FLOPs — use knn_graph_ivf (bucketed IVF scale "
             "path) or raise block_rows/max_replicated_rows explicitly")
-    q = q0.withColumn("_blk", F.pmod(F.xxhash64("_id"), F.lit(n_blocks)))
-    a_keys = F.transform(
-        F.sequence(F.col("_blk"), F.lit(n_blocks - 1)),
-        lambda j: F.col("_blk") * n_blocks + j)
-    b_keys = F.transform(
-        F.sequence(F.lit(0), F.col("_blk")),
-        lambda i: i * n_blocks + F.col("_blk"))
-    sides = (q.select("_id", "_v", "_n",
-                      F.explode(a_keys).alias("_pair"),
-                      F.lit(0).alias("_side"))
-             .unionByName(
-                 q.select("_id", "_v", "_n",
-                          F.explode(b_keys).alias("_pair"),
-                          F.lit(1).alias("_side"))))
+    sides = block_pair_sides(q0, n_blocks)
 
     part_schema = T.StructType([
         T.StructField("vec_id", T.LongType(), False),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import hash64_col
-from .ann import cosine_q, dot_q, norm_sq_q, quantize
+from .ann import block_pair_sides, cosine_q, dot_q, norm_sq_q, quantize
 from .spatial_join import resolve_salt
 from .util import widen
 
@@ -816,24 +816,10 @@ def embedding_near_dup_pairs(vecs: DataFrame, threshold_pct: int = 20,
     n_vec = vecs.count()
     n_blocks = max(1, -(-n_vec // block_rows))
 
-    q = (widen(vecs)
-         .select(F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_v"))
-         .withColumn("_n", norm_sq_q(F.col("_v")))
-         .withColumn("_blk", F.pmod(F.xxhash64("_id"), F.lit(n_blocks))))
-
-    # membership explosion: block b serves as the A side of pairs (b, j≥b)
-    # and the B side of pairs (i≤b, b); pair key = i*n_blocks + j
-    a_keys = F.transform(
-        F.sequence(F.col("_blk"), F.lit(n_blocks - 1)),
-        lambda j: F.col("_blk") * n_blocks + j)
-    b_keys = F.transform(
-        F.sequence(F.lit(0), F.col("_blk")),
-        lambda i: i * n_blocks + F.col("_blk"))
-    sides = (q.select("_id", "_v", "_n",
-                      F.explode(a_keys).alias("_pair"), F.lit(0).alias("_side"))
-             .unionByName(
-                 q.select("_id", "_v", "_n",
-                          F.explode(b_keys).alias("_pair"), F.lit(1).alias("_side"))))
+    sides = block_pair_sides(
+        widen(vecs)
+        .select(F.col(id_col).alias("_id"), quantize(F.col(vec_col)).alias("_v"))
+        .withColumn("_n", norm_sq_q(F.col("_v"))), n_blocks)
 
     thr2 = threshold_pct * threshold_pct
     out_schema = T.StructType([

@@ -2912,16 +2912,18 @@ def q_s2_polygon_cover_join(spark, sf_dir):
 
 
 def q_s2_knn_join(spark, sf_dir):
-    """J9 on the TRUE S2 index (round 5): exact spherical kNN via
-    hierarchical ancestor-annulus expansion — per round one hash
-    equi-join on level-ℓ ancestor keys (annulus-disjoint by
-    construction), settled when the k-th squared-chord distance beats
-    the probe's exact distance to its ancestor cell's edge
-    great-circles; face-boundary residue finished by a broadcast
-    cross-face pass. Same probe/build tables and k as
+    """J9 on the TRUE S2 index (round 5): exact spherical kNN through
+    the same driver as j9_knn_ring_expansion. The build side here is
+    small, so this is one broadcast numpy top-k pass; past 4096 build
+    rows it is hierarchical ancestor-annulus rounds (one hash
+    equi-join on level-ℓ ancestor keys, settled when the k-th
+    squared-chord distance beats the probe's exact distance to its
+    ancestor cell's edge great-circles) ending in one residue pass
+    over the whole build table. Same probe/build tables and k as
     j9_knn_ring_expansion, metric = squared chord (monotone in
     angle). Engine-native rows-only (trig); all-pairs brute-force
-    parity incl. face-edge probes in tests/test_s2_knn.py."""
+    parity on every route incl. face-edge probes in
+    tests/test_s2_knn.py."""
     from .operators import knn as KNN
     probe = images_probe(spark, sf_dir).filter(F.expr("img_id % 1000 < 15"))
     build = rect_polygons(spark, sf_dir).select("polygon_id", "clat", "clon")

@@ -9,6 +9,7 @@ scans must stay column-pruned.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -213,6 +214,17 @@ def test_s2_distance_join_two_broadcast_joins(spark):
     rep = A.audit(df, max_shuffles=1, min_broadcast_joins=2,
                   forbid_sort_merge_join=True)
     assert rep["broadcast_joins"] == 2
+
+
+@pytest.mark.parametrize("name", ["j9_knn_ring_expansion", "s2_knn_join"])
+def test_knn_small_build_is_one_kernel_pass(spark, name):
+    """The kNN build side is small at this scale: one broadcast numpy
+    top-k pass over the deduped probes. The one exchange is that
+    probe-id dedup; no join and no window anywhere in the plan."""
+    tree = A.operator_tree(A.formatted_plan(Q.QUERIES[name](spark, SF_DIR)))
+    assert A.count_op(tree, "Exchange") == 1
+    assert A.count_op(tree, "Window") == 0
+    assert not re.search(r"Join|CartesianProduct", tree)
 
 
 @pytest.mark.parametrize("name, cap", [("mvt_tiles", 23),

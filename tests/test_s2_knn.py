@@ -46,8 +46,8 @@ def tables(spark):
     plat = rng.uniform(-70, 70, n_p)
     plon = rng.uniform(-180, 180, n_p)
     # force probes ONTO face boundaries (lon 45 = face 0/1 edge; high
-    # lat = face 2) so the coarsen path and the cross-face broadcast
-    # fallback genuinely execute
+    # lat = face 2) so the coarsen path and the cross-face residue pass
+    # genuinely execute
     plat[:20] = rng.uniform(-5, 5, 20)
     plon[:20] = 45.0 + rng.uniform(-0.01, 0.01, 20)
     plat[20:30] = rng.uniform(88.0, 89.9, 10)
@@ -67,23 +67,31 @@ def tables(spark):
     return probe_rows, build_rows, probe.cache(), build.cache()
 
 
+# mode → (_SMALL_BUILD, _FINISH), monkeypatched: the defaults route
+# these tables to the small-build kernel
+MODES = {"auto": (KNN._SMALL_BUILD, KNN._FINISH),
+         # pure rounds; the residue pass after level 0 searches the
+         # other faces for the face-boundary probes
+         "rounds": (-1, 0),
+         # rounds + the residue pass firing after the first round
+         "finish": (-1, 10_000)}
+
+
+def _mode(monkeypatch, mode):
+    small, finish = MODES[mode]
+    monkeypatch.setattr(KNN, "_SMALL_BUILD", small)
+    monkeypatch.setattr(KNN, "_FINISH", finish)
+
+
 @pytest.mark.parametrize("k,start_level,mode", [
-    # thresholds zeroed: the pure hierarchical rounds (incl. the
-    # cross-face for-else residue) stay covered even though the test
-    # tables are small enough to route
-    (4, 5, "rounds"), (1, 3, "rounds"),
-    # defaults: the 315-row build routes to the broadcast-kernel branch
-    (4, 5, "auto"),
-    # rounds + driver-small residue finish (small_build off, residue
-    # threshold huge so the first unsettled check fires the finish)
+    (4, 5, "rounds"), (1, 3, "rounds"), (4, 5, "auto"),
     (4, 5, "finish"), (1, 3, "finish"),
 ])
-def test_s2_knn_matches_brute_force(spark, tables, k, start_level, mode):
+def test_s2_knn_matches_brute_force(spark, tables, monkeypatch, k,
+                                    start_level, mode):
     probe_rows, build_rows, probe, build = tables
-    kw = {"rounds": dict(small_build=0, finish_threshold=0),
-          "auto": {},
-          "finish": dict(small_build=0, finish_threshold=10_000)}[mode]
-    out = KNN.s2_knn_join(probe, build, k=k, start_level=start_level, **kw)
+    _mode(monkeypatch, mode)
+    out = KNN.s2_knn_join(probe, build, k=k, start_level=start_level)
     got = {}
     for r in out.collect():
         got.setdefault(r["img_id"], []).append(
@@ -102,16 +110,14 @@ def test_s2_knn_matches_brute_force(spark, tables, k, start_level, mode):
             assert abs(ch - dd) < 1e-9
 
 
-@pytest.mark.parametrize("kw", [
-    {},                                          # broadcast-kernel route
-    dict(small_build=0, finish_threshold=0),     # pure rounds
-])
-def test_s2_knn_k_exceeds_build_count(spark, kw):
+@pytest.mark.parametrize("mode", ["auto", "rounds"])
+def test_s2_knn_k_exceeds_build_count(spark, monkeypatch, mode):
+    _mode(monkeypatch, mode)
     probe = spark.createDataFrame([(1, 10.0, 10.0)],
                                   "img_id long, lat double, lon double")
     build = spark.createDataFrame(
         [(1, 11.0, 11.0), (2, -40.0, 170.0)],
         "polygon_id long, clat double, clon double")
-    out = KNN.s2_knn_join(probe, build, k=5, start_level=3, **kw).collect()
+    out = KNN.s2_knn_join(probe, build, k=5, start_level=3).collect()
     assert [(r["rank"], r["polygon_id"]) for r in
             sorted(out, key=lambda r: r["rank"])] == [(1, 1), (2, 2)]
