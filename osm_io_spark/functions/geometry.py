@@ -48,8 +48,11 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return inside
 
 
-def _segments_intersect(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> bool:
-    """Proper/improper segment intersection via orientation signs."""
+def _segments_cross(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """Proper/improper segment intersection via orientation signs
+    (elementwise): the endpoints of each segment lie on different sides
+    of — or one on — the other's line. Collinear overlaps are not
+    crossings."""
 
     def orient(ox, oy, px_, py_, qx, qy):
         return np.sign((px_ - ox) * (qy - oy) - (py_ - oy) * (qx - ox))
@@ -58,39 +61,107 @@ def _segments_intersect(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2) -> bool:
     d2 = orient(bx1, by1, bx2, by2, ax2, ay2)
     d3 = orient(ax1, ay1, ax2, ay2, bx1, by1)
     d4 = orient(ax1, ay1, ax2, ay2, bx2, by2)
-    if d1 != d2 and d3 != d4:
-        return True
-    return False
+    return (d1 != d2) & (d3 != d4)
 
 
-def rect_intersects_polygon(left, bottom, right, top, rings) -> bool:
-    """Does an axis-aligned rect intersect the polygon (edge or area)?
-    Used to refine bbox cell covers into tight covers."""
-    # polygon vertex inside rect
-    for ring in rings:
-        r = np.asarray(ring, np.float64)
-        if ((r[:, 0] >= left) & (r[:, 0] <= right)
-                & (r[:, 1] >= bottom) & (r[:, 1] <= top)).any():
-            return True
-    # rect corner inside polygon
-    cx = np.array([left, right, right, left])
-    cy = np.array([bottom, bottom, top, top])
-    if points_in_polygon(cx, cy, rings).any():
-        return True
-    # edge crossings
-    rect_edges = [
-        (left, bottom, right, bottom),
-        (right, bottom, right, top),
-        (right, top, left, top),
-        (left, top, left, bottom),
-    ]
-    for ring in rings:
-        x1, y1, x2, y2 = _ring_edges(np.asarray(ring, np.float64))
-        for (rx1, ry1, rx2, ry2) in rect_edges:
-            for j in range(len(x1)):
-                if _segments_intersect(x1[j], y1[j], x2[j], y2[j], rx1, ry1, rx2, ry2):
-                    return True
-    return False
+# (rect, polygon edge) pairs per chunk of rects_intersect_polygons:
+# bounds its temporaries whatever the batch and ring sizes
+_EDGE_PAIR_BUDGET = 1 << 19
+
+
+def rects_intersect_polygons(left, bottom, right, top, poly,
+                             polygons) -> np.ndarray:
+    """Does axis-aligned rect k intersect ``polygons[poly[k]]`` (edge or
+    area)? One vectorized pass over every (rect, polygon edge) pair of
+    a batch; used to refine bbox cell covers into tight covers. A rect
+    is kept when any polygon vertex lies in the closed rect, OR any
+    rect corner lies inside the rings (even-odd, the
+    :func:`points_in_polygon` ray cast; rings of < 3 vertices bound no
+    area), OR any rect edge crosses any ring edge
+    (:func:`_segments_cross`). ``polygons`` is a sequence of ring
+    lists, each ring an (m, 2) array of (lon, lat)."""
+    left, bottom, right, top = (np.asarray(a, np.float64)
+                                for a in (left, bottom, right, top))
+    poly = np.asarray(poly, np.int64)
+    rings = [np.asarray(r, np.float64).reshape(-1, 2)
+             for p in polygons for r in p]
+    n_rings = np.array([len(p) for p in polygons], np.int64)
+    ring_len = np.array([len(r) for r in rings], np.int64)
+    keep = np.zeros(len(left), bool)
+    if not len(rings) or not len(left):
+        return keep
+    # one edge per ring vertex, closing edge included (_ring_edges)
+    xy = np.concatenate(rings)
+    ring_start = np.cumsum(ring_len) - ring_len
+    nxt = np.arange(len(xy)) + 1
+    ends = ring_start + ring_len - 1
+    nxt[ends[ring_len > 0]] = ring_start[ring_len > 0]
+    x1, y1 = xy[:, 0], xy[:, 1]
+    x2, y2 = x1[nxt], y1[nxt]
+    area_edge = np.repeat(ring_len >= 3, ring_len)
+    # polygon p owns edges [edge_start[p], edge_start[p] + n_edges[p])
+    n_edges = np.bincount(np.repeat(np.arange(len(polygons)), n_rings),
+                          ring_len, len(polygons)).astype(np.int64)
+    edge_start = np.cumsum(n_edges) - n_edges
+    cnt = n_edges[poly]
+    bound = np.cumsum(cnt)
+    cuts = np.searchsorted(bound, np.arange(_EDGE_PAIR_BUDGET, bound[-1],
+                                            _EDGE_PAIR_BUDGET))
+    for rows in np.split(np.arange(len(left)), np.unique(cuts)):
+        if len(rows):
+            keep[rows] = _rects_hit(left[rows], bottom[rows], right[rows],
+                                    top[rows], edge_start[poly[rows]],
+                                    cnt[rows], x1, y1, x2, y2, area_edge)
+    return keep
+
+
+def _rects_hit(left, bottom, right, top, start, cnt, x1, y1, x2, y2,
+               area_edge) -> np.ndarray:
+    """The three tests of :func:`rects_intersect_polygons` over the
+    flattened (rect, edge) pairs of one chunk; each test runs only on
+    the rects the earlier ones left undecided."""
+    hit = np.zeros(len(left), bool)
+
+    def pairs(rows, edge_mask=None):
+        # (rect, edge) pairs of ``rows``: local rect index, edge index
+        # and the rect's bounds per pair
+        c = cnt[rows]
+        r = np.repeat(np.arange(len(rows)), c)
+        e = (np.arange(len(r)) - np.repeat(np.cumsum(c) - c, c)
+             + np.repeat(start[rows], c))
+        if edge_mask is not None:
+            r, e = r[edge_mask[e]], e[edge_mask[e]]
+        return (r, e, *(a[rows][r] for a in (left, bottom, right, top)))
+
+    def any_per_rect(r, pair, n):
+        return np.bincount(r[pair], minlength=n) > 0
+
+    # polygon vertex inside the closed rect
+    rows = np.arange(len(left))
+    r, e, lo, bo, ri, to = pairs(rows)
+    hit[rows] = any_per_rect(r, (x1[e] >= lo) & (x1[e] <= ri)
+                             & (y1[e] >= bo) & (y1[e] <= to), len(rows))
+    # rect corner inside the rings: even-odd ray cast over every edge
+    # of every area ring (the XOR of per-ring parities)
+    rows = np.flatnonzero(~hit)
+    r, e, lo, bo, ri, to = pairs(rows, area_edge)
+    ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
+    for px, py in ((lo, bo), (ri, bo), (ri, to), (lo, to)):
+        crosses = (ey1 > py) != (ey2 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (ex2 - ex1) * (py - ey1) / (ey2 - ey1) + ex1
+        odd = np.bincount(r[crosses & (px < xint)], minlength=len(rows)) % 2
+        hit[rows] |= odd == 1
+    # a rect edge crossing a ring edge (every ring)
+    rows = np.flatnonzero(~hit)
+    r, e, lo, bo, ri, to = pairs(rows)
+    ex1, ey1, ex2, ey2 = x1[e], y1[e], x2[e], y2[e]
+    cross = np.zeros(len(r), bool)
+    for bx1, by1, bx2, by2 in ((lo, bo, ri, bo), (ri, bo, ri, to),
+                               (ri, to, lo, to), (lo, to, lo, bo)):
+        cross |= _segments_cross(ex1, ey1, ex2, ey2, bx1, by1, bx2, by2)
+    hit[rows] = any_per_rect(r, cross, len(rows))
+    return hit
 
 
 WORLD_BBOX = (-180.0, -90.0, 180.0, 90.0)

@@ -293,10 +293,10 @@ def face_uv_to_xyz_np(face, u, v):
     return x / n, y / n, z / n
 
 
-def s2_cell_corners_np(cid):
-    """Unit-sphere xyz of each cell's 4 corners and center:
-    returns (cx, cy, cz, corners) with corners shaped (n, 4, 3)."""
-    face, i, j, level = s2_to_face_ij_np(cid)
+def _face_ij_corners_np(face, i, j, level):
+    """Unit-sphere xyz of the 4 corners and the center of cells given
+    as (face, i, j) at ``level`` (scalar or per cell): returns
+    (cx, cy, cz, corners) with corners shaped (n, 4, 3)."""
     # i/j are in the cell's own level units — rescale to the leaf grid
     i30 = np.left_shift(i, MAX_LEVEL - level).astype(np.float64)
     j30 = np.left_shift(j, MAX_LEVEL - level).astype(np.float64)
@@ -318,86 +318,161 @@ def s2_cell_corners_np(cid):
     return cx, cy, cz, corners
 
 
+def s2_cell_corners_np(cid):
+    """Unit-sphere xyz of each cell's 4 corners and center:
+    returns (cx, cy, cz, corners) with corners shaped (n, 4, 3)."""
+    return _face_ij_corners_np(*s2_to_face_ij_np(cid))
+
+
 def _angle(ax, ay, az, bx, by, bz):
     dot = np.clip(ax * bx + ay * by + az * bz, -1.0, 1.0)
     return np.arccos(dot)
 
 
-def _cover_descent(classify, max_level: int, max_cells: int) -> np.ndarray:
-    """The region-cover descent shared by the cap and polygon covers:
-    descend from the 6 face cells; ``classify(ids)`` returns boolean
-    (disjoint, contained) arrays for a frontier. A disjoint cell is
-    pruned; a cell is emitted when contained, at ``max_level``, or when
-    descending would break the ``max_cells`` budget; otherwise its 4
-    children join the next frontier. Returns the sorted cover."""
-    def children(cell):
-        lsb = cell & -cell
-        child_lsb = lsb >> 2
-        base = cell - lsb + child_lsb
-        return [base + 2 * k * child_lsb for k in range(4)]
+# child at Hilbert position k of a cell with orientation o: (i, j) bits
+# _POS_TO_IJ[o][k], orientation o ^ _POS_TO_ORIENT[k]
+_CHILD_DI = np.array([[ij >> 1 for ij in row] for row in _POS_TO_IJ], np.int64)
+_CHILD_DJ = np.array([[ij & 1 for ij in row] for row in _POS_TO_IJ], np.int64)
+_CHILD_OXOR = np.array(_POS_TO_ORIENT, np.int64)
 
-    def wrap64(v: int) -> int:
-        return v - (1 << 64) if v >= (1 << 63) else v
+# element budget (cells x corners x padded ring vertices) of one
+# polygon-classify chunk: bounds the temporaries of a batch descent
+_PAIR_BUDGET = 1 << 18
 
-    out: list[int] = []
+
+def _cover_descent(classify, n_regions: int, max_level: int,
+                   max_cells: int):
+    """The region-cover descent shared by every cap and polygon cover,
+    run for ``n_regions`` regions at once: all regions descend in
+    lockstep from their 6 face cells, so every frontier holds cells of
+    one level, grouped by region in each region's own frontier order.
+    The frontier carries (region, face, i, j, orientation, id); children
+    and corners come from (i, j) — no id is ever decoded.
+
+    ``classify(reg, face, i, j, level, ids)`` returns boolean
+    (disjoint, contained) arrays for a whole frontier. A disjoint cell
+    is pruned; a cell is emitted when contained, at ``max_level``, or
+    when descending would break its region's ``max_cells`` budget;
+    otherwise its 4 children join the next frontier.
+
+    The budget gate is the sequential per-region rule, applied in
+    frontier order: a cell descends only while ``emitted + remaining
+    frontier + next frontier + 3 < max_cells`` (a descend raises that
+    projected total by +3, so gating on it keeps every cover a hard
+    <= max_cells). Until a region's gate first fires every candidate
+    descends, so that prefix is one cumulative sum; the rest of a gated
+    region's frontier is walked cell by cell (near the budget, where
+    frontiers are small).
+
+    Returns (region, cell) int64 arrays sorted by region, then cell."""
+    reg = np.repeat(np.arange(n_regions, dtype=np.int64), 6)
+    face = np.tile(np.arange(6, dtype=np.int64), n_regions)
+    i = np.zeros_like(face)
+    j = np.zeros_like(face)
+    orient = face & 1
     # level-0 face cells: face<<61 | sentinel at bit 60 (faces 4-5 wrap
     # into the signed representation)
-    frontier = [wrap64(((f << 1) | 1) << 60) for f in range(6)]
-    while frontier:
-        ids = np.array(frontier, np.int64)
-        disjoint, contained = classify(ids)
-        lvl = s2_level_np(ids)
-        nxt: list[int] = []
-        for n, cell in enumerate(frontier):
-            if disjoint[n]:
-                continue
-            # budget check BEFORE descending: a descend raises the
-            # projected total (out + remaining frontier + nxt) by +3,
-            # so gate on projected+3 to keep the final cover a hard
-            # <= max_cells (ADVICE r4: the old post-hoc check could
-            # overshoot by 2)
-            if (contained[n] or lvl[n] >= max_level
-                    or len(out) + (len(frontier) - n) + len(nxt) + 3
-                    >= max_cells):
-                out.append(cell)
-            else:
-                nxt.extend(children(cell))
-        frontier = nxt
-    return np.array(sorted(out), np.int64)
+    ids = (((face.astype(np.uint64) << np.uint64(1)) | np.uint64(1))
+           << np.uint64(60)).view(np.int64)
+    n_out = np.zeros(n_regions, np.int64)
+    out_reg, out_ids = [reg[:0]], [ids[:0]]
+    level = 0
+    while len(ids):
+        disjoint, contained = classify(reg, face, i, j, level, ids)
+        forced = ~disjoint & (contained | (level >= max_level))
+        cand = ~disjoint & ~forced
+        counts = np.bincount(reg, minlength=n_regions)
+        start = np.cumsum(counts) - counts
+        # projected total before each cell if every earlier candidate
+        # of its region descended: disjoint -1, emit 0, descend +3
+        step = np.where(disjoint, -1, np.where(cand, 3, 0))
+        before = np.cumsum(step) - step
+        proj = n_out[reg] + counts[reg] + 3 + before - before[start[reg]]
+        gate = cand & (proj >= max_cells)
+        if gate.any():
+            hit = np.flatnonzero(gate)
+            first = hit[np.r_[True, reg[hit[1:]] != reg[hit[:-1]]]]
+            for g0 in first.tolist():
+                end = int(start[reg[g0]] + counts[reg[g0]])
+                t = int(proj[g0])
+                gated = []
+                for d, c in zip(disjoint[g0:end].tolist(),
+                                cand[g0:end].tolist()):
+                    if d:
+                        t -= 1
+                    elif c and t >= max_cells:
+                        gated.append(True)
+                        continue
+                    elif c:
+                        t += 3
+                    gated.append(False)
+                gate[g0:end] = gated
+        emit = forced | gate
+        out_reg.append(reg[emit])
+        out_ids.append(ids[emit])
+        n_out += np.bincount(reg[emit], minlength=n_regions)
+        p = np.repeat(np.flatnonzero(cand & ~gate), 4)
+        k = np.tile(np.arange(4, dtype=np.int64), len(p) // 4)
+        o = orient[p]
+        cell = ids[p]
+        lsb = cell & -cell
+        child_lsb = lsb >> 2
+        ids = cell - lsb + child_lsb + 2 * k * child_lsb
+        i = (i[p] << 1) | _CHILD_DI[o, k]
+        j = (j[p] << 1) | _CHILD_DJ[o, k]
+        orient = o ^ _CHILD_OXOR[k]
+        reg = reg[p]
+        face = face[p]
+        level += 1
+    reg = np.concatenate(out_reg)
+    ids = np.concatenate(out_ids)
+    order = np.lexsort((ids, reg))
+    return reg[order], ids[order]
 
 
-def s2_cover_cap_np(lat: float, lon: float, radius_rad: float,
-                    max_level: int = 10, max_cells: int = 256) -> np.ndarray:
-    """Mixed-level S2 cell cover of a spherical cap (simplified
-    S2RegionCoverer): descend from the 6 face cells; prune a cell only
-    on the provable disjointness bound ``angle(cap_center, cell_center)
-    - circumradius > radius`` (for a convex spherical cell both the
-    circumradius and the max distance to an outside point are attained
-    at a VERTEX, so corner math is exact for both bounds); emit when
-    fully contained (all corners within radius, again vertex-exact for
-    the convex cell), at max_level, or when the cell budget is reached.
-    Never misses an intersecting leaf (completeness is only ever
-    relaxed toward emitting a coarser ancestor).
-    """
-    phi = np.radians(lat)
-    theta = np.radians(lon)
-    qx = np.cos(phi) * np.cos(theta)
-    qy = np.cos(phi) * np.sin(theta)
-    qz = np.sin(phi)
+def _split_regions(reg, cells, n_regions: int) -> list[np.ndarray]:
+    ends = np.cumsum(np.bincount(reg, minlength=n_regions))
+    return np.split(cells, ends[:-1])
 
-    def classify(ids):
-        cx, cy, cz, corners = s2_cell_corners_np(ids)
-        ctr_ang = _angle(qx, qy, qz, cx, cy, cz)
-        corner_ang = _angle(qx, qy, qz,
+
+def s2_cover_caps_np(lats, lons, radii_rad, max_level: int = 10,
+                     max_cells: int = 256) -> list[np.ndarray]:
+    """Mixed-level S2 cell covers of spherical caps (simplified
+    S2RegionCoverer), one sorted cover per cap, all caps in one
+    descent: prune a cell only on the provable disjointness bound
+    ``angle(cap_center, cell_center) - circumradius > radius`` (for a
+    convex spherical cell both the circumradius and the max distance to
+    an outside point are attained at a VERTEX, so corner math is exact
+    for both bounds); emit when fully contained (all corners within
+    radius, again vertex-exact for the convex cell), at max_level, or
+    when the cell budget is reached. Never misses an intersecting leaf
+    (completeness is only ever relaxed toward emitting a coarser
+    ancestor)."""
+    qx, qy, qz = _latlon_xyz_np(lats, lons)
+    radii = np.asarray(radii_rad, np.float64)
+
+    def classify(reg, face, i, j, level, ids):
+        cx, cy, cz, corners = _face_ij_corners_np(face, i, j, level)
+        ax, ay, az = qx[reg], qy[reg], qz[reg]
+        ctr_ang = _angle(ax, ay, az, cx, cy, cz)
+        corner_ang = _angle(ax[:, None], ay[:, None], az[:, None],
                             corners[:, :, 0], corners[:, :, 1],
                             corners[:, :, 2])
         circ = _angle(cx[:, None], cy[:, None], cz[:, None],
                       corners[:, :, 0], corners[:, :, 1],
                       corners[:, :, 2]).max(axis=1)
-        return (ctr_ang - circ > radius_rad,
-                corner_ang.max(axis=1) <= radius_rad)
+        return (ctr_ang - circ > radii[reg],
+                corner_ang.max(axis=1) <= radii[reg])
 
-    return _cover_descent(classify, max_level, max_cells)
+    return _split_regions(*_cover_descent(classify, len(radii), max_level,
+                                          max_cells), len(radii))
+
+
+def s2_cover_cap_np(lat: float, lon: float, radius_rad: float,
+                    max_level: int = 10, max_cells: int = 256) -> np.ndarray:
+    """Cover of one spherical cap (see :func:`s2_cover_caps_np`)."""
+    return s2_cover_caps_np([lat], [lon], [radius_rad], max_level,
+                            max_cells)[0]
 
 
 def _latlon_xyz_np(lat, lon):
@@ -405,6 +480,24 @@ def _latlon_xyz_np(lat, lon):
     theta = np.radians(np.asarray(lon, np.float64))
     return (np.cos(phi) * np.cos(theta), np.cos(phi) * np.sin(theta),
             np.sin(phi))
+
+
+def _tangent(vx, vy, vz, px, py, pz):
+    """Unit tangent-plane direction of vertex v as seen from P."""
+    d = vx * px + vy * py + vz * pz
+    tx, ty, tz = vx - d * px, vy - d * py, vz - d * pz
+    n = np.sqrt(tx * tx + ty * ty + tz * tz)
+    n = np.where(n == 0, 1.0, n)
+    return tx / n, ty / n, tz / n
+
+
+def _winding_term(ta, tb, px, py, pz):
+    """Signed tangent-plane angle an edge subtends at P."""
+    dot = np.clip(ta[0] * tb[0] + ta[1] * tb[1] + ta[2] * tb[2], -1.0, 1.0)
+    cx = ta[1] * tb[2] - ta[2] * tb[1]
+    cy = ta[2] * tb[0] - ta[0] * tb[2]
+    cz = ta[0] * tb[1] - ta[1] * tb[0]
+    return np.arctan2(cx * px + cy * py + cz * pz, dot)
 
 
 def point_in_spherical_polygon_np(px, py, pz, verts: np.ndarray):
@@ -425,24 +518,11 @@ def point_in_spherical_polygon_np(px, py, pz, verts: np.ndarray):
     pz = np.asarray(pz, np.float64)
     total = np.zeros(px.shape, np.float64)
     e = len(verts)
-    # tangent-plane projection of each vertex as seen from P
-    def tangent(v):
-        d = v[0] * px + v[1] * py + v[2] * pz
-        tx, ty, tz = v[0] - d * px, v[1] - d * py, v[2] - d * pz
-        n = np.sqrt(tx * tx + ty * ty + tz * tz)
-        n = np.where(n == 0, 1.0, n)
-        return tx / n, ty / n, tz / n
-    t0 = tangent(verts[0])
+    t0 = _tangent(*verts[0], px, py, pz)
     ta = t0
     for k in range(e):
-        tb = t0 if k == e - 1 else tangent(verts[k + 1])
-        dot = np.clip(ta[0] * tb[0] + ta[1] * tb[1] + ta[2] * tb[2],
-                      -1.0, 1.0)
-        cx = ta[1] * tb[2] - ta[2] * tb[1]
-        cy = ta[2] * tb[0] - ta[0] * tb[2]
-        cz = ta[0] * tb[1] - ta[1] * tb[0]
-        sin_s = cx * px + cy * py + cz * pz
-        total += np.arctan2(sin_s, dot)
+        tb = t0 if k == e - 1 else _tangent(*verts[k + 1], px, py, pz)
+        total += _winding_term(ta, tb, px, py, pz)
         ta = tb
     ctr = verts.mean(axis=0)
     ctr = ctr / np.sqrt((ctr * ctr).sum())
@@ -490,6 +570,100 @@ def _arcs_cross_np(a1, a2, b1, b2):
     return straddle & same_side
 
 
+def _length_chunks(lens: np.ndarray, per_item: int, budget: int):
+    """Index chunks of items grouped by power-of-two length bucket, each
+    with its padded width L and at most ``budget`` padded elements
+    (``per_item`` * L per item): one padded numpy pass per chunk wastes
+    < 2x on padding, whatever the mix of ring sizes."""
+    bucket = np.frexp(lens.astype(np.float64))[1]
+    order = np.argsort(bucket, kind="stable")
+    cuts = np.flatnonzero(np.diff(bucket[order])) + 1
+    for sel in np.split(order, cuts):
+        if not len(sel):
+            continue
+        width = int(lens[sel].max())
+        step = max(1, budget // (per_item * width))
+        for s in range(0, len(sel), step):
+            yield sel[s:s + step], width
+
+
+def _padded_loops(start, lens, width: int):
+    """(vertex index, next-vertex index, next-vertex column, valid) of
+    loops padded to ``width``: padded slots repeat the closing edge, so
+    any() tests need no mask; sums must mask with ``valid``."""
+    k = np.arange(width, dtype=np.int64)[None, :]
+    e = lens[:, None]
+    col = np.minimum(k, e - 1)
+    nxt = np.where(col + 1 < e, col + 1, 0)
+    return start[:, None] + col, start[:, None] + nxt, nxt, k < e
+
+
+def _cover_loops_np(lats, lons, lens, max_level: int,
+                    max_cells: int) -> list[np.ndarray]:
+    """Covers of spherical loops given as flat lat/lon arrays cut by
+    ``lens`` — one descent for all of them (see
+    :func:`s2_cover_polygon_np` for the per-cell test)."""
+    lens = np.asarray(lens, np.int64)
+    start = np.cumsum(lens) - lens
+    vx, vy, vz = _latlon_xyz_np(lats, lons)
+    verts = np.stack([vx, vy, vz], axis=1)
+    vleaf = s2_from_xyz_np(vx, vy, vz)
+    # vertex centroid per loop, summed in vertex order (the order
+    # point_in_spherical_polygon_np's mean uses)
+    ctr = np.empty((len(lens), 3), np.float64)
+    for sel, width in _length_chunks(lens, 3, _PAIR_BUDGET):
+        vidx, _, _, valid = _padded_loops(start[sel], lens[sel], width)
+        pad = np.where(valid[:, :, None], verts[vidx], 0.0)
+        ctr[sel] = np.cumsum(pad, axis=1)[:, -1] / lens[sel, None]
+    ctr = ctr / np.sqrt((ctr * ctr).sum(axis=1))[:, None]
+
+    def classify_chunk(reg, corners, rn, rx, width):
+        vidx, nidx, nxt, valid = _padded_loops(start[reg], lens[reg],
+                                               width)
+        va = verts[vidx]                                    # (m, L, 3)
+        vb = verts[nidx]
+        # winding sum of every corner, edges summed in loop order
+        px, py, pz = (corners[:, :, c][:, :, None] for c in range(3))
+        ta = _tangent(va[:, None, :, 0], va[:, None, :, 1],
+                      va[:, None, :, 2], px, py, pz)
+        tb = tuple(np.take_along_axis(t, nxt[:, None, :], axis=2)
+                   for t in ta)
+        term = np.where(valid[:, None, :],
+                        _winding_term(ta, tb, px, py, pz), 0.0)
+        total = np.cumsum(term, axis=2)[:, :, -1]
+        c = ctr[reg]
+        same_hemi = (c[:, 0, None] * corners[:, :, 0]
+                     + c[:, 1, None] * corners[:, :, 1]
+                     + c[:, 2, None] * corners[:, :, 2]) > 0.0
+        inside = (np.abs(total) > np.pi) & same_hemi
+        leaf = vleaf[vidx]
+        vert_in_cell = ((leaf >= rn[:, None]) & (leaf <= rx[:, None])).any(1)
+        none_in, all_in = ~inside.any(axis=1), inside.all(axis=1)
+        # the edge test only decides cells whose corners agree and that
+        # hold no vertex; every other cell is neither pruned nor emitted
+        need = (none_in | all_in) & ~vert_in_cell
+        cross = np.zeros(len(reg), bool)
+        cb = np.roll(corners, -1, axis=1)
+        cross[need] = _arcs_cross_np(
+            corners[need][:, :, None, :], cb[need][:, :, None, :],
+            va[need][:, None, :, :], vb[need][:, None, :, :]).any(axis=(1, 2))
+        return (none_in & ~vert_in_cell & ~cross,
+                all_in & ~cross & ~vert_in_cell)
+
+    def classify(reg, face, i, j, level, ids):
+        _, _, _, corners = _face_ij_corners_np(face, i, j, level)
+        rn, rx = s2_range_np(ids)
+        disjoint = np.empty(len(ids), bool)
+        contained = np.empty(len(ids), bool)
+        for sel, width in _length_chunks(lens[reg], 4, _PAIR_BUDGET):
+            disjoint[sel], contained[sel] = classify_chunk(
+                reg[sel], corners[sel], rn[sel], rx[sel], width)
+        return disjoint, contained
+
+    return _split_regions(*_cover_descent(classify, len(lens), max_level,
+                                          max_cells), len(lens))
+
+
 def s2_cover_polygon_np(lats, lons, max_level: int = 10,
                         max_cells: int = 256) -> np.ndarray:
     """Mixed-level S2 cell cover of a spherical polygon (CCW lat/lon
@@ -501,31 +675,11 @@ def s2_cover_polygon_np(lats, lons, max_level: int = 10,
     region intersects a cell none of those three can be false together
     (Jordan argument for sub-hemisphere regions), so completeness
     holds. Emitted when all 4 corners are inside with no edge crossing
-    (cell ⊂ polygon), at max_level, or on budget."""
-    vx, vy, vz = _latlon_xyz_np(lats, lons)
-    verts = np.stack([vx, vy, vz], axis=1)
-    vleaf = s2_from_xyz_np(vx, vy, vz)
-
-    # closed edge loops for the crossing test
-    e_a = verts
-    e_b = np.roll(verts, -1, axis=0)
-
-    def classify(ids):
-        _, _, _, corners = s2_cell_corners_np(ids)          # (n, 4, 3)
-        inside = point_in_spherical_polygon_np(
-            corners[:, :, 0], corners[:, :, 1], corners[:, :, 2], verts)
-        rn, rx = s2_range_np(ids)
-        vert_in_cell = ((vleaf[None, :] >= rn[:, None])
-                        & (vleaf[None, :] <= rx[:, None])).any(axis=1)
-        ca = corners                                        # (n, 4, 3)
-        cb = np.roll(corners, -1, axis=1)
-        cross = _arcs_cross_np(ca[:, :, None, :], cb[:, :, None, :],
-                               e_a[None, None, :, :],
-                               e_b[None, None, :, :]).any(axis=(1, 2))
-        return (~inside.any(axis=1) & ~vert_in_cell & ~cross,
-                inside.all(axis=1) & ~cross & ~vert_in_cell)
-
-    return _cover_descent(classify, max_level, max_cells)
+    (cell ⊂ polygon), at max_level, or on budget. One loop through the
+    batch descent of :func:`s2_cover_polygons_np`."""
+    lats = np.asarray(lats, np.float64)
+    return _cover_loops_np(lats, lons, [len(lats)], max_level,
+                           max_cells)[0]
 
 
 def s2_cell_union_normalize_np(cells: np.ndarray) -> np.ndarray:
@@ -535,7 +689,7 @@ def s2_cell_union_normalize_np(cells: np.ndarray) -> np.ndarray:
     ranges either nest or are disjoint — never partially overlap — a
     single sorted sweep suffices. Guarantees any leaf is contained by
     AT MOST ONE output cell, which is what keeps containment-join
-    candidates duplicate-free."""
+    candidates duplicate-free. Output is in unsigned id order."""
     cells = np.asarray(cells, np.int64)
     if len(cells) == 0:
         return cells
@@ -543,26 +697,22 @@ def s2_cell_union_normalize_np(cells: np.ndarray) -> np.ndarray:
     # UNSIGNED range endpoints (int64 order would split faces 4-5);
     # sort by (range_min asc, range_max desc) so every ancestor
     # precedes its descendants — ranges nest or are disjoint, never
-    # partially overlap, so one sweep over the running max suffices
+    # partially overlap, so a cell is nested iff its range_max does not
+    # pass the running max of everything before it
     urn = rn.view(np.uint64)
     urx = rx.view(np.uint64)
     order = np.lexsort((np.uint64(0xFFFFFFFFFFFFFFFF) - urx, urn))
-    keep = []
-    cur_max = None
-    for k in order:
-        if cur_max is not None and int(urx[k]) <= cur_max:
-            continue  # nested inside a kept cell
-        keep.append(k)
-        cur_max = int(urx[k])
-    keep = np.array(sorted(keep, key=lambda k: int(
-        cells.view(np.uint64)[k])), np.intp)
+    srx = urx[order]
+    keep = order[np.r_[True, srx[1:] > np.maximum.accumulate(srx)[:-1]]]
+    keep = keep[np.argsort(cells.view(np.uint64)[keep], kind="stable")]
     return cells[keep]
 
 
-def s2_cover_rings_np(rings_latlon, max_level: int = 10,
-                      max_cells: int = 256) -> np.ndarray:
-    """Cover of a multi-ring polygon: the normalized UNION of every
-    ring's cover. Even-odd semantics make any interior point lie
+def s2_cover_polygons_np(polygons, max_level: int = 10,
+                         max_cells: int = 256) -> list[np.ndarray]:
+    """Covers of many multi-ring polygons in ONE descent (one region
+    per ring): each polygon's cover is the normalized UNION of its
+    rings' covers. Even-odd semantics make any interior point lie
     inside at least one ring (a point inside zero rings is outside),
     so the union is complete for arbitrary outer/inner ring mixes —
     including multipolygons with SEVERAL outer rings. Inner rings only
@@ -570,37 +720,64 @@ def s2_cover_rings_np(rings_latlon, max_level: int = 10,
     containment join and are rejected by the exact refine).
     Normalization (ancestor-free set) keeps join candidates
     duplicate-free when one ring's fine cells nest inside another's
-    coarse cell. ``rings_latlon`` is a sequence of (lats, lons) pairs;
-    duplicated closing vertices (OSM closed-way convention) are
-    stripped.
+    coarse cell. ``polygons`` is a sequence of polygons, each a
+    sequence of (lats, lons) ring pairs; duplicated closing vertices
+    (OSM closed-way convention) are stripped. Covers come back in
+    unsigned id order.
 
-    The ``max_cells`` budget is TOTAL, not per ring: per-ring covers
-    are unioned, then the finest-level cells are lifted to their
-    parents (and re-normalized) until the union fits. Lifting only
-    loosens a cover, so completeness survives; downstream sizing
+    The ``max_cells`` budget is TOTAL per polygon, not per ring:
+    per-ring covers are unioned, then the finest-level cells are lifted
+    to their parents (and re-normalized) until the union fits. Lifting
+    only loosens a cover, so completeness survives; downstream sizing
     (containment-join fan-out, cover-table broadcast gate) can rely on
     ≤ max_cells rows per polygon regardless of ring count — an OSM
     coastline multipolygon with hundreds of rings would otherwise emit
     hundreds × max_cells candidates."""
-    per_ring = []
-    for lats, lons in rings_latlon:
-        lats = np.asarray(lats, np.float64)
-        lons = np.asarray(lons, np.float64)
-        if len(lats) > 1 and lats[0] == lats[-1] and lons[0] == lons[-1]:
-            lats, lons = lats[:-1], lons[:-1]
-        per_ring.append(s2_cover_polygon_np(lats, lons, max_level=max_level,
-                                            max_cells=max_cells))
-    cover = s2_cell_union_normalize_np(np.unique(np.concatenate(per_ring)))
-    while len(cover) > max_cells:
-        levels = s2_level_np(cover)
-        fin = int(levels.max())
-        if fin == 0:
-            break  # ≤ 6 face cells — can't coarsen further
-        mask = levels == fin
-        lifted = s2_parent_np(cover[mask], fin - 1)
+    lats, lons, lens, n_rings = [], [], [], []
+    for rings in polygons:
+        n = 0
+        for la, lo in rings:
+            la = np.asarray(la, np.float64)
+            lo = np.asarray(lo, np.float64)
+            if len(la) > 1 and la[0] == la[-1] and lo[0] == lo[-1]:
+                la, lo = la[:-1], lo[:-1]
+            if len(la):
+                lats.append(la)
+                lons.append(lo)
+                lens.append(len(la))
+                n += 1
+        n_rings.append(n)
+    ring_covers = _cover_loops_np(
+        np.concatenate(lats), np.concatenate(lons), lens, max_level,
+        max_cells) if lens else []
+    out = []
+    first = np.cumsum(n_rings) - n_rings
+    for r0, n in zip(first.tolist(), n_rings):
+        if n <= 1:
+            # one ring's cover is already disjoint and within budget
+            c = ring_covers[r0] if n else np.zeros(0, np.int64)
+            out.append(c[np.argsort(c.view(np.uint64), kind="stable")])
+            continue
         cover = s2_cell_union_normalize_np(
-            np.unique(np.concatenate([cover[~mask], lifted])))
-    return cover
+            np.unique(np.concatenate(ring_covers[r0:r0 + n])))
+        while len(cover) > max_cells:
+            levels = s2_level_np(cover)
+            fin = int(levels.max())
+            if fin == 0:
+                break  # ≤ 6 face cells — can't coarsen further
+            mask = levels == fin
+            lifted = s2_parent_np(cover[mask], fin - 1)
+            cover = s2_cell_union_normalize_np(
+                np.unique(np.concatenate([cover[~mask], lifted])))
+        out.append(cover)
+    return out
+
+
+def s2_cover_rings_np(rings_latlon, max_level: int = 10,
+                      max_cells: int = 256) -> np.ndarray:
+    """Cover of one multi-ring polygon (see :func:`s2_cover_polygons_np`);
+    ``rings_latlon`` is a sequence of (lats, lons) pairs."""
+    return s2_cover_polygons_np([rings_latlon], max_level, max_cells)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -688,8 +865,10 @@ def with_s2_cell(df: DataFrame, x: Column, y: Column, z: Column,
             F.col("_s2v").bitwiseAND(F.lit(3)).alias("_s2o"),
             F.shiftleft(F.col("_s2d"), 2)
             .bitwiseOR(F.shiftright(F.col("_s2v"), 2)).alias("_s2d"))
-    # constant-folded array<bigint> literal; element_at is 1-based
-    lut4 = F.lit([int(w) for w in LOOKUP4])
+    # constant-folded array<int> literal (values < 1024), built in ONE
+    # JVM call — F.lit(list) costs a py4j round trip per element;
+    # element_at is 1-based
+    lut4 = F.expr(f"array({', '.join(str(int(w)) for w in LOOKUP4)})")
     for c in range(level // 4 - 1, -1, -1):
         key = (F.shiftleft(F.col("_s2o"), 8)
                .bitwiseOR(F.shiftleft(

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import planned_partitions
+
 
 def with_global_position(df: DataFrame, keys: list[str],
                          pos_col: str = "pos",
@@ -40,7 +42,7 @@ def with_global_position(df: DataFrame, keys: list[str],
     """
     spark = df.sparkSession
     parts = num_partitions or max(spark.sparkContext.defaultParallelism,
-                                  df.rdd.getNumPartitions())
+                                  planned_partitions(df) or 0)
     parted = (df.repartitionByRange(parts, *keys)
               .sortWithinPartitions(*keys)
               .withColumn("_pid", F.spark_partition_id())
@@ -91,7 +93,7 @@ def with_running_total(df: DataFrame, keys: list[str], val_col: str,
     """
     spark = df.sparkSession
     parts = num_partitions or max(spark.sparkContext.defaultParallelism,
-                                  df.rdd.getNumPartitions())
+                                  planned_partitions(df) or 0)
     parted = (df.repartitionByRange(parts, *keys)
               .sortWithinPartitions(*keys)
               .withColumn("_pid", F.spark_partition_id())

@@ -98,7 +98,9 @@ def cover_polygon_cells_json(polygons: DataFrame, res: int,
     string form end-to-end avoids re-serializing per cover cell and per
     matched pair). Optional exact rect∩polygon refinement drops cover
     cells that don't actually touch the polygon (tighter cover →
-    smaller join)."""
+    smaller join): one vectorized test per Arrow batch over all its
+    (cell, polygon) rows (functions/geometry.rects_intersect_polygons),
+    each distinct polygon's rings parsed once per batch."""
     jsonified = (widen(polygons)
                  .withColumn("_rings_json", F.to_json("rings"))
                  .drop("rings"))
@@ -112,16 +114,12 @@ def cover_polygon_cells_json(polygons: DataFrame, res: int,
             if len(pdf) == 0:
                 yield pdf
                 continue
-            keep = np.ones(len(pdf), bool)
+            # each distinct polygon's rings parse once per batch
+            poly, rings_json = pd.factorize(pdf["_rings_json"],
+                                              use_na_sentinel=False)
             bounds = C.cell_bounds_np(pdf[out].to_numpy(), res)
-            ring_cache: dict[str, list] = {}
-            for i, (rj, cl, cb, cr, ct) in enumerate(
-                    zip(pdf["_rings_json"], bounds[0], bounds[1],
-                        bounds[2], bounds[3])):
-                rr = ring_cache.get(rj)
-                if rr is None:
-                    rr = ring_cache[rj] = _rings_to_np(rj)
-                keep[i] = G.rect_intersects_polygon(cl, cb, cr, ct, rr)
+            keep = G.rects_intersect_polygons(
+                *bounds, poly, [_rings_to_np(rj) for rj in rings_json])
             yield pdf[keep]
 
     return covered.mapInPandas(_refine, schema=schema)
@@ -382,10 +380,10 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
 
     Plan (the cover+refine shape of J7/J8, on the sphere):
 
-    * sites → driver-side spherical-cap covers
-      (functions/s2.s2_cover_cap_np — COMPLETE: it never prunes an
-      intersecting leaf, so no true match can be lost), one disjoint
-      mixed-level cell set per site, unioned into a
+    * sites → driver-side spherical-cap covers, all sites in one
+      descent (functions/s2.s2_cover_caps_np — COMPLETE: it never
+      prunes an intersecting leaf, so no true match can be lost), one
+      disjoint mixed-level cell set per site, unioned into a
       ``(site_id, cover_id)`` table of ≤ n_sites·max_cells rows;
     * probe → leaf S2 cell per row (with_s2_cell, pure codegen'd
       Columns), consumed once by the containment join;
@@ -424,11 +422,12 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
             f"site tables past the budget use knn.s2_knn_join "
             f"(nearest-site) or a fixed-level two-sided cell join")
     radius_rad = float(radius_m) / G.EARTH_RADIUS_M
-    cover_rows = [
-        (r[site_id], int(c)) for r in rows
-        for c in S2.s2_cover_cap_np(float(r[site_lat]), float(r[site_lon]),
-                                    radius_rad, max_level=max_level,
-                                    max_cells=max_cells)]
+    site_covers = S2.s2_cover_caps_np(
+        [float(r[site_lat]) for r in rows],
+        [float(r[site_lon]) for r in rows], [radius_rad] * len(rows),
+        max_level=max_level, max_cells=max_cells)
+    cover_rows = [(r[site_id], int(c))
+                  for r, cover in zip(rows, site_covers) for c in cover]
     spark = probe.sparkSession
     sid_dt = sites.schema[site_id].dataType.simpleString()
     covers = spark.createDataFrame(
@@ -496,14 +495,16 @@ def s2_cover_polygons(polygons: DataFrame, max_level: int = 12,
     table (the planet has ~10^8 polygons; driver-side planning as in
     the synthetic-cap queries would not survive that), while each
     single cover stays a bounded ≤max_cells driver-free computation.
-    Rings cross the Arrow boundary as JSON (ragged
+    Every Arrow batch runs ONE cover descent over all rings of all its
+    polygons (functions/s2.s2_cover_polygons_np) and builds its output
+    with one np.repeat. Rings cross the Arrow boundary as JSON (ragged
     array<array<struct>> rule, see _RINGS_TYPE above); the cover is
     the normalized union over ALL rings (multipolygons may carry
-    several outer rings; holes never make a cover incomplete —
-    functions/s2.s2_cover_rings_np). The ≤max_cells budget is TOTAL
-    across a polygon's rings (parent-lifting in s2_cover_rings_np),
-    so per-polygon candidate fan-out stays capped even for a
-    hundreds-of-rings coastline multipolygon."""
+    several outer rings; holes never make a cover incomplete). The
+    ≤max_cells budget is TOTAL across a polygon's rings
+    (parent-lifting after the union), so per-polygon candidate fan-out
+    stays capped even for a hundreds-of-rings coastline
+    multipolygon."""
     from ..functions import s2 as S2
     keep = _poly_key_cols(polygons, poly_cols)
     src = polygons.select(*keep, F.to_json("rings").alias("_rings_json"))
@@ -513,21 +514,17 @@ def s2_cover_polygons(polygons: DataFrame, max_level: int = 12,
 
     def _cover(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
-            outs = []
-            for k in range(len(pdf)):
-                rings = json.loads(pdf["_rings_json"].iloc[k])
-                rl = [(np.array([p["lat"] for p in ring], np.float64),
+            polys = [[(np.array([p["lat"] for p in ring], np.float64),
                        np.array([p["lon"] for p in ring], np.float64))
-                      for ring in rings]
-                cells = S2.s2_cover_rings_np(rl, max_level=max_level,
-                                             max_cells=max_cells)
-                rep = pdf.iloc[[k]][keep]
-                rep = rep.loc[rep.index.repeat(len(cells))].reset_index(
-                    drop=True)
-                rep["cover_id"] = cells.astype(np.int64)
-                outs.append(rep)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                      for ring in json.loads(rj)]
+                     for rj in pdf["_rings_json"]]
+            cells = S2.s2_cover_polygons_np(polys, max_level=max_level,
+                                            max_cells=max_cells)
+            rows = np.repeat(np.arange(len(pdf)), [len(c) for c in cells])
+            rep = pdf[keep].iloc[rows].reset_index(drop=True)
+            rep["cover_id"] = (np.concatenate(cells) if cells
+                               else np.zeros(0, np.int64))
+            yield rep
 
     return src.mapInPandas(_cover, out_schema)
 

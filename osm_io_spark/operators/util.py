@@ -5,6 +5,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def planned_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df``'s physical plan, read without running
+    a job, or None when adaptive execution owns it. Under AQE the final
+    count exists only once the upstream shuffle stages have run, and
+    asking ``df.rdd`` for it runs them at call time, then throws the
+    result away; a plan without AQE (scans, checkpointed RDDs) reports
+    its split count for free."""
+    qe = df._jdf.queryExecution()
+    if "AdaptiveSparkPlan" in qe.executedPlan().toString():
+        return None
+    return qe.toRdd().getNumPartitions()
+
+
 def widen(df: DataFrame, factor: int = 1) -> DataFrame:
     """Ensure at least defaultParallelism·factor partitions before a
     map-heavy stage (hashing, shingling, pandas UDFs, cross joins).
@@ -12,10 +25,13 @@ def widen(df: DataFrame, factor: int = 1) -> DataFrame:
     Small benchmark tables arrive as 1-2 parquet splits, which would pin
     all map-side work to 1-2 cores; at production scale (100 TB → many
     thousands of splits) the guard makes this a no-op, so the extra
-    shuffle is only ever paid when it is trivially cheap.
+    shuffle is only ever paid when it is trivially cheap. A frame whose
+    count only AQE knows (see :func:`planned_partitions`) is
+    repartitioned to the target: measuring it would run the plan.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < target:
+    n = planned_partitions(df)
+    if n is None or n < target:
         return df.repartition(target)
     return df
 

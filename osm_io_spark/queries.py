@@ -1768,9 +1768,10 @@ def q_stream_s2_enrich(spark, sf_dir):
     ckpt = tempfile.mkdtemp(prefix="osm_io_stream_ckpt_")
     cover_rows = [
         (rid, int(cell))
-        for rid, la, lo, r in ((0, 0.0, 0.0, 0.5), (1, 40.0, -100.0, 0.4))
-        for cell in S2.s2_cover_cap_np(la, lo, r, max_level=8,
-                                       max_cells=128)]
+        for rid, cover in enumerate(S2.s2_cover_caps_np(
+            [0.0, 40.0], [0.0, -100.0], [0.5, 0.4], max_level=8,
+            max_cells=128))
+        for cell in cover]
     covers = spark.createDataFrame(cover_rows, "region_id INT, cover_id LONG")
     enriched = SE.stream_s2_enrich(SE.stream_events(spark, src), covers)
     SE.run_available_now(enriched.select("event_id", "user_id", "s2_cell",
@@ -2814,17 +2815,17 @@ _S2_CAPS = ((0, 43.1, -79.2, 0.05), (1, 41.0, 45.0, 0.12),
 def q_s2_cap_cover_join(spark, sf_dir):
     """Spherical cover+refine geo-join — the S2 analogue of the
     j7/j8 cell-cover + PIP pattern: driver-side mixed-level cap covers
-    (functions/s2.s2_cover_cap_np, completeness proven in test_s2.py),
+    (functions/s2.s2_cover_caps_np, completeness proven in test_s2.py),
     hierarchical containment join for candidates, then exact
     dot-product refine, per-cap candidate and hit counts. Engine-native
     rows-only (lat/lon→xyz uses trig, which is not cross-engine
     bit-exact); counts brute-force-verified in tests/test_s2.py."""
     from .operators import spatial_join as SJ
-    cover_rows = [
-        (cid, int(cell))
-        for cid, la, lo, r in _S2_CAPS
-        for cell in S2.s2_cover_cap_np(la, lo, r, max_level=10,
-                                       max_cells=256)]
+    cap_ids, lats, lons, radii = zip(*_S2_CAPS)
+    covers = S2.s2_cover_caps_np(lats, lons, radii, max_level=10,
+                                 max_cells=256)
+    cover_rows = [(cap_id, int(cell))
+                  for cap_id, cover in zip(cap_ids, covers) for cell in cover]
     covers = spark.createDataFrame(cover_rows, "cap_id INT, cover_id LONG")
     caps = spark.createDataFrame(list(_S2_CAPS),
                                  "cap_id INT, cap_lat DOUBLE, "

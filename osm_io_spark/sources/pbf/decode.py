@@ -359,10 +359,12 @@ def decode_block(data: bytes) -> pd.DataFrame:
 # Spark entry points
 # ---------------------------------------------------------------------------
 
-def blob_manifest(spark: SparkSession, path: str) -> DataFrame:
+def blob_manifest(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
+    """(manifest of the file's OSMData blobs, their count) — the driver
+    scans the blob headers anyway, so the count costs no job."""
     descs = [d for d in scan_blobs(path) if d["blob_type"] == "OSMData"]
     from ... import schemas
-    return spark.createDataFrame(descs, schema=schemas.BLOB_DESC)
+    return spark.createDataFrame(descs, schema=schemas.BLOB_DESC), len(descs)
 
 
 def _decode_batches(batches):
@@ -377,8 +379,7 @@ def read_pbf(spark: SparkSession, path: str,
     """path → unified element DataFrame (ELEMENTS schema). Header block
     is validated eagerly; data blobs decode lazily on executors."""
     read_header(path)  # feature check up front, as the reference does
-    manifest = blob_manifest(spark, path)
-    n = manifest.count()
+    manifest, n = blob_manifest(spark, path)
     if parallelism is None:
         # cap tasks at ~8 blobs (~64k elements): a planet file has
         # millions of blobs — packing them into defaultParallelism

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ...operators.util import planned_partitions
 from . import proto as P
 
 BLOCK_SIZE = 8000  # element_accumulator.rs:18
@@ -229,7 +230,14 @@ def _encode_partitions(elements: DataFrame, compress: bool) -> DataFrame:
             .when(F.col("etype") == "way", 1).otherwise(2))
     spark = elements.sparkSession
     parts = max(spark.sparkContext.defaultParallelism,
-                elements.rdd.getNumPartitions())
+                planned_partitions(elements) or 0)
+    # NULL list cells cost Spark 4.1's Arrow writer O(B^2) per batch
+    # (it re-checks the byte cap after every row, and each check
+    # re-fills the offsets of the whole trailing NULL run — nodes carry
+    # NULL refs/members); the encoder reads None and [] alike
+    elements = elements.withColumns({
+        c: F.coalesce(c, F.array().cast(elements.schema[c].dataType))
+        for c in ("tags", "refs", "members") if c in elements.columns})
     df = (elements.withColumn("_rank", rank)
           .repartitionByRange(parts, "_rank", "id", "version")
           .sortWithinPartitions("_rank", "id", "version")
@@ -301,17 +309,17 @@ def write_pbf(elements: DataFrame, path: str, compress: bool = True,
                .collect()[0])
         bbox = [agg[0], agg[1], agg[2], agg[3]] if agg[0] is not None else None
 
-    # Materialize the blob frame IN PARALLEL (persist + count), then
-    # stream it to the file: toLocalIterator alone would compute the
-    # partitions one-by-one, serializing the whole encode. The cached
-    # frame holds only encoded blobs (≈ output file size, spills to
-    # disk), and partitions drain in partition order — range partitions
-    # tile the global (type, id, version) order, so the stream is
-    # already the file order (the reference's ordering buffer for free).
+    # Materialize the blob frame IN PARALLEL (persist + the one size
+    # aggregate below), then stream it to the file: toLocalIterator
+    # alone would compute the partitions one-by-one, serializing the
+    # whole encode. The cached frame holds only encoded blobs (≈ output
+    # file size, spills to disk), and partitions drain in partition
+    # order — range partitions tile the global (type, id, version)
+    # order, so the stream is already the file order (the reference's
+    # ordering buffer for free).
     from pyspark import StorageLevel
     enc = _encode_partitions(elements, compress).persist(
         StorageLevel.MEMORY_AND_DISK)
-    enc.count()
 
     required = ["OsmSchema-V0.6", "DenseNodes"]
     if history:

@@ -42,11 +42,16 @@ def test_pip_closed_ring_equivalent():
 
 
 def test_rect_intersects_polygon():
-    assert G.rect_intersects_polygon(1, 1, 2, 2, SQUARE)        # rect inside
-    assert G.rect_intersects_polygon(-1, -1, 5, 5, SQUARE)      # poly inside rect
-    assert G.rect_intersects_polygon(3, 3, 5, 5, SQUARE)        # overlap
-    assert not G.rect_intersects_polygon(5, 5, 6, 6, SQUARE)    # disjoint
-    assert G.rect_intersects_polygon(3.5, -1, 6, 5, CONCAVE)    # edge cross only
+    rects = np.array([(1, 1, 2, 2),        # rect inside
+                      (-1, -1, 5, 5),      # poly inside rect
+                      (3, 3, 5, 5),        # overlap
+                      (5, 5, 6, 6),        # disjoint
+                      (3.5, -1, 6, 5)],    # edge cross only (CONCAVE)
+                     float)
+    poly = np.array([0, 0, 0, 0, 1])
+    got = G.rects_intersect_polygons(rects[:, 0], rects[:, 1], rects[:, 2],
+                                     rects[:, 3], poly, [SQUARE, CONCAVE])
+    assert got.tolist() == [True, True, True, False, True]
 
 
 def test_bbox_and_centroid():

@@ -103,6 +103,29 @@ def test_o2_positions_are_dense_and_ordered(spark):
     assert (got["event_id"] == want["event_id"]).all()
 
 
+def test_widen_runs_no_job(spark):
+    """Under AQE, ``df.rdd.getNumPartitions()`` runs every upstream
+    shuffle stage at call time and throws the result away. widen (and
+    the global-order and PBF-writer partition counts) read the plan
+    instead: building on a shuffled frame launches no job."""
+    from pyspark.sql import functions as F
+
+    from osm_io_spark.operators.util import planned_partitions, widen
+    shuffled = (spark.range(2000).repartition(3)
+                .groupBy((F.col("id") % 97).alias("k")).count())
+    sc = spark.sparkContext
+    sc.setJobGroup("widen_no_job", "widen_no_job")
+    try:
+        widened = widen(shuffled)
+        assert planned_partitions(shuffled) is None
+        assert planned_partitions(spark.range(10, numPartitions=3)) == 3
+        jobs = sc.statusTracker().getJobIdsForGroup("widen_no_job")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert widened.count() == 97
+
+
 def test_dedup_band_joins_never_cartesian(spark):
     """The minhash and hamming candidate generators must always be
     bucketed equi-joins — a lost join key would silently degrade to a
