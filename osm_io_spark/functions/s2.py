@@ -431,6 +431,8 @@ def _cover_descent(classify, n_regions: int, max_level: int,
 
 
 def _split_regions(reg, cells, n_regions: int) -> list[np.ndarray]:
+    if n_regions == 0:
+        return []  # np.split(x, []) would return [x]
     ends = np.cumsum(np.bincount(reg, minlength=n_regions))
     return np.split(cells, ends[:-1])
 
@@ -733,7 +735,8 @@ def s2_cover_polygons_np(polygons, max_level: int = 10,
     ≤ max_cells rows per polygon regardless of ring count — an OSM
     coastline multipolygon with hundreds of rings would otherwise emit
     hundreds × max_cells candidates."""
-    lats, lons, lens, n_rings = [], [], [], []
+    # the empty seed keeps np.concatenate defined for zero rings
+    lats, lons, lens, n_rings = [np.zeros(0)], [np.zeros(0)], [], []
     for rings in polygons:
         n = 0
         for la, lo in rings:
@@ -749,14 +752,12 @@ def s2_cover_polygons_np(polygons, max_level: int = 10,
         n_rings.append(n)
     ring_covers = _cover_loops_np(
         np.concatenate(lats), np.concatenate(lons), lens, max_level,
-        max_cells) if lens else []
+        max_cells)
     out = []
     first = np.cumsum(n_rings) - n_rings
     for r0, n in zip(first.tolist(), n_rings):
-        if n <= 1:
-            # one ring's cover is already disjoint and within budget
-            c = ring_covers[r0] if n else np.zeros(0, np.int64)
-            out.append(c[np.argsort(c.view(np.uint64), kind="stable")])
+        if n == 0:
+            out.append(np.zeros(0, np.int64))
             continue
         cover = s2_cell_union_normalize_np(
             np.unique(np.concatenate(ring_covers[r0:r0 + n])))

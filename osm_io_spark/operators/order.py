@@ -18,7 +18,12 @@ fully parallel version, the same design the PBF writer uses
      second shuffle, no window, Arrow-vectorized.
 
 Cost at 100 TB: exactly one range shuffle (the unavoidable cost of a
-global order) + one cached pass; every stage is N-way parallel.
+global order) + one cached pass; every stage is N-way parallel. N is
+``num_partitions`` when given, else the larger of defaultParallelism
+and the input's planned count (``operators.util.planned_partitions``);
+an input whose count AQE still decides (a join or aggregate output)
+gets defaultParallelism — pass ``num_partitions`` for such inputs at
+scale.
 """
 
 from __future__ import annotations

@@ -532,9 +532,10 @@ def _fan_out(flat: DataFrame, zoom: int, max_tiles: int, id_col: str,
     # The (feature, tile) fan-out inherits the SOURCE's partitioning —
     # 1-2 parquet splits at bench scale would pin the Python kernel to
     # 1-2 cores (CLAUDE.md widen rule; measured 55s → ~4s at sf0.1).
-    # widen() is a no-op at production split counts, so the extra
-    # shuffle is only paid when it is trivially cheap; it also spreads
-    # a hot giant polygon's tiles across the cluster.
+    # widen() is a no-op for a source with a known split count at or
+    # above the target; a shuffled (AQE-planned) source always pays one
+    # extra round-robin shuffle here. It also spreads a hot giant
+    # polygon's tiles across the cluster.
     cov = widen(cov)
 
     def run(batches):

@@ -7,15 +7,44 @@ from pyspark.sql import DataFrame
 
 def planned_partitions(df: DataFrame) -> int | None:
     """Partition count of ``df``'s physical plan, read without running
-    a job, or None when adaptive execution owns it. Under AQE the final
-    count exists only once the upstream shuffle stages have run, and
-    asking ``df.rdd`` for it runs them at call time, then throws the
-    result away; a plan without AQE (scans, checkpointed RDDs) reports
-    its split count for free."""
+    a job, or None when adaptive execution decides it. Asking
+    ``df.rdd`` under AQE runs every upstream shuffle stage at call time
+    and throws the result away, so an AQE plan is read instead: its
+    output count is fixed by the nearest exchange on the plan's spine
+    when that is an explicit ``repartition(n)`` / ``repartitionByRange(
+    n, …)`` (AQE never coalesces those), by a single-partition node, or
+    by a leaf that reports its count (a range, a finished query stage);
+    a shuffle AQE may still coalesce (joins, aggregates,
+    ``repartition(cols)``), a file scan or a multi-child node leaves it
+    None. A plan without AQE (scans,
+    checkpointed RDDs) reports its split count for free."""
     qe = df._jdf.queryExecution()
-    if "AdaptiveSparkPlan" in qe.executedPlan().toString():
-        return None
-    return qe.toRdd().getNumPartitions()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return qe.toRdd().getNumPartitions()
+    return _spine_partitions(plan.executedPlan())
+
+
+def _spine_partitions(node) -> int | None:
+    cap = 0  # lowest count a unary node above has set (coalesce(n))
+    while True:
+        own = node.outputPartitioning().numPartitions()
+        if own == 1:
+            return 1
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            # (not node.numPartitions(): that builds the shuffle
+            # dependency, and a range partitioner samples its input)
+            fixed = node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+            n = own if fixed else None
+            break
+        n_children = node.children().size()
+        if n_children != 1:
+            n = own if n_children == 0 and own else None
+            break
+        if own:
+            cap = min(cap, own) if cap else own
+        node = node.children().apply(0)
+    return min(n, cap) if n and cap else n
 
 
 def widen(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -23,11 +52,13 @@ def widen(df: DataFrame, factor: int = 1) -> DataFrame:
     map-heavy stage (hashing, shingling, pandas UDFs, cross joins).
 
     Small benchmark tables arrive as 1-2 parquet splits, which would pin
-    all map-side work to 1-2 cores; at production scale (100 TB → many
-    thousands of splits) the guard makes this a no-op, so the extra
-    shuffle is only ever paid when it is trivially cheap. A frame whose
-    count only AQE knows (see :func:`planned_partitions`) is
-    repartitioned to the target: measuring it would run the plan.
+    all map-side work to 1-2 cores; a frame whose planned count is known
+    (see :func:`planned_partitions`: scans, explicit ``repartition(n)``)
+    and already reaches the target is returned as is, so at production
+    split counts the guard is a no-op. A frame whose count AQE decides
+    (the output of a join, an aggregate or ``repartition(cols)``) is
+    always repartitioned to the target — it pays one extra round-robin
+    shuffle at every scale, because measuring it would run the plan.
     """
     target = df.sparkSession.sparkContext.defaultParallelism * factor
     n = planned_partitions(df)

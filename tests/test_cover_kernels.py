@@ -116,6 +116,7 @@ def test_s2_cover_empty_inputs():
     assert s2.s2_cover_polygons_np([]) == []
     (cover,) = s2.s2_cover_polygons_np([[]])
     assert cover.dtype == np.int64 and len(cover) == 0
+    assert s2.s2_cover_caps_np([], [], []) == []
 
 
 def test_cell_union_normalize_drops_exactly_the_nested_cells():

@@ -107,18 +107,28 @@ def test_widen_runs_no_job(spark):
     """Under AQE, ``df.rdd.getNumPartitions()`` runs every upstream
     shuffle stage at call time and throws the result away. widen (and
     the global-order and PBF-writer partition counts) read the plan
-    instead: building on a shuffled frame launches no job."""
+    instead: building on a shuffled frame launches no job. Counts an
+    explicit repartition fixes are read off the plan; a shuffle AQE may
+    coalesce leaves the count unknown."""
     from pyspark.sql import functions as F
 
     from osm_io_spark.operators.util import planned_partitions, widen
-    shuffled = (spark.range(2000).repartition(3)
-                .groupBy((F.col("id") % 97).alias("k")).count())
+    base = spark.range(2000).repartition(3)
+    shuffled = base.groupBy((F.col("id") % 97).alias("k")).count()
     sc = spark.sparkContext
     sc.setJobGroup("widen_no_job", "widen_no_job")
     try:
         widened = widen(shuffled)
         assert planned_partitions(shuffled) is None
         assert planned_partitions(spark.range(10, numPartitions=3)) == 3
+        assert planned_partitions(
+            base.mapInPandas(lambda it: it, base.schema)
+            .filter("id > 5")) == 3
+        assert planned_partitions(
+            base.repartitionByRange(7, "id").sortWithinPartitions("id")) == 7
+        assert planned_partitions(base.coalesce(2)) == 2
+        assert planned_partitions(base.orderBy("id").limit(5)) == 1
+        assert planned_partitions(base.repartition("id")) is None
         jobs = sc.statusTracker().getJobIdsForGroup("widen_no_job")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
