@@ -5,6 +5,12 @@ outer ring, subsequent rings are holes; containment uses the even-odd rule
 (ray casting), so holes need no special-casing. Rings may be closed
 (first == last) or open — a closing edge is implied.
 
+Rings cross the Arrow boundary into every Python kernel in ONE flat
+layout (:func:`flat_ring_cols` builds it, :func:`split_rings` reads one
+row of it back): ``ring_len`` plus parallel ``lons``/``lats`` primitive
+arrays — ragged array<array<struct>> cells fail pyspark's Arrow→pandas
+conversion and cost a dict per vertex where they work.
+
 BoundingBox semantics mirror /root/reference/src/osm/model/bounding_box.rs:
 merge_point / merge_bounding_box are min/max folds over (lon, lat).
 """
@@ -12,8 +18,37 @@ merge_point / merge_bounding_box are min/max folds over (lon, lat).
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 EARTH_RADIUS_M = 6_371_008.8
+
+FLAT_RING_COLS = ("ring_len", "lons", "lats")
+
+
+def flat_ring_cols(rings: str = "rings") -> list[Column]:
+    """The flat ring columns of an array<array<struct<lon, lat>>>
+    column: ``ring_len`` (array<int>, vertices per ring) and the
+    parallel ``lons`` / ``lats`` (array<double>, all rings end to end).
+    A NULL ring list stays NULL. transform/flatten are interpreted
+    higher-order functions (CLAUDE.md), so select these once per
+    polygon, before any explode or join fans its rows out."""
+    def coord(k):
+        return F.flatten(F.transform(
+            rings, lambda r: F.transform(r, lambda p: p[k]))).alias(k + "s")
+    return [F.transform(rings, F.size).alias("ring_len"),
+            coord("lon"), coord("lat")]
+
+
+def split_rings(ring_len, lons, lats) -> list[np.ndarray]:
+    """One row of the flat layout → its rings, each an (m, 2) array of
+    (lon, lat), in ring order. A NULL ring list (``None``) has no
+    rings."""
+    if ring_len is None or not len(ring_len):
+        return []
+    xy = np.column_stack([np.asarray(lons, np.float64),
+                          np.asarray(lats, np.float64)])
+    return np.split(xy, np.cumsum(ring_len)[:-1])
 
 
 def _ring_edges(ring: np.ndarray):

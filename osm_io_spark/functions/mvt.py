@@ -1,9 +1,10 @@
 """Mapbox Vector Tile (MVT 2.1) binary codec — pure python/numpy.
 
 The published spec (github.com/mapbox/vector-tile-spec, 2.1) defines a
-tile as a protobuf message; the wire format is hand-encoded here (the
-container ships no protobuf runtime, and the subset needed — varint +
-length-delimited fields — is a page of code):
+tile as a protobuf message; the container ships no protobuf runtime, so
+the messages are built and scanned with the repository's one wire codec,
+sources/pbf/proto.py (varints, field headers, zigzag, the vectorized
+varint encoder and the field scanner the OSM PBF codec uses too):
 
   Tile:    layers  = repeated message, field 3
   Layer:   version = varint 15 (must be 2), name = string 1,
@@ -38,34 +39,10 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..sources.pbf import proto as P
+
 MOVE_TO, LINE_TO, CLOSE_PATH = 1, 2, 7
 POINT, LINESTRING, POLYGON = 1, 2, 3
-
-
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    v = int(v)
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _field(num: int, wire: int) -> bytes:
-    return _varint((num << 3) | wire)
-
-
-def _len_delim(num: int, payload: bytes) -> bytes:
-    return _field(num, 2) + _varint(len(payload)) + payload
-
-
-def zigzag_np(v: np.ndarray) -> np.ndarray:
-    v = np.asarray(v, np.int64)
-    return ((v << 1) ^ (v >> 63)).astype(np.uint64)
 
 
 def geometry_commands(rings, geom_type: int = POLYGON) -> np.ndarray:
@@ -84,8 +61,8 @@ def geometry_commands(rings, geom_type: int = POLYGON) -> np.ndarray:
         n = len(q)
         if n == 0:
             return np.empty(0, np.uint64)
-        zx = zigzag_np(np.diff(q[:, 0], prepend=0))
-        zy = zigzag_np(np.diff(q[:, 1], prepend=0))
+        zx = P.zigzag_encode(np.diff(q[:, 0], prepend=0))
+        zy = P.zigzag_encode(np.diff(q[:, 1], prepend=0))
         arr = np.empty(2 * n + 1, np.uint64)
         arr[0] = (MOVE_TO & 0x7) | (n << 3)
         arr[1::2], arr[2::2] = zx, zy
@@ -98,7 +75,7 @@ def geometry_commands(rings, geom_type: int = POLYGON) -> np.ndarray:
         n = len(q)
         dx = np.diff(q[:, 0], prepend=cx)
         dy = np.diff(q[:, 1], prepend=cy)
-        zx, zy = zigzag_np(dx), zigzag_np(dy)
+        zx, zy = P.zigzag_encode(dx), P.zigzag_encode(dy)
         arr = np.empty(2 * n + 2 + close, np.uint64)
         arr[0] = (MOVE_TO & 0x7) | (1 << 3)
         arr[1], arr[2] = zx[0], zy[0]
@@ -111,39 +88,6 @@ def geometry_commands(rings, geom_type: int = POLYGON) -> np.ndarray:
         cx, cy = int(q[-1, 0]), int(q[-1, 1])
     return (np.concatenate(parts) if parts
             else np.empty(0, np.uint64))
-
-
-def varints_np(vals: np.ndarray, return_lens: bool = False):
-    """Vectorized varint stream for an array of unsigned ints.
-
-    Efficient only at BATCH granularity (thousands of values) — on a
-    single feature's ~20 commands the numpy machinery costs more than
-    scalar ``_varint`` calls (measured 35 µs vs ~2 µs; the same
-    tiny-input lesson as the clip kernel and applyInPandas). Callers
-    concatenate all commands of an Arrow batch first
-    (``encode_features_batch``)."""
-    v = np.asarray(vals, np.uint64)
-    if not len(v):
-        return (b"", np.empty(0, np.int64)) if return_lens else b""
-    nb = np.ones(len(v), np.int64)
-    x = v >> np.uint64(7)
-    while x.any():
-        nb += x > 0
-        x >>= np.uint64(7)
-    offs = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    out = np.zeros(int(nb.sum()), np.uint8)
-    rem = v.copy()
-    active = np.arange(len(v))
-    k = 0
-    while len(active):
-        b = (rem[active] & np.uint64(0x7F)).astype(np.uint8)
-        more = nb[active] > (k + 1)
-        out[offs[active] + k] = b | (more.astype(np.uint8) << 7)
-        rem[active] >>= np.uint64(7)
-        active = active[more]
-        k += 1
-    buf = out.tobytes()
-    return (buf, nb) if return_lens else buf
 
 
 def encode_features_batch(q: np.ndarray, ring_lens: np.ndarray,
@@ -186,7 +130,7 @@ def encode_features_batch(q: np.ndarray, ring_lens: np.ndarray,
     qy = q[:, 1].astype(np.int64)
     dx = qx - np.where(feat_first_pt, 0, qx[prev])
     dy = qy - np.where(feat_first_pt, 0, qy[prev])
-    zx, zy = zigzag_np(dx), zigzag_np(dy)
+    zx, zy = P.zigzag_encode(dx), P.zigzag_encode(dy)
     # command-unit layout: per polygon/line part [MoveTo(1) zx zy
     # LineTo(n-1) pairs (ClosePath)] = 2n+2(+1); per POINT feature one
     # [MoveTo(n) pairs] = 2n+1 (parts collapse — spec multipoint)
@@ -226,7 +170,7 @@ def encode_features_batch(q: np.ndarray, ring_lens: np.ndarray,
         if geom_type == POLYGON:
             cmds[cmd_off + cmd_lens - 1] = (CLOSE_PATH & 0x7) | (1 << 3)
     # one varint pass over the whole batch
-    buf, nb = varints_np(cmds, return_lens=True)
+    buf, nb = P.encode_varints(cmds, return_lens=True)
     byte_off = np.concatenate(([0], np.cumsum(nb)))
     # per-feature command ranges (units contiguous per feature)
     if geom_type == POINT:
@@ -238,16 +182,13 @@ def encode_features_batch(q: np.ndarray, ring_lens: np.ndarray,
     f_cmd_end = np.append(f_cmd_start[1:], total)
     f_b0 = byte_off[f_cmd_start]
     f_b1 = byte_off[f_cmd_end]
-    head_t = _field(1, 0)
-    head_ty = _field(3, 0) + _varint(geom_type)
-    head_g = _field(4, 2)
+    head_ty = P.field_varint(3, geom_type)
     out = []
     for f in range(n_feat):
-        geom = buf[f_b0[f]:f_b1[f]]
         tb = tag_bytes[f] if tag_bytes is not None else b""
-        feat = (head_t + _varint(int(feat_ids[f])) + tb + head_ty
-                + head_g + _varint(len(geom)) + geom)
-        out.append(_len_delim(2, feat))
+        feat = (P.field_varint(1, feat_ids[f]) + tb + head_ty
+                + P.field_len(4, buf[f_b0[f]:f_b1[f]]))
+        out.append(P.field_len(2, feat))
     return out
 
 
@@ -255,23 +196,19 @@ def encode_tags_packed(pairs) -> bytes:
     """Feature.tags (field 2, packed varints): alternating key-index /
     value-index pairs into the layer dictionaries. Empty pairs → b''
     (the field is simply absent, per proto3 packed semantics)."""
-    if not len(pairs):
-        return b""
-    return _len_delim(2, b"".join(_varint(int(v)) for v in pairs))
+    return P.field_packed_varints(2, pairs)
 
 
 def encode_feature(fid: int, rings, geom_type: int = POLYGON,
                    tags: bytes = b"") -> bytes:
-    geom = varints_np(geometry_commands(rings, geom_type))
-    return (_field(1, 0) + _varint(fid)
-            + tags
-            + _field(3, 0) + _varint(geom_type)
-            + _len_delim(4, geom))
+    geom = P.encode_varints(geometry_commands(rings, geom_type))
+    return (P.field_varint(1, fid) + tags
+            + P.field_varint(3, geom_type) + P.field_len(4, geom))
 
 
 def encode_value_string(s: str) -> bytes:
     """Layer.values element: a Value message holding string_value."""
-    return _len_delim(1, s.encode())
+    return P.field_len(1, s.encode())
 
 
 def encode_layer(name: str, features: bytes, extent: int = 4096,
@@ -279,18 +216,17 @@ def encode_layer(name: str, features: bytes, extent: int = 4096,
     """``keys``: iterable of tag-key strings (Layer field 3, in
     dictionary-index order); ``values``: iterable of tag-value STRINGS
     (Layer field 4, each wrapped as a Value message)."""
-    payload = (_field(15, 0) + _varint(2)
-               + _len_delim(1, name.encode())
-               + features
-               + b"".join(_len_delim(3, k.encode()) for k in keys)
-               + b"".join(_len_delim(4, encode_value_string(v))
-                          for v in values)
-               + _field(5, 0) + _varint(extent))
-    return payload
+    return (P.field_varint(15, 2)
+            + P.field_len(1, name.encode())
+            + features
+            + b"".join(P.field_len(3, k.encode()) for k in keys)
+            + b"".join(P.field_len(4, encode_value_string(v))
+                       for v in values)
+            + P.field_varint(5, extent))
 
 
 def encode_tile(layer_payload: bytes) -> bytes:
-    return _len_delim(3, layer_payload)
+    return P.field_len(3, layer_payload)
 
 
 def encode_mvt(features, name: str = "osm", extent: int = 4096,
@@ -299,7 +235,7 @@ def encode_mvt(features, name: str = "osm", extent: int = 4096,
     open (n,2) integer vertex arrays. Callers MUST present features in
     a deterministic order (the operator sorts by feature id)."""
     feat_bytes = b"".join(
-        _len_delim(2, encode_feature(fid, rings, geom_type))
+        P.field_len(2, encode_feature(fid, rings, geom_type))
         for fid, rings in features)
     return encode_tile(encode_layer(name, feat_bytes, extent))
 
@@ -307,33 +243,6 @@ def encode_mvt(features, name: str = "osm", extent: int = 4096,
 # ---------------------------------------------------------------------------
 # decoder (test/debug subset)
 # ---------------------------------------------------------------------------
-
-def _read_varint(buf: bytes, i: int):
-    v = s = 0
-    while True:
-        b = buf[i]
-        i += 1
-        v |= (b & 0x7F) << s
-        if not b & 0x80:
-            return v, i
-        s += 7
-
-
-def _fields(buf: bytes):
-    i = 0
-    while i < len(buf):
-        key, i = _read_varint(buf, i)
-        num, wire = key >> 3, key & 0x7
-        if wire == 0:
-            v, i = _read_varint(buf, i)
-        elif wire == 2:
-            ln, i = _read_varint(buf, i)
-            v = buf[i:i + ln]
-            i += ln
-        else:  # pragma: no cover - encoder never emits other wires
-            raise ValueError(f"unsupported wire type {wire}")
-        yield num, wire, v
-
 
 def decode_geometry(cmds) -> list[np.ndarray]:
     """Command stream → list of open (n,2) int rings."""
@@ -372,46 +281,25 @@ def decode_mvt(buf: bytes):
     single-layer callers); ``layers`` carries the per-layer split for
     multi-layer tiles."""
     out = {"features": [], "types": [], "layers": []}
-    for num, _w, v in _fields(buf):
-        if num != 3:
-            continue
-        layer = {"features": [], "types": [], "keys": [], "values": [],
-                 "attrs": []}
+    for lv in P.parse_message(buf).get(3, []):
+        msg = P.parse_message(lv)
+        layer = {"features": [], "types": [], "attrs": [],
+                 "keys": [bytes(k).decode() for k in msg.get(3, [])],
+                 "values": [bytes(s).decode() for v in msg.get(4, [])
+                            for s in P.parse_message(v).get(1, [])]}
+        for num, k in ((15, "version"), (1, "name"), (5, "extent")):
+            if num in msg:
+                layer[k] = msg[num][-1]
+        if "name" in layer:
+            layer["name"] = bytes(layer["name"]).decode()
         raw_tags = []
-        for lnum, _lw, lv in _fields(v):
-            if lnum == 15:
-                layer["version"] = lv
-            elif lnum == 1:
-                layer["name"] = lv.decode()
-            elif lnum == 5:
-                layer["extent"] = lv
-            elif lnum == 3:
-                layer["keys"].append(lv.decode())
-            elif lnum == 4:
-                for vnum, _vw, vv in _fields(lv):
-                    if vnum == 1:
-                        layer["values"].append(vv.decode())
-            elif lnum == 2:
-                fid, geom, ftype, pairs = None, [], POLYGON, []
-                for fnum, fw, fv in _fields(lv):
-                    if fnum == 1:
-                        fid = fv
-                    elif fnum == 2:
-                        i = 0
-                        while i < len(fv):
-                            t, i = _read_varint(fv, i)
-                            pairs.append(t)
-                    elif fnum == 3:
-                        ftype = fv
-                    elif fnum == 4:
-                        cmds, i = [], 0
-                        while i < len(fv):
-                            c, i = _read_varint(fv, i)
-                            cmds.append(c)
-                        geom = decode_geometry(cmds)
-                layer["features"].append((fid, geom))
-                layer["types"].append(ftype)
-                raw_tags.append(pairs)
+        for fv in msg.get(2, []):
+            f = P.parse_message(fv)
+            geom = P.decode_varints(P.first(f, 4, b"")).tolist()
+            layer["features"].append((P.first(f, 1),
+                                      decode_geometry(geom)))
+            layer["types"].append(P.first(f, 3, POLYGON))
+            raw_tags.append(P.decode_varints(P.first(f, 2, b"")).tolist())
         # tag indices resolve against the COMPLETE layer dictionaries
         # (keys/values fields may follow the features on the wire)
         for pairs in raw_tags:

@@ -278,17 +278,11 @@ def _tile_encode(spark, n):
 
 def _tile_fanout(spark, copies):
     # polygon bbox → (polygon, tile) Column fan-out only
+    from ..functions import geometry as G
     from ..operators import tiles as TL
     polys = _polys(spark, SF_DIR, copies)
-    flat = polys.select(
-        "polygon_id", "left", "bottom", "right", "top",
-        F.transform("rings", F.size).alias("ring_len"),
-        F.flatten(F.transform(
-            "rings", lambda r: F.transform(r, lambda p: p["lon"])))
-        .alias("lons"),
-        F.flatten(F.transform(
-            "rings", lambda r: F.transform(r, lambda p: p["lat"])))
-        .alias("lats"))
+    flat = polys.select("polygon_id", "left", "bottom", "right", "top",
+                        *G.flat_ring_cols())
     return {"rows": TL.tile_cover(flat, _ZOOM).count()}
 
 

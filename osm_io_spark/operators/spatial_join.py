@@ -30,25 +30,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-import json
-
-from .. import schemas
 from ..functions import cells as C
 from ..functions import geometry as G
 from .util import widen
-
-# The Arrow<->pandas bridge rejects ragged array<array<struct>> columns
-# (numpy "inhomogeneous shape") when polygons have differing ring
-# counts, so ring geometry crosses pandas-UDF boundaries as JSON and is
-# restored JVM-side with from_json.
-_RINGS_TYPE = schemas.POLYGONS["rings"].dataType
-
-
-def _rings_to_np(rings_json: str):
-    rings = json.loads(rings_json)
-    import numpy as _np
-    return [_np.array([(p["lon"], p["lat"]) for p in ring]) for ring in rings]
-
 
 # ---------------------------------------------------------------------------
 # covers
@@ -88,81 +72,94 @@ def cover_bbox_cells(df: DataFrame, res: int,
             .drop("_x", "_y"))
 
 
+def _polygon_rings(pdf: pd.DataFrame,
+                   keys: list[str]) -> tuple[np.ndarray, list]:
+    """Rows of one Arrow batch → (polygon index per row, each polygon's
+    rings): rows are keyed by the polygon identity columns (OSM way and
+    relation ids overlap, so ``source`` is part of the key when
+    present), and a polygon's rings are split once, from its first
+    row's flat ring columns."""
+    poly = pdf.groupby(keys, sort=False, dropna=False).ngroup().to_numpy()
+    first = np.unique(poly, return_index=True)[1]
+    flat = [pdf[c].to_numpy() for c in G.FLAT_RING_COLS]
+    return poly, [G.split_rings(*(a[i] for a in flat)) for i in first]
+
+
 def cover_polygon_cells_json(polygons: DataFrame, res: int,
-                             refine: bool = True,
                              out: str = "cell") -> DataFrame:
-    """Explode general ring polygons (schemas.POLYGONS) into covering
-    cells, rings carried as a JSON string column ``_rings_json``
-    (serialized ONCE per polygon, before the cover explode — the Arrow
-    bridge rejects ragged array<array<struct>> columns, and keeping the
-    string form end-to-end avoids re-serializing per cover cell and per
-    matched pair). Optional exact rect∩polygon refinement drops cover
-    cells that don't actually touch the polygon (tighter cover →
-    smaller join): one vectorized test per Arrow batch over all its
-    (cell, polygon) rows (functions/geometry.rects_intersect_polygons),
-    each distinct polygon's rings parsed once per batch."""
-    jsonified = (widen(polygons)
-                 .withColumn("_rings_json", F.to_json("rings"))
-                 .drop("rings"))
-    covered = cover_bbox_cells(jsonified, res, out=out)
-    if not refine:
-        return covered
-    schema = covered.schema
+    """Explode general ring polygons (schemas.POLYGONS) into their
+    tight covering cells. Rings are replaced by the flat ring columns
+    (functions/geometry.flat_ring_cols: built ONCE per polygon, before
+    the cover explode), which ride through the join to the PIP refine.
+    Each bbox cover cell is kept only when it touches the polygon
+    (tighter cover → smaller join): one vectorized test per Arrow batch
+    over all its (cell, polygon) rows
+    (functions/geometry.rects_intersect_polygons). A NULL ring list
+    covers no cell. (The ``_json`` suffix is historical: rings no
+    longer cross as JSON.)"""
+    flat = widen(polygons).select(
+        *[c for c in polygons.columns if c != "rings"], *G.flat_ring_cols())
+    covered = cover_bbox_cells(flat, res, out=out)
+    keys = _poly_key_cols(polygons, ("polygon_id", "source"))
 
     def _refine(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            # each distinct polygon's rings parse once per batch
-            poly, rings_json = pd.factorize(pdf["_rings_json"],
-                                              use_na_sentinel=False)
-            bounds = C.cell_bounds_np(pdf[out].to_numpy(), res)
-            keep = G.rects_intersect_polygons(
-                *bounds, poly, [_rings_to_np(rj) for rj in rings_json])
-            yield pdf[keep]
+            if len(pdf):
+                poly, rings = _polygon_rings(pdf, keys)
+                bounds = C.cell_bounds_np(pdf[out].to_numpy(), res)
+                pdf = pdf[G.rects_intersect_polygons(*bounds, poly, rings)]
+            yield pdf
 
-    return covered.mapInPandas(_refine, schema=schema)
+    return covered.mapInPandas(_refine, schema=covered.schema)
 
 
 # ---------------------------------------------------------------------------
 # refinement predicates
 # ---------------------------------------------------------------------------
 
-def refine_rect(df: DataFrame, lat: str = "lat", lon: str = "lon",
-                strict: bool = True) -> DataFrame:
-    """Exact point-in-rectangle (left/bottom/right/top columns) — JVM."""
-    if strict:
-        pred = ((F.col(lon) > F.col("left")) & (F.col(lon) < F.col("right"))
-                & (F.col(lat) > F.col("bottom")) & (F.col(lat) < F.col("top")))
-    else:
-        pred = ((F.col(lon) >= F.col("left")) & (F.col(lon) <= F.col("right"))
-                & (F.col(lat) >= F.col("bottom")) & (F.col(lat) <= F.col("top")))
-    return df.filter(pred)
+def refine_rect(df: DataFrame, lat: str = "lat",
+                lon: str = "lon") -> DataFrame:
+    """Exact strict point-in-rectangle (left/bottom/right/top columns)
+    — JVM."""
+    return df.filter((F.col(lon) > F.col("left")) & (F.col(lon) < F.col("right"))
+                     & (F.col(lat) > F.col("bottom")) & (F.col(lat) < F.col("top")))
 
 
-def refine_pip_json(df: DataFrame, lat: str = "lat",
-                    lon: str = "lon") -> DataFrame:
-    """Exact point-in-polygon over rows carrying ``_rings_json`` via the
-    vectorized even-odd ray-cast kernel
-    (osm_io_spark.functions.geometry.points_in_polygon), applied
-    Arrow-batch-at-a-time grouped by polygon within each batch."""
-    schema = df.schema
+def _refine_by_polygon(df: DataFrame, inside) -> DataFrame:
+    """Keep the candidate rows of ``df`` (which carry the flat ring
+    columns) whose point lies inside their polygon, and drop the ring
+    columns. ``inside(pdf, rows, rings)`` answers for the rows of one
+    polygon; it runs once per polygon per Arrow batch, the polygon
+    keyed by its identity columns (:func:`_polygon_rings`)."""
+    keys = _poly_key_cols(df, ("polygon_id", "source"))
+    cols = [c for c in df.columns if c not in G.FLAT_RING_COLS]
 
-    def _pip(batches: Iterable[pd.DataFrame]):
+    def _refine(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
             keep = np.zeros(len(pdf), bool)
-            for _, idx in pdf.groupby("polygon_id").groups.items():
-                idx = np.asarray(idx)
-                rr = _rings_to_np(pdf["_rings_json"].iloc[idx[0]])
-                keep[idx] = G.points_in_polygon(
-                    pdf[lon].to_numpy()[idx], pdf[lat].to_numpy()[idx], rr)
-            yield pdf[keep]
+            if len(pdf):
+                poly, rings = _polygon_rings(pdf, keys)
+                order = np.argsort(poly, kind="stable")
+                cuts = np.cumsum(np.bincount(poly))[:-1]
+                for rows, rr in zip(np.split(order, cuts), rings):
+                    keep[rows] = inside(pdf, rows, rr)
+            yield pdf.loc[keep, cols]
 
-    return df.mapInPandas(_pip, schema=schema)
+    return df.mapInPandas(_refine, schema=df.select(*cols).schema)
+
+
+def refine_pip(df: DataFrame, lat: str = "lat",
+               lon: str = "lon") -> DataFrame:
+    """Exact point-in-polygon over candidate rows carrying the flat
+    ring columns (:func:`cover_polygon_cells_json`), by the vectorized
+    even-odd ray cast (functions/geometry.points_in_polygon) per
+    polygon per Arrow batch. Returns the matching rows without the
+    ring columns."""
+    def inside(pdf, rows, rings):
+        return G.points_in_polygon(pdf[lon].to_numpy()[rows],
+                                   pdf[lat].to_numpy()[rows], rings)
+
+    return _refine_by_polygon(df, inside)
 
 
 # ---------------------------------------------------------------------------
@@ -170,24 +167,22 @@ def refine_pip_json(df: DataFrame, lat: str = "lat",
 # ---------------------------------------------------------------------------
 
 def cell_join(probe: DataFrame, build_cells: DataFrame,
-              cell: str = "cell", broadcast_build: bool | None = None) -> DataFrame:
-    """Coarse equi-join on the cell id."""
-    if broadcast_build is None:
-        broadcast_build = True  # build side (polygon covers) ≪ probe side
-    b = F.broadcast(build_cells) if broadcast_build else build_cells
-    return probe.join(b, on=cell, how="inner")
+              cell: str = "cell") -> DataFrame:
+    """Coarse equi-join on the cell id, the build side (polygon covers,
+    ≪ probe side) broadcast."""
+    return probe.join(F.broadcast(build_cells), on=cell, how="inner")
 
 
 def salted_cell_join(probe: DataFrame, build_cells: DataFrame,
                      n_salt: int, hot: list[int],
-                     cell: str = "cell", probe_key: str = "image_id") -> DataFrame:
+                     probe_key: str = "image_id") -> DataFrame:
     """Explicit skew handling: for hot cells, replicate build rows
     ``n_salt``× and scatter probe rows by ``pmod(hash(probe_key), n_salt)``
     so one Zipf-head cell fans across n_salt reducers; cold cells join
     plainly. Layered UNDER AQE skew-join (which splits at partition
     granularity but cannot split a single giant key without salting)."""
     if not hot or n_salt <= 1:
-        return cell_join(probe, build_cells, cell=cell)
+        return cell_join(probe, build_cells)
     # NO filter on the probe's cell column: a Filter predicate inlines
     # the (self-duplicating) Morton expression where whole-stage-codegen
     # CSE does not reach — measured 60x slower than evaluating the same
@@ -195,29 +190,31 @@ def salted_cell_join(probe: DataFrame, build_cells: DataFrame,
     # cold cells are disjoint, so two unfiltered joins partition the
     # matches exactly: hot probe rows only match build_hot (on cell +
     # salt), cold rows only match build_cold (on cell).
-    hot_vals = [int(h) for h in hot]
+    is_hot = F.col("cell").isin([int(h) for h in hot])
 
     probe_s = probe.withColumn(
         "_salt", F.pmod(F.hash(F.col(probe_key)), F.lit(n_salt)))
-    build_hot = (build_cells.filter(F.col(cell).isin(hot_vals))
+    build_hot = (build_cells.filter(is_hot)
                  .withColumn("_salt", F.explode(
                      F.sequence(F.lit(0), F.lit(n_salt - 1)))))
-    build_cold = build_cells.filter(~F.col(cell).isin(hot_vals))
-
-    joined_hot = probe_s.join(build_hot, on=[cell, "_salt"],
+    joined_hot = probe_s.join(build_hot, on=["cell", "_salt"],
                               how="inner").drop("_salt")
-    joined_cold = probe.join(F.broadcast(build_cold), on=cell, how="inner")
+    joined_cold = cell_join(probe, build_cells.filter(~is_hot))
     return joined_hot.unionByName(joined_cold)
+
+
+# cap on the salt factor resolve_salt picks for the hottest cell
+MAX_SALT = 64
 
 
 def resolve_salt(probe: DataFrame, salt, hot: list[int] | None,
                  cell: str = "cell",
-                 threshold_rows: int = 2_000_000,
-                 max_salt: int = 64) -> tuple[int, list[int]]:
+                 threshold_rows: int = 2_000_000) -> tuple[int, list[int]]:
     """Resolve salt='auto' into (n_salt, hot_cells): measure the probe's
     per-cell counts once, salt only when a Zipf head actually exists,
-    and size n_salt so the hottest cell splits into ~threshold-sized
-    shards. Returns the inputs unchanged for explicit settings."""
+    and size n_salt (≤ ``MAX_SALT``) so the hottest cell splits into
+    ~threshold-sized shards. Returns the inputs unchanged for explicit
+    settings."""
     if salt != "auto":
         return (salt or 0), (hot or [])
     # filter BEFORE the bounded collect: only above-threshold cells come
@@ -238,7 +235,7 @@ def resolve_salt(probe: DataFrame, salt, hot: list[int] | None,
     hot_auto = [r[cell] for r in rows]
     if not hot_auto:
         return 0, []
-    n_salt = min(max_salt, -(-max(r["count"] for r in rows) // threshold_rows))
+    n_salt = min(MAX_SALT, -(-max(r["count"] for r in rows) // threshold_rows))
     return max(2, n_salt), hot_auto
 
 
@@ -262,26 +259,25 @@ def spatial_join_rect(images: DataFrame, rects: DataFrame, res: int,
 
 
 def spatial_join_polygons(images: DataFrame, polygons: DataFrame, res: int,
-                          refine_cover: bool = True,
                           salt: int | str = 0,
                           hot: list[int] | None = None,
                           salt_threshold_rows: int = 2_000_000) -> DataFrame:
-    """General-polygon spatial join: cell cover + numpy ray-cast refine.
-    ``salt='auto'`` as in spatial_join_rect."""
+    """General-polygon spatial join: tight cell cover + numpy ray-cast
+    refine, the flat ring columns built once per polygon and carried
+    through cover → join → refine. ``salt='auto'`` as in
+    spatial_join_rect. Returns matched rows: every image column, the
+    ``cell`` and the polygon columns WITHOUT its geometry (``rings``),
+    as :func:`s2_spatial_join_polygons` does; a polygon's rows match
+    by its identity (``polygon_id`` + ``source`` when present)."""
     probe = tag_probe_cells(images, res)
     salt, hot = resolve_salt(probe, salt, hot,
                              threshold_rows=salt_threshold_rows)
-    # rings stay in their JSON string form through cover → join → PIP:
-    # one serialization per polygon total, instead of a struct→JSON→
-    # struct round trip per cover cell and again per matched pair
-    build = cover_polygon_cells_json(polygons, res, refine=refine_cover)
+    build = cover_polygon_cells_json(polygons, res)
     if salt and hot:
         joined = salted_cell_join(probe, build, salt, hot)
     else:
         joined = cell_join(probe, build)
-    refined = refine_pip_json(joined)
-    return (refined.withColumn("rings", F.from_json("_rings_json", _RINGS_TYPE))
-            .drop("_rings_json"))
+    return refine_pip(joined)
 
 
 def s2_containment_join(points: DataFrame, covers: DataFrame,
@@ -497,27 +493,26 @@ def s2_cover_polygons(polygons: DataFrame, max_level: int = 12,
     single cover stays a bounded ≤max_cells driver-free computation.
     Every Arrow batch runs ONE cover descent over all rings of all its
     polygons (functions/s2.s2_cover_polygons_np) and builds its output
-    with one np.repeat. Rings cross the Arrow boundary as JSON (ragged
-    array<array<struct>> rule, see _RINGS_TYPE above); the cover is
-    the normalized union over ALL rings (multipolygons may carry
-    several outer rings; holes never make a cover incomplete). The
-    ≤max_cells budget is TOTAL across a polygon's rings
-    (parent-lifting after the union), so per-polygon candidate fan-out
-    stays capped even for a hundreds-of-rings coastline
-    multipolygon."""
+    with one np.repeat. Rings cross the Arrow boundary in the flat
+    layout (functions/geometry.flat_ring_cols, built once per polygon);
+    the cover is the normalized union over ALL rings (multipolygons may
+    carry several outer rings; holes never make a cover incomplete; a
+    NULL ring list has an empty cover). The ≤max_cells budget is TOTAL
+    across a polygon's rings (parent-lifting after the union), so
+    per-polygon candidate fan-out stays capped even for a
+    hundreds-of-rings coastline multipolygon."""
     from ..functions import s2 as S2
     keep = _poly_key_cols(polygons, poly_cols)
-    src = polygons.select(*keep, F.to_json("rings").alias("_rings_json"))
+    src = polygons.select(*keep, *G.flat_ring_cols())
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in polygons.schema if f.name in keep) + ", cover_id long"
 
     def _cover(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
-            polys = [[(np.array([p["lat"] for p in ring], np.float64),
-                       np.array([p["lon"] for p in ring], np.float64))
-                      for ring in json.loads(rj)]
-                     for rj in pdf["_rings_json"]]
+            flat = zip(*(pdf[c] for c in G.FLAT_RING_COLS))
+            polys = [[(r[:, 1], r[:, 0]) for r in G.split_rings(*row)]
+                     for row in flat]
             cells = S2.s2_cover_polygons_np(polys, max_level=max_level,
                                             max_cells=max_cells)
             rows = np.repeat(np.arange(len(pdf)), [len(c) for c in cells])
@@ -531,42 +526,25 @@ def s2_cover_polygons(polygons: DataFrame, max_level: int = 12,
 
 def s2_refine_rings(cand: DataFrame, px: str = "px", py: str = "py",
                     pz: str = "pz") -> DataFrame:
-    """Exact even-odd winding refine over candidate rows carrying
-    ``_rings_json`` + unit-vector point components: batched numpy
-    kernel grouped by polygon within each Arrow batch (per CLAUDE.md,
-    per-row trig chains never run as interpreted HOF Columns)."""
+    """Exact even-odd winding refine over candidate rows carrying the
+    flat ring columns + unit-vector point components: batched numpy
+    kernel per polygon per Arrow batch (per CLAUDE.md, per-row trig
+    chains never run as interpreted HOF Columns). Returns the matching
+    rows without the ring columns."""
     from ..functions import s2 as S2
-    schema = cand.schema
 
-    def _refine(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            keep = np.zeros(len(pdf), bool)
-            ring_cache: dict[str, list[np.ndarray]] = {}
-            # group by the geometry itself: polygon_id alone is
-            # ambiguous across way/relation sources
-            for rj, idx in pdf.groupby("_rings_json").groups.items():
-                idx = np.asarray(idx)
-                rings = ring_cache.get(rj)
-                if rings is None:
-                    parsed = json.loads(rj)
-                    rings = []
-                    for ring in parsed:
-                        la = np.array([p["lat"] for p in ring], np.float64)
-                        lo = np.array([p["lon"] for p in ring], np.float64)
-                        if len(la) > 1 and la[0] == la[-1] and lo[0] == lo[-1]:
-                            la, lo = la[:-1], lo[:-1]
-                        rings.append(np.stack(
-                            S2._latlon_xyz_np(la, lo), axis=1))
-                    ring_cache[rj] = rings
-                keep[idx] = S2.point_in_spherical_rings_np(
-                    pdf[px].to_numpy()[idx], pdf[py].to_numpy()[idx],
-                    pdf[pz].to_numpy()[idx], rings)
-            yield pdf[keep]
+    def inside(pdf, rows, rings):
+        loops = []
+        for r in rings:
+            if len(r) > 1 and (r[0] == r[-1]).all():
+                r = r[:-1]  # the loop closes implicitly
+            loops.append(np.stack(S2._latlon_xyz_np(r[:, 1], r[:, 0]),
+                                  axis=1))
+        return S2.point_in_spherical_rings_np(
+            pdf[px].to_numpy()[rows], pdf[py].to_numpy()[rows],
+            pdf[pz].to_numpy()[rows], loops)
 
-    return cand.mapInPandas(_refine, schema=schema)
+    return _refine_by_polygon(cand, inside)
 
 
 def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
@@ -594,12 +572,13 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
                  at most once — no post-join dedup shuffle.
       refine   → exact even-odd winding PIP incl. inner-ring holes
                  (s2_refine_rings, batched numpy), ring geometry joined
-                 back as a dim so the cover explode never duplicates
-                 ring JSON per cell. ``broadcast_dim='auto'`` (default)
+                 back as a dim of flat ring columns (built once per
+                 polygon) so the cover explode never duplicates rings
+                 per cell. ``broadcast_dim='auto'`` (default)
                  broadcasts the rings dim only when the polygon table
                  is ≤ ``max_broadcast_dim_rows`` rows — the threshold
                  is deliberately lower than the cover gate because a
-                 dim row carries full ring JSON (KBs, not a long). Past
+                 dim row carries a polygon's vertices (KBs, not a long). Past
                  the gate the dim joins as a shuffled hash join on the
                  polygon key (Catalyst may still broadcast if it fits
                  its byte threshold — size-aware, so safe).
@@ -626,7 +605,7 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
     pts = S2.with_s2_cell(base, F.col("px"), F.col("py"), F.col("pz"))
     cand = s2_containment_join(pts, covers,
                                broadcast_covers=broadcast_covers)
-    dim = polygons.select(*keep, F.to_json("rings").alias("_rings_json"))
+    dim = polygons.select(*keep, *G.flat_ring_cols())
     if broadcast_dim == "auto":
         broadcast_dim = polygons.count() <= max_broadcast_dim_rows
     cand = cand.join(F.broadcast(dim) if broadcast_dim else dim, keep)

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import geometry as G
 from ..functions import webmercator as WM
 from ..functions.cells import morton_np
 from .util import widen
@@ -407,10 +408,9 @@ def _feature_rows(pdf: pd.DataFrame, zoom: int, extent: int,
                   buffer_px: int, tol_px: float):
     """Kernel: one (polygon, tile) row → 0 or 1 clipped feature row.
 
-    Ring geometry arrives FLATTENED (ring_len + parallel lons/lats
-    primitive arrays): Arrow moves primitive arrays zero-copy into
-    numpy, where ragged array<array<struct>> cells both fail pandas
-    conversion and would cost a dict per vertex."""
+    Ring geometry arrives in the flat layout of
+    functions/geometry.flat_ring_cols (ring_len + parallel lons/lats
+    primitive arrays), split here for the whole batch at once."""
     out = {k: [] for k in ("z", "x", "y", "polygon_id", "ring_lens",
                            "pxs", "pys", "n_pts", "area_px2")}
     nrows = len(pdf)
@@ -562,20 +562,10 @@ def build_vector_tiles(polys: DataFrame, zoom: int, extent: int = 4096,
     both sides of ±180° (:func:`tile_cover`) and the kernel re-centres
     their longitudes per tile.  ``only_tiles``: restrict the build to
     that (x, y) tile set (see :func:`retile`)."""
-    # Flatten rings to primitive arrays BEFORE the tile fan-out: the
-    # higher-order transform/flatten Columns are interpreted (CLAUDE.md
-    # rule), so they must run once per polygon, not once per
-    # (polygon, tile) row — and ragged array<array<struct>> cells can't
-    # cross the Arrow boundary into the kernel anyway.
-    flat = polys.select(
-        "polygon_id", "left", "bottom", "right", "top",
-        F.transform("rings", F.size).alias("ring_len"),
-        F.flatten(F.transform(
-            "rings", lambda r: F.transform(r, lambda p: p["lon"])))
-        .alias("lons"),
-        F.flatten(F.transform(
-            "rings", lambda r: F.transform(r, lambda p: p["lat"])))
-        .alias("lats"))
+    # flat rings BEFORE the tile fan-out: once per polygon, not once
+    # per (polygon, tile) row
+    flat = polys.select("polygon_id", "left", "bottom", "right", "top",
+                        *G.flat_ring_cols())
     return _fan_out(
         flat, zoom, max_tiles_per_polygon, "polygon_id", only_tiles,
         lambda pdf: _feature_rows(pdf, zoom, extent, buffer_px, tol_px),

@@ -4,7 +4,9 @@ pure Python/numpy — no protoc runtime in this environment.
 Covers exactly the messages of
 /root/reference/src/osm/pbf/format/fileformat.proto and osmformat.proto:
 Blob, BlobHeader, HeaderBlock/HeaderBBox, PrimitiveBlock, StringTable,
-PrimitiveGroup, Node, DenseNodes/DenseInfo, Way, Relation, Info.
+PrimitiveGroup, Node, DenseNodes/DenseInfo, Way, Relation, Info. The
+Mapbox Vector Tile messages (functions/mvt.py) are built and scanned
+with the same functions: this is the repository's one wire codec.
 
 The decode path is vectorized: packed repeated fields (the bulk of the
 bytes — DenseNodes id/lat/lon/timestamp, way refs, relation memids) are
@@ -62,30 +64,33 @@ def decode_varints(buf: bytes | memoryview) -> np.ndarray:
     return vals
 
 
-def encode_varints(vals: np.ndarray) -> bytes:
-    """Encode a uint64 array as concatenated varints (vectorized: one
-    pass per byte position)."""
+def encode_varints(vals: np.ndarray, return_lens: bool = False):
+    """Encode a uint64 array as concatenated varints, vectorized: pass k
+    writes byte k of every value that has one, and each pass carries
+    only those values on, so a stream of mostly 1-2 byte values costs
+    ~2 passes whatever its widest value. ``return_lens`` also returns
+    each value's byte count.
+
+    Efficient only at BATCH granularity (thousands of values) — on a
+    single MVT feature's ~20 commands the numpy machinery costs more
+    than scalar :func:`varint` calls (measured 35 µs vs ~2 µs). Callers
+    concatenate a whole Arrow batch or packed field first."""
     v = np.asarray(vals, np.uint64)
-    if v.size == 0:
-        return b""
     # number of 7-bit groups per value (at least 1)
-    nbytes = np.ones(len(v), np.int64)
-    tmp = v >> np.uint64(7)
-    while (tmp > 0).any():
-        nbytes[tmp > 0] += 1
-        tmp = tmp >> np.uint64(7)
-    total = int(nbytes.sum())
-    out = np.zeros(total, np.uint8)
-    offs = np.zeros(len(v), np.int64)
-    offs[1:] = np.cumsum(nbytes)[:-1]
-    shifted = v.copy()
-    for k in range(int(nbytes.max())):
-        m = nbytes > k
-        byte = (shifted[m] & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[m] > k + 1).astype(np.uint8) * np.uint8(0x80)
-        out[offs[m] + k] = byte | cont
-        shifted = shifted >> np.uint64(7)
-    return out.tobytes()
+    nb = np.ones(len(v), np.int64)
+    x = v >> np.uint64(7)
+    while x.any():
+        nb += x > 0
+        x >>= np.uint64(7)
+    out = np.empty(int(nb.sum()), np.uint8)
+    pos, rem, left = np.cumsum(nb) - nb, v, nb - 1
+    while len(pos):
+        more = left > 0
+        out[pos] = ((rem & np.uint64(0x7F)).astype(np.uint8)
+                    | (more.astype(np.uint8) << 7))
+        pos, rem, left = pos[more] + 1, rem[more] >> np.uint64(7), left[more] - 1
+    buf = out.tobytes()
+    return (buf, nb) if return_lens else buf
 
 
 def zigzag_decode(v: np.ndarray) -> np.ndarray:
@@ -190,9 +195,11 @@ def first(msg: dict, field: int, default=None):
 # generic message build
 # ---------------------------------------------------------------------------
 
-def _varint(v: int) -> bytes:
+def varint(v: int) -> bytes:
+    """One varint; a negative int encodes as its 64-bit two's
+    complement (10 bytes), as protobuf does."""
     out = bytearray()
-    v &= (1 << 64) - 1
+    v = int(v) & ((1 << 64) - 1)
     while True:
         b = v & 0x7F
         v >>= 7
@@ -204,11 +211,11 @@ def _varint(v: int) -> bytes:
 
 
 def field_varint(field: int, v: int) -> bytes:
-    return _varint((field << 3) | WT_VARINT) + _varint(v)
+    return varint((field << 3) | WT_VARINT) + varint(v)
 
 
 def field_len(field: int, payload: bytes) -> bytes:
-    return _varint((field << 3) | WT_LEN) + _varint(len(payload)) + payload
+    return varint((field << 3) | WT_LEN) + varint(len(payload)) + payload
 
 
 # Below ~16 values the numpy kernels' fixed per-call overhead (~40µs:
@@ -224,7 +231,7 @@ def field_packed_varints(field: int, vals) -> bytes:
     if n == 0:
         return b""
     if n <= _SCALAR_CUTOFF:
-        payload = b"".join(_varint(int(x)) for x in vals)
+        payload = b"".join(varint(int(x)) for x in vals)
         return field_len(field, payload)
     return field_len(field, encode_varints(np.asarray(vals, np.uint64)))
 
@@ -236,7 +243,7 @@ def field_packed_sints(field: int, vals) -> bytes:
     if n <= _SCALAR_CUTOFF:
         # python-int zigzag: (v<<1)^(v>>63) in two's complement ==
         # (v<<1)^(-1 if v<0 else 0) in unbounded ints
-        payload = b"".join(_varint((int(x) << 1) ^ (-1 if x < 0 else 0))
+        payload = b"".join(varint((int(x) << 1) ^ (-1 if x < 0 else 0))
                            for x in vals)
         return field_len(field, payload)
     return field_len(field, encode_sint_packed(np.asarray(vals, np.int64)))

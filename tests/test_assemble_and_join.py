@@ -139,6 +139,56 @@ def test_multipolygon_hole_semantics(spark):
     assert got == [2]
 
 
+# the two polygon joins, planar Morton cells and S2, on the same inputs
+_POLYGON_JOINS = {
+    "planar": lambda img, polys: SJ.spatial_join_polygons(img, polys, res=6),
+    "s2": SJ.s2_spatial_join_polygons,
+}
+
+
+def _square(x0, x1, y0, y1):
+    return [[{"lon": x, "lat": y} for x, y in
+             ((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))]]
+
+
+def _polygon_join_pairs(spark, join, rows):
+    from pyspark.sql import types as T
+
+    from osm_io_spark import schemas
+    schema = T.StructType([T.StructField(f.name, f.dataType, True)
+                           for f in schemas.POLYGONS])
+    polys = spark.createDataFrame(rows, schema)
+    imgs = spark.createDataFrame([(1, 0.5, 0.5), (2, 0.5, 2.5)],
+                                 "img_id long, lat double, lon double")
+    out = _POLYGON_JOINS[join](imgs, polys)
+    assert "rings" not in out.columns  # both joins drop the geometry
+    return sorted((r["img_id"], r["polygon_id"], r["source"])
+                  for r in out.select("img_id", "polygon_id", "source")
+                  .collect())
+
+
+@pytest.mark.parametrize("join", sorted(_POLYGON_JOINS))
+def test_polygon_join_way_and_relation_share_an_id(spark, join):
+    """OSM way and relation ids overlap: way 5 and relation 5 are
+    different polygons, and each image must be refined against its own
+    polygon's rings, not those of whichever row with id 5 came first."""
+    rows = [(5, "way", _square(0.0, 1.0, 0.0, 1.0), 0.0, 0.0, 1.0, 1.0, []),
+            (5, "relation", _square(2.0, 3.0, 0.0, 1.0),
+             2.0, 0.0, 3.0, 1.0, [])]
+    assert _polygon_join_pairs(spark, join, rows) == [
+        (1, 5, "way"), (2, 5, "relation")]
+
+
+@pytest.mark.parametrize("join", sorted(_POLYGON_JOINS))
+def test_polygon_join_null_rings_match_nothing(spark, join):
+    """A NULL ring list behaves like an empty one: no cover cell, no
+    match — and the other polygons still join."""
+    rows = [(5, "way", _square(0.0, 1.0, 0.0, 1.0), 0.0, 0.0, 1.0, 1.0, []),
+            (6, "way", None, 2.0, 0.0, 3.0, 1.0, []),
+            (7, "way", [], 2.0, 0.0, 3.0, 1.0, [])]
+    assert _polygon_join_pairs(spark, join, rows) == [(1, 5, "way")]
+
+
 def test_auto_salt_matches_plain_join(spark):
     """salt='auto' must produce exactly the plain join's matches —
     both when it triggers (tiny threshold → every cell is 'hot') and

@@ -1,6 +1,7 @@
 """Geometry kernels vs brute-force / analytic references."""
 
 import numpy as np
+import pytest
 
 from osm_io_spark.functions import geometry as G
 
@@ -52,6 +53,56 @@ def test_rect_intersects_polygon():
     got = G.rects_intersect_polygons(rects[:, 0], rects[:, 1], rects[:, 2],
                                      rects[:, 3], poly, [SQUARE, CONCAVE])
     assert got.tolist() == [True, True, True, False, True]
+
+
+_CLOSED = np.array([(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)], float)
+_SPLIT_CASES = {
+    "outer_and_hole": SQUARE_WITH_HOLE,
+    "open_and_closed": [SQUARE[0], _CLOSED],
+    "one_and_two_vertex": [np.array([(5, 6)], float),
+                           np.array([(1, 2), (3, 4)], float), CONCAVE[0]],
+    "empty_ring_between": [SQUARE[0], np.empty((0, 2)), _CLOSED],
+    "zero_rings": [],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SPLIT_CASES))
+def test_split_rings_round_trips_flat_layout(case):
+    """The flat ring layout (ring_len + parallel lons/lats) splits back
+    into exactly the rings it was built from."""
+    rings = _SPLIT_CASES[case]
+    ring_len = [len(r) for r in rings]
+    xy = np.concatenate(rings) if rings else np.empty((0, 2))
+    got = G.split_rings(np.array(ring_len, np.int32), xy[:, 0], xy[:, 1])
+    assert len(got) == len(rings)
+    for g, r in zip(got, rings):
+        assert g.shape == (len(r), 2) and g.dtype == np.float64
+        assert (g == r).all()
+
+
+def test_split_rings_null_is_no_rings():
+    assert G.split_rings(None, None, None) == []
+
+
+def test_flat_ring_cols_round_trip(spark):
+    """flat_ring_cols builds the layout split_rings reads, NULL ring
+    lists staying NULL."""
+    from pyspark.sql import types as T
+
+    from osm_io_spark import schemas
+    cases = [_SPLIT_CASES[k] for k in sorted(_SPLIT_CASES)]
+    rows = [(i, [[{"lon": float(x), "lat": float(y)} for x, y in r]
+                 for r in rings]) for i, rings in enumerate(cases)]
+    rows.append((len(rows), None))
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("rings", schemas.POLYGONS["rings"]
+                                         .dataType, True)])
+    pdf = (spark.createDataFrame(rows, schema)
+           .select("id", *G.flat_ring_cols()).toPandas().sort_values("id"))
+    for rings, flat in zip(cases + [[]], pdf.itertuples()):
+        got = G.split_rings(flat.ring_len, flat.lons, flat.lats)
+        assert [g.tolist() for g in got] == [np.asarray(r).tolist()
+                                             for r in rings]
 
 
 def test_bbox_and_centroid():

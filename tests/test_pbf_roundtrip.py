@@ -22,13 +22,50 @@ from osm_io_spark.sources.pbf import proto as P
 
 def test_varint_roundtrip():
     rng = np.random.default_rng(5)
+    # every part uint64: int64 parts would promote the concatenation
+    # to float64 and round the wide values
     vals = np.concatenate([
-        rng.integers(0, 2**7, 100), rng.integers(0, 2**14, 100),
-        rng.integers(0, 2**35, 100), rng.integers(0, 2**63, 100),
-        np.array([0, 1, 127, 128, 2**64 - 1], dtype=np.uint64)]).astype(np.uint64)
+        rng.integers(0, 2**7, 100, dtype=np.uint64),
+        rng.integers(0, 2**14, 100, dtype=np.uint64),
+        rng.integers(0, 2**35, 100, dtype=np.uint64),
+        rng.integers(0, 2**63, 100, dtype=np.uint64),
+        np.array([0, 1, 127, 128, 2**64 - 1], dtype=np.uint64)])
     buf = P.encode_varints(vals)
     back = P.decode_varints(buf)
     assert (back == vals).all()
+
+
+_VARINT_CASES = {
+    # 1-10 byte boundaries, 64-bit top bit included
+    "boundaries": np.array([0, 1, 127, 128, 300, 16383, 16384, 2097151,
+                            2097152, 2**28 - 1, 2**28, 2**32 - 1,
+                            2**63, 2**64 - 1], np.uint64),
+    "mixed_widths": (np.random.default_rng(61).integers(0, 2**63, 5000)
+                     >> np.random.default_rng(62).integers(0, 63, 5000)
+                     ).astype(np.uint64),
+    "small": np.random.default_rng(63).integers(0, 100, 5000)
+    .astype(np.uint64),
+    "zigzag_deltas": P.zigzag_encode(
+        np.random.default_rng(64).integers(-2000, 2000, 5000)),
+    "empty": np.zeros(0, np.uint64),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_VARINT_CASES))
+def test_encode_varints_matches_scalar(case):
+    """The one vectorized varint encoder (PBF packed fields and MVT
+    geometry streams) == the scalar encoder, byte for byte, with the
+    right per-value lengths."""
+    vals = _VARINT_CASES[case]
+    want = [P.varint(v) for v in vals.tolist()]
+    buf, lens = P.encode_varints(vals, return_lens=True)
+    assert buf == b"".join(want) == P.encode_varints(vals)
+    assert lens.tolist() == [len(w) for w in want]
+
+
+def test_negative_varint_terminates():
+    """A negative int is its 64-bit two's complement: 10 bytes."""
+    assert P.varint(-1) == P.varint(2**64 - 1) == b"\xff" * 9 + b"\x01"
 
 
 def test_zigzag_and_delta():

@@ -27,6 +27,17 @@ def test_j7_flagship_no_probe_shuffle(spark):
     assert rep["broadcast_joins"] == 1
 
 
+def test_polygon_joins_pass_rings_flat(spark):
+    """Polygon rings cross into the Python kernels in the flat layout
+    only (functions/geometry.flat_ring_cols): no to_json / from_json
+    round trip anywhere in the optimized plans of the polygon joins."""
+    for name in ["j8_pip_refine", "s2_osm_polygon_join", "pbf_spatial_join"]:
+        plan = (Q.QUERIES[name](spark, SF_DIR)._jdf.queryExecution()
+                .optimizedPlan().toString())
+        for op in ("to_json", "from_json", "StructsToJson", "JsonToStructs"):
+            assert op not in plan, (name, op)
+
+
 def test_j10_raster_no_probe_shuffle(spark):
     df = Q.q_j10_raster_vector(spark, SF_DIR)
     A.audit(df, max_shuffles=0, min_broadcast_joins=1,

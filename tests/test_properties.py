@@ -164,13 +164,13 @@ def test_simplify_invariants(pts, tol):
 
 @given(st.lists(st.integers(0, 2**40), min_size=0, max_size=200))
 @settings(max_examples=150, deadline=None)
-def test_varints_np_matches_scalar_property(vals):
+def test_encode_varints_matches_scalar_property(vals):
     import numpy as np
-
-    from osm_io_spark.functions import mvt as MVT
     arr = np.array(vals, np.uint64)
-    assert MVT.varints_np(arr) == b"".join(
-        MVT._varint(int(v)) for v in vals)
+    buf, lens = P.encode_varints(arr, return_lens=True)
+    want = [P.varint(v) for v in vals]
+    assert buf == b"".join(want)
+    assert lens.tolist() == [len(w) for w in want]
 
 
 @given(st.integers(0, 14), st.integers(), st.integers(), st.integers(),

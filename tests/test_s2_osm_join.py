@@ -157,7 +157,7 @@ def test_s2_spine_matches_brute_force(spark, assembled, probe):
 
 def test_s2_spine_shuffled_dim_matches_broadcast(spark, assembled, probe):
     """r5 review: the rings dim was force-broadcast unconditionally —
-    at planet scale (~10^8 polygons × KBs of ring JSON each) that OOMs
+    at planet scale (~10^8 polygons × KBs of ring vertices each) that OOMs
     one stage after the covers were distributed for exactly that
     reason. Past the row gate the dim joins shuffled; results must be
     identical either way."""

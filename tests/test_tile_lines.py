@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from osm_io_spark.functions import mvt as MVT
 from osm_io_spark.functions import webmercator as WM
 from osm_io_spark.operators import tiles as TL
+from osm_io_spark.sources.pbf import proto as P
 
 # ---------------------------------------------------------------------------
 # scalar references
@@ -257,7 +258,7 @@ def test_mvt_batch_matches_scalar_all_types():
         q = np.concatenate([p for _, ps in feats for p in ps])
         ids = np.array([fid for fid, _ in feats])
         got = MVT.encode_features_batch(q, part_lens, feat_of, ids, gt)
-        want = [MVT._len_delim(2, MVT.encode_feature(fid, ps, gt))
+        want = [P.field_len(2, MVT.encode_feature(fid, ps, gt))
                 for fid, ps in feats]
         assert got == want, gt
 
@@ -267,10 +268,10 @@ def test_mvt_roundtrip_types_and_geometry():
                   np.array([[200, 200], [300, 150], [310, 160]])]
     pt_parts = [np.array([[7, 9]]), np.array([[1000, 2000]])]
     blob = (MVT.encode_tile(MVT.encode_layer(
-        "roads", MVT._len_delim(
+        "roads", P.field_len(
             2, MVT.encode_feature(4, line_parts, MVT.LINESTRING))))
         + MVT.encode_tile(MVT.encode_layer(
-            "pois", MVT._len_delim(
+            "pois", P.field_len(
                 2, MVT.encode_feature(6, pt_parts, MVT.POINT)))))
     dec = MVT.decode_mvt(blob)
     assert [L["name"] for L in dec["layers"]] == ["roads", "pois"]
@@ -496,7 +497,7 @@ def test_mvt_tags_golden_bytes():
     assert b == bytes([0x08, 7, 0x12, 4, 0, 0, 1, 1,
                        0x18, 2, 0x22, 6, 9, 4, 4, 10, 16, 0])
     # layer wrapper: keys field 3, values as Value{string_value} field 4
-    layer = MVT.encode_layer("t", MVT._len_delim(2, b), 4096,
+    layer = MVT.encode_layer("t", P.field_len(2, b), 4096,
                              keys=["highway", "name"],
                              values=["primary", "A1"])
     dec = MVT.decode_mvt(MVT.encode_tile(layer))
@@ -523,7 +524,7 @@ def test_mvt_tags_roundtrip_shared_dict():
     f2 = MVT.encode_feature(2, [np.array([[5, 5]])], MVT.POINT,
                             tag([("name", "b")]))
     layer = MVT.encode_layer(
-        "pois", MVT._len_delim(2, f1) + MVT._len_delim(2, f2), 4096,
+        "pois", P.field_len(2, f1) + P.field_len(2, f2), 4096,
         keys=list(kd), values=list(vd))
     dec = MVT.decode_mvt(MVT.encode_tile(layer))["layers"][0]
     assert dec["keys"] == ["name", "amenity"]

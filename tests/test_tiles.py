@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from osm_io_spark.functions import webmercator as WM
 from osm_io_spark.operators import tiles as TL
+from osm_io_spark.sources.pbf import proto as P
 
 # ---------------------------------------------------------------------------
 # golden anchors (closed-form consequences of the published formula)
@@ -539,14 +540,14 @@ def test_mvt_golden_bytes_unit_square():
     # cmd ints: 9, 26, 15 ; zigzag deltas: 0,0, 20,0, 0,20, 19,0
     want_geom = bytes([9, 0, 0, 26, 20, 0, 0, 20, 19, 0, 15])
     got_cmds = MVT.geometry_commands([sq])
-    assert b"".join(MVT._varint(c) for c in got_cmds) == want_geom
+    assert b"".join(P.varint(c) for c in got_cmds) == want_geom
     blob = MVT.encode_mvt([(7, [sq])], name="t", extent=512)
     # feature msg: id(field1)=7, type(field3)=3, geom(field4)
     feat = bytes([0x08, 7, 0x18, 3, 0x22, len(want_geom)]) + want_geom
     # layer: version(15)=2, name(1)="t", features(2), extent(5)=512
     layer = (bytes([0x78, 2]) + bytes([0x0A, 1]) + b"t"
              + bytes([0x12, len(feat)]) + feat
-             + bytes([0x28]) + MVT._varint(512))
+             + bytes([0x28]) + P.varint(512))
     want = bytes([0x1A, len(layer)]) + layer
     assert blob == want
 
@@ -801,19 +802,6 @@ def test_retile_semi_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
 
 
-def test_mvt_varints_np_matches_scalar():
-    """Vectorized varint stream == the scalar encoder across 1-5 byte
-    boundary values."""
-    from osm_io_spark.functions import mvt as MVT
-    vals = np.array([0, 1, 127, 128, 300, 16383, 16384, 2097151,
-                     2097152, 2**28 - 1, 2**28, 2**32 - 1], np.uint64)
-    assert MVT.varints_np(vals) == b"".join(
-        MVT._varint(int(v)) for v in vals)
-    rng = np.random.default_rng(61)
-    r = rng.integers(0, 2**20, 5000).astype(np.uint64)
-    assert MVT.varints_np(r) == b"".join(MVT._varint(int(v)) for v in r)
-
-
 def test_mvt_batch_encoder_byte_identical_to_scalar():
     """encode_features_batch must reproduce the scalar per-feature
     encoder byte-for-byte (multi-ring features, random geometry)."""
@@ -825,7 +813,7 @@ def test_mvt_batch_encoder_byte_identical_to_scalar():
                               (int(rng.integers(3, 12)), 2)).astype(np.int64)
                  for _ in range(int(rng.integers(1, 4)))]
         feats.append((fid * 7, rings))
-    want = b"".join(MVT._len_delim(2, MVT.encode_feature(fid, rings))
+    want = b"".join(P.field_len(2, MVT.encode_feature(fid, rings))
                     for fid, rings in feats)
     ring_lens = np.array([len(r) for _, rs in feats for r in rs])
     feat_of_ring = np.concatenate(
