@@ -208,6 +208,38 @@ def cell_at_col(lat: Column, lon: Column, res: int) -> Column:
     return F.lit(1 << (2 * res)).bitwiseOR(morton_col(x, y))
 
 
+def grid_sql(c: str, res: int, offset: float, span: float) -> str:
+    """Spark SQL text of one :func:`xy_at_col` coordinate of column
+    ``c`` (lon: offset 180, span 360; lat: offset 90, span 180)."""
+    n = 1 << res
+    return (f"greatest(0, least({n - 1}, CAST(floor((`{c}` + {offset}D) "
+            f"/ {span}D * {float(n)}D) AS BIGINT)))")
+
+
+def cell_steps(x: str, y: str, res: int,
+               out: str) -> list[tuple[str, str]]:
+    """SQL steps (functions/steps.select_steps) of ``out`` = the
+    res-``res`` cell id of grid columns ``x``, ``y`` (the
+    :func:`cell_at_col` id): each Morton spread step of both
+    coordinates is one alias (``_mxK``, ``_myK``), so no step's text is
+    pasted into the next (the :func:`_part1by1_sql` oracle twin nests
+    each step twice, 32-fold in all)."""
+    cur = {"x": f"(`{x}` & 4294967295)", "y": f"(`{y}` & 4294967295)"}
+    steps = []
+    for k, (shift, mask) in enumerate(_SPREAD_MASKS[:-1], 1):
+        for a in ("x", "y"):
+            v = cur[a]
+            cur[a] = f"_m{a}{k}"
+            steps.append((cur[a], f"({v} | shiftleft({v}, {int(shift)})) "
+                                  f"& {int(mask)}"))
+    (shift, mask), last = _SPREAD_MASKS[-1], {}
+    for a in ("x", "y"):
+        v = cur[a]
+        last[a] = f"(({v} | shiftleft({v}, {int(shift)})) & {int(mask)})"
+    return steps + [(out, f"{1 << (2 * res)} | shiftleft({last['x']}, 1) "
+                          f"| {last['y']}")]
+
+
 def cell_parent_col(cell: Column, steps: int = 1) -> Column:
     return F.shiftright(cell, 2 * steps)
 

@@ -30,14 +30,15 @@ def flat_ring_cols(rings: str = "rings") -> list[Column]:
     """The flat ring columns of an array<array<struct<lon, lat>>>
     column: ``ring_len`` (array<int>, vertices per ring) and the
     parallel ``lons`` / ``lats`` (array<double>, all rings end to end).
-    A NULL ring list stays NULL. transform/flatten are interpreted
-    higher-order functions (CLAUDE.md), so select these once per
-    polygon, before any explode or join fans its rows out."""
-    def coord(k):
-        return F.flatten(F.transform(
-            rings, lambda r: F.transform(r, lambda p: p[k]))).alias(k + "s")
-    return [F.transform(rings, F.size).alias("ring_len"),
-            coord("lon"), coord("lat")]
+    A NULL ring list stays NULL. Each is one SQL expression (a py4j
+    round trip or two, where Python-lambda higher-order Columns cost
+    dozens). transform/flatten are interpreted higher-order functions
+    (CLAUDE.md), so select these once per polygon, before any explode
+    or join fans its rows out."""
+    r = f"`{rings}`"
+    return [F.expr(f"transform({r}, ring -> size(ring)) AS ring_len"),
+            *[F.expr(f"flatten(transform({r}, ring -> transform(ring, "
+                     f"pt -> pt.{k}))) AS {k}s") for k in ("lon", "lat")]]
 
 
 def split_rings(ring_len, lons, lats) -> list[np.ndarray]:

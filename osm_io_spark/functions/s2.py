@@ -23,9 +23,9 @@ operators/spatial_join.s2_containment_join).
 
 Three synchronized implementations, bit-identical (unit-tested against
 each other and against Hilbert bijection/adjacency invariants): numpy
-kernels and PySpark Column expressions (both stepping the Hilbert scan
+kernels and Spark SQL steps (both stepping the Hilbert scan
 4 levels at a time through LOOKUP4, the published s2geometry
-kLookupBits=4 table — on the Column side each step is its own
+kLookupBits=4 table — on the Spark side each step is its own
 projection so CollapseProject never duplicates the step expression,
 and the ~9-step fused stage stays under HotSpot's 8000-bytecode
 huge-method JIT limit, which the original 30 single-level steps blew
@@ -46,6 +46,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .steps import select_steps
 
 MAX_LEVEL = 30
 
@@ -782,59 +784,108 @@ def s2_cover_rings_np(rings_latlon, max_level: int = 10,
 
 
 # ---------------------------------------------------------------------------
-# PySpark Column expressions
+# Spark SQL steps and PySpark Column expressions
 # ---------------------------------------------------------------------------
 
 
-def face_uv_col(x: Column, y: Column, z: Column):
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    axis = (F.when(ax > ay, F.when(ax > az, F.lit(0)).otherwise(F.lit(2)))
-            .otherwise(F.when(ay > az, F.lit(1)).otherwise(F.lit(2))))
-    comp = (F.when(axis == 0, x).when(axis == 1, y).otherwise(z))
-    face = F.when(comp < 0, axis + F.lit(3)).otherwise(axis).cast("long")
-    u = (F.when(face == 0, y / x).when(face == 1, -x / y)
-         .when(face == 2, -x / z).when(face == 3, z / x)
-         .when(face == 4, z / y).otherwise(-y / z))
-    v = (F.when(face == 0, z / x).when(face == 1, z / y)
-         .when(face == 2, -y / z).when(face == 3, y / x)
-         .when(face == 4, -x / y).otherwise(-x / z))
-    return face, u, v
+def _s2_cell_steps(x: str, y: str, z: str, out: str,
+                   level: int) -> list[tuple[str, str]]:
+    """SQL steps (functions/steps.select_steps) of the S2 encode of
+    direction columns ``x``, ``y``, ``z``: the face (``_s2f``), the
+    leaf (i, j) with u/v and the quadratic ST transform inlined
+    (``_s2i``, ``_s2j``), the LOOKUP4 table (``_s2lut``), one Hilbert
+    step per alias (``_s2sK``), and the cell id ``out``. A step carries
+    the whole Hilbert state in one long, ``state = pos << 2 |
+    orientation``; the table value of a step is ``pos_bits << 2 |
+    next_orientation``, so the next state is ``(state >> 2) <<
+    (2·levels + 2) | value``. Each state is read twice by the next step
+    (its orientation and its position), which keeps every step its own
+    projection."""
+    x, y, z = (f"`{c}`" for c in (x, y, z))
+    axis = (f"CASE WHEN abs({x}) > abs({y}) "
+            f"THEN (CASE WHEN abs({x}) > abs({z}) THEN 0 ELSE 2 END) "
+            f"ELSE (CASE WHEN abs({y}) > abs({z}) THEN 1 ELSE 2 END) END")
+    comp = (f"CASE WHEN ({axis}) = 0 THEN {x} WHEN ({axis}) = 1 THEN {y} "
+            f"ELSE {z} END")
+    face = (f"CAST(CASE WHEN ({comp}) < 0 THEN ({axis}) + 3 "
+            f"ELSE ({axis}) END AS BIGINT)")
 
+    def on_face(*per_face: str) -> str:
+        return ("CASE " + " ".join(f"WHEN _s2f = {k} THEN {e}"
+                                   for k, e in enumerate(per_face[:5]))
+                + f" ELSE {per_face[5]} END")
 
-def uv_to_st_col(u: Column) -> Column:
-    return (F.when(u >= 0.0, F.lit(0.5) * F.sqrt(F.lit(1.0) + F.lit(3.0) * u))
-            .otherwise(F.lit(1.0) - F.lit(0.5) * F.sqrt(F.lit(1.0) - F.lit(3.0) * u)))
-
-
-def st_to_ij_col(s: Column, level: int = MAX_LEVEL) -> Column:
+    u = on_face(f"{y} / {x}", f"-{x} / {y}", f"-{x} / {z}",
+                f"{z} / {x}", f"{z} / {y}", f"-{y} / {z}")
+    v = on_face(f"{z} / {x}", f"{z} / {y}", f"-{y} / {z}",
+                f"{y} / {x}", f"-{x} / {y}", f"-{x} / {z}")
     n = 1 << level
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least(F.lit(n - 1).cast("long"),
-                              F.floor(s * F.lit(float(n)))))
+
+    def ij(e: str) -> str:
+        st = (f"CASE WHEN ({e}) >= 0.0D THEN 0.5D * sqrt(1.0D + 3.0D * ({e})) "
+              f"ELSE 1.0D - 0.5D * sqrt(1.0D - 3.0D * ({e})) END")
+        return (f"greatest(CAST(0 AS BIGINT), least(CAST({n - 1} AS BIGINT), "
+                f"floor(({st}) * {n}.0D)))")
+
+    steps = [("_s2f", face), ("_s2i", ij(u)), ("_s2j", ij(v))]
+    if level >= 4:
+        # LOOKUP4 as an array<int> literal (values < 1024), one step:
+        # the optimizer folds it into every step that reads it, so no
+        # row carries it (tests/test_s2.py), and its 4.6 KB of text is
+        # parsed once, not once per step
+        steps.append(("_s2lut", f"array({', '.join(map(str, LOOKUP4))})"))
+    state = None
+
+    def orientation() -> str:
+        return "(_s2f & 1)" if state is None else f"({state} & 3)"
+
+    def push(value: str, bits: int) -> None:
+        nonlocal state
+        if state is not None:
+            value = f"shiftleft(shiftright({state}, 2), {bits + 2}) | {value}"
+        state = f"_s2s{len(steps)}"
+        steps.append((state, value))
+
+    # level % 4 single-level warm-up steps through the nibble table: a
+    # zero-padded phantom (0,0) step through LOOKUP4 would toggle the
+    # swap bit
+    for k in range(level - 1, level - 1 - (level % 4), -1):
+        key = (f"shiftleft({orientation()}, 2) | "
+               f"shiftleft(shiftright(_s2i, {k}) & 1, 1) | "
+               f"(shiftright(_s2j, {k}) & 1)")
+        push(f"(shiftright({HILBERT_LUT}L, 4 * CAST({key} AS INT)) & 15)", 2)
+    # element_at is 1-based
+    for c in range(level // 4 - 1, -1, -1):
+        key = (f"shiftleft({orientation()}, 8) | "
+               f"shiftleft(shiftright(_s2i, {4 * c}) & 15, 4) | "
+               f"(shiftright(_s2j, {4 * c}) & 15)")
+        push(f"element_at(_s2lut, CAST(({key}) + 1 AS INT))", 8)
+    pos = "0" if state is None else f"shiftright({state}, 2)"
+    cell = f"shiftleft(shiftleft(_s2f, {2 * level}) | {pos}, 1) | 1"
+    if level < MAX_LEVEL:
+        cell = f"shiftleft({cell}, {2 * (MAX_LEVEL - level)})"
+    return steps + [(out, cell)]
 
 
-def with_s2_cell(df: DataFrame, x: Column, y: Column, z: Column,
-                 out: str = "s2_cell", level: int = MAX_LEVEL) -> DataFrame:
-    """Append column ``out`` = S2 cell id of direction (x, y, z).
+def with_s2_cell(df: DataFrame, x: str | Column, y: str | Column,
+                 z: str | Column, out: str = "s2_cell",
+                 level: int = MAX_LEVEL) -> DataFrame:
+    """Append column ``out`` = S2 cell id of direction (x, y, z), given
+    as column names or Columns (Columns are bound to scratch columns
+    first, in one more select).
 
-    The Hilbert scan runs 4 levels per step through the LOOKUP4 table
-    (published s2geometry kLookupBits=4 scheme) after ``level % 4``
-    single-level warm-up steps — the remainder must run per-level
-    because a zero-padded phantom (0,0) step through the table toggles
-    the swap bit. Each step is materialized as its own projection (one
-    `_s2v` column per step, consumed twice) so Catalyst's
-    CollapseProject keeps the step boundary; whole-stage codegen fuses
-    the ~9 projections into one stage. The 4-level grouping is what
-    keeps the fused doConsume methods under HotSpot's 8000-bytecode
-    huge-method limit: the original 30 single-level projections
-    generated a method the JIT refused, leaving the whole encode in
-    the bytecode interpreter (~180x slower; asserted small in
-    tests/test_plan_audit.py)."""
-    clash = {"_s2f", "_s2i", "_s2j", "_s2o", "_s2d", "_s2v"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"with_s2_cell scratch columns collide with input columns "
-            f"{sorted(clash)}; rename them first")
+    The whole encode is one ``selectExpr`` of SQL steps
+    (:func:`_s2_cell_steps`, functions/steps.select_steps), so it costs
+    a few dozen py4j round trips, not thousands. The Hilbert scan runs
+    4 levels per step through the LOOKUP4 table (published s2geometry
+    kLookupBits=4 scheme) after ``level % 4`` single-level warm-up
+    steps. Every step stays its own projection; whole-stage codegen
+    fuses the ~11 projections into one stage. The 4-level grouping is
+    what keeps the fused doConsume methods under HotSpot's
+    8000-bytecode huge-method limit: the original 30 single-level
+    projections generated a method the JIT refused, leaving the whole
+    encode in the bytecode interpreter (~180x slower; asserted small in
+    tests/test_s2.py)."""
     if out in df.columns:
         # appending (not replacing) — a pre-existing `out` would yield
         # two same-named columns and AMBIGUOUS_REFERENCE far downstream
@@ -843,62 +894,32 @@ def with_s2_cell(df: DataFrame, x: Column, y: Column, z: Column,
         raise ValueError(
             f"with_s2_cell output column {out!r} already exists on the "
             f"input frame; drop it first or pass a different `out`")
-    cols = [F.col(c) for c in df.columns]
-    face, u, v = face_uv_col(x, y, z)
-    base = df.select(*cols, face.alias("_s2f"),
-                     st_to_ij_col(uv_to_st_col(u), level).alias("_s2i"),
-                     st_to_ij_col(uv_to_st_col(v), level).alias("_s2j"))
-    cur = base.select(*cols, "_s2f", "_s2i", "_s2j",
-                      F.col("_s2f").bitwiseAND(F.lit(1)).alias("_s2o"),
-                      F.lit(0).cast("long").alias("_s2d"))
-    passthru = [*[c for c in df.columns], "_s2f", "_s2i", "_s2j"]
-    for k in range(level - 1, level - 1 - (level % 4), -1):
-        # variable shift amount (4 * lut key) needs the SQL form —
-        # F.shiftright's python wrapper only takes a constant count
-        vexp = F.expr(
-            f"shiftright({HILBERT_LUT}L, 4 * cast(("
-            f"shiftleft(_s2o, 2) | "
-            f"(shiftleft(shiftright(_s2i, {k}) & 1, 1) | "
-            f"(shiftright(_s2j, {k}) & 1))) as int)) & 15")
-        step = cur.select(*passthru, "_s2o", "_s2d", vexp.alias("_s2v"))
-        cur = step.select(
-            *passthru,
-            F.col("_s2v").bitwiseAND(F.lit(3)).alias("_s2o"),
-            F.shiftleft(F.col("_s2d"), 2)
-            .bitwiseOR(F.shiftright(F.col("_s2v"), 2)).alias("_s2d"))
-    # constant-folded array<int> literal (values < 1024), built in ONE
-    # JVM call — F.lit(list) costs a py4j round trip per element;
-    # element_at is 1-based
-    lut4 = F.expr(f"array({', '.join(str(int(w)) for w in LOOKUP4)})")
-    for c in range(level // 4 - 1, -1, -1):
-        key = (F.shiftleft(F.col("_s2o"), 8)
-               .bitwiseOR(F.shiftleft(
-                   F.shiftright(F.col("_s2i"), 4 * c).bitwiseAND(F.lit(15)), 4))
-               .bitwiseOR(
-                   F.shiftright(F.col("_s2j"), 4 * c).bitwiseAND(F.lit(15))))
-        vexp = F.element_at(lut4, (key + F.lit(1)).cast("int"))
-        step = cur.select(*passthru, "_s2o", "_s2d", vexp.alias("_s2v"))
-        cur = step.select(
-            *passthru,
-            F.col("_s2v").bitwiseAND(F.lit(3)).alias("_s2o"),
-            F.shiftleft(F.col("_s2d"), 8)
-            .bitwiseOR(F.shiftright(F.col("_s2v"), 2)).alias("_s2d"))
-    cell = (F.shiftleft(F.shiftleft(F.col("_s2f"), 2 * level)
-                        .bitwiseOR(F.col("_s2d")), 1)
-            .bitwiseOR(F.lit(1)))
-    if level < MAX_LEVEL:
-        cell = F.shiftleft(cell, 2 * (MAX_LEVEL - level))
-    return cur.select(*[c for c in df.columns], cell.alias(out))
+    xyz = (x, y, z)
+    if not all(isinstance(c, str) for c in xyz):
+        names = ("_s2x", "_s2y", "_s2z")
+        if set(names) & set(df.columns):
+            raise ValueError(
+                f"with_s2_cell scratch columns {names} collide with input "
+                f"columns; rename them first")
+        df = df.select("*", *[(F.col(c) if isinstance(c, str) else c)
+                              .alias(n) for c, n in zip(xyz, names)])
+        return with_s2_cell(df, *names, out=out, level=level).drop(*names)
+    return select_steps(df, _s2_cell_steps(x, y, z, out, level),
+                        keep=(out,))
 
 
-def latlon_xyz_cols(lat: Column, lon: Column):
-    """Unit-sphere direction Columns (trig — engine-side only, not
-    oracle-deterministic; see module docstring)."""
-    phi = F.radians(lat)
-    theta = F.radians(lon)
-    return (F.cos(phi) * F.cos(theta),
-            F.cos(phi) * F.sin(theta),
-            F.sin(phi))
+def latlon_xyz_sql(lat: str, lon: str) -> tuple[str, str, str]:
+    """Unit-sphere direction of columns ``lat``/``lon`` as Spark SQL
+    text (trig — engine-side only, not oracle-deterministic; see module
+    docstring)."""
+    phi, theta = f"radians(`{lat}`)", f"radians(`{lon}`)"
+    return (f"cos({phi}) * cos({theta})", f"cos({phi}) * sin({theta})",
+            f"sin({phi})")
+
+
+def latlon_xyz_cols(lat: str, lon: str) -> tuple[Column, Column, Column]:
+    """:func:`latlon_xyz_sql` as Columns."""
+    return tuple(F.expr(e) for e in latlon_xyz_sql(lat, lon))
 
 
 def s2_lsb_col(cid: Column) -> Column:

@@ -24,11 +24,13 @@ Each (stage, parallelism) cell runs in its own JVM (``--cell``): a
 stage measured after a heavy stage in the same JVM inherits its
 heap/GC state (clip at 4 threads swung 14.7-25.7 s, and a superset
 stage once ran faster than its subset). A cell does 1 warm-up and 3
-timed runs, records loadavg before and after and the seconds of each
-phase (session setup, warm-up, timed runs, check), and prints ONE JSON
-line; a failed check exits non-zero and the orchestrator raises with
-the cell's stderr tail. Per file, the orchestrator prints the cells'
-wall and phase totals to stderr. The pure-codegen control cell runs once per
+timed runs, records loadavg before and after, the seconds of each
+phase (session setup, warm-up, timed runs, check) and the driver's
+py4j round trips over the timed runs (plan building plus actions: the
+build cost of a row), and prints ONE JSON line; a failed check exits
+non-zero and the orchestrator raises with the cell's stderr tail. The
+orchestrator prints each cell's round trips to stderr and, per file,
+the cells' wall and phase totals. The pure-codegen control cell runs once per
 level; its efficiency sits next to every row's, since on a shared
 host the engine-vs-control ratio, not a single wall number, decides.
 Polygon and registry stages read the tables under ``--sf-dir``.
@@ -982,24 +984,54 @@ def session_conf(spark, conf: dict | None):
                 spark.conf.set(k, v)
 
 
+@contextlib.contextmanager
+def count_round_trips():
+    """Counts the py4j round trips (``ClientServerConnection
+    .send_command`` calls) the calling thread makes inside the block;
+    yields a one-element list that holds the count when the block
+    ends. py4j's finalizer thread, which sends the deletions of
+    garbage-collected Java object references whenever they come, is
+    not counted: it never blocks the caller."""
+    import threading
+
+    from py4j import clientserver
+    n = [0]
+    me = threading.get_ident()
+    send = clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        n[0] += threading.get_ident() == me
+        return send(self, command)
+
+    clientserver.ClientServerConnection.send_command = counted
+    try:
+        yield n
+    finally:
+        clientserver.ClientServerConnection.send_command = send
+
+
 def measure(spark, stage: Stage, size=None, runs: int = RUNS,
             warmup: int = WARMUP) -> dict:
     """Warm-up + timed runs of ``stage`` at ``size`` (default: its own),
     then its check, outside the timed region; ``phases`` holds the
-    seconds of each."""
+    seconds of each, ``py4j_round_trips`` the driver's py4j round trips
+    summed over the timed runs (plan building plus actions)."""
     size = stage.size if size is None else size
     t = [time.perf_counter()]
     with session_conf(spark, stage.conf):
         Q.time_runs(lambda: stage.run(spark, size), 0, warmup)
         t.append(time.perf_counter())
-        samples, counts = Q.time_runs(lambda: stage.run(spark, size), runs)
+        with count_round_trips() as trips:
+            samples, counts = Q.time_runs(lambda: stage.run(spark, size),
+                                          runs)
         t.append(time.perf_counter())
         if stage.check is not None:
             counts = {**counts, **stage.check(spark, size, counts)}
         t.append(time.perf_counter())
     return {"samples": samples, "counts": counts,
             "phases": dict(zip(("warmup", "timed", "check"),
-                               np.diff(t).round(3).tolist()))}
+                               np.diff(t).round(3).tolist())),
+            "py4j_round_trips": trips[0]}
 
 
 def levels() -> tuple[int, int]:
@@ -1065,8 +1097,8 @@ def run_cell(stage: Stage, cpus: int, sf_dir: str) -> dict:
     out["wall"] = round(time.perf_counter() - t0, 3)
     lo, med, _ = summary(out["samples"])
     print(f"# {stage.id} local[{cpus}]: min {lo:.2f}s median {med:.2f}s "
-          f"wall {out['wall']:.1f}s {out['counts']}", file=sys.stderr,
-          flush=True)
+          f"wall {out['wall']:.1f}s py4j {out['py4j_round_trips']:,} "
+          f"{out['counts']}", file=sys.stderr, flush=True)
     return out
 
 

@@ -44,8 +44,6 @@ The driver routes once, on the build side's size:
 from __future__ import annotations
 
 import math
-from functools import reduce
-from operator import add
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -103,8 +101,8 @@ def _exact_knn(probe: DataFrame, build: DataFrame, k: int,
                probe_id: str, build_id: str, dist_name: str,
                pcoords, bcoords, keyed, rounds) -> DataFrame:
     """The exact kNN driver (module docstring). ``pcoords``/``bcoords``
-    are the metric's coordinate Columns over ``probe``/``build``; they
-    become ``_p0.._pd`` / ``_b0.._bd`` beside ``_pid`` / ``_bid``.
+    are the metric's coordinates over ``probe``/``build`` as SQL text;
+    they become ``_p0.._pd`` / ``_b0.._bd`` beside ``_pid`` / ``_bid``.
     ``keyed(probes, builds)`` appends the cell keys; ``rounds`` yields
     one ``step(unsettled, builds) -> (pairs, safe)`` per round, built
     only when that round runs: ``pairs`` joins probes to build rows,
@@ -117,12 +115,10 @@ def _exact_knn(probe: DataFrame, build: DataFrame, k: int,
     bid_dt = build.schema[build_id].dataType.simpleString()
     pcols = [f"_p{c}" for c in range(len(pcoords))]
     bcols = [f"_b{c}" for c in range(len(bcoords))]
-    probes = probe.select(F.col(probe_id).alias("_pid"),
-                          *(c.cast("double").alias(a)
-                            for c, a in zip(pcoords, pcols)))
-    builds = build.select(F.col(build_id).alias("_bid"),
-                          *(c.cast("double").alias(a)
-                            for c, a in zip(bcoords, bcols)))
+    probes = probe.selectExpr(f"`{probe_id}` AS _pid", *(
+        f"CAST({c} AS DOUBLE) AS {a}" for c, a in zip(pcoords, pcols)))
+    builds = build.selectExpr(f"`{build_id}` AS _bid", *(
+        f"CAST({c} AS DOUBLE) AS {a}" for c, a in zip(bcoords, bcols)))
 
     if build.count() <= _SMALL_BUILD:
         bpdf = builds.dropDuplicates(["_bid"]).toPandas()
@@ -146,8 +142,8 @@ def _exact_knn(probe: DataFrame, build: DataFrame, k: int,
     unsettled, builds = keyed(probes, builds)
     unsettled = unsettled.localCheckpoint(eager=True)
     builds = builds.localCheckpoint(eager=False)
-    dist = reduce(add, [(F.col(p) - F.col(b)) * (F.col(p) - F.col(b))
-                        for p, b in zip(pcols, bcols)])
+    dist = F.expr(" + ".join(f"({p} - {b}) * ({p} - {b})"
+                             for p, b in zip(pcols, bcols)))
     w = Window.partitionBy("_pid").orderBy(F.col("_d").asc(),
                                            F.col("_bid").asc())
 
@@ -262,8 +258,8 @@ def knn_join(probe: DataFrame, build: DataFrame, k: int, res: int,
             yield step
 
     return _exact_knn(probe, build, k, probe_id, build_id, "dist_sq",
-                      [F.col(probe_lat), F.col(probe_lon)],
-                      [F.col(build_lat), F.col(build_lon)],
+                      [f"`{probe_lat}`", f"`{probe_lon}`"],
+                      [f"`{build_lat}`", f"`{build_lon}`"],
                       keyed, rounds())
 
 
@@ -322,10 +318,8 @@ def s2_knn_join(probe: DataFrame, build: DataFrame, k: int,
         return S2.s2_parent_col(F.col(cell), level)
 
     def keyed(probes, builds):
-        return (S2.with_s2_cell(probes, F.col("_p0"), F.col("_p1"),
-                                F.col("_p2"), out="_pcell"),
-                S2.with_s2_cell(builds, F.col("_b0"), F.col("_b1"),
-                                F.col("_b2"), out="_bcell"))
+        return (S2.with_s2_cell(probes, "_p0", "_p1", "_p2", out="_pcell"),
+                S2.with_s2_cell(builds, "_b0", "_b1", "_b2", out="_bcell"))
 
     def rounds():
         for lvl in range(start_level, -1, -1):
@@ -349,8 +343,8 @@ def s2_knn_join(probe: DataFrame, build: DataFrame, k: int,
             yield step
 
     return _exact_knn(probe, build, k, probe_id, build_id, "chord_sq",
-                      S2.latlon_xyz_cols(F.col(probe_lat), F.col(probe_lon)),
-                      S2.latlon_xyz_cols(F.col(build_lat), F.col(build_lon)),
+                      S2.latlon_xyz_sql(probe_lat, probe_lon),
+                      S2.latlon_xyz_sql(build_lat, build_lon),
                       keyed, rounds())
 
 

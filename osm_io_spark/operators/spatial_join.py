@@ -27,11 +27,13 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import cells as C
 from ..functions import geometry as G
+from ..functions.steps import select_steps
 from .util import widen
 
 # ---------------------------------------------------------------------------
@@ -41,8 +43,12 @@ from .util import widen
 def tag_probe_cells(df: DataFrame, res: int,
                     lat: str = "lat", lon: str = "lon",
                     out: str = "cell") -> DataFrame:
-    """Attach the single res-``res`` cell id to a point table (pure JVM)."""
-    return df.withColumn(out, C.cell_at_col(F.col(lat), F.col(lon), res))
+    """Attach the single res-``res`` cell id to a point table (pure JVM,
+    built as SQL steps: functions/cells.cell_steps)."""
+    return select_steps(df, [("_gx", C.grid_sql(lon, res, 180.0, 360.0)),
+                             ("_gy", C.grid_sql(lat, res, 90.0, 180.0)),
+                             *C.cell_steps("_gx", "_gy", res, out)],
+                        keep=(out,))
 
 
 def cover_bbox_cells(df: DataFrame, res: int,
@@ -51,25 +57,18 @@ def cover_bbox_cells(df: DataFrame, res: int,
                      out: str = "cell") -> DataFrame:
     """Explode each bbox row into its covering res-``res`` cells.
 
-    Pure Column expressions (sequence + explode + Morton interleave) —
+    Pure SQL expressions (sequence + explode + Morton interleave) —
     no Python in the loop, so the cover runs inside whole-stage codegen
     and scales with the build side.
     """
-    n = 1 << res
-    nf = F.lit(float(n))
+    def span(lo: str, hi: str, offset: float, width: float) -> str:
+        return (f"explode(sequence({C.grid_sql(lo, res, offset, width)}, "
+                f"{C.grid_sql(hi, res, offset, width)}))")
 
-    def grid(c: Column, offset: float, span: float) -> Column:
-        v = F.floor((c + F.lit(offset)) / F.lit(span) * nf).cast("long")
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), v))
-
-    x0, x1 = grid(F.col(left), 180.0, 360.0), grid(F.col(right), 180.0, 360.0)
-    y0, y1 = grid(F.col(bottom), 90.0, 180.0), grid(F.col(top), 90.0, 180.0)
-    lead = F.lit(1 << (2 * res))
-    return (df
-            .withColumn("_x", F.explode(F.sequence(x0, x1)))
-            .withColumn("_y", F.explode(F.sequence(y0, y1)))
-            .withColumn(out, lead.bitwiseOR(C.morton_col(F.col("_x"), F.col("_y"))))
-            .drop("_x", "_y"))
+    xy = (df.selectExpr("*", f"{span(left, right, 180.0, 360.0)} AS _x")
+          .selectExpr("*", f"{span(bottom, top, 90.0, 180.0)} AS _y"))
+    return select_steps(xy, C.cell_steps("_x", "_y", res, out),
+                        keep=(out,)).drop("_x", "_y")
 
 
 def _polygon_rings(pdf: pd.DataFrame,
@@ -121,8 +120,8 @@ def refine_rect(df: DataFrame, lat: str = "lat",
                 lon: str = "lon") -> DataFrame:
     """Exact strict point-in-rectangle (left/bottom/right/top columns)
     — JVM."""
-    return df.filter((F.col(lon) > F.col("left")) & (F.col(lon) < F.col("right"))
-                     & (F.col(lat) > F.col("bottom")) & (F.col(lat) < F.col("top")))
+    return df.filter(f"`{lon}` > `left` AND `{lon}` < `right` AND "
+                     f"`{lat}` > `bottom` AND `{lat}` < `top`")
 
 
 def _refine_by_polygon(df: DataFrame, inside) -> DataFrame:
@@ -132,7 +131,9 @@ def _refine_by_polygon(df: DataFrame, inside) -> DataFrame:
     polygon; it runs once per polygon per Arrow batch, the polygon
     keyed by its identity columns (:func:`_polygon_rings`)."""
     keys = _poly_key_cols(df, ("polygon_id", "source"))
-    cols = [c for c in df.columns if c not in G.FLAT_RING_COLS]
+    schema = StructType([f for f in df.schema
+                         if f.name not in G.FLAT_RING_COLS])
+    cols = schema.fieldNames()
 
     def _refine(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
@@ -145,7 +146,7 @@ def _refine_by_polygon(df: DataFrame, inside) -> DataFrame:
                     keep[rows] = inside(pdf, rows, rr)
             yield pdf.loc[keep, cols]
 
-    return df.mapInPandas(_refine, schema=df.select(*cols).schema)
+    return df.mapInPandas(_refine, schema=schema)
 
 
 def refine_pip(df: DataFrame, lat: str = "lat",
@@ -280,10 +281,15 @@ def spatial_join_polygons(images: DataFrame, polygons: DataFrame, res: int,
     return refine_pip(joined)
 
 
+# cover rows s2_containment_join broadcasts under broadcast_covers='auto'
+MAX_BROADCAST_COVERS = 4_000_000
+
+
 def s2_containment_join(points: DataFrame, covers: DataFrame,
                         cell: str = "s2_cell", cover: str = "cover_id",
                         broadcast_covers: bool | str = "auto",
-                        max_broadcast_rows: int = 4_000_000) -> DataFrame:
+                        max_broadcast_rows: int = MAX_BROADCAST_COVERS
+                        ) -> DataFrame:
     """Hierarchical S2 containment join: every (point, cover) pair where
     the point's leaf cell is a descendant of the cover cell (covers may
     mix levels — a real S2 cell cover is a union of cells at different
@@ -298,7 +304,7 @@ def s2_containment_join(points: DataFrame, covers: DataFrame,
     point explodes into its ancestors at the distinct cover levels (at
     most 31, read in the same aggregate as the cover row count) and ONE
     hash equi-join matches that ``_s2anc`` key against ``cover`` (both
-    sides folded by :func:`_fold_key`, so the ids spread over the hash
+    sides folded by :func:`_fold_sql`, so the ids spread over the hash
     relation's slots). The levels are distinct, so a (point, cover) pair matches at most once.
     The plan has one branch whatever the level mix, so the driver
     analyzes and optimizes the probe's encode chain once.
@@ -319,18 +325,35 @@ def s2_containment_join(points: DataFrame, covers: DataFrame,
     explicit salting layer is needed here — unlike the banded
     self-joins, where a single band key explodes quadratically
     (salted_self_band_join)."""
+    # covers fans out (the stats aggregate + the join) and may sit on
+    # an expensive upstream plan, which each consumer would re-run —
+    # pin it once
+    covers = covers.localCheckpoint(eager=False)
+    return _ancestor_join(points, covers, _cover_stats(covers, cover),
+                          cell, cover, broadcast_covers, max_broadcast_rows)
+
+
+def _cover_stats(covers: DataFrame, cover: str, *extra: str):
+    """One eager aggregate over the pinned covers: their row count
+    ``n``, their distinct S2 ``levels``, and the ``extra`` SQL
+    aggregates ("expr AS name")."""
+    from ..functions import s2 as S2
+    level = S2.s2_level_sql(f"`{cover}`")
+    return covers.selectExpr("count(1) AS n",
+                             f"collect_set({level}) AS levels",
+                             *extra).first()
+
+
+def _ancestor_join(points: DataFrame, covers: DataFrame, stats, cell: str,
+                   cover: str, broadcast_covers: bool | str,
+                   max_broadcast_rows: int) -> DataFrame:
+    """The equi-join of :func:`s2_containment_join` given the pinned
+    covers' :func:`_cover_stats`."""
     from ..functions import s2 as S2
     if "_s2anc" in points.columns:
         raise ValueError(
             "s2_containment_join scratch column _s2anc collides with a "
             "points column; rename it first")
-    # covers fans out (the stats aggregate + the join) and may sit on
-    # an expensive upstream plan, which each consumer would re-run —
-    # pin it once
-    covers = covers.localCheckpoint(eager=False)
-    stats = covers.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set(S2.s2_level_col(F.col(cover))).alias("levels")).first()
     levels = sorted(stats["levels"])
     if not levels:
         return points.limit(0).crossJoin(covers.limit(0))
@@ -338,27 +361,28 @@ def s2_containment_join(points: DataFrame, covers: DataFrame,
         broadcast_covers = stats["n"] <= max_broadcast_rows
     if broadcast_covers:
         covers = F.broadcast(covers)
-    anc = F.explode(F.array(*[_fold_key(S2.s2_parent_col(F.col(cell), l))
-                              for l in levels]))
-    return (points.select("*", anc.alias("_s2anc"))
-            .join(covers, F.col("_s2anc") == _fold_key(F.col(cover)),
+    anc = ", ".join(_fold_sql(S2.s2_parent_sql(f"`{cell}`", lv))
+                    for lv in levels)
+    return (points.selectExpr("*", f"explode(array({anc})) AS _s2anc")
+            .join(covers, F.expr(f"_s2anc = {_fold_sql(f'`{cover}`')}"),
                   "inner")
             .drop("_s2anc"))
 
 
-def _fold_key(cid: Column) -> Column:
-    """``cid ^ (cid >>> 32)``: a bijection on longs, so equality of
-    folded keys is equality of ids. Spark's long-keyed hash relation
-    (broadcast and shuffled hash joins) takes a key's slot from the
-    low bits of ``h ^ (h >> 32)``, ``h = key * 0x9E3779B9``. A level-L
-    S2 id ends in 2·(30-L) zero bits and ``h`` keeps them, so at coarse
-    levels those slot bits are (nearly) all zero: the cover ids pile
-    into a few slots and every probe walks one long run (measured on a
-    4-vCPU VM at local[4]: 4.2M probes against 899 level-4..10
-    cap-cover ids took 3.75 s raw and 0.30 s folded). Folding the high
-    half into the low half puts the Hilbert position bits where the
-    slot is taken."""
-    return cid.bitwiseXOR(F.shiftrightunsigned(cid, 32))
+def _fold_sql(cid: str) -> str:
+    """``cid ^ (cid >>> 32)`` as SQL text (``shiftrightunsigned``: a
+    ``>>>`` inside ``array(...)`` does not parse): a bijection on longs,
+    so equality of folded keys is equality of ids. Spark's long-keyed
+    hash relation (broadcast and shuffled hash joins) takes a key's slot
+    from the low bits of ``h ^ (h >> 32)``, ``h = key * 0x9E3779B9``. A
+    level-L S2 id ends in 2·(30-L) zero bits and ``h`` keeps them, so at
+    coarse levels those slot bits are (nearly) all zero: the cover ids
+    pile into a few slots and every probe walks one long run (measured
+    on a 4-vCPU VM at local[4]: 4.2M probes against 899 level-4..10
+    cap-cover ids took 3.75 s raw and 0.30 s folded). Folding the high half
+    into the low half puts the Hilbert position bits where the slot is
+    taken."""
+    return f"({cid} ^ shiftrightunsigned({cid}, 32))"
 
 
 def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
@@ -428,7 +452,7 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
     sid_dt = sites.schema[site_id].dataType.simpleString()
     covers = spark.createDataFrame(
         cover_rows, f"{site_id} {sid_dt}, cover_id long")
-    x, y, z = S2.latlon_xyz_cols(F.col(probe_lat), F.col(probe_lon))
+    x, y, z = S2.latlon_xyz_cols(probe_lat, probe_lon)
     pts = S2.with_s2_cell(probe, x, y, z)
     cand = s2_containment_join(pts, covers, cell="s2_cell",
                                cover="cover_id")
@@ -559,8 +583,8 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
     :func:`spatial_join_polygons` (planar Morton path, J7/J8).
 
     Plan, stage by stage:
-      images   → unit vector + leaf S2 cell (whole-stage-codegen Column
-                 chain, functions/s2.with_s2_cell)
+      images   → unit vector + leaf S2 cell (whole-stage-codegen
+                 projection chain, functions/s2.with_s2_cell)
       polygons → mixed-level covers, DISTRIBUTED per polygon
                  (s2_cover_polygons, mapInPandas numpy kernel)
       join     → hierarchical containment: each image's ancestors at
@@ -575,10 +599,13 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
                  back as a dim of flat ring columns (built once per
                  polygon) so the cover explode never duplicates rings
                  per cell. ``broadcast_dim='auto'`` (default)
-                 broadcasts the rings dim only when the polygon table
-                 is ≤ ``max_broadcast_dim_rows`` rows — the threshold
-                 is deliberately lower than the cover gate because a
-                 dim row carries a polygon's vertices (KBs, not a long). Past
+                 broadcasts the rings dim only when at most
+                 ``max_broadcast_dim_rows`` polygons have a cover (a
+                 polygon without one never reaches the refine) — the
+                 threshold is deliberately lower than the cover gate
+                 because a dim row carries a polygon's vertices (KBs,
+                 not a long). Both gates come from ONE eager aggregate
+                 over the pinned covers (:func:`_cover_stats`). Past
                  the gate the dim joins as a shuffled hash join on the
                  polygon key (Catalyst may still broadcast if it fits
                  its byte threshold — size-aware, so safe).
@@ -593,21 +620,27 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
     polygons = polygons.localCheckpoint(eager=False)
     keep = _poly_key_cols(polygons, ("polygon_id", "source"))
     covers = s2_cover_polygons(polygons, max_level=max_level,
-                               max_cells=max_cells)
+                               max_cells=max_cells
+                               ).localCheckpoint(eager=False)
     clash = {"px", "py", "pz", "s2_cell"} & set(images.columns)
     if clash:
         raise ValueError(
             f"s2_spatial_join_polygons scratch/output columns collide "
             f"with image columns {sorted(clash)}; rename them first "
             f"(same guard as s2.with_s2_cell)")
-    x, y, z = S2.latlon_xyz_cols(F.col(lat), F.col(lon))
-    base = images.select("*", x.alias("px"), y.alias("py"), z.alias("pz"))
-    pts = S2.with_s2_cell(base, F.col("px"), F.col("py"), F.col("pz"))
-    cand = s2_containment_join(pts, covers,
-                               broadcast_covers=broadcast_covers)
+    base = images.selectExpr("*", *[
+        f"{e} AS {n}" for e, n in zip(S2.latlon_xyz_sql(lat, lon),
+                                      ("px", "py", "pz"))])
+    pts = S2.with_s2_cell(base, "px", "py", "pz")
+    # one eager aggregate decides both broadcast gates
+    key = ", ".join(f"`{c}`" for c in keep)
+    stats = _cover_stats(covers, "cover_id",
+                         f"count(DISTINCT struct({key})) AS polygons")
+    cand = _ancestor_join(pts, covers, stats, "s2_cell", "cover_id",
+                          broadcast_covers, MAX_BROADCAST_COVERS)
     dim = polygons.select(*keep, *G.flat_ring_cols())
     if broadcast_dim == "auto":
-        broadcast_dim = polygons.count() <= max_broadcast_dim_rows
+        broadcast_dim = stats["polygons"] <= max_broadcast_dim_rows
     cand = cand.join(F.broadcast(dim) if broadcast_dim else dim, keep)
     refined = s2_refine_rings(cand)
     return refined.select(*images.columns, "s2_cell", *keep)

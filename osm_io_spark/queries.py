@@ -2831,12 +2831,12 @@ def q_s2_cap_cover_join(spark, sf_dir):
                                  "cap_id INT, cap_lat DOUBLE, "
                                  "cap_lon DOUBLE, cap_r DOUBLE")
     img = images_probe(spark, sf_dir)
-    x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
+    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     pts = S2.with_s2_cell(
         img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
         F.col("px"), F.col("py"), F.col("pz"))
     cand = SJ.s2_containment_join(pts, covers)
-    qx, qy, qz = S2.latlon_xyz_cols(F.col("cap_lat"), F.col("cap_lon"))
+    qx, qy, qz = S2.latlon_xyz_cols("cap_lat", "cap_lon")
     dot = (F.col("px") * qx + F.col("py") * qy + F.col("pz") * qz)
     hit = F.when(dot >= F.cos(F.col("cap_r")), 1).otherwise(0)
     return (cand.join(F.broadcast(caps), "cap_id")
@@ -2881,7 +2881,7 @@ def q_s2_polygon_cover_join(spark, sf_dir):
             np.asarray(las), np.asarray(los), max_level=10, max_cells=256)]
     covers = spark.createDataFrame(cover_rows, "poly_id INT, cover_id LONG")
     img = images_probe(spark, sf_dir)
-    x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
+    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     pts = S2.with_s2_cell(
         img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
         F.col("px"), F.col("py"), F.col("pz"))

@@ -252,7 +252,7 @@ def stream_s2_enrich(events: DataFrame, covers: DataFrame) -> DataFrame:
     from ..operators.spatial_join import s2_containment_join
     lat = (F.col("user_id") * 2654435761 % 120000000) / 1e6 - 60.0
     lon = (F.col("user_id") * 2971215073 % 360000000) / 1e6 - 180.0
-    x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
+    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     tagged = S2.with_s2_cell(
         events.withColumn("lat", lat).withColumn("lon", lon)
         .withColumn("_x", x).withColumn("_y", y).withColumn("_z", z),

@@ -289,3 +289,94 @@ def test_mvt_encoder_adds_one_exchange(spark):
     blobs = TL.encode_mvt_layers([("osm", feats, "polygon")])
     before = A.count_op(A.formatted_plan(feats), "Exchange")
     assert A.count_op(A.formatted_plan(blobs), "Exchange") == before + 1
+
+
+def _small_join_inputs(spark):
+    """Tiny image / rect / polygon frames shaped like the perfbench
+    image_join inputs (rings as array<array<struct<lon, lat>>>)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    imgs = spark.createDataFrame(
+        [(int(i), float(a), float(b)) for i, (a, b) in
+         enumerate(zip(rng.uniform(-60, 60, 64), rng.uniform(-170, 170, 64)))],
+        "img_id long, lat double, lon double")
+    rects = spark.createDataFrame(
+        [(i, x, y, x + 5.0, y + 4.0, x + 2.5, y + 2.0)
+         for i, (x, y) in enumerate([(-20.0, -10.0), (30.0, 15.0),
+                                     (100.0, -40.0)])],
+        "polygon_id long, left double, bottom double, right double, "
+        "top double, clon double, clat double")
+    ring = [(10.0, 10.0), (14.0, 10.0), (12.0, 14.0), (10.0, 10.0)]
+    polys = spark.createDataFrame(
+        [(i, src, [[{"lon": x + dx, "lat": y} for x, y in ring]],
+          10.0 + dx, 10.0, 14.0 + dx, 14.0)
+         for i, src, dx in ((1, "way", 0.0), (2, "relation", 20.0))],
+        "polygon_id long, source string, "
+        "rings array<array<struct<lon: double, lat: double>>>, "
+        "left double, bottom double, right double, top double")
+    return imgs, rects, polys
+
+
+def test_plan_build_round_trips_are_bounded(spark, py4j_round_trips):
+    """Building the image-join plans is a bounded number of py4j round
+    trips per public call: each step of a cell-id chain is one lateral
+    column alias of one SQL ``selectExpr`` (functions/steps.py), not a
+    tree of Column calls (each F.col / F.lit / operator is a round
+    trip). Measured on these frames, build only (the call, no action),
+    with the Column builders → with the SQL steps:
+
+    * ``with_s2_cell``: 3,863 → 38
+    * ``spatial_join_rect``: 1,461 → 93
+    * ``spatial_join_polygons``: 1,637 → 239
+    * ``raster_vector_assign``: 1,279 → 92
+    * ``s2_spatial_join_polygons``: 6,263 → 271 (this call also runs
+      its one eager cover-stats aggregate)
+
+    py4j's finalizer thread, which sends object deletions whenever
+    Python garbage is collected, is not counted."""
+    from osm_io_spark.functions import s2 as S2
+    from osm_io_spark.operators import raster as RAS
+    from osm_io_spark.operators import spatial_join as SJ
+
+    imgs, rects, polys = _small_join_inputs(spark)
+    xyz = imgs.selectExpr("img_id", "lat AS x", "lon AS y", "1.0D AS z")
+    for df in (imgs, rects, polys, xyz):
+        df.columns  # the schema fetch is the caller's, not the call's
+    calls = {
+        "with_s2_cell": (lambda: S2.with_s2_cell(xyz, "x", "y", "z"), 200),
+        "spatial_join_rect": (
+            lambda: SJ.spatial_join_rect(imgs, rects, 10), 200),
+        "spatial_join_polygons": (
+            lambda: SJ.spatial_join_polygons(imgs, polys, 10), 400),
+        "raster_vector_assign": (
+            lambda: RAS.raster_vector_assign(imgs, rects, 7), 200),
+        "s2_spatial_join_polygons": (
+            lambda: SJ.s2_spatial_join_polygons(imgs, polys), 500),
+    }
+    for name, (build, bound) in calls.items():
+        n0 = py4j_round_trips()
+        build()
+        n = py4j_round_trips() - n0
+        assert n <= bound, f"{name}: {n} py4j round trips > {bound}"
+
+
+def test_s2_polygon_join_build_runs_one_aggregate(spark):
+    """Building ``s2_spatial_join_polygons`` runs ONE eager aggregate,
+    the cover stats, which also counts the covered polygons for the
+    rings-dim broadcast gate. Before, a ``polygons.count()`` ran first:
+    two actions, 4 Spark jobs (AQE runs each aggregate as a map-stage
+    job and a result job). Now 3: the count(DISTINCT polygon) of the
+    one aggregate adds a map stage."""
+    from osm_io_spark.operators import spatial_join as SJ
+
+    imgs, _, polys = _small_join_inputs(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("s2_polygon_join_build", "build only")
+    try:
+        SJ.s2_spatial_join_polygons(imgs, polys)
+        jobs = sc.statusTracker().getJobIdsForGroup("s2_polygon_join_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 3, sorted(jobs)

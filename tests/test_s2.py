@@ -512,3 +512,13 @@ def test_with_s2_cell_rejects_existing_out_column(spark):
     out = s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"),
                           out="cell2")
     assert out.columns.count("cell2") == 1
+
+
+def test_encode_table_is_folded_not_carried(spark):
+    """The LOOKUP4 table is one SQL step (``_s2lut``) that the optimizer
+    folds into each step reading it: a 1,024-int array carried as a
+    column would be copied into every row of the encode."""
+    df = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS x",
+                                    "1.0D AS y", "2.0D AS z")
+    q = s2.with_s2_cell(df, "x", "y", "z")
+    assert "_s2lut" not in q._jdf.queryExecution().optimizedPlan().toString()

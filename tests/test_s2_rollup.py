@@ -24,7 +24,7 @@ def pts(spark):
         ((F.col("id") * 37 % 1700) / 10.0 - 85.0).alias("lat"),
         ((F.col("id") * 53 % 3600) / 10.0 - 180.0).alias("lon"),
         (F.col("id") % 97).cast("double").alias("qty"))
-    x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
+    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     return S2.with_s2_cell(df, x, y, z).select("id", "qty", "s2_cell") \
         .cache()
 

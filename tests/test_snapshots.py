@@ -306,7 +306,7 @@ def test_s2_region_read_prunes_manifest(spark, tmp_path):
                     / 1e6 * 140 - 70).alias("lat"),
                    (F.pmod(F.col("id") * 2971215073, 1_000_000)
                     / 1e6 * 360 - 180).alias("lon")))
-    x, y, z = S2.latlon_xyz_cols(F.col("lat"), F.col("lon"))
+    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     keyed = S2.with_s2_cell(
         pts.select("img_id", "lat", "lon", x.alias("px"), y.alias("py"),
                    z.alias("pz")),
