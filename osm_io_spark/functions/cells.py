@@ -13,16 +13,19 @@ H3/S2-style hierarchy:
   self-describing: ``parent = cell >> 2``, ``res = (bit_length-1)//2``.
 * ring / cover operators for kNN expansion and polygon covering.
 
-Three synchronized implementations are provided, all bit-identical:
-numpy (vectorized UDF kernels), PySpark Column expressions (JVM-side,
-whole-stage-codegen friendly — the hot path), and ANSI-SQL text (DuckDB
-oracle generation). Unit tests assert all three agree.
+Each encoding has three bit-identical forms: the numpy kernel (UDF
+kernels and the test reference), ONE Spark text — SQL steps
+(``cell_steps``, ``zorder_tile_steps``, ``morton_steps``) applied with
+functions/steps.select_steps; there are no Column builders — and the
+DuckDB oracle text (``cell_at_sql``, ``zorder_tile_sql``,
+``morton_sql``), which Spark never runs. Unit tests assert all three
+agree.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_RES = 29  # 2*29+1 = 59 bits < 63 (signed long safe)
@@ -170,78 +173,71 @@ def cover_bbox_np(left: float, bottom: float, right: float, top: float, res: int
 
 
 # ---------------------------------------------------------------------------
-# PySpark Column expressions (JVM-side — preferred in hot paths)
+# Spark SQL steps (the one Spark text of each encoding)
 # ---------------------------------------------------------------------------
 
 
-def _part1by1_col(v: Column) -> Column:
-    v = v.bitwiseAND(F.lit(0xFFFFFFFF))
-    for shift, mask in ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
-                        (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
-                        (1, 0x5555555555555555)):
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
-
-
-def morton_col(x: Column, y: Column) -> Column:
-    return F.shiftleft(_part1by1_col(x), 1).bitwiseOR(_part1by1_col(y))
-
-
-def zorder_tile_col(lat: Column, lon: Column) -> Column:
-    """Reference ``calculate_tile`` as a pure Column expression."""
-    x = F.floor((lon + F.lit(180.0)) * F.lit(65535.0) / F.lit(360.0) + F.lit(0.5)).cast("long")
-    y = F.floor((lat + F.lit(90.0)) * F.lit(65535.0) / F.lit(180.0) + F.lit(0.5)).cast("long")
-    return morton_col(x, y)
-
-
-def xy_at_col(lat: Column, lon: Column, res: int):
-    n = 1 << res
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
-    y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))).cast("long")
-    x = F.greatest(F.lit(0), F.least(F.lit(n - 1), x))
-    y = F.greatest(F.lit(0), F.least(F.lit(n - 1), y))
-    return x, y
-
-
-def cell_at_col(lat: Column, lon: Column, res: int) -> Column:
-    x, y = xy_at_col(lat, lon, res)
-    return F.lit(1 << (2 * res)).bitwiseOR(morton_col(x, y))
-
-
 def grid_sql(c: str, res: int, offset: float, span: float) -> str:
-    """Spark SQL text of one :func:`xy_at_col` coordinate of column
-    ``c`` (lon: offset 180, span 360; lat: offset 90, span 180)."""
+    """Spark SQL text of one res-``res`` grid coordinate of column
+    ``c`` (lon: offset 180, span 360; lat: offset 90, span 180), floor
+    and clamp as :func:`xy_at_np`."""
     n = 1 << res
     return (f"greatest(0, least({n - 1}, CAST(floor((`{c}` + {offset}D) "
             f"/ {span}D * {float(n)}D) AS BIGINT)))")
 
 
-def cell_steps(x: str, y: str, res: int,
-               out: str) -> list[tuple[str, str]]:
-    """SQL steps (functions/steps.select_steps) of ``out`` = the
-    res-``res`` cell id of grid columns ``x``, ``y`` (the
-    :func:`cell_at_col` id): each Morton spread step of both
-    coordinates is one alias (``_mxK``, ``_myK``), so no step's text is
-    pasted into the next (the :func:`_part1by1_sql` oracle twin nests
-    each step twice, 32-fold in all)."""
+def morton_steps(x: str, y: str, out: str,
+                 res: int | None = None) -> list[tuple[str, str]]:
+    """SQL steps (functions/steps.select_steps) of ``out`` = the Morton
+    interleave of columns ``x`` (the more significant bit of each pair)
+    and ``y``; with ``res``, the res-``res`` cell id (the leading 1 at
+    bit 2·res). Each spread step of both coordinates is one alias
+    (``_<out>_mxK``, ``_<out>_myK``), so no step's text is pasted into
+    the next (the :func:`_part1by1_sql` oracle text nests each step
+    twice, 32-fold in all)."""
     cur = {"x": f"(`{x}` & 4294967295)", "y": f"(`{y}` & 4294967295)"}
     steps = []
     for k, (shift, mask) in enumerate(_SPREAD_MASKS[:-1], 1):
         for a in ("x", "y"):
             v = cur[a]
-            cur[a] = f"_m{a}{k}"
+            cur[a] = f"_{out}_m{a}{k}"
             steps.append((cur[a], f"({v} | shiftleft({v}, {int(shift)})) "
                                   f"& {int(mask)}"))
     (shift, mask), last = _SPREAD_MASKS[-1], {}
     for a in ("x", "y"):
         v = cur[a]
         last[a] = f"(({v} | shiftleft({v}, {int(shift)})) & {int(mask)})"
-    return steps + [(out, f"{1 << (2 * res)} | shiftleft({last['x']}, 1) "
-                          f"| {last['y']}")]
+    lead = "" if res is None else f"{1 << (2 * res)} | "
+    return steps + [(out, f"{lead}shiftleft({last['x']}, 1) | {last['y']}")]
 
 
-def cell_parent_col(cell: Column, steps: int = 1) -> Column:
-    return F.shiftright(cell, 2 * steps)
+def cell_steps(lat: str, lon: str, res: int,
+               out: str) -> list[tuple[str, str]]:
+    """SQL steps of ``out`` = the res-``res`` cell id of columns
+    ``lat``/``lon`` (:func:`cell_at_np`): the grid coordinates
+    (``_<out>_gx``, ``_<out>_gy``), then :func:`morton_steps`."""
+    gx, gy = f"_{out}_gx", f"_{out}_gy"
+    return [(gx, grid_sql(lon, res, 180.0, 360.0)),
+            (gy, grid_sql(lat, res, 90.0, 180.0)),
+            *morton_steps(gx, gy, out, res)]
+
+
+def zorder_tile_steps(lat: str, lon: str,
+                      out: str) -> list[tuple[str, str]]:
+    """SQL steps of ``out`` = the reference ``calculate_tile`` key of
+    columns ``lat``/``lon`` (:func:`zorder_tile_np`)."""
+    zx, zy = f"_{out}_zx", f"_{out}_zy"
+    return [(zx, f"CAST(floor((`{lon}` + 180.0D) * 65535.0D / 360.0D "
+                 f"+ 0.5D) AS BIGINT)"),
+            (zy, f"CAST(floor((`{lat}` + 90.0D) * 65535.0D / 180.0D "
+                 f"+ 0.5D) AS BIGINT)"),
+            *morton_steps(zx, zy, out)]
+
+
+def cell_parent_sql(cell: str, steps: int = 1) -> str:
+    """The ancestor ``steps`` levels up of cell id ``cell`` (an SQL
+    expression) — one text for Spark and DuckDB."""
+    return f"(({cell}) >> {2 * steps})"
 
 
 def disk3_fanout(df: DataFrame, res: int, x: str, y: str,
@@ -266,7 +262,7 @@ def disk3_fanout(df: DataFrame, res: int, x: str, y: str,
 
 
 # ---------------------------------------------------------------------------
-# ANSI SQL text generators (DuckDB oracle parity)
+# ANSI SQL text generators (DuckDB oracle references only)
 # ---------------------------------------------------------------------------
 
 

@@ -1,4 +1,4 @@
-"""Geohash encoding — numpy / Column / SQL, bit-identical.
+"""Geohash encoding — numpy, Spark SQL steps and DuckDB text, bit-identical.
 
 The third public string geocode next to the slippy z/x/y (C20) and the
 Bing quadkey (C30): base-32 over the lon-first bit interleave of an
@@ -19,8 +19,10 @@ Odd precisions interleave unequal bit counts and are intentionally
 unsupported (`ValueError`) — the even ladder (2, 4, 6, 8, 10 chars)
 covers the practical range (~±0.6 km at 6, ~±6 cm at 10).
 
-The base-32 render goes through the engines' native base conversion
-(`conv` / `to_base`, both emitting 0-9A-V) followed by a character
+The bins are the planar grid of functions/cells at ``half`` bits
+(``cells.grid_sql`` in Spark). The base-32 render goes through the
+engines' native base conversion (`conv` in Spark, `to_base` in the
+DuckDB oracle, both emitting 0-9A-V) followed by a character
 translate onto the published geohash alphabet (which skips a/i/l/o) —
 pure codegen string ops, no UDF.  Golden vector: (57.64911, 10.40744)
 @10 = "u4pruydqqv" (the classic published example), pinned in
@@ -30,8 +32,6 @@ tests/test_geohash.py.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from . import cells as C
 
@@ -95,28 +95,19 @@ def geohash_bounds_np(geohashes) -> tuple[np.ndarray, ...]:
     return left, bottom, left + 360.0 / n, bottom + 180.0 / n
 
 
-def _bins_col(lat: Column, lon: Column, half: int):
-    n = 1 << half
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))) \
-        .cast("long")
-    y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))) \
-        .cast("long")
-    return (F.greatest(F.lit(0), F.least(F.lit(n - 1), x)),
-            F.greatest(F.lit(0), F.least(F.lit(n - 1), y)))
-
-
-def _render_col(m: Column, precision: int) -> Column:
-    return F.translate(
-        F.lpad(F.conv(m.cast("string"), 10, 32), precision, "0"),
-        _CONV_TAIL, _GEO_TAIL)
-
-
-def geohash_col(lat: Column, lon: Column, precision: int) -> Column:
-    """Pure-Column geohash: Morton bit math + conv/translate — no UDF,
-    whole-stage codegen."""
+def geohash_steps(lat: str, lon: str, precision: int,
+                  out: str) -> list[tuple[str, str]]:
+    """SQL steps (functions/steps.select_steps) of ``out`` = the
+    geohash of columns ``lat``/``lon``: the grid bins at ``half`` bits,
+    the Morton interleave (cells.morton_steps), then conv/lpad/translate
+    — no UDF, whole-stage codegen."""
     half = _half_bits(precision)
-    x, y = _bins_col(lat, lon, half)
-    return _render_col(C.morton_col(x, y), precision)
+    gx, gy, m = f"_{out}_gx", f"_{out}_gy", f"_{out}_m"
+    return [(gx, C.grid_sql(lon, half, 180.0, 360.0)),
+            (gy, C.grid_sql(lat, half, 90.0, 180.0)),
+            *C.morton_steps(gx, gy, m),
+            (out, f"translate(lpad(conv(CAST({m} AS STRING), 10, 32), "
+                  f"{precision}, '0'), '{_CONV_TAIL}', '{_GEO_TAIL}')")]
 
 
 def _render_sql(m: str, precision: int) -> str:
@@ -125,7 +116,7 @@ def _render_sql(m: str, precision: int) -> str:
 
 
 def geohash_sql(lat: str, lon: str, precision: int) -> str:
-    """SQL twin (DuckDB spells base conversion ``to_base``)."""
+    """DuckDB oracle text (DuckDB spells base conversion ``to_base``)."""
     half = _half_bits(precision)
     n = 1 << half
     x = (f"greatest(0, least({n - 1}, "

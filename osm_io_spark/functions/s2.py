@@ -31,14 +31,17 @@ and the ~9-step fused stage stays under HotSpot's 8000-bytecode
 huge-method JIT limit, which the original 30 single-level steps blew
 past, leaving the whole encode interpreted at ~180x cost), and
 ANSI-SQL text for the DuckDB oracle (kept single-level: the oracle
-runs at sf0.01 scale where clarity beats constant factors).
+runs at sf0.01 scale where clarity beats constant factors). The
+hierarchy bit math (``s2_parent_sql``, ``s2_level_sql``,
+``s2_range_*_sql``) is one SQL text that both engines run; there are
+no Column builders.
 
 Determinism note: the oracled entry points take a raw DIRECTION VECTOR
 (x, y, z — S2 never needs it normalized: face/u/v are component
 ratios), so the whole pipeline is +,-,*,/ and sqrt — all IEEE-exact and
 bit-reproducible across Spark and DuckDB. The lat/lon convenience
 wrappers use cos/sin, which are NOT cross-engine exact; they exist for
-the engine side only and are tested numpy-vs-Column.
+the engine side only and are tested numpy-vs-Spark.
 """
 
 from __future__ import annotations
@@ -784,7 +787,7 @@ def s2_cover_rings_np(rings_latlon, max_level: int = 10,
 
 
 # ---------------------------------------------------------------------------
-# Spark SQL steps and PySpark Column expressions
+# Spark SQL steps (the S2 encode; the cell-id bit math below is shared)
 # ---------------------------------------------------------------------------
 
 
@@ -917,41 +920,18 @@ def latlon_xyz_sql(lat: str, lon: str) -> tuple[str, str, str]:
             f"sin({phi})")
 
 
-def latlon_xyz_cols(lat: str, lon: str) -> tuple[Column, Column, Column]:
-    """:func:`latlon_xyz_sql` as Columns."""
-    return tuple(F.expr(e) for e in latlon_xyz_sql(lat, lon))
-
-
-def s2_lsb_col(cid: Column) -> Column:
-    return cid.bitwiseAND(-cid)
-
-
-def s2_parent_col(cid: Column, level: int) -> Column:
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    return cid.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
-
-
-def s2_level_col(cid: Column) -> Column:
-    """Level from the trailing-1 sentinel: a 31-branch CASE on the lsb
-    (exact integer compare — no float log in the plan)."""
-    lsb = s2_lsb_col(cid)
-    expr = F.lit(None).cast("int")
-    for lvl in range(MAX_LEVEL + 1):
-        expr = F.when(lsb == F.lit(1 << (2 * (MAX_LEVEL - lvl))),
-                      F.lit(lvl)).otherwise(expr)
-    return expr
-
-
-def s2_range_min_col(cid: Column) -> Column:
-    return cid - (s2_lsb_col(cid) - F.lit(1))
-
-
-def s2_range_max_col(cid: Column) -> Column:
-    return cid + (s2_lsb_col(cid) - F.lit(1))
+def with_latlon_xyz(df: DataFrame, lat: str, lon: str,
+                    names: tuple[str, str, str] = ("px", "py", "pz")
+                    ) -> DataFrame:
+    """``df`` plus the :func:`latlon_xyz_sql` direction of ``lat``/``lon``
+    as columns ``names``, in one ``selectExpr``."""
+    return df.selectExpr("*", *[f"{e} AS `{n}`" for e, n in
+                                zip(latlon_xyz_sql(lat, lon), names)])
 
 
 # ---------------------------------------------------------------------------
-# ANSI SQL text generators (DuckDB oracle parity)
+# SQL text: the DuckDB encode oracle, and the hierarchy bit math both
+# engines run (integer literals only, so one text serves both)
 # ---------------------------------------------------------------------------
 
 
@@ -1010,7 +990,8 @@ def s2_chain_sql(base_from: str, x: str, y: str, z: str,
 
 
 def s2_level_sql(cid: str) -> str:
-    """Level from the lsb — 31-branch CASE, mirrors s2_level_col."""
+    """Level from the trailing-1 sentinel: a 31-branch CASE on the lsb
+    (exact integer compare — no float log in the plan); NULL for 0."""
     lsb = f"(({cid}) & -({cid}))"
     branches = " ".join(
         f"WHEN {1 << (2 * (MAX_LEVEL - lvl))} THEN {lvl}"

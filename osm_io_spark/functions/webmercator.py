@@ -1,16 +1,16 @@
-"""Web-Mercator XYZ ("slippy map") tile math — numpy / Column / SQL.
+"""Web-Mercator XYZ ("slippy map") tile math — numpy and SQL text.
 
 The reference's tiling surface is the planar Morton tile of
 /root/reference/src/osm/apidb_dump/sql.rs:50-61 (exposed here as
 ``functions.cells``); real map-tile delivery, however, is keyed by the
 published OSM slippy-map scheme (zoom/x/y on the spherical-Mercator
 projection).  This module adds that scheme as a first-class cell
-family, with the repo's usual three bit-identical implementations:
-
-- numpy kernels (``tile_xy_np``) for mapInPandas operators,
-- pure-Column expressions (``tile_x_col`` / ``tile_y_col``) that stay
-  inside whole-stage codegen for the hot encode path,
-- SQL text (``tile_x_sql`` / ``tile_y_sql``) for the DuckDB oracles.
+family in two forms: numpy kernels (``tile_xy_np``) for mapInPandas
+operators and tests, and ONE SQL text per coordinate
+(``tile_x_sql`` / ``tile_y_sql`` and the continuous ``tile_xc_sql`` /
+``tile_yc_sql``) that Spark (``selectExpr`` / functions/steps) and the
+DuckDB oracles both run — its double literals are e-notation, which
+both engines parse as DOUBLE.  There are no Column builders.
 
 Published formula (OSM wiki, "Slippy map tilenames"):
 
@@ -18,7 +18,7 @@ Published formula (OSM wiki, "Slippy map tilenames"):
     x = floor((lon + 180) / 360 * n)
     y = floor((1 - asinh(tan(lat_rad)) / pi) / 2 * n)
 
-DuckDB has no ``asinh``, so all three implementations spell it as
+DuckDB has no ``asinh``, so both forms spell it as
 ``ln(tan(r) + 1/cos(r))`` — algebraically identical for the clamped
 latitude domain (tan + sec > 0) and therefore the same double result
 in IEEE arithmetic on every engine that computes ``tan``/``cos``/``ln``
@@ -32,8 +32,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Mercator latitude bound: atan(sinh(pi)) in degrees (published constant).
 MAX_LAT = 85.05112878
@@ -70,70 +68,46 @@ def tile_bounds_np(x, y, zoom: int):
     return left, bottom, right, top
 
 
-def _clamp_col(v: Column, lo: float, hi: float) -> Column:
-    return F.least(F.greatest(v, F.lit(lo)), F.lit(hi))
-
-
-def tile_x_col(lon: Column, zoom: int) -> Column:
-    n = float(1 << zoom)
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return _clamp_col(raw, 0.0, float((1 << zoom) - 1)).cast("long")
-
-
-def tile_y_col(lat: Column, zoom: int) -> Column:
-    n = float(1 << zoom)
-    r = F.radians(_clamp_col(lat, -MAX_LAT, MAX_LAT))
-    merc = F.log(F.tan(r) + F.lit(1.0) / F.cos(r))
-    raw = F.floor((F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * F.lit(n))
-    return _clamp_col(raw, 0.0, float((1 << zoom) - 1)).cast("long")
+def _e(v: float) -> str:
+    """Double literal both engines parse as the same DOUBLE: e-notation
+    (a bare decimal is DECIMAL in Spark and DuckDB), digits from
+    ``repr``, which round-trips."""
+    r = repr(float(v))
+    return r if "e" in r else f"{r}e0"
 
 
 def tile_x_sql(lon: str, zoom: int) -> str:
-    n = float(1 << zoom)
-    hi = float((1 << zoom) - 1)
-    return (f"CAST(least(greatest(floor(({lon} + 180.0) / 360.0 * {n}), "
-            f"0.0), {hi}) AS BIGINT)")
+    """Tile column of SQL expression ``lon`` (:func:`tile_xy_np`)."""
+    n, hi = _e(1 << zoom), _e((1 << zoom) - 1)
+    return (f"CAST(least(greatest(floor(({lon} + 180e0) / 360e0 * {n}), "
+            f"0e0), {hi}) AS BIGINT)")
+
+
+def _merc_sql(lat: str) -> str:
+    r = f"radians(least(greatest({lat}, {_e(-MAX_LAT)}), {_e(MAX_LAT)}))"
+    return f"(1e0 - ln(tan({r}) + 1e0 / cos({r})) / pi()) / 2e0"
 
 
 def tile_y_sql(lat: str, zoom: int) -> str:
-    n = float(1 << zoom)
-    hi = float((1 << zoom) - 1)
-    r = f"radians(least(greatest({lat}, {-MAX_LAT}), {MAX_LAT}))"
-    merc = f"ln(tan({r}) + 1.0 / cos({r}))"
-    return (f"CAST(least(greatest(floor((1.0 - {merc} / pi()) / 2.0 * {n}), "
-            f"0.0), {hi}) AS BIGINT)")
-
-
-def tile_xc_col(lon: Column, zoom: int) -> Column:
-    """CONTINUOUS tile x coordinate (double in [0, 2^zoom)) — floor is
-    the tile index, fraction the in-tile position."""
-    n = float(1 << zoom)
-    raw = (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)
-    return _clamp_col(raw, 0.0, math.nextafter(n, 0.0))
-
-
-def tile_yc_col(lat: Column, zoom: int) -> Column:
-    n = float(1 << zoom)
-    r = F.radians(_clamp_col(lat, -MAX_LAT, MAX_LAT))
-    merc = F.log(F.tan(r) + F.lit(1.0) / F.cos(r))
-    raw = (F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * F.lit(n)
-    return _clamp_col(raw, 0.0, math.nextafter(n, 0.0))
+    """Tile row of SQL expression ``lat`` (:func:`tile_xy_np`)."""
+    n, hi = _e(1 << zoom), _e((1 << zoom) - 1)
+    return (f"CAST(least(greatest(floor({_merc_sql(lat)} * {n}), 0e0), "
+            f"{hi}) AS BIGINT)")
 
 
 def tile_xc_sql(lon: str, zoom: int) -> str:
-    """SQL twin of tile_xc_col — float repr round-trips, so the
-    nextafter(n, 0) clamp bound parses to the same double in DuckDB."""
+    """CONTINUOUS tile x coordinate (double in [0, 2^zoom)) — floor is
+    the tile index, fraction the in-tile position. The clamp bound
+    nextafter(n, 0) parses to the same double in both engines."""
     n = float(1 << zoom)
-    hi = repr(math.nextafter(n, 0.0))
-    return (f"least(greatest(({lon} + 180.0) / 360.0 * {n}, 0.0), {hi})")
+    return (f"least(greatest(({lon} + 180e0) / 360e0 * {_e(n)}, 0e0), "
+            f"{_e(math.nextafter(n, 0.0))})")
 
 
 def tile_yc_sql(lat: str, zoom: int) -> str:
     n = float(1 << zoom)
-    hi = repr(math.nextafter(n, 0.0))
-    r = f"radians(least(greatest({lat}, {-MAX_LAT}), {MAX_LAT}))"
-    merc = f"ln(tan({r}) + 1.0 / cos({r}))"
-    return (f"least(greatest((1.0 - {merc} / pi()) / 2.0 * {n}, 0.0), {hi})")
+    return (f"least(greatest({_merc_sql(lat)} * {_e(n)}, 0e0), "
+            f"{_e(math.nextafter(n, 0.0))})")
 
 
 # ---------------------------------------------------------------------------
@@ -146,7 +120,7 @@ def tile_yc_sql(lat: str, zoom: int) -> str:
 # key is its children's common prefix), which makes them the standard
 # string key for tile stores: a region read is a key-prefix range scan,
 # the string sibling of the S2 descendant-id range used by
-# s2_read_region_pruned.  All three implementations are bit-identical;
+# s2_read_region_pruned.  numpy, Spark steps and DuckDB text agree;
 # published golden vectors (tile (3,5)@3 = "213" etc.) are pinned in
 # tests/test_tiles.py.
 
@@ -177,15 +151,19 @@ def quadkey_to_xyz_np(quadkeys) -> tuple[np.ndarray, np.ndarray, int]:
     return x, y, zoom
 
 
-def quadkey_col(x: Column, y: Column, zoom: int) -> Column:
-    """Pure-Column quadkey: y-major Morton interleave (codegen bit
-    math) rendered base-4 by ``conv`` and zero-padded — no UDF."""
-    from .cells import morton_col
-    m = morton_col(y, x)
-    return F.lpad(F.conv(m.cast("string"), 10, 4), zoom, "0")
+def quadkey_steps(x: str, y: str, zoom: int,
+                  out: str) -> list[tuple[str, str]]:
+    """SQL steps (functions/steps.select_steps) of ``out`` = the quadkey
+    of tile columns ``x``/``y``: the y-major Morton interleave
+    (cells.morton_steps) rendered base-4 by ``conv`` and zero-padded —
+    no UDF."""
+    from .cells import morton_steps
+    m = f"_{out}_m"
+    return [*morton_steps(y, x, m),
+            (out, f"lpad(conv(CAST({m} AS STRING), 10, 4), {zoom}, '0')")]
 
 
 def quadkey_sql(x: str, y: str, zoom: int) -> str:
-    """SQL twin — DuckDB spells base conversion ``to_base``."""
+    """DuckDB oracle text (DuckDB spells base conversion ``to_base``)."""
     from .cells import morton_sql
     return f"lpad(to_base({morton_sql(y, x)}, 4), {zoom}, '0')"

@@ -38,6 +38,7 @@ def run(argv: list[str] | None = None) -> dict:
 
     from .. import queries as Q
     from ..functions import cells as C
+    from ..functions.steps import select_steps
     from ..sources.pbf import decode as PD
 
     Q.ensure_shipped(spark)
@@ -55,8 +56,8 @@ def run(argv: list[str] | None = None) -> dict:
                           "user", "visible", "tags", "members"])):
         df = els.filter(F.col("etype") == etype).select(*cols)
         if etype == "node":
-            df = df.withColumn(
-                "cell", C.cell_at_col(F.col("lat"), F.col("lon"), args.cell_res))
+            df = select_steps(df, C.cell_steps("lat", "lon", args.cell_res,
+                                               "cell"), keep=("cell",))
         table = catalog.table(f"{etype}s")
         snap = table.write(df, operation="ingest_pbf", lineage=lineage)
         out[f"{etype}s"] = {"rows": snap.summary["total_rows"],

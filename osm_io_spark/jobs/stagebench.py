@@ -273,8 +273,8 @@ def _tile_encode(spark, n):
     # pure codegen)
     from ..functions import webmercator as WM
     img = _range_probe(spark, n)
-    d = img.select(WM.tile_x_col(F.col("lon"), _ZOOM).alias("tx"),
-                   WM.tile_y_col(F.col("lat"), _ZOOM).alias("ty"))
+    d = img.selectExpr(f"{WM.tile_x_sql('lon', _ZOOM)} AS tx",
+                       f"{WM.tile_y_sql('lat', _ZOOM)} AS ty")
     return {"tiles": d.groupBy("tx", "ty").count().count()}
 
 

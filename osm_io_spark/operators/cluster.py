@@ -168,15 +168,16 @@ def dbscan(points: DataFrame, eps: float, min_pts: int,
     pts = points.select(F.col(id_col).cast("long").alias("_id"),
                         F.col(lat_col).alias("_lat"),
                         F.col(lon_col).alias("_lon"))
-    x, y = C.xy_at_col(F.col("_lat"), F.col("_lon"), res)
+    grid = [f"{C.grid_sql('_lon', res, 180.0, 360.0)} AS _gx",
+            f"{C.grid_sql('_lat', res, 90.0, 180.0)} AS _gy"]
     # fine sub-grid for CC contraction (below): cell diagonal ≤ eps,
     # so same-cell core points are mutually eps-connected
     res_f = _fine_res(eps)
-    pts = pts.withColumn("_gx", x).withColumn("_gy", y)
     if res_f is not None:
-        fx, fy = C.xy_at_col(F.col("_lat"), F.col("_lon"), res_f)
-        pts = pts.withColumn("_fkey",
-                             fx * F.lit(1 << res_f) + fy)
+        grid.append(f"{C.grid_sql('_lon', res_f, 180.0, 360.0)} * "
+                    f"{1 << res_f} + "
+                    f"{C.grid_sql('_lat', res_f, 90.0, 180.0)} AS _fkey")
+    pts = pts.selectExpr("*", *grid)
     # pin the keyed point frame: it fans out to the guard, both join
     # sides, the flags frame and the final assembly (CLAUDE.md fan-out
     # rule — unpinned, the upstream projection + any source shuffle

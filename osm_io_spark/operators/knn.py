@@ -120,8 +120,11 @@ def _exact_knn(probe: DataFrame, build: DataFrame, k: int,
     builds = build.selectExpr(f"`{build_id}` AS _bid", *(
         f"CAST({c} AS DOUBLE) AS {a}" for c, a in zip(bcoords, bcols)))
 
-    if build.count() <= _SMALL_BUILD:
-        bpdf = builds.dropDuplicates(["_bid"]).toPandas()
+    # one bounded collect routes (duplicates count) and, when the build
+    # side is small, is the build matrix
+    head = builds.limit(_SMALL_BUILD + 1).toPandas()
+    if len(head) <= _SMALL_BUILD:
+        bpdf = head.drop_duplicates("_bid")
         B = bpdf[bcols].to_numpy(np.float64)
         bids = bpdf["_bid"].to_numpy()
 
@@ -232,10 +235,12 @@ def knn_join(probe: DataFrame, build: DataFrame, k: int, res: int,
     min_sz = min(360.0 / n, 180.0 / n)
 
     def keyed(probes, builds):
-        px, py = C.xy_at_col(F.col("_p0"), F.col("_p1"), res)
-        bx, by = C.xy_at_col(F.col("_b0"), F.col("_b1"), res)
-        return (probes.withColumn("_px", px).withColumn("_py", py),
-                builds.withColumn("_bkey", bx * F.lit(n) + by))
+        def grid(lat, lon):
+            return (C.grid_sql(lon, res, 180.0, 360.0),
+                    C.grid_sql(lat, res, 90.0, 180.0))
+        (px, py), (bx, by) = grid("_p0", "_p1"), grid("_b0", "_b1")
+        return (probes.selectExpr("*", f"{px} AS _px", f"{py} AS _py"),
+                builds.selectExpr("*", f"{bx} * {n} + {by} AS _bkey"))
 
     def rounds():
         for r_hi, offsets in _annuli(n):
@@ -315,7 +320,7 @@ def s2_knn_join(probe: DataFrame, build: DataFrame, k: int,
     pid_dt = probe.schema[probe_id].dataType.simpleString()
 
     def anc(cell, level):
-        return S2.s2_parent_col(F.col(cell), level)
+        return F.expr(S2.s2_parent_sql(cell, level))
 
     def keyed(probes, builds):
         return (S2.with_s2_cell(probes, "_p0", "_p1", "_p2", out="_pcell"),

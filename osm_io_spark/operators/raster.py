@@ -61,8 +61,9 @@ def gi_star(points: DataFrame, res: int,
 
     Returns (gx, gy, x, k_nbrs, nbr_sum, gi_z) sorted nowhere —
     order-insensitive consumers only."""
-    x, y = C.xy_at_col(F.col(lat_col), F.col(lon_col), res)
-    cells = (points.select(x.alias("_gx"), y.alias("_gy"))
+    gx = C.grid_sql(lon_col, res, 180.0, 360.0)
+    gy = C.grid_sql(lat_col, res, 90.0, 180.0)
+    cells = (points.selectExpr(f"{gx} AS _gx", f"{gy} AS _gy")
              .groupBy("_gx", "_gy").agg(F.count(F.lit(1)).alias("_x"))
              .localCheckpoint(eager=False))  # fans out 3 ways below
 

@@ -45,10 +45,7 @@ def tag_probe_cells(df: DataFrame, res: int,
                     out: str = "cell") -> DataFrame:
     """Attach the single res-``res`` cell id to a point table (pure JVM,
     built as SQL steps: functions/cells.cell_steps)."""
-    return select_steps(df, [("_gx", C.grid_sql(lon, res, 180.0, 360.0)),
-                             ("_gy", C.grid_sql(lat, res, 90.0, 180.0)),
-                             *C.cell_steps("_gx", "_gy", res, out)],
-                        keep=(out,))
+    return select_steps(df, C.cell_steps(lat, lon, res, out), keep=(out,))
 
 
 def cover_bbox_cells(df: DataFrame, res: int,
@@ -67,7 +64,7 @@ def cover_bbox_cells(df: DataFrame, res: int,
 
     xy = (df.selectExpr("*", f"{span(left, right, 180.0, 360.0)} AS _x")
           .selectExpr("*", f"{span(bottom, top, 90.0, 180.0)} AS _y"))
-    return select_steps(xy, C.cell_steps("_x", "_y", res, out),
+    return select_steps(xy, C.morton_steps("_x", "_y", out, res),
                         keep=(out,)).drop("_x", "_y")
 
 
@@ -452,8 +449,10 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
     sid_dt = sites.schema[site_id].dataType.simpleString()
     covers = spark.createDataFrame(
         cover_rows, f"{site_id} {sid_dt}, cover_id long")
-    x, y, z = S2.latlon_xyz_cols(probe_lat, probe_lon)
-    pts = S2.with_s2_cell(probe, x, y, z)
+    pts = S2.with_s2_cell(
+        S2.with_latlon_xyz(probe, probe_lat, probe_lon,
+                           ("_s2x", "_s2y", "_s2z")),
+        "_s2x", "_s2y", "_s2z").drop("_s2x", "_s2y", "_s2z")
     cand = s2_containment_join(pts, covers, cell="s2_cell",
                                cover="cover_id")
     site_pos = F.broadcast(head)
@@ -500,7 +499,7 @@ def s2_read_region_pruned(table, spark, cover_cells,
     cond = None
     for lvl in sorted(set(levels.tolist())):
         ids = [int(c) for c, l in zip(cells, levels) if l == lvl]
-        pred = S2.s2_parent_col(F.col(cell_col), int(lvl)).isin(ids)
+        pred = F.expr(S2.s2_parent_sql(f"`{cell_col}`", int(lvl))).isin(ids)
         cond = pred if cond is None else (cond | pred)
     return df.filter(cond), kept
 
@@ -628,10 +627,8 @@ def s2_spatial_join_polygons(images: DataFrame, polygons: DataFrame,
             f"s2_spatial_join_polygons scratch/output columns collide "
             f"with image columns {sorted(clash)}; rename them first "
             f"(same guard as s2.with_s2_cell)")
-    base = images.selectExpr("*", *[
-        f"{e} AS {n}" for e, n in zip(S2.latlon_xyz_sql(lat, lon),
-                                      ("px", "py", "pz"))])
-    pts = S2.with_s2_cell(base, "px", "py", "pz")
+    pts = S2.with_s2_cell(S2.with_latlon_xyz(images, lat, lon),
+                          "px", "py", "pz")
     # one eager aggregate decides both broadcast gates
     key = ", ".join(f"`{c}`" for c in keep)
     stats = _cover_stats(covers, "cover_id",
@@ -654,7 +651,7 @@ def s2_multires_rollup(df: DataFrame, levels, aggs,
     rollup has to be built at 10^12 leaf rows: the leaf table is
     aggregated ONCE (at ``levels[0]``, the finest), and every coarser
     level re-aggregates the PREVIOUS level's partial table via the
-    parent bit-math (``s2_parent_col`` — mask + lsb, no geometry
+    parent bit-math (``s2_parent_sql`` — mask + lsb, no geometry
     recompute). Each cascade step shrinks the input ~4^Δlevel, so the
     total work past the first groupBy is a vanishing fraction of the
     leaf pass — vs one-pass ROLLUP, which shuffles the full leaf table
@@ -684,14 +681,14 @@ def s2_multires_rollup(df: DataFrame, levels, aggs,
         raise ValueError("levels must be strictly decreasing S2 levels")
     from .util import cascade_aggs
     leaf_aggs, re_aggs = cascade_aggs(aggs)
-    cur = (df.groupBy(S2.s2_parent_col(F.col(cell), levels[0])
+    cur = (df.groupBy(F.expr(S2.s2_parent_sql(f"`{cell}`", levels[0]))
                       .alias("cell"))
            .agg(*leaf_aggs)
            .select(F.lit(levels[0]).alias("level"), "*")
            .localCheckpoint(eager=False))
     out = cur
     for lv in levels[1:]:
-        cur = (cur.groupBy(S2.s2_parent_col(F.col("cell"), lv)
+        cur = (cur.groupBy(F.expr(S2.s2_parent_sql("cell", lv))
                            .alias("cell"))
                .agg(*re_aggs)
                .select(F.lit(lv).alias("level"), "*")
@@ -707,25 +704,19 @@ def _cover_fanout_guard(df: DataFrame, res: int, left: str, bottom: str,
     world-spanning box at res 10 is ~10^6 rows). The raise_error is
     folded into a column the cover actually uses (the tiles.tile_cover
     pattern — a guard in a dropped column is pruned by Catalyst)."""
-    n = 1 << res
+    def span(lo: str, hi: str, off: float, width: float) -> str:
+        return (f"({C.grid_sql(hi, res, off, width)} - "
+                f"{C.grid_sql(lo, res, off, width)} + 1)")
 
-    def g(c, off, span):
-        v = F.floor((F.col(c) + F.lit(off)) / F.lit(span)
-                    * F.lit(float(n))).cast("long")
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), v))
-
-    ncells = ((g(right, 180.0, 360.0) - g(left, 180.0, 360.0) + 1)
-              * (g(top, 90.0, 180.0) - g(bottom, 90.0, 180.0) + 1))
-    msg = F.concat(
-        F.lit(f"overlap_join_rect: a box covers > {max_cells} cells at "
-              f"res {res} (box: "),
-        F.col(left).cast("string"), F.lit(".."),
-        F.col(right).cast("string"),
-        F.lit("); pre-split giant boxes or lower res / raise "
-              "max_cells_per_box"))
-    return df.withColumn(left, F.when(
-        ncells <= F.lit(int(max_cells)), F.col(left)
-    ).otherwise(F.raise_error(msg).cast("double")))
+    ncells = (f"{span(left, right, 180.0, 360.0)} * "
+              f"{span(bottom, top, 90.0, 180.0)}")
+    msg = (f"concat('overlap_join_rect: a box covers > {max_cells} cells "
+           f"at res {res} (box: ', CAST(`{left}` AS STRING), '..', "
+           f"CAST(`{right}` AS STRING), '); pre-split giant boxes or "
+           f"lower res / raise max_cells_per_box')")
+    return df.withColumn(left, F.expr(
+        f"CASE WHEN {ncells} <= {int(max_cells)} THEN `{left}` "
+        f"ELSE CAST(raise_error({msg}) AS DOUBLE) END"))
 
 
 def overlap_join_rect(a: DataFrame, b: DataFrame, res: int,
@@ -738,7 +729,7 @@ def overlap_join_rect(a: DataFrame, b: DataFrame, res: int,
     raster assignment (J10).
 
     Scale shape: both sides explode into their res-``res`` covering
-    cells (``cover_bbox_cells`` — pure Column, codegen) and meet in ONE
+    cells (``cover_bbox_cells`` — SQL steps, codegen) and meet in ONE
     hash equi-join on the cell id. A pair sharing k cells would emit k
     duplicates; instead of a post-join DISTINCT (a second full shuffle
     of the pair set), each pair is emitted ONLY by the cell containing
@@ -769,19 +760,17 @@ def overlap_join_rect(a: DataFrame, b: DataFrame, res: int,
                           right="ar", top="at")
     cb = cover_bbox_cells(pb, res, left="bl", bottom="bb",
                           right="br", top="bt")
-    j = ca.join(cb, on="cell", how="inner")
-    overlap = ((F.col("al") < F.col("br")) & (F.col("bl") < F.col("ar"))
-               & (F.col("ab") < F.col("bt")) & (F.col("bb") < F.col("at")))
-    il = F.greatest(F.col("al"), F.col("bl"))
-    ib = F.greatest(F.col("ab"), F.col("bb"))
-    ir = F.least(F.col("ar"), F.col("br"))
-    it = F.least(F.col("at"), F.col("bt"))
-    own = F.col("cell") == C.cell_at_col(ib, il, res)
-    inter = (ir - il) * (it - ib)
-    area_a = (F.col("ar") - F.col("al")) * (F.col("at") - F.col("ab"))
-    area_b = (F.col("br") - F.col("bl")) * (F.col("bt") - F.col("bb"))
-    return (j.filter(overlap & own)
-            .select("a_id", "b_id", il.alias("il"), ib.alias("ib"),
-                    ir.alias("ir"), it.alias("it"),
-                    inter.alias("inter_area"),
-                    (inter / (area_a + area_b - inter)).alias("iou")))
+    # the intersection bbox; the pair's owner cell holds its
+    # bottom-left corner
+    j = select_steps(ca.join(cb, on="cell", how="inner"), [
+        ("il", "greatest(`al`, `bl`)"), ("ib", "greatest(`ab`, `bb`)"),
+        ("ir", "least(`ar`, `br`)"), ("it", "least(`at`, `bt`)"),
+        *C.cell_steps("ib", "il", res, "_own")],
+        keep=("il", "ib", "ir", "it", "_own"))
+    inter = "(`ir` - `il`) * (`it` - `ib`)"
+    return (j.filter("`al` < `br` AND `bl` < `ar` AND `ab` < `bt` AND "
+                     "`bb` < `at` AND cell = _own")
+            .selectExpr("a_id", "b_id", "il", "ib", "ir", "it",
+                        f"{inter} AS inter_area",
+                        f"{inter} / ((`ar` - `al`) * (`at` - `ab`) + "
+                        f"(`br` - `bl`) * (`bt` - `bb`) - {inter}) AS iou"))

@@ -13,7 +13,7 @@ coordinates on a fixed extent grid (4096 is the published MVT default).
 Spark-first layout — the whole pipeline is ONE shuffle (the final
 per-tile aggregation or MVT encode, when the caller asks for it):
 
-  polygons ──(Column math: bbox → tile range)──► explode x ──►
+  polygons ──(SQL steps: bbox → tile range)──► explode x ──►
   explode y ──(mapInPandas numpy kernel: clip+simplify+quantize)──►
   per-(tile, polygon) features ──(encode_mvt_layers: tile-key
   repartition + sorted-run mapInPandas)──► one MVT blob per tile
@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from ..functions import geometry as G
 from ..functions import webmercator as WM
 from ..functions.cells import morton_np
+from ..functions.steps import select_steps
 from .util import widen
 
 # ---------------------------------------------------------------------------
@@ -321,10 +322,10 @@ def tile_cover(polys: DataFrame, zoom: int,
     """Fan a polygon frame (… left/bottom/right/top bbox cols) out to
     one row per overlapped Web-Mercator tile at ``zoom``.
 
-    Pure Column math + explodes — stays in the scan's stage, no
-    shuffle, no driver collect.  Tile range per polygon is the bbox's
-    tile-index range (slippy y grows southward: y range comes from
-    top→bottom).
+    SQL steps (functions/steps.select_steps) + explodes — stays in the
+    scan's stage, no shuffle, no driver collect.  Tile range per
+    polygon is the bbox's tile-index range (slippy y grows southward:
+    y range comes from top→bottom).
 
     Antimeridian (``antimeridian='split'``, default): bboxes are
     min/max lon, so a ring crossing ±180° arrives with lon width >
@@ -337,48 +338,50 @@ def tile_cover(polys: DataFrame, zoom: int,
     natively.  Pass ``antimeridian='wide'`` to read a >180°-wide bbox
     literally (a genuinely world-spanning ring, e.g. a polar cap).
 
-    The guard raises in-task (raise_error folded into the fan-out
-    column, so Catalyst cannot prune it) when a polygon's fan-out
-    exceeds ``max_tiles_per_polygon``; pass None to disable (e.g.
-    after pre-splitting giant polygons at a coarser zoom)."""
+    The guard raises in-task (raise_error folded into the ``_y0``
+    step, which the y explode reads, so Catalyst cannot prune it) when
+    a polygon's fan-out exceeds ``max_tiles_per_polygon``; pass None to
+    disable (e.g. after pre-splitting giant polygons at a coarser
+    zoom)."""
     if antimeridian not in ("split", "wide"):
         raise ValueError(f"antimeridian={antimeridian!r}: 'split' or 'wide'")
     n_hi = (1 << zoom) - 1
-    xl = WM.tile_x_col(F.col("left"), zoom)
-    xr = WM.tile_x_col(F.col("right"), zoom)
-    lo_l = F.lit(0).cast("long")
-    hi_l = F.lit(int(n_hi)).cast("long")
-    crossing = ((F.col("right") - F.col("left")) > F.lit(180.0)) \
-        if antimeridian == "split" else F.lit(False)
-    two = crossing & (xr > xl)  # at zoom 0 both wrapped ranges merge
-    ranges = (F.when(two, F.array(
-                  F.struct(xr.alias("lo"), hi_l.alias("hi")),
-                  F.struct(lo_l.alias("lo"), xl.alias("hi"))))
-              .when(crossing, F.array(F.struct(lo_l.alias("lo"),
-                                               hi_l.alias("hi"))))
-              .otherwise(F.array(F.struct(xl.alias("lo"), xr.alias("hi")))))
-    x_count = (F.when(two, (hi_l - xr + 1) + (xl + 1))
-               .when(crossing, F.lit(int(n_hi) + 1))
-               .otherwise(xr - xl + 1))
-    d = (polys.withColumn("_xr", ranges)
-              .withColumn("_y0", WM.tile_y_col(F.col("top"), zoom))
-              .withColumn("_y1", WM.tile_y_col(F.col("bottom"), zoom)))
+    crossing = ("(`right` - `left`) > 180e0" if antimeridian == "split"
+                else "false")
+
+    def rng(lo: str, hi: str) -> str:
+        return f"named_struct('lo', {lo}, 'hi', {hi})"
+
+    steps = [
+        ("_xl", WM.tile_x_sql("`left`", zoom)),
+        ("_xr", WM.tile_x_sql("`right`", zoom)),
+        ("_cross", crossing),
+        # at zoom 0 both wrapped ranges merge
+        ("_two", "_cross AND _xr > _xl"),
+        ("_ranges", f"CASE WHEN _two THEN array({rng('_xr', f'{n_hi}L')}, "
+                    f"{rng('0L', '_xl')}) "
+                    f"WHEN _cross THEN array({rng('0L', f'{n_hi}L')}) "
+                    f"ELSE array({rng('_xl', '_xr')}) END"),
+        ("_ty0", WM.tile_y_sql("`top`", zoom)),
+        ("_y1", WM.tile_y_sql("`bottom`", zoom)),
+        ("_y0", "_ty0"),
+    ]
     if max_tiles_per_polygon is not None:
-        n_tiles = x_count * (F.col("_y1") - F.col("_y0") + 1)
-        msg = F.concat(
-            F.lit("tile_cover: geometry "), F.col(id_col).cast("string"),
-            F.lit(f" overlaps > {max_tiles_per_polygon} tiles at zoom "
-                  f"{zoom}; tile at a coarser zoom or raise "
-                  f"max_tiles_per_polygon"))
-        d = d.withColumn("_y0", F.when(
-            n_tiles <= F.lit(int(max_tiles_per_polygon)), F.col("_y0")
-        ).otherwise(F.raise_error(msg).cast("long")))
-    return (d.withColumn("_r", F.explode("_xr"))
-             .withColumn("x", F.explode(F.sequence(F.col("_r.lo"),
-                                                   F.col("_r.hi"))))
-             .withColumn("y", F.explode(F.sequence("_y0", "_y1")))
-             .withColumn("z", F.lit(zoom).cast("int"))
-             .drop("_xr", "_r", "_y0", "_y1"))
+        x_count = (f"CASE WHEN _two THEN ({n_hi}L - _xr + 1) + (_xl + 1) "
+                   f"WHEN _cross THEN {n_hi + 1}L ELSE _xr - _xl + 1 END")
+        msg = (f"concat('tile_cover: geometry ', "
+               f"CAST(`{id_col}` AS STRING), ' overlaps > "
+               f"{max_tiles_per_polygon} tiles at zoom {zoom}; tile at a "
+               f"coarser zoom or raise max_tiles_per_polygon')")
+        steps[-1] = ("_y0", f"CASE WHEN ({x_count}) * (_y1 - _ty0 + 1) <= "
+                            f"{int(max_tiles_per_polygon)} THEN _ty0 "
+                            f"ELSE CAST(raise_error({msg}) AS BIGINT) END")
+    d = select_steps(polys, steps, keep=("_ranges", "_y0", "_y1"))
+    return (d.selectExpr("*", "explode(_ranges) AS _r")
+             .selectExpr("*", "explode(sequence(_r.lo, _r.hi)) AS x")
+             .selectExpr("*", "explode(sequence(_y0, _y1)) AS y",
+                         f"{zoom} AS z")
+             .drop("_ranges", "_r", "_y0", "_y1"))
 
 
 def _tile_frame(pts: np.ndarray, row_of_pt: np.ndarray, xr: np.ndarray,
@@ -553,7 +556,7 @@ def build_vector_tiles(polys: DataFrame, zoom: int, extent: int = 4096,
     """Polygons (polygon_id, rings, left/bottom/right/top) → per-tile
     clipped + simplified + quantized features (FEATURE_SCHEMA).
 
-    One stage end-to-end: scan → tile fan-out (Column explode) →
+    One stage end-to-end: scan → tile fan-out (SQL steps + explode) →
     mapInPandas kernel; no shuffle until the caller aggregates.
     ``buffer_px`` is the published MVT overzoom margin (vertices up to
     that many pixels outside the tile are kept so adjacent tiles render
@@ -714,36 +717,32 @@ def tile_points(points: DataFrame, zoom: int, extent: int = 4096,
     the published MVT overzoom convention, same margin as the
     polygon/line kernels).
 
-    Pure Column math — continuous tile coords, a 3×3 neighbor explode,
-    one filter; zero shuffle, whole-stage codegen end-to-end, and fully
-    SQL-expressible (the oracle reproduces it with a VALUES cross
-    join).  x wraps modulo 2^z so the antimeridian seam duplicates
-    like any other tile edge; y clamps (no wrap past the poles)."""
-    nt = 1 << zoom
-    fx = WM.tile_xc_col(F.col("lon"), zoom)
-    fy = WM.tile_yc_col(F.col("lat"), zoom)
-    d = (points.select(F.col(id_col), fx.alias("_fx"), fy.alias("_fy"))
-         .withColumn("_bx", F.floor("_fx").cast("long"))
-         .withColumn("_by", F.floor("_fy").cast("long"))
-         .withColumn("_dx", F.explode(F.array(
-             F.lit(-1), F.lit(0), F.lit(1))))
-         .withColumn("_dy", F.explode(F.array(
-             F.lit(-1), F.lit(0), F.lit(1)))))
-    tx0 = F.col("_bx") + F.col("_dx")
-    ty = F.col("_by") + F.col("_dy")
-    px = (F.col("_fx") - tx0) * F.lit(float(extent))
-    py = (F.col("_fy") - ty) * F.lit(float(extent))
-    b = float(buffer_px)
-    keep = ((px >= F.lit(-b)) & (px <= F.lit(float(extent) + b))
-            & (py >= F.lit(-b)) & (py <= F.lit(float(extent) + b))
-            & (ty >= F.lit(0)) & (ty <= F.lit(int(nt - 1))))
-    return (d.filter(keep)
-            .select(F.col(id_col),
-                    F.lit(zoom).cast("int").alias("z"),
-                    F.pmod(tx0, F.lit(int(nt))).cast("long").alias("x"),
-                    ty.cast("long").alias("y"),
-                    F.floor(px + F.lit(0.5)).cast("int").alias("px"),
-                    F.floor(py + F.lit(0.5)).cast("int").alias("py")))
+    SQL text — continuous tile coords, a 3×3 neighbor explode, SQL
+    steps, one filter; zero shuffle, whole-stage codegen end-to-end,
+    and fully SQL-expressible (the oracle reproduces it with a VALUES
+    cross join).  x wraps modulo 2^z so the antimeridian seam
+    duplicates like any other tile edge; y clamps (no wrap past the
+    poles)."""
+    nt, ext, b = 1 << zoom, float(extent), float(buffer_px)
+    offsets = ", ".join(f"named_struct('_dx', {dx}, '_dy', {dy})"
+                        for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+    d = (points.selectExpr(f"`{id_col}`",
+                           f"{WM.tile_xc_sql('`lon`', zoom)} AS _fx",
+                           f"{WM.tile_yc_sql('`lat`', zoom)} AS _fy")
+         .selectExpr("*", f"inline(array({offsets}))"))
+    d = select_steps(d, [("_tx", "floor(_fx) + _dx"),
+                         ("_ty", "floor(_fy) + _dy"),
+                         ("_px", f"(_fx - _tx) * {ext}D"),
+                         ("_py", f"(_fy - _ty) * {ext}D")],
+                     keep=("_tx", "_ty", "_px", "_py"))
+    return (d.filter(f"_px >= {-b}D AND _px <= {ext + b}D AND "
+                     f"_py >= {-b}D AND _py <= {ext + b}D AND "
+                     f"_ty >= 0 AND _ty <= {nt - 1}")
+            .selectExpr(f"`{id_col}`", f"CAST({zoom} AS INT) AS z",
+                        f"CAST(pmod(_tx, {nt}) AS BIGINT) AS x",
+                        "CAST(_ty AS BIGINT) AS y",
+                        "CAST(floor(_px + 0.5D) AS INT) AS px",
+                        "CAST(floor(_py + 0.5D) AS INT) AS py"))
 
 
 def _sorted_runs(df: DataFrame, keys, order, emit, schema) -> DataFrame:
@@ -933,15 +932,16 @@ def encode_mvt_layers(layers, extent: int = 4096) -> DataFrame:
 
 
 def tile_morton_col(x, y) -> "F.Column":
-    """Raw Morton interleave of tile x/y (no lead bit) — the 1-D sort
-    key of the tile store: 2-D tile locality == 1-D id locality, so a
-    morton-RANGE-sharded store serves a bbox region from a handful of
-    shards (same read-path story as the S2 Hilbert id,
-    spatial_join.s2_read_region_pruned). Valid for zoom ≤ 16 (the
-    16-bit interleave of functions/cells.morton_col)."""
+    """Raw Morton interleave of tile x/y columns (names; no lead bit) —
+    the 1-D sort key of the tile store: 2-D tile locality == 1-D id
+    locality, so a morton-RANGE-sharded store serves a bbox region
+    from a handful of shards (same read-path story as the S2 Hilbert
+    id, spatial_join.s2_read_region_pruned). One ``F.expr`` of the
+    inlined functions/cells.morton_steps chain; valid for zoom ≤ 16
+    (tile indices below 2^16)."""
     from ..functions import cells as C
-    return C.morton_col(F.col(x) if isinstance(x, str) else x,
-                        F.col(y) if isinstance(y, str) else y)
+    from ..functions.steps import inline_sql
+    return F.expr(inline_sql(C.morton_steps(x, y, "_m")))
 
 
 def morton_ranges_for_rect(x0: int, x1: int, y0: int, y1: int, zoom: int,
@@ -988,9 +988,8 @@ def read_tile_region(table, spark, zoom: int, left: float, bottom: float,
     filter. Returns (DataFrame, kept partition names) — the
     tile-serving path of a 100 TB tile store: no file listing, no full
     scan."""
-    from ..functions import webmercator as WM2
-    x0a, y0a = WM2.tile_xy_np(np.array([top]), np.array([left]), zoom)
-    x1a, y1a = WM2.tile_xy_np(np.array([bottom]), np.array([right]), zoom)
+    x0a, y0a = WM.tile_xy_np(np.array([top]), np.array([left]), zoom)
+    x1a, y1a = WM.tile_xy_np(np.array([bottom]), np.array([right]), zoom)
     x0, x1 = int(x0a[0]), int(x1a[0])
     y0, y1 = int(y0a[0]), int(y1a[0])
     ranges = morton_ranges_for_rect(x0, x1, y0, y1, zoom)
@@ -1076,7 +1075,7 @@ def retile(polys: DataFrame, changed_polys: DataFrame,
 
     A tile's content depends on EVERY polygon overlapping it, not just
     the changed ones — so the rebuild runs the full polygon table
-    through the (cheap, Column-only) fan-out and semi-joins it down to
+    through the (cheap, SQL-only) fan-out and semi-joins it down to
     the dirty tile set BEFORE the clip kernel: kernel work is
     proportional to the dirty area, the full-table pass is a
     scan+explode with no shuffle. The caller overwrites exactly the
@@ -1104,7 +1103,7 @@ def render_heatmap_tiles(points: DataFrame, zoom: int, size: int = 256,
     10^12-image rendering path: density tiles of the image corpus).
 
     Two stages, both scale-safe:
-    1. Column math assigns every point its (tile, pixel) bin at
+    1. SQL text assigns every point its (tile, pixel) bin at
        ``zoom`` (continuous Mercator coords, floor/fraction split) and
        a groupBy reduces 10^12 points to ≤ size² counted bins per tile
        — the ONLY pass over the full table, with map-side partial
@@ -1117,11 +1116,8 @@ def render_heatmap_tiles(points: DataFrame, zoom: int, size: int = 256,
 
     PNG bytes are deterministic: bin counts are exact integers and the
     per-tile normalization uses only the tile's own data."""
-    from ..functions import webmercator as WM2
-
-    xc = WM2.tile_xc_col(F.col(lon), zoom)
-    yc = WM2.tile_yc_col(F.col(lat), zoom)
-    d = (points.select(xc.alias("_xc"), yc.alias("_yc"))
+    d = (points.selectExpr(f"{WM.tile_xc_sql(f'`{lon}`', zoom)} AS _xc",
+                           f"{WM.tile_yc_sql(f'`{lat}`', zoom)} AS _yc")
          .select(F.floor("_xc").cast("long").alias("x"),
                  F.floor("_yc").cast("long").alias("y"),
                  F.least(F.floor((F.col("_xc") % 1.0) * size),
@@ -1149,8 +1145,6 @@ def render_heatmap_pyramid(points: DataFrame, zooms, size: int = 256,
     pixel = gx & (size-1)). ``zooms`` strictly decreasing. Each
     level's bins are pinned with a lazy localCheckpoint (fan-out rule:
     the painter and the next cascade step both consume them)."""
-    from ..functions import webmercator as WM2
-
     zooms = list(zooms)
     if len(zooms) < 1 or len(set(zooms)) != len(zooms) or \
             zooms != sorted(zooms, reverse=True):
@@ -1159,9 +1153,9 @@ def render_heatmap_pyramid(points: DataFrame, zooms, size: int = 256,
     if size != (1 << lg):
         raise ValueError("size must be a power of two")
     z0 = zooms[0]
-    gx = F.floor(WM2.tile_xc_col(F.col(lon), z0) * size).cast("long")
-    gy = F.floor(WM2.tile_yc_col(F.col(lat), z0) * size).cast("long")
-    cur = (points.select(gx.alias("gx"), gy.alias("gy"))
+    gx = f"CAST(floor({WM.tile_xc_sql(f'`{lon}`', z0)} * {size}) AS BIGINT)"
+    gy = f"CAST(floor({WM.tile_yc_sql(f'`{lat}`', z0)} * {size}) AS BIGINT)"
+    cur = (points.selectExpr(f"{gx} AS gx", f"{gy} AS gy")
            .groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("n"))
            .localCheckpoint(eager=False))
     out = None

@@ -33,6 +33,7 @@ from .functions import geohash as _GH
 from .functions import s2 as S2
 from .functions import webmercator as _WM
 from .functions.hashing import hash64_sql
+from .functions.steps import select_steps
 from .jobs.engine_zip import build_engine_zip
 from .operators import ann as ANN
 from .operators import dedup as DD
@@ -323,8 +324,9 @@ FROM tb t JOIN rects r
 
 def q_c1_zorder_tile(spark, sf_dir):
     img = images_probe(spark, sf_dir).filter(F.expr("img_id % 37 = 0"))
-    return img.select("img_id",
-                      C.zorder_tile_col(F.col("lat"), F.col("lon")).alias("tile"))
+    return select_steps(img.select("img_id", "lat", "lon"),
+                        C.zorder_tile_steps("lat", "lon", "tile"),
+                        keep=("tile",)).select("img_id", "tile")
 
 
 SQL_C1 = f"""
@@ -336,7 +338,8 @@ FROM images WHERE img_id % 37 = 0
 
 def q_agg_cell_rollup(spark, sf_dir):
     img = SJ.tag_probe_cells(images_probe(spark, sf_dir), RES_JOIN)
-    return (img.withColumn("cell5", C.cell_parent_col(F.col("cell"), RES_JOIN - 5))
+    return (img.withColumn("cell5",
+                           F.expr(C.cell_parent_sql("cell", RES_JOIN - 5)))
             .groupBy("cell5").agg(F.count("*").alias("n_images")))
 
 
@@ -704,7 +707,7 @@ def q_rollup_multires(spark, sf_dir):
     geometry."""
     img = SJ.tag_probe_cells(images_probe(spark, sf_dir), 5)
     img = (img.withColumnRenamed("cell", "cell5")
-           .withColumn("cell3", C.cell_parent_col(F.col("cell5"), 2)))
+           .withColumn("cell3", F.expr(C.cell_parent_sql("cell5", 2))))
     return (img.rollup("cell3", "cell5")
             .agg(F.count("*").alias("n_images"),
                  F.grouping_id().alias("gid"))
@@ -2155,14 +2158,14 @@ def q_s2_cellid(spark, sf_dir):
     """Level-30 S2 leaf id + level-10 ancestor + descendant range per
     lineitem row — the full encode path (face, quadratic ST, 30-level
     Hilbert scan) plus the bit-math hierarchy ops, all whole-stage
-    codegen Column expressions (no UDF). Hash-compared against the
+    codegen SQL text (no UDF). Hash-compared against the
     identical algorithm generated as DuckDB SQL."""
     pts = _s2_points(spark, sf_dir, ("l_orderkey", "l_linenumber"))
-    return pts.select(
+    return pts.selectExpr(
         "l_orderkey", "l_linenumber", "s2_cell",
-        S2.s2_parent_col(F.col("s2_cell"), 10).alias("s2_p10"),
-        S2.s2_range_min_col(F.col("s2_cell")).alias("s2_rmin"),
-        S2.s2_range_max_col(F.col("s2_cell")).alias("s2_rmax"))
+        f"{S2.s2_parent_sql('s2_cell', 10)} AS s2_p10",
+        f"{S2.s2_range_min_sql('s2_cell')} AS s2_rmin",
+        f"{S2.s2_range_max_sql('s2_cell')} AS s2_rmax")
 
 
 SQL_S2CELL = f"""
@@ -2190,19 +2193,19 @@ def q_s2_containment_join(spark, sf_dir):
     pts = (_s2_points(spark, sf_dir, ("l_orderkey", "l_quantity"))
            .localCheckpoint(eager=False))
     cov4 = (pts.filter(F.col("l_orderkey") % 97 == 0)
-            .select(S2.s2_parent_col(F.col("s2_cell"), 4).alias("cover_id"))
+            .selectExpr(f"{S2.s2_parent_sql('s2_cell', 4)} AS cover_id")
             .distinct())
     cov8 = (pts.filter(F.col("l_orderkey") % 193 == 0)
-            .select(S2.s2_parent_col(F.col("s2_cell"), 8).alias("cover_id"))
+            .selectExpr(f"{S2.s2_parent_sql('s2_cell', 8)} AS cover_id")
             .distinct())
     covers = cov4.unionByName(cov8)
     joined = SJ.s2_containment_join(pts, covers)
     return (joined.groupBy("cover_id")
             .agg(F.count(F.lit(1)).alias("n_points"),
                  F.sum("l_quantity").alias("qty_sum"))
-            .select("cover_id",
-                    S2.s2_level_col(F.col("cover_id")).alias("cover_level"),
-                    "n_points", "qty_sum"))
+            .selectExpr("cover_id",
+                        f"{S2.s2_level_sql('cover_id')} AS cover_level",
+                        "n_points", "qty_sum"))
 
 
 SQL_S2CONTAIN = f"""
@@ -2317,16 +2320,16 @@ def q_tile_geohash(spark, sf_dir):
     the ancestor by SUBSTRING; the DuckDB oracle derives it
     ARITHMETICALLY from 5-bit-coarsened lon/lat bins (x>>5, y>>5), so
     hash equality PROVES the geohash prefix property rather than
-    reimplementing the substring (the SQL_TILE_QK pattern). Pure
-    Column math — Morton interleave + conv/lpad/translate onto the
+    reimplementing the substring (the SQL_TILE_QK pattern). SQL
+    steps — Morton interleave + conv/lpad/translate onto the
     published base-32 alphabet — zero shuffle, no UDF; golden vector
     (57.64911, 10.40744)@10 = 'u4pruydqqv' pinned in test_geohash.py."""
     from .functions import geohash as GH
 
-    img = images_probe(spark, sf_dir)
-    gh = GH.geohash_col(F.col("lat"), F.col("lon"), 8)
-    return img.select("img_id", gh.alias("gh"),
-                      F.substring(gh, 1, 6).alias("gh_parent"))
+    img = images_probe(spark, sf_dir).select("img_id", "lat", "lon")
+    return select_steps(img, GH.geohash_steps("lat", "lon", 8, "gh"),
+                        keep=("gh",)).selectExpr(
+        "img_id", "gh", "substring(gh, 1, 6) AS gh_parent")
 
 
 _GH_N8 = 1 << 20  # lon/lat bins per axis at precision 8 (5*8/2 bits)
@@ -2366,9 +2369,9 @@ def q_coverage_audit(spark, sf_dir):
     matched = (SJ.spatial_join_rect(img, rects, res=RES_JOIN)
                .select("img_id").distinct())
     unmatched = img.join(matched, "img_id", "left_anti")
-    return (unmatched
-            .groupBy(C.cell_at_col(F.col("lat"), F.col("lon"), 4)
-                     .alias("cell"))
+    return (select_steps(unmatched, C.cell_steps("lat", "lon", 4, "cell"),
+                         keep=("cell",))
+            .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_unmatched"),
                  F.min("img_id").alias("min_img"),
                  F.max("img_id").alias("max_img")))
@@ -2831,13 +2834,14 @@ def q_s2_cap_cover_join(spark, sf_dir):
                                  "cap_id INT, cap_lat DOUBLE, "
                                  "cap_lon DOUBLE, cap_r DOUBLE")
     img = images_probe(spark, sf_dir)
-    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     pts = S2.with_s2_cell(
-        img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
-        F.col("px"), F.col("py"), F.col("pz"))
+        S2.with_latlon_xyz(img.select("img_id", "lat", "lon"), "lat", "lon")
+        .drop("lat", "lon"), "px", "py", "pz")
     cand = SJ.s2_containment_join(pts, covers)
-    qx, qy, qz = S2.latlon_xyz_cols("cap_lat", "cap_lon")
-    dot = (F.col("px") * qx + F.col("py") * qy + F.col("pz") * qz)
+    dot = F.expr(" + ".join(
+        f"{p} * ({q})" for p, q in zip(("px", "py", "pz"),
+                                     S2.latlon_xyz_sql("cap_lat",
+                                                       "cap_lon"))))
     hit = F.when(dot >= F.cos(F.col("cap_r")), 1).otherwise(0)
     return (cand.join(F.broadcast(caps), "cap_id")
             .groupBy("cap_id")
@@ -2881,10 +2885,9 @@ def q_s2_polygon_cover_join(spark, sf_dir):
             np.asarray(las), np.asarray(los), max_level=10, max_cells=256)]
     covers = spark.createDataFrame(cover_rows, "poly_id INT, cover_id LONG")
     img = images_probe(spark, sf_dir)
-    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     pts = S2.with_s2_cell(
-        img.select("img_id", x.alias("px"), y.alias("py"), z.alias("pz")),
-        F.col("px"), F.col("py"), F.col("pz"))
+        S2.with_latlon_xyz(img.select("img_id", "lat", "lon"), "lat", "lon")
+        .drop("lat", "lon"), "px", "py", "pz")
     cand = SJ.s2_containment_join(pts, covers)
     polys = {pid: np.stack(S2._latlon_xyz_np(np.asarray(las),
                                              np.asarray(los)), axis=1)
@@ -2972,15 +2975,15 @@ def q_tile_point_assign(spark, sf_dir):
     zoom/x/y scheme, functions/webmercator.py) at z=7, aggregated per
     tile — the delivery-keyed sibling of c1_zorder_tile's reference
     Morton tile (/root/reference/src/osm/apidb_dump/sql.rs:50-61).
-    Pure Column math (radians/tan/log stay in codegen); one shuffle
-    (the tile groupBy)."""
+    SQL text shared with the oracle (radians/tan/ln stay in codegen);
+    one shuffle (the tile groupBy)."""
     from .functions import webmercator as WM
 
     img = images_probe(spark, sf_dir)
-    d = img.select(
+    d = img.selectExpr(
         "img_id",
-        WM.tile_x_col(F.col("lon"), TILE_Z_PT).alias("tx"),
-        WM.tile_y_col(F.col("lat"), TILE_Z_PT).alias("ty"))
+        f"{WM.tile_x_sql('lon', TILE_Z_PT)} AS tx",
+        f"{WM.tile_y_sql('lat', TILE_Z_PT)} AS ty")
     return (d.groupBy("tx", "ty")
             .agg(F.count(F.lit(1)).alias("n_images"),
                  F.min("img_id").alias("min_img"))
@@ -3010,17 +3013,16 @@ def q_tile_quadkey(spark, sf_dir):
     DuckDB oracle derives it ARITHMETICALLY from the z-4 tile indices
     (x>>3, y>>3), so hash equality PROVES the prefix property, not
     just reimplements it (the ring_centroid independent-closed-form
-    pattern). Pure Column math: Morton bit-interleave + conv/lpad,
+    pattern). SQL steps: Morton bit-interleave + conv/lpad,
     zero shuffle, no UDF."""
     from .functions import webmercator as WM
 
-    img = images_probe(spark, sf_dir)
-    qk = WM.quadkey_col(WM.tile_x_col(F.col("lon"), TILE_Z_PT),
-                        WM.tile_y_col(F.col("lat"), TILE_Z_PT),
-                        TILE_Z_PT)
-    return img.select(
-        "img_id", qk.alias("qk"),
-        F.substring(qk, 1, TILE_Z_PT - 3).alias("qk_parent"))
+    img = images_probe(spark, sf_dir).select("img_id", "lat", "lon")
+    steps = [("_tx", WM.tile_x_sql("lon", TILE_Z_PT)),
+             ("_ty", WM.tile_y_sql("lat", TILE_Z_PT)),
+             *WM.quadkey_steps("_tx", "_ty", TILE_Z_PT, "qk")]
+    return select_steps(img, steps, keep=("qk",)).selectExpr(
+        "img_id", "qk", f"substring(qk, 1, {TILE_Z_PT - 3}) AS qk_parent")
 
 
 SQL_TILE_QK = f"""
@@ -3080,10 +3082,10 @@ def q_tile_pyramid(spark, sf_dir):
     from .operators import tiles as TL
 
     img = images_probe(spark, sf_dir)
-    leaf = img.select(
+    leaf = img.selectExpr(
         "img_id",
-        _WM.tile_x_col(F.col("lon"), TILE_PYR_ZOOMS[0]).alias("x"),
-        _WM.tile_y_col(F.col("lat"), TILE_PYR_ZOOMS[0]).alias("y"))
+        f"{_WM.tile_x_sql('lon', TILE_PYR_ZOOMS[0])} AS x",
+        f"{_WM.tile_y_sql('lat', TILE_PYR_ZOOMS[0])} AS y")
     return TL.tile_pyramid_rollup(
         leaf, TILE_PYR_ZOOMS,
         {"n_images": ("count", "img_id"), "min_img": ("min", "img_id")})
@@ -3272,7 +3274,7 @@ def q_vector_tile_points(spark, sf_dir):
     in-tile pixel position, INCLUDING buffer-margin duplicates into
     adjacent tiles (the published MVT overzoom convention — a marker
     16 px from a tile edge also renders in the neighbor; x wraps at the
-    antimeridian seam). Pure Column math (operators/tiles.tile_points:
+    antimeridian seam). SQL text (operators/tiles.tile_points:
     continuous tile coords + 3×3 neighbor explode + one filter), zero
     shuffle, whole-stage codegen end-to-end. FULLY ORACLED: the DuckDB
     twin reproduces the fan-out with a VALUES cross join on identical

@@ -469,18 +469,20 @@ def apidb_tables_from_elements(els: DataFrame) -> dict[str, DataFrame]:
     """Decompose the unified element frame into the apidb star schema,
     including derived current_* tables and synthesized dimensions."""
     from ..functions import cells as C
+    from ..functions.steps import select_steps
 
     nodes_e = els.filter(F.col("etype") == "node")
     ways_e = els.filter(F.col("etype") == "way")
     rels_e = els.filter(F.col("etype") == "relation")
 
-    nodes = nodes_e.select(
+    nodes = select_steps(nodes_e, C.zorder_tile_steps("lat", "lon", "tile"),
+                         keep=("tile",)).select(
         F.col("id").alias("node_id"),
         _signed_round_e7(F.col("lat")).cast("int").alias("latitude"),
         _signed_round_e7(F.col("lon")).cast("int").alias("longitude"),
         F.col("changeset").alias("changeset_id"),
         "visible", "timestamp",
-        C.zorder_tile_col(F.col("lat"), F.col("lon")).alias("tile"),
+        "tile",
         F.col("version").cast("long").alias("version"),
         F.lit(None).cast("long").alias("redaction_id"))
 
@@ -587,12 +589,14 @@ def apidb_tables_from_elements(els: DataFrame) -> dict[str, DataFrame]:
     from ..operators.current import latest_version
 
     cur_nodes_full = latest_version(nodes_e).filter("visible")
-    current_nodes = cur_nodes_full.select(
+    current_nodes = select_steps(
+        cur_nodes_full, C.zorder_tile_steps("lat", "lon", "tile"),
+        keep=("tile",)).select(
         F.col("id"),
         _signed_round_e7(F.col("lat")).cast("int").alias("latitude"),
         _signed_round_e7(F.col("lon")).cast("int").alias("longitude"),
         F.col("changeset").alias("changeset_id"), "visible", "timestamp",
-        C.zorder_tile_col(F.col("lat"), F.col("lon")).alias("tile"),
+        "tile",
         F.col("version").cast("long").alias("version"))
     current_node_tags = (cur_nodes_full.select(
         F.col("id").alias("node_id"), F.explode("tags").alias("t"))

@@ -230,18 +230,20 @@ def stream_cell_enrich(events: DataFrame, polygons_cells: DataFrame,
     cell, and broadcast-join against a static polygon-cover table —
     stream-static joins need no state and keep the J7 plan shape."""
     from ..functions import cells as C
+    from ..functions.steps import select_steps
     lat = (F.col("user_id") * 2654435761 % 120000000) / 1e6 - 60.0
     lon = (F.col("user_id") * 2971215073 % 360000000) / 1e6 - 180.0
-    tagged = (events
-              .withColumn("lat", lat).withColumn("lon", lon)
-              .withColumn("cell", C.cell_at_col(F.col("lat"), F.col("lon"), res)))
+    tagged = select_steps(events.withColumn("lat", lat)
+                          .withColumn("lon", lon),
+                          C.cell_steps("lat", "lon", res, "cell"),
+                          keep=("cell",))
     return tagged.join(F.broadcast(polygons_cells), on="cell", how="inner")
 
 
 def stream_s2_enrich(events: DataFrame, covers: DataFrame) -> DataFrame:
     """Stateless streaming enrichment on the TRUE S2 index (round 5):
     geotag from user_id (same deterministic feed as
-    stream_cell_enrich), leaf S2 cell via the pure-Column LOOKUP4
+    stream_cell_enrich), leaf S2 cell via the SQL-step LOOKUP4
     encode — a stateless projection chain, so it runs unchanged under
     Structured Streaming — then the hierarchical containment join
     against a STATIC cover table (each event's ancestors at the
@@ -252,11 +254,11 @@ def stream_s2_enrich(events: DataFrame, covers: DataFrame) -> DataFrame:
     from ..operators.spatial_join import s2_containment_join
     lat = (F.col("user_id") * 2654435761 % 120000000) / 1e6 - 60.0
     lon = (F.col("user_id") * 2971215073 % 360000000) / 1e6 - 180.0
-    x, y, z = S2.latlon_xyz_cols("lat", "lon")
     tagged = S2.with_s2_cell(
-        events.withColumn("lat", lat).withColumn("lon", lon)
-        .withColumn("_x", x).withColumn("_y", y).withColumn("_z", z),
-        F.col("_x"), F.col("_y"), F.col("_z"))
+        S2.with_latlon_xyz(events.withColumn("lat", lat)
+                           .withColumn("lon", lon), "lat", "lon",
+                           ("_x", "_y", "_z")),
+        "_x", "_y", "_z")
     return s2_containment_join(tagged.drop("_x", "_y", "_z"), covers)
 
 
@@ -306,8 +308,8 @@ def tile_density_stream(events: DataFrame, zoom: int = 7,
                         window: str = "1 hour",
                         watermark: str = "30 minutes") -> DataFrame:
     """Streaming spatio-temporal density: the heatmap sink's binning
-    under Structured Streaming — stateless slippy tile assign (pure
-    Column, runs unchanged in a stream) + WATERMARKED tumbling-window
+    under Structured Streaming — stateless slippy tile assign (SQL
+    text, runs unchanged in a stream) + WATERMARKED tumbling-window
     counts per (window, tile). State is bounded by watermark × live
     tiles; at 10^12-image feed scale the map-side partial aggregation
     reduces each microbatch to ≤ live-tile cardinality before the
@@ -317,8 +319,8 @@ def tile_density_stream(events: DataFrame, zoom: int = 7,
     lat = (F.col("user_id") * 2654435761 % 120000000) / 1e6 - 60.0
     lon = (F.col("user_id") * 2971215073 % 360000000) / 1e6 - 180.0
     d = (events.withColumn("lat", lat).withColumn("lon", lon)
-         .withColumn("tx", WM.tile_x_col(F.col("lon"), zoom))
-         .withColumn("ty", WM.tile_y_col(F.col("lat"), zoom)))
+         .selectExpr("*", f"{WM.tile_x_sql('lon', zoom)} AS tx",
+                     f"{WM.tile_y_sql('lat', zoom)} AS ty"))
     return (d.withWatermark("ts", watermark)
             .groupBy(F.window("ts", window).alias("win"), "tx", "ty")
             .agg(F.count(F.lit(1)).alias("n"))

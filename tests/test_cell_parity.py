@@ -56,10 +56,8 @@ def _check(df, col, name):
 
 @pytest.mark.parametrize("level", [int(v) for v in _FIX["s2_levels"]])
 def test_s2_cells_of_points(points, level):
-    base = points.selectExpr("*", *[
-        f"{e} AS {n}" for e, n in zip(S2.latlon_xyz_sql("lat", "lon"),
-                                      ("px", "py", "pz"))])
-    _check(S2.with_s2_cell(base, "px", "py", "pz", level=level),
+    _check(S2.with_s2_cell(S2.with_latlon_xyz(points, "lat", "lon"),
+                           "px", "py", "pz", level=level),
            "s2_cell", f"s2_latlon_L{level}")
 
 

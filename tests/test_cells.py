@@ -1,4 +1,4 @@
-"""Cell index: three-way parity (numpy / Spark Column / DuckDB SQL) and
+"""Cell index: three-way parity (numpy / Spark SQL steps / DuckDB SQL) and
 hierarchy invariants. The numpy zorder tile is additionally checked
 against a literal port of the reference loop
 (/root/reference/src/osm/apidb_dump/sql.rs:50-61)."""
@@ -6,9 +6,9 @@ against a literal port of the reference loop
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osm_io_spark.functions import cells
+from osm_io_spark.functions.steps import select_steps
 
 RNG = np.random.default_rng(7)
 LAT = RNG.uniform(-90, 90, 500)
@@ -39,8 +39,8 @@ def test_zorder_tile_spark_and_sql_parity(spark, duck):
     pdf = pd.DataFrame({"lat": LAT, "lon": LON})
     want = cells.zorder_tile_np(LAT, LON)
 
-    df = spark.createDataFrame(pdf).withColumn(
-        "t", cells.zorder_tile_col(F.col("lat"), F.col("lon")))
+    df = select_steps(spark.createDataFrame(pdf),
+                      cells.zorder_tile_steps("lat", "lon", "t"), keep=("t",))
     got_spark = np.array([r.t for r in df.select("t").collect()])
     assert (np.sort(got_spark) == np.sort(want)).all()
 
@@ -66,8 +66,8 @@ def test_cell_at_parity_and_roundtrip(spark, duck, res):
     ).df()["c"].to_numpy()
     assert (got_sql == c).all()
 
-    df = spark.createDataFrame(pdf).withColumn(
-        "c", cells.cell_at_col(F.col("lat"), F.col("lon"), res))
+    df = select_steps(spark.createDataFrame(pdf),
+                      cells.cell_steps("lat", "lon", res, "c"), keep=("c",))
     got_spark = np.sort(np.array([r.c for r in df.select("c").collect()]))
     assert (got_spark == np.sort(c)).all()
 
@@ -114,3 +114,19 @@ def test_cover_bbox():
     lon = RNG.uniform(-10, 10, 200)
     pts = cells.cell_at_np(lat, lon, res)
     assert set(pts.tolist()) <= set(cover.tolist())
+
+
+def test_cell_and_tile_encoders_have_no_column_form():
+    """Each cell and tile encoding has ONE Spark text (SQL steps or an
+    expression shared with DuckDB); a Column builder beside it would be
+    a second Spark form that can drift from the first."""
+    import inspect
+
+    from osm_io_spark.functions import geohash, s2, webmercator
+
+    twins = [f"{m.__name__}.{n}"
+             for m in (cells, webmercator, geohash, s2)
+             for n, v in vars(m).items()
+             if callable(v) and n.endswith(("_col", "_cols"))
+             and inspect.getmodule(v) is m]
+    assert not twins, twins

@@ -1,5 +1,5 @@
 """Geohash (functions/geohash.py): published golden vectors, numpy /
-Column / DuckDB-SQL tri-identity, decode-bounds containment, the
+Spark SQL steps / DuckDB-SQL tri-identity, decode-bounds containment, the
 prefix property, and the edge clamps."""
 
 from __future__ import annotations
@@ -7,9 +7,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from osm_io_spark.functions import geohash as GH
+from osm_io_spark.functions.steps import select_steps
 
 
 def test_published_golden_vectors():
@@ -36,7 +36,7 @@ def test_odd_or_oversized_precision_rejected():
 
 
 def test_three_way_parity_bounds_and_prefix(spark, duck):
-    """numpy / Column / DuckDB SQL geohashes are string-identical on
+    """numpy / Spark SQL steps / DuckDB SQL geohashes are string-identical on
     random points at every supported precision; decoded bounds contain
     the point; every hash starts with its coarser-precision hash."""
     rng = np.random.Generator(np.random.Philox(23))
@@ -47,8 +47,8 @@ def test_three_way_parity_bounds_and_prefix(spark, duck):
     prev = None
     for p in (2, 4, 6, 8, 10):
         want = GH.geohash_np(lat, lon, p)
-        got = (sdf.select(GH.geohash_col(F.col("lat"), F.col("lon"), p)
-                          .alias("gh")).toPandas()["gh"])
+        got = select_steps(sdf, GH.geohash_steps("lat", "lon", p, "gh"),
+                           keep=("gh",)).toPandas()["gh"]
         assert list(got) == want, p
         d = duck.sql(f"SELECT {GH.geohash_sql('lat', 'lon', p)} AS gh "
                      f"FROM pdf").df()["gh"]

@@ -333,11 +333,22 @@ def test_plan_build_round_trips_are_bounded(spark, py4j_round_trips):
     * ``s2_spatial_join_polygons``: 6,263 → 271 (this call also runs
       its one eager cover-stats aggregate)
 
+    and the tile fan-out and kNN, with the cell and tile encoders'
+    Column builders → with their SQL text:
+
+    * ``tile_cover``: 1,126 → 55
+    * ``tile_points``: 825 → 39
+    * ``build_vector_tiles``: 1,219 → 150
+    * ``knn_join``: 84 → 78 (this call also runs its one bounded
+      collect of the build side)
+
     py4j's finalizer thread, which sends object deletions whenever
     Python garbage is collected, is not counted."""
     from osm_io_spark.functions import s2 as S2
+    from osm_io_spark.operators import knn as KNN
     from osm_io_spark.operators import raster as RAS
     from osm_io_spark.operators import spatial_join as SJ
+    from osm_io_spark.operators import tiles as TL
 
     imgs, rects, polys = _small_join_inputs(spark)
     xyz = imgs.selectExpr("img_id", "lat AS x", "lon AS y", "1.0D AS z")
@@ -353,6 +364,12 @@ def test_plan_build_round_trips_are_bounded(spark, py4j_round_trips):
             lambda: RAS.raster_vector_assign(imgs, rects, 7), 200),
         "s2_spatial_join_polygons": (
             lambda: SJ.s2_spatial_join_polygons(imgs, polys), 500),
+        "tile_cover": (lambda: TL.tile_cover(polys, 10), 200),
+        "tile_points": (
+            lambda: TL.tile_points(imgs, 10, id_col="img_id"), 150),
+        "build_vector_tiles": (
+            lambda: TL.build_vector_tiles(polys, 10), 400),
+        "knn_join": (lambda: KNN.knn_join(imgs, rects, k=2, res=5), 200),
     }
     for name, (build, bound) in calls.items():
         n0 = py4j_round_trips()
@@ -380,3 +397,27 @@ def test_s2_polygon_join_build_runs_one_aggregate(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(jobs) == 3, sorted(jobs)
+
+
+def test_knn_build_runs_one_bounded_collect(spark):
+    """Building ``knn_join`` fetches at most ``_SMALL_BUILD + 1`` build
+    rows in ONE collect, which both routes (duplicates count) and, on
+    the small-build route, is the build matrix. Before, a
+    ``build.count()`` ran first and a ``toPandas()`` of the deduped
+    build second: 6 Spark jobs on this 50-row, 3-partition build; now
+    2 (the limit's two passes)."""
+    from osm_io_spark.operators import knn as KNN
+
+    imgs, _, _ = _small_join_inputs(spark)
+    build = spark.createDataFrame(
+        [(i, float(i % 7), float(i % 11)) for i in range(50)],
+        "polygon_id long, clat double, clon double").repartition(3)
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_build", "build only")
+    try:
+        KNN.knn_join(imgs, build, k=2, res=5)
+        jobs = sc.statusTracker().getJobIdsForGroup("knn_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 2, sorted(jobs)

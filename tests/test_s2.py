@@ -88,7 +88,9 @@ def test_numpy_vs_duckdb_bit_identical():
     assert set(pr.lv.tolist()) == {30}
 
 
-def test_numpy_vs_column_bit_identical(spark):
+def test_numpy_vs_column_bit_identical(spark, duck):
+    """numpy, the Spark SQL steps and text, and the DuckDB text agree:
+    leaf and level-9 cells, parent and level bit math."""
     x, y, z = _random_dirs(seed=11)
     with np.errstate(divide="ignore", invalid="ignore"):
         want30 = s2.s2_from_xyz_np(x, y, z)
@@ -96,13 +98,18 @@ def test_numpy_vs_column_bit_identical(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(len(x)), "x": x, "y": y, "z": z}))
     out = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
-           .select("pid", "s2_cell",
-                   s2.s2_parent_col(F.col("s2_cell"), 9).alias("p9"),
-                   s2.s2_level_col(F.col("s2_cell")).alias("lv"))
+           .selectExpr("pid", "s2_cell",
+                       f"{s2.s2_parent_sql('s2_cell', 9)} AS p9",
+                       f"{s2.s2_level_sql('s2_cell')} AS lv")
            .toPandas().sort_values("pid"))
     assert np.array_equal(out.s2_cell.to_numpy(), want30)
     assert np.array_equal(out.p9.to_numpy(), want9)  # prefix property
     assert set(out.lv.tolist()) == {30}
+    duck.register("s2_leaves", pd.DataFrame({"c": want30}))
+    d = duck.sql(f"SELECT {s2.s2_parent_sql('c', 9)} AS p9, "
+                 f"{s2.s2_level_sql('c')} AS lv FROM s2_leaves").df()
+    assert np.array_equal(d.p9.to_numpy(), want9)
+    assert set(d.lv.tolist()) == {30}
     out9 = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"), level=9)
             .select("pid", "s2_cell").toPandas().sort_values("pid"))
     assert np.array_equal(out9.s2_cell.to_numpy(), want9)
@@ -164,12 +171,12 @@ def test_containment_join_plan_is_equi_broadcast(spark):
     from osm_io_spark.plans import audit as A
     pts = _leaf_points(spark, 2000, 5)
     covers = (pts.filter(F.col("pid") % 41 == 0)
-              .select(s2.s2_parent_col(F.col("s2_cell"), 6).alias("cover_id"))
+              .selectExpr(f"{s2.s2_parent_sql('s2_cell', 6)} AS cover_id")
               .distinct()
               .unionByName(
                   pts.filter(F.col("pid") % 83 == 0)
-                  .select(s2.s2_parent_col(F.col("s2_cell"), 10)
-                          .alias("cover_id")).distinct()))
+                  .selectExpr(f"{s2.s2_parent_sql('s2_cell', 10)} "
+                              f"AS cover_id").distinct()))
     joined = s2_containment_join(pts, covers)
     plan = A.formatted_plan(joined)
     assert A.count_op(plan, "BroadcastHashJoin") == 1
@@ -223,7 +230,7 @@ def test_containment_join_shuffled_path_degrades_not_fails(spark):
     from osm_io_spark.operators.spatial_join import s2_containment_join
     pts = _leaf_points(spark, 1500, 11)
     covers = (pts.filter(F.col("pid") % 37 == 0)
-              .select(s2.s2_parent_col(F.col("s2_cell"), 7).alias("cover_id"))
+              .selectExpr(f"{s2.s2_parent_sql('s2_cell', 7)} AS cover_id")
               .distinct())
     want = _join_pairs(s2_containment_join(pts, covers))
     # without the operator's explicit hint, Catalyst still auto-

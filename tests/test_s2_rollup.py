@@ -24,13 +24,13 @@ def pts(spark):
         ((F.col("id") * 37 % 1700) / 10.0 - 85.0).alias("lat"),
         ((F.col("id") * 53 % 3600) / 10.0 - 180.0).alias("lon"),
         (F.col("id") % 97).cast("double").alias("qty"))
-    x, y, z = S2.latlon_xyz_cols("lat", "lon")
-    return S2.with_s2_cell(df, x, y, z).select("id", "qty", "s2_cell") \
+    return S2.with_s2_cell(S2.with_latlon_xyz(df, "lat", "lon"),
+                           "px", "py", "pz").select("id", "qty", "s2_cell") \
         .cache()
 
 
 def _direct(pts, level):
-    return (pts.groupBy(S2.s2_parent_col(F.col("s2_cell"), level)
+    return (pts.groupBy(F.expr(S2.s2_parent_sql("s2_cell", level))
                         .alias("cell"))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum("qty").alias("s"),

@@ -11,6 +11,7 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from osm_io_spark.functions.steps import select_steps
 from osm_io_spark.jobs import spatial_join_job
 from osm_io_spark.jobs.engine_zip import build_engine_zip
 from osm_io_spark.plans.snapshots import ResumableJob, SnapshotCatalog
@@ -306,11 +307,8 @@ def test_s2_region_read_prunes_manifest(spark, tmp_path):
                     / 1e6 * 140 - 70).alias("lat"),
                    (F.pmod(F.col("id") * 2971215073, 1_000_000)
                     / 1e6 * 360 - 180).alias("lon")))
-    x, y, z = S2.latlon_xyz_cols("lat", "lon")
-    keyed = S2.with_s2_cell(
-        pts.select("img_id", "lat", "lon", x.alias("px"), y.alias("py"),
-                   z.alias("pz")),
-        F.col("px"), F.col("py"), F.col("pz")).drop("px", "py", "pz")
+    keyed = S2.with_s2_cell(S2.with_latlon_xyz(pts, "lat", "lon"),
+                            "px", "py", "pz").drop("px", "py", "pz")
     n_parts = 16
     ranged = keyed.repartitionByRange(n_parts, "s2_cell")
 
@@ -363,9 +361,10 @@ def test_quadkey_region_read_prunes_manifest(spark, tmp_path):
                     / 1e6 * 140 - 70).alias("lat"),
                    (F.pmod(F.col("id") * 2971215073, 1_000_000)
                     / 1e6 * 360 - 180).alias("lon")))
-    keyed = pts.withColumn(
-        "qk", WM.quadkey_col(WM.tile_x_col(F.col("lon"), zoom),
-                             WM.tile_y_col(F.col("lat"), zoom), zoom))
+    keyed = select_steps(pts, [("_tx", WM.tile_x_sql("lon", zoom)),
+                               ("_ty", WM.tile_y_sql("lat", zoom)),
+                               *WM.quadkey_steps("_tx", "_ty", zoom, "qk")],
+                         keep=("qk",))
     n_parts = 16
     ranged = keyed.repartitionByRange(n_parts, "qk")
 
@@ -535,8 +534,8 @@ def test_geohash_region_read_prunes_manifest(spark, tmp_path):
                     / 1e6 * 140 - 70).alias("lat"),
                    (F.pmod(F.col("id") * 2971215073, 1_000_000)
                     / 1e6 * 360 - 180).alias("lon")))
-    keyed = pts.withColumn(
-        "gh", GH.geohash_col(F.col("lat"), F.col("lon"), 8))
+    keyed = select_steps(pts, GH.geohash_steps("lat", "lon", 8, "gh"),
+                         keep=("gh",))
     n_parts = 16
     ranged = keyed.repartitionByRange(n_parts, "gh")
 

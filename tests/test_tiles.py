@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_io_spark.functions import webmercator as WM
+from osm_io_spark.functions.steps import select_steps
 from osm_io_spark.operators import tiles as TL
 from osm_io_spark.sources.pbf import proto as P
 
@@ -54,8 +55,8 @@ def test_golden_anchor_tiles():
 
 
 def test_three_way_encode_parity(spark, duck):
-    """numpy / Column / DuckDB SQL produce identical tiles on a dense
-    deterministic grid at several zooms."""
+    """numpy / Spark SQL / DuckDB SQL (one shared text) produce
+    identical tiles on a dense deterministic grid at several zooms."""
     rng = np.random.Generator(np.random.Philox(7))
     lat = rng.uniform(-84.9, 84.9, 4000)
     lon = rng.uniform(-180.0, 179.999, 4000)
@@ -64,8 +65,8 @@ def test_three_way_encode_parity(spark, duck):
     sdf = spark.createDataFrame(pdf)
     for z in (1, 5, 12):
         nx, ny = WM.tile_xy_np(lat, lon, z)
-        got = (sdf.select(WM.tile_x_col(F.col("lon"), z).alias("x"),
-                          WM.tile_y_col(F.col("lat"), z).alias("y"))
+        got = (sdf.selectExpr(f"{WM.tile_x_sql('lon', z)} AS x",
+                              f"{WM.tile_y_sql('lat', z)} AS y")
                .toPandas())
         assert (got["x"].to_numpy() == nx).all(), z
         assert (got["y"].to_numpy() == ny).all(), z
@@ -87,7 +88,7 @@ def test_quadkey_published_golden_vectors():
 
 
 def test_quadkey_three_way_parity_roundtrip_and_prefix(spark, duck):
-    """numpy / Column / DuckDB SQL quadkeys are string-identical on a
+    """numpy / Spark SQL steps / DuckDB SQL quadkeys are string-identical on a
     dense grid; the decoder inverts them; every child key starts with
     its arithmetic parent's key (the prefix property)."""
     rng = np.random.Generator(np.random.Philox(11))
@@ -98,9 +99,9 @@ def test_quadkey_three_way_parity_roundtrip_and_prefix(spark, duck):
         y = rng.integers(0, n, 3000)
         want = WM.quadkey_np(x, y, z)
         pdf = pd.DataFrame({"x": x, "y": y})
-        got = (spark.createDataFrame(pdf)
-               .select(WM.quadkey_col(F.col("x"), F.col("y"), z)
-                       .alias("qk")).toPandas()["qk"])
+        got = select_steps(spark.createDataFrame(pdf),
+                           WM.quadkey_steps("x", "y", z, "qk"),
+                           keep=("qk",)).toPandas()["qk"]
         assert list(got) == want, z
         d = duck.sql(f"SELECT {WM.quadkey_sql('x', 'y', z)} AS qk "
                      f"FROM pdf").df()["qk"]
