@@ -180,10 +180,13 @@ def cover_bbox_np(left: float, bottom: float, right: float, top: float, res: int
 def grid_sql(c: str, res: int, offset: float, span: float) -> str:
     """Spark SQL text of one res-``res`` grid coordinate of column
     ``c`` (lon: offset 180, span 360; lat: offset 90, span 180), floor
-    and clamp as :func:`xy_at_np`."""
+    and clamp as :func:`xy_at_np`. A NULL or NaN ``c`` has no cell:
+    NULL (``least``/``greatest`` skip NULL, so the clamp alone would
+    put it in the last row or column)."""
     n = 1 << res
-    return (f"greatest(0, least({n - 1}, CAST(floor((`{c}` + {offset}D) "
-            f"/ {span}D * {float(n)}D) AS BIGINT)))")
+    return (f"CASE WHEN `{c}` IS NULL OR isnan(`{c}`) THEN NULL ELSE "
+            f"greatest(0, least({n - 1}, CAST(floor((`{c}` + {offset}D) "
+            f"/ {span}D * {float(n)}D) AS BIGINT))) END")
 
 
 def morton_steps(x: str, y: str, out: str,
@@ -194,8 +197,13 @@ def morton_steps(x: str, y: str, out: str,
     bit 2·res). Each spread step of both coordinates is one alias
     (``_<out>_mxK``, ``_<out>_myK``), so no step's text is pasted into
     the next (the :func:`_part1by1_sql` oracle text nests each step
-    twice, 32-fold in all)."""
-    cur = {"x": f"(`{x}` & 4294967295)", "y": f"(`{y}` & 4294967295)"}
+    twice, 32-fold in all). ``out`` is NULL where ``x`` or ``y`` is;
+    the spread steps read them coalesced to 0, so only the last step is
+    nullable: a join on ``out`` infers ``isnotnull(out)`` and pushes it
+    below the steps, and over nullable steps that filter would inline
+    every step (2^k-fold text, 60x slower on a 2M-row probe join)."""
+    cur = {a: f"(coalesce(`{c}`, 0) & 4294967295)"
+           for a, c in (("x", x), ("y", y))}
     steps = []
     for k, (shift, mask) in enumerate(_SPREAD_MASKS[:-1], 1):
         for a in ("x", "y"):
@@ -208,7 +216,9 @@ def morton_steps(x: str, y: str, out: str,
         v = cur[a]
         last[a] = f"(({v} | shiftleft({v}, {int(shift)})) & {int(mask)})"
     lead = "" if res is None else f"{1 << (2 * res)} | "
-    return steps + [(out, f"{lead}shiftleft({last['x']}, 1) | {last['y']}")]
+    return steps + [(out, f"CASE WHEN `{x}` IS NOT NULL AND `{y}` IS NOT "
+                          f"NULL THEN {lead}shiftleft({last['x']}, 1) | "
+                          f"{last['y']} END")]
 
 
 def cell_steps(lat: str, lon: str, res: int,
@@ -285,10 +295,15 @@ def zorder_tile_sql(lat: str, lon: str) -> str:
     return morton_sql(x, y)
 
 
-def cell_at_sql(lat: str, lon: str, res: int) -> str:
+def grid_oracle_sql(c: str, res: int, offset: float, span: float) -> str:
+    """DuckDB text of :func:`grid_sql` for SQL expression ``c``."""
     n = 1 << res
-    x = (f"greatest(0, least({n - 1}, "
-         f"CAST(floor((({lon}) + 180.0) / 360.0 * {float(n)}) AS BIGINT)))")
-    y = (f"greatest(0, least({n - 1}, "
-         f"CAST(floor((({lat}) + 90.0) / 180.0 * {float(n)}) AS BIGINT)))")
+    return (f"(CASE WHEN ({c}) IS NULL OR isnan({c}) THEN NULL ELSE "
+            f"greatest(0, least({n - 1}, CAST(floor((({c}) + {offset}) "
+            f"/ {span} * {float(n)}) AS BIGINT))) END)")
+
+
+def cell_at_sql(lat: str, lon: str, res: int) -> str:
+    x = grid_oracle_sql(lon, res, 180.0, 360.0)
+    y = grid_oracle_sql(lat, res, 90.0, 180.0)
     return f"({1 << (2 * res)} | {morton_sql(x, y)})"

@@ -118,11 +118,8 @@ def _render_sql(m: str, precision: int) -> str:
 def geohash_sql(lat: str, lon: str, precision: int) -> str:
     """DuckDB oracle text (DuckDB spells base conversion ``to_base``)."""
     half = _half_bits(precision)
-    n = 1 << half
-    x = (f"greatest(0, least({n - 1}, "
-         f"CAST(floor((({lon}) + 180.0) / 360.0 * {float(n)}) AS BIGINT)))")
-    y = (f"greatest(0, least({n - 1}, "
-         f"CAST(floor((({lat}) + 90.0) / 180.0 * {float(n)}) AS BIGINT)))")
+    x = C.grid_oracle_sql(lon, half, 180.0, 360.0)
+    y = C.grid_oracle_sql(lat, half, 90.0, 180.0)
     return _render_sql(C.morton_sql(x, y), precision)
 
 

@@ -810,7 +810,11 @@ def _s2_cell_steps(x: str, y: str, z: str, out: str,
             f"ELSE (CASE WHEN abs({y}) > abs({z}) THEN 1 ELSE 2 END) END")
     comp = (f"CASE WHEN ({axis}) = 0 THEN {x} WHEN ({axis}) = 1 THEN {y} "
             f"ELSE {z} END")
-    face = (f"CAST(CASE WHEN ({comp}) < 0 THEN ({axis}) + 3 "
+    # a NULL or NaN component has no cell: a NULL face makes every
+    # later step, the cell id included, NULL
+    missing = " OR ".join(f"{c} IS NULL OR isnan({c})" for c in (x, y, z))
+    face = (f"CAST(CASE WHEN {missing} THEN NULL "
+            f"WHEN ({comp}) < 0 THEN ({axis}) + 3 "
             f"ELSE ({axis}) END AS BIGINT)")
 
     def on_face(*per_face: str) -> str:

@@ -714,9 +714,10 @@ def _cover_fanout_guard(df: DataFrame, res: int, left: str, bottom: str,
            f"at res {res} (box: ', CAST(`{left}` AS STRING), '..', "
            f"CAST(`{right}` AS STRING), '); pre-split giant boxes or "
            f"lower res / raise max_cells_per_box')")
+    # a box with a NULL or NaN edge covers no cell (NULL count): kept
     return df.withColumn(left, F.expr(
-        f"CASE WHEN {ncells} <= {int(max_cells)} THEN `{left}` "
-        f"ELSE CAST(raise_error({msg}) AS DOUBLE) END"))
+        f"CASE WHEN {ncells} > {int(max_cells)} THEN "
+        f"CAST(raise_error({msg}) AS DOUBLE) ELSE `{left}` END"))
 
 
 def overlap_join_rect(a: DataFrame, b: DataFrame, res: int,
