@@ -3147,14 +3147,7 @@ def q_heatmap_tiles(spark, sf_dir):
 
 
 def _heat_sql():
-    n = float(1 << HEAT_Z)
-    import math as _m
-    hi = repr(_m.nextafter(n, 0.0))
-    xc = f"least(greatest((lon + 180.0) / 360.0 * {n}, 0.0), {hi})"
-    r = f"radians(least(greatest(lat, {-_WM.MAX_LAT}), {_WM.MAX_LAT}))"
-    merc = f"ln(tan({r}) + 1.0 / cos({r}))"
-    yc = (f"least(greatest((1.0 - {merc} / pi()) / 2.0 * {n}, 0.0), "
-          f"{hi})")
+    xc, yc = _WM.tile_xc_sql("lon", HEAT_Z), _WM.tile_yc_sql("lat", HEAT_Z)
     return f"""
 WITH images AS ({IMAGES_SQL}),
 c AS (SELECT {xc} AS xc, {yc} AS yc FROM images),
@@ -3196,15 +3189,8 @@ def q_heatmap_pyramid(spark, sf_dir):
 
 
 def _heat_pyr_sql():
-    import math as _m
     z0 = HEAT_PYR_ZOOMS[0]
-    n = float(1 << z0)
-    hi = repr(_m.nextafter(n, 0.0))
-    xc = f"least(greatest((lon + 180.0) / 360.0 * {n}, 0.0), {hi})"
-    r = f"radians(least(greatest(lat, {-_WM.MAX_LAT}), {_WM.MAX_LAT}))"
-    merc = f"ln(tan({r}) + 1.0 / cos({r}))"
-    yc = (f"least(greatest((1.0 - {merc} / pi()) / 2.0 * {n}, 0.0), "
-          f"{hi})")
+    xc, yc = _WM.tile_xc_sql("lon", z0), _WM.tile_yc_sql("lat", z0)
     lg = HEAT_SIZE.bit_length() - 1
     levels = []
     for zv in HEAT_PYR_ZOOMS:
