@@ -47,8 +47,7 @@ the engine side only and are tested numpy-vs-Spark.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .steps import select_steps
 
@@ -874,12 +873,12 @@ def _s2_cell_steps(x: str, y: str, z: str, out: str,
     return steps + [(out, cell)]
 
 
-def with_s2_cell(df: DataFrame, x: str | Column, y: str | Column,
-                 z: str | Column, out: str = "s2_cell",
+def with_s2_cell(df: DataFrame, x: str, y: str, z: str,
+                 out: str = "s2_cell",
                  level: int = MAX_LEVEL) -> DataFrame:
     """Append column ``out`` = S2 cell id of direction (x, y, z), given
-    as column names or Columns (Columns are bound to scratch columns
-    first, in one more select).
+    as column names (bind a computed direction with ``selectExpr``
+    first, e.g. :func:`with_latlon_xyz`).
 
     The whole encode is one ``selectExpr`` of SQL steps
     (:func:`_s2_cell_steps`, functions/steps.select_steps), so it costs
@@ -901,16 +900,6 @@ def with_s2_cell(df: DataFrame, x: str | Column, y: str | Column,
         raise ValueError(
             f"with_s2_cell output column {out!r} already exists on the "
             f"input frame; drop it first or pass a different `out`")
-    xyz = (x, y, z)
-    if not all(isinstance(c, str) for c in xyz):
-        names = ("_s2x", "_s2y", "_s2z")
-        if set(names) & set(df.columns):
-            raise ValueError(
-                f"with_s2_cell scratch columns {names} collide with input "
-                f"columns; rename them first")
-        df = df.select("*", *[(F.col(c) if isinstance(c, str) else c)
-                              .alias(n) for c, n in zip(xyz, names)])
-        return with_s2_cell(df, *names, out=out, level=level).drop(*names)
     return select_steps(df, _s2_cell_steps(x, y, z, out, level),
                         keep=(out,))
 

@@ -19,8 +19,6 @@ Spark SQL are DECIMAL, so double constants carry a ``D`` suffix.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 
@@ -40,18 +38,3 @@ def select_steps(df: DataFrame, steps: list[tuple[str, str]],
     out = df.selectExpr("*", *[f"{e} AS `{a}`" for a, e in steps])
     scratch = [a for a in names if a not in keep]
     return out.drop(*scratch) if scratch else out
-
-
-def inline_sql(steps: list[tuple[str, str]]) -> str:
-    """The last of ``steps`` as ONE expression, each earlier alias
-    replaced by its parenthesized text — for a caller that must return
-    a Column (``F.expr``) rather than a frame. A step its successor
-    reads twice doubles the text, so only short chains belong here (a
-    Morton key's five spread steps: 32-fold, a few KB)."""
-    text: dict[str, str] = {}
-    for alias, expr in steps:
-        if text:
-            pat = r"\b(" + "|".join(map(re.escape, text)) + r")\b"
-            expr = re.sub(pat, lambda m: f"({text[m.group(1)]})", expr)
-        text[alias] = expr
-    return text[steps[-1][0]]

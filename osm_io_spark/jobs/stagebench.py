@@ -27,9 +27,11 @@ stage once ran faster than its subset). A cell does 1 warm-up and 3
 timed runs, records loadavg before and after, the seconds of each
 phase (session setup, warm-up, timed runs, check) and the driver's
 py4j round trips over the timed runs (plan building plus actions: the
-build cost of a row), and prints ONE JSON line; a failed check exits
-non-zero and the orchestrator raises with the cell's stderr tail. The
-orchestrator prints each cell's round trips to stderr and, per file,
+build cost of a row) and the Spark jobs they ran (``spark_jobs``, one
+job group; a job regression shows without a trace), and prints ONE
+JSON line; a failed check exits non-zero and the orchestrator raises
+with the cell's stderr tail. The orchestrator prints each cell's
+round trips and jobs to stderr and, per file,
 the cells' wall and phase totals. The pure-codegen control cell runs once per
 level; its efficiency sits next to every row's, since on a shared
 host the engine-vs-control ratio, not a single wall number, decides.
@@ -484,8 +486,7 @@ def _s2_encode(spark, n):
     # the 30-level Hilbert encode: a pure-Column projection chain
     # stepping 4 levels per LOOKUP4 table lookup (no UDF, no shuffle)
     from ..functions import s2
-    out = s2.with_s2_cell(_directions(spark, n), F.col("x"), F.col("y"),
-                          F.col("z"))
+    out = s2.with_s2_cell(_directions(spark, n), "x", "y", "z")
     return {"bit_xor": out.agg(F.expr("bit_xor(s2_cell)")).collect()[0][0]}
 
 
@@ -1015,15 +1016,24 @@ def measure(spark, stage: Stage, size=None, runs: int = RUNS,
     """Warm-up + timed runs of ``stage`` at ``size`` (default: its own),
     then its check, outside the timed region; ``phases`` holds the
     seconds of each, ``py4j_round_trips`` the driver's py4j round trips
-    summed over the timed runs (plan building plus actions)."""
+    summed over the timed runs (plan building plus actions), and
+    ``spark_jobs`` the Spark jobs they ran (one job group)."""
     size = stage.size if size is None else size
+    sc = spark.sparkContext
+    group = f"stagebench-timed-{stage.id}"
     t = [time.perf_counter()]
     with session_conf(spark, stage.conf):
         Q.time_runs(lambda: stage.run(spark, size), 0, warmup)
         t.append(time.perf_counter())
-        with count_round_trips() as trips:
-            samples, counts = Q.time_runs(lambda: stage.run(spark, size),
-                                          runs)
+        sc.setJobGroup(group, f"{stage.id} timed runs")
+        try:
+            with count_round_trips() as trips:
+                samples, counts = Q.time_runs(
+                    lambda: stage.run(spark, size), runs)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
         t.append(time.perf_counter())
         if stage.check is not None:
             counts = {**counts, **stage.check(spark, size, counts)}
@@ -1031,7 +1041,7 @@ def measure(spark, stage: Stage, size=None, runs: int = RUNS,
     return {"samples": samples, "counts": counts,
             "phases": dict(zip(("warmup", "timed", "check"),
                                np.diff(t).round(3).tolist())),
-            "py4j_round_trips": trips[0]}
+            "py4j_round_trips": trips[0], "spark_jobs": jobs}
 
 
 def levels() -> tuple[int, int]:
@@ -1098,6 +1108,7 @@ def run_cell(stage: Stage, cpus: int, sf_dir: str) -> dict:
     lo, med, _ = summary(out["samples"])
     print(f"# {stage.id} local[{cpus}]: min {lo:.2f}s median {med:.2f}s "
           f"wall {out['wall']:.1f}s py4j {out['py4j_round_trips']:,} "
+          f"jobs {out['spark_jobs']:,} "
           f"{out['counts']}", file=sys.stderr, flush=True)
     return out
 

@@ -16,9 +16,10 @@ row/byte metrics in the manifest, re-runs skip completed shards
 
 Shards partition the TILE key space (xxhash of x,y mod N), so a crash
 loses at most ``--commit-every`` shards of encode work and re-running
-reprocesses only the missing ones. The feature frame is pinned with a
-lazy localCheckpoint before the per-shard fan-out (CLAUDE.md fan-out
-rule: each shard's write would otherwise re-run the clip kernel).
+reprocesses only the missing ones. The blob frame is pinned with an
+eager localCheckpoint before the per-shard fan-out (the fan-out
+rule: each shard's write would otherwise re-run the clip kernel; a
+lazy one would run the encoder's shuffle twice under AQE).
 
 ``--materialize DIR`` additionally writes the final snapshot out as a
 z/x/y.mvt file tree (the delivery layout) — driver-side, guarded to
@@ -27,7 +28,9 @@ driver-sized tile counts; the parquet snapshot is the scale path.
 ``--layered`` exports the COMPLETE map-server tile instead of the
 polygon-only layer: areas + roads + pois in one multi-layer blob per
 tile (operators/tiles.encode_mvt_layers), with real OSM tags as
-feature attributes when the input is a .pbf.
+feature attributes when the input is a .pbf. A .pbf is decoded and
+assembled once for all three layers and their attributes
+(:func:`source_layers`).
 """
 
 from __future__ import annotations
@@ -58,44 +61,48 @@ def source_layers(spark, sf_dir: str | None, pbf: str | None, zoom: int):
     """[(name, features, kind[, attrs])] for the --layered export: the
     complete map-server tile (areas + roads + pois). PBF input carries
     real OSM tags into every layer; the bench corpus ships polygons,
-    their rings read as open polylines, and the image probe as POIs."""
+    their rings read as open polylines, and the image probe as POIs.
+
+    The PBF branch runs operators/assemble's one assembly path once and
+    reads every layer from it: one current view of all element types,
+    one ``way_lines`` (way polygons, relation members and the roads
+    layer), one polygon frame (the areas features and their tag
+    attributes). Each of the three is pinned with an eager
+    localCheckpoint before the next step reads it (fan-out rule; a
+    lazy one would re-run the window and join shuffles under AQE), so
+    building the layers runs those three jobs and nothing upstream of
+    them runs again; the checkpoints are freed with the frames."""
     if pbf:
         from ..operators import assemble as ASM
-        from ..operators.current import current_view
         from ..sources.pbf import decode as PD
 
-        # three branches consume the decode — pin it once (fan-out rule)
-        els = PD.read_pbf(spark, pbf).localCheckpoint(eager=False)
-        nodes = current_view(els.filter(F.col("etype") == "node"))
-        ways = current_view(els.filter(F.col("etype") == "way"))
-        polys = ASM.assemble_polygons(els)
-        lines = (ASM.way_lines(ways, nodes)
-                 .select(F.col("id").alias("way_id"),
-                         F.col("ring").alias("line"),
-                         "left", "bottom", "right", "top"))
-        pois = (nodes.filter(F.size("tags") > 0)
-                .select(F.col("id").alias("point_id"), "lon", "lat"))
+        cur = ASM.current_elements(PD.read_pbf(spark, pbf)).localCheckpoint()
+        nodes, ways, rels = ASM.by_type(cur)
+        lines = ASM.way_lines(ways, nodes).localCheckpoint()
+        polys = ASM.polygons(rels, lines).localCheckpoint()
+        pois = nodes.filter(F.size("tags") > 0)
 
         def _kv(df, idcol):
-            # OSM tags → the layer attribute frame shape. Deterministic
-            # min-struct dedupe: polygon ids conflate the way and
-            # relation namespaces, and attrs need one row per fid
-            d = df.select(
-                F.col(idcol).alias("fid"),
-                F.transform("tags", lambda t: t["k"]).alias("tag_ks"),
-                F.transform("tags", lambda t: t["v"]).alias("tag_vs"))
-            return (d.groupBy("fid")
-                    .agg(F.min(F.struct("tag_ks", "tag_vs")).alias("_s"))
-                    .select("fid", F.col("_s.tag_ks").alias("tag_ks"),
-                            F.col("_s.tag_vs").alias("tag_vs")))
+            # OSM tags → the layer attribute frame shape
+            return df.selectExpr(f"`{idcol}` AS fid",
+                                 "transform(tags, t -> t.k) AS tag_ks",
+                                 "transform(tags, t -> t.v) AS tag_vs")
 
+        # polygon ids conflate the way and relation namespaces, and
+        # attrs need one row per fid: deterministic min-struct dedupe
+        area_kv = (_kv(polys, "polygon_id").groupBy("fid")
+                   .agg(F.min(F.struct("tag_ks", "tag_vs")).alias("_s"))
+                   .selectExpr("fid", "_s.tag_ks", "_s.tag_vs"))
         return [
             ("areas", TL.build_vector_tiles(polys, zoom), "polygon",
-             _kv(polys, "polygon_id")),
-            ("roads", TL.build_vector_tile_lines(lines, zoom), "line",
-             _kv(ways, "id")),
-            ("pois", TL.tile_points(pois, zoom), "point",
-             _kv(nodes, "id")),
+             area_kv),
+            ("roads", TL.build_vector_tile_lines(
+                lines.selectExpr("id AS way_id", "ring AS line", "left",
+                                 "bottom", "right", "top"), zoom),
+             "line", _kv(lines, "id")),
+            ("pois", TL.tile_points(
+                pois.selectExpr("id AS point_id", "lon", "lat"), zoom),
+             "point", _kv(pois, "id")),
         ]
     from ..queries import images_probe
 
@@ -133,6 +140,9 @@ def main(argv: list[str] | None = None) -> dict:
                     help="also write z/x/y.mvt files (driver-sized sets)")
     ap.add_argument("--max-materialize", type=int, default=100_000)
     args = ap.parse_args(argv)
+    if args.zoom > 16:
+        ap.error("--zoom above 16: the tile store's Morton key "
+                 "(tiles.tile_morton_col) covers tile indices below 2^16")
 
     spark = get_spark("tile-export")
     spark.sparkContext.setLogLevel("ERROR")
@@ -164,7 +174,7 @@ def main(argv: list[str] | None = None) -> dict:
     else:
         blobs = blobs.withColumn(
             "shard", F.pmod(F.xxhash64("x", "y"), F.lit(args.shards)))
-    blobs = blobs.localCheckpoint(eager=False)
+    blobs = blobs.localCheckpoint()
 
     catalog = SnapshotCatalog(args.out)
     suffix = "_layered" if args.layered else ""

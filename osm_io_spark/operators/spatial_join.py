@@ -34,7 +34,7 @@ from pyspark.sql.types import StructType
 from ..functions import cells as C
 from ..functions import geometry as G
 from ..functions.steps import select_steps
-from .util import widen
+from .util import local_frame, widen
 
 # ---------------------------------------------------------------------------
 # covers
@@ -443,12 +443,13 @@ def s2_distance_join(probe: DataFrame, sites: DataFrame, radius_m: float,
         [float(r[site_lat]) for r in rows],
         [float(r[site_lon]) for r in rows], [radius_rad] * len(rows),
         max_level=max_level, max_cells=max_cells)
-    cover_rows = [(r[site_id], int(c))
-                  for r, cover in zip(rows, site_covers) for c in cover]
-    spark = probe.sparkSession
     sid_dt = sites.schema[site_id].dataType.simpleString()
-    covers = spark.createDataFrame(
-        cover_rows, f"{site_id} {sid_dt}, cover_id long")
+    covers = local_frame(
+        probe.sparkSession,
+        {site_id: [r[site_id] for r, cover in zip(rows, site_covers)
+                   for _ in cover],
+         "cover_id": [int(c) for cover in site_covers for c in cover]},
+        f"{site_id} {sid_dt}, cover_id long")
     pts = S2.with_s2_cell(
         S2.with_latlon_xyz(probe, probe_lat, probe_lon,
                            ("_s2x", "_s2y", "_s2z")),

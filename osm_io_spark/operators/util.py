@@ -5,6 +5,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def local_frame(spark, columns: dict, schema) -> DataFrame:
+    """A small driver-built table (``columns``: name → list of values)
+    as a ``LocalRelation``, through Arrow. ``createDataFrame`` of a
+    Python list plans a ``PythonRDD`` instead, and the first one in a
+    JVM starts a second ``pyspark.daemon``: about 1 s and three more
+    Python processes."""
+    import pyarrow as pa
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def planned_partitions(df: DataFrame) -> int | None:
     """Partition count of ``df``'s physical plan, read without running
     a job, or None when adaptive execution decides it. Asking

@@ -1449,12 +1449,10 @@ def q_osm_geodesic_stats(spark, sf_dir):
     an independent Girard angle-sum referee in tests/test_measures.py."""
     from .operators import assemble as ASM
     from .operators import measures as ME
-    from .operators.current import current_view
     from .sources.pbf import decode as PD
     path = _fixture_pbf_path(spark)
     els = PD.read_pbf(spark, path)
-    nodes = current_view(els.filter(F.col("etype") == "node"))
-    ways = current_view(els.filter(F.col("etype") == "way"))
+    nodes, ways, _ = ASM.by_type(ASM.current_elements(els))
     lens = ME.way_lengths(ways, nodes)
     areas = ME.ring_areas(ASM.assemble_polygons(els))
     out_len = lens.agg(
@@ -2144,14 +2142,10 @@ _S2_Z_SQL = "(l_tax * 12e0 - 0.51e0)"
 
 
 def _s2_points(spark, sf_dir, keep):
-    li = _t(spark, sf_dir, "lineitem").select(*keep, "l_quantity",
-                                              "l_discount", "l_tax")
-    pts = S2.with_s2_cell(
-        li,
-        F.col("l_quantity") / 25.0 - 1.02,
-        F.col("l_discount") * 10.0 - 0.55,
-        F.col("l_tax") * 12.0 - 0.51)
-    return pts.select(*keep, "s2_cell")
+    li = _t(spark, sf_dir, "lineitem").selectExpr(
+        *keep, f"{_S2_X_SQL} AS _x", f"{_S2_Y_SQL} AS _y",
+        f"{_S2_Z_SQL} AS _z")
+    return S2.with_s2_cell(li, "_x", "_y", "_z").drop("_x", "_y", "_z")
 
 
 def q_s2_cellid(spark, sf_dir):
@@ -3315,14 +3309,12 @@ def q_vector_tile_lines(spark, sf_dir):
     (bit-exact) and an independent Liang–Barsky clipper in
     tests/test_tile_lines.py."""
     from .operators import assemble as ASM
-    from .operators import current as CUR
     from .operators import tiles as TL
     from .sources.pbf import decode as PD
 
     path = _fixture_pbf_path(spark)
-    els = PD.read_pbf(spark, path)
-    nodes = CUR.current_view(els.filter(F.col("etype") == "node"))
-    ways = CUR.current_view(els.filter(F.col("etype") == "way"))
+    nodes, ways, _ = ASM.by_type(ASM.current_elements(
+        PD.read_pbf(spark, path)))
     lines = (ASM.way_lines(ways, nodes)
              .select(F.col("id").alias("way_id"),
                      F.col("ring").alias("line"),

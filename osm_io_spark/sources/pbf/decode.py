@@ -361,10 +361,14 @@ def decode_block(data: bytes) -> pd.DataFrame:
 
 def blob_manifest(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """(manifest of the file's OSMData blobs, their count) — the driver
-    scans the blob headers anyway, so the count costs no job."""
-    descs = [d for d in scan_blobs(path) if d["blob_type"] == "OSMData"]
+    scans the blob headers anyway, so the count costs no job. The
+    manifest is a ``LocalRelation`` (operators/util.local_frame), so
+    reading a file starts no Python worker on the driver side."""
     from ... import schemas
-    return spark.createDataFrame(descs, schema=schemas.BLOB_DESC), len(descs)
+    from ...operators.util import local_frame
+    descs = [d for d in scan_blobs(path) if d["blob_type"] == "OSMData"]
+    cols = {f: [d[f] for d in descs] for f in schemas.BLOB_DESC.fieldNames()}
+    return local_frame(spark, cols, schemas.BLOB_DESC), len(descs)
 
 
 def _decode_batches(batches):

@@ -271,13 +271,110 @@ def test_knn_small_build_is_one_kernel_pass(spark, name):
     assert not re.search(r"Join|CartesianProduct", tree)
 
 
+def _executed_plans(spark, run) -> list[str]:
+    """Call ``run()`` and return, in order, the final physical plan of
+    every SQL execution it started (actions and eager checkpoints
+    alike): the formatted operator tree up to AQE's ``Initial Plan``,
+    then the details of the nodes in it. Work a caller pinned before
+    its last action shows here, once; the last action's own plan
+    shows only the checkpoint scans."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def executions():
+        return sorted(conv.asJava(store.executionsList()),
+                      key=lambda e: e.executionId())
+
+    seen = {e.executionId() for e in executions()}
+    run()
+    # the status store fills from the asynchronous listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    out = []
+    for e in executions():
+        if e.executionId() in seen:
+            continue
+        desc = e.physicalPlanDescription()
+        tree = A.operator_tree(desc).split("== Initial Plan ==")[0]
+        ids = set(re.findall(r"\((\d+)\)", tree))
+        blocks = [tree]
+        for b in desc.split("\n\n")[1:]:
+            m = re.match(r"\s*\((\d+)\) ", b)
+            if m and m.group(1) in ids:
+                blocks.append(b)
+        out.append("\n\n".join(blocks))
+    return out
+
+
 @pytest.mark.parametrize("name, cap", [("mvt_tiles", 23),
-                                       ("mvt_layered_tiles", 42)])
+                                       ("mvt_layered_tiles", 5)])
 def test_mvt_sink_exchange_budget(spark, name, cap):
-    """The MVT sinks stay within the exchange counts BENCH/PLANS.md
-    records; all but the encoder's one belong to the fixture PBF
-    assembly and the per-layer attribute joins."""
+    """The MVT sinks stay within their exchange counts. ``mvt_tiles``:
+    all but the encoder's one belong to the fixture PBF assembly and
+    the attribute join. ``mvt_layered_tiles`` reads pinned assembly
+    frames (its pinned work is counted by
+    test_layered_source_runs_each_shared_frame_once); its 5 are the
+    polygon-attribute dedupe, the areas and roads fan-out widens, the
+    encoder's tile-key repartition and the final sort (42 when every
+    layer re-ran the assembly)."""
     A.audit(Q.QUERIES[name](spark, SF_DIR), max_shuffles=cap)
+
+
+def test_layered_source_runs_each_shared_frame_once(spark):
+    """Over every SQL execution of the layered export on the fixture
+    PBF (the eager pins of jobs/tile_export.source_layers and the final
+    collect): the PBF is decoded once, the current view is one window
+    for all element types, ``way_lines`` explodes the refs once, and
+    the whole export plans 9 shuffles. Before, each layer and each
+    attribute frame re-ran its own current views and its own
+    ``way_lines``: 14 current-view windows over the executions, 42
+    exchanges in the final plan alone."""
+    Q._fixture_pbf_path(spark)  # written once per machine, not counted
+    plans = _executed_plans(
+        spark, lambda: Q.QUERIES["mvt_layered_tiles"](spark, SF_DIR).collect())
+    text = "\n".join(plans)
+    assert text.count("_decode_batches(") == 1, text
+    assert sum(A.count_op(p, "Window") for p in plans) <= 3
+    assert text.count("posexplode(refs") == 1
+    assert sum(A.count_op(p, "Exchange") for p in plans) <= 9
+
+
+def test_layered_source_job_count(spark):
+    """The Spark jobs of ``encode_mvt_layers(source_layers(...))``
+    collected on the fixture PBF, pinned: three eager pins (current
+    view, way lines, polygons), then the encode reads only them: 17
+    jobs (27 when every layer re-ran the assembly)."""
+    from osm_io_spark.jobs.tile_export import source_layers
+    from osm_io_spark.operators import tiles as TL
+
+    path = Q._fixture_pbf_path(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("layered_export", "layered export")
+    try:
+        TL.encode_mvt_layers(source_layers(spark, None, path, 13)).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("layered_export")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 17, sorted(jobs)
+
+
+def test_driver_tables_are_local_relations(spark):
+    """Small driver-built tables (the PBF blob manifest, the distance
+    join's site covers) are ``LocalRelation``s: a ``createDataFrame``
+    of a Python list plans a ``PythonRDD`` scan, whose first run in a
+    JVM starts a second Python daemon (about 1 s)."""
+    from osm_io_spark.sources.pbf import decode as PD
+
+    manifest, n = PD.blob_manifest(spark, Q._fixture_pbf_path(spark))
+    plan = manifest._jdf.queryExecution().optimizedPlan().toString()
+    assert n > 0 and plan.startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+    # the covers are pinned inside the containment join, so their
+    # source shows in the executed plans, not in the optimized one
+    text = "\n".join(_executed_plans(
+        spark, lambda: Q.q_s2_distance_join(spark, SF_DIR).collect()))
+    assert "LocalTableScan" in text
+    assert "PythonRDD" not in text, text
 
 
 def test_mvt_encoder_adds_one_exchange(spark):

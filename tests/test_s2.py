@@ -97,7 +97,7 @@ def test_numpy_vs_column_bit_identical(spark, duck):
         want9 = s2.s2_from_xyz_np(x, y, z, level=9)
     df = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(len(x)), "x": x, "y": y, "z": z}))
-    out = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
+    out = (s2.with_s2_cell(df, "x", "y", "z")
            .selectExpr("pid", "s2_cell",
                        f"{s2.s2_parent_sql('s2_cell', 9)} AS p9",
                        f"{s2.s2_level_sql('s2_cell')} AS lv")
@@ -110,7 +110,7 @@ def test_numpy_vs_column_bit_identical(spark, duck):
                  f"{s2.s2_level_sql('c')} AS lv FROM s2_leaves").df()
     assert np.array_equal(d.p9.to_numpy(), want9)
     assert set(d.lv.tolist()) == {30}
-    out9 = (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"), level=9)
+    out9 = (s2.with_s2_cell(df, "x", "y", "z", level=9)
             .select("pid", "s2_cell").toPandas().sort_values("pid"))
     assert np.array_equal(out9.s2_cell.to_numpy(), want9)
 
@@ -144,7 +144,7 @@ def _leaf_points(spark, n, seed):
     x, y, z = _random_dirs(n=n, seed=seed)
     df = spark.createDataFrame(
         pd.DataFrame({"pid": np.arange(len(x)), "x": x, "y": y, "z": z}))
-    return (s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
+    return (s2.with_s2_cell(df, "x", "y", "z")
             .localCheckpoint(eager=False))
 
 
@@ -382,7 +382,7 @@ def test_encode_projection_chain_stays_jit_small(spark):
         (F.col("id") + 1).cast("double").alias("x"),
         (F.col("id") + 2).cast("double").alias("y"),
         (F.col("id") + 3).cast("double").alias("z"))
-    q = s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
+    q = s2.with_s2_cell(df, "x", "y", "z")
     plan = q._jdf.queryExecution().optimizedPlan().toString()
     n_proj = plan.count("Project [")
     assert n_proj <= 14, f"encode chain regrew to {n_proj} projections"
@@ -514,10 +514,9 @@ def test_with_s2_cell_rejects_existing_out_column(spark):
           .select(F.lit(0.5).alias("x"), F.lit(0.5).alias("y"),
                   F.lit(0.5).alias("z"), F.lit(1).alias("s2_cell")))
     with pytest.raises(ValueError, match="already exists"):
-        s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"))
+        s2.with_s2_cell(df, "x", "y", "z")
     # a different out name passes
-    out = s2.with_s2_cell(df, F.col("x"), F.col("y"), F.col("z"),
-                          out="cell2")
+    out = s2.with_s2_cell(df, "x", "y", "z", out="cell2")
     assert out.columns.count("cell2") == 1
 
 

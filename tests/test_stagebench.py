@@ -121,6 +121,7 @@ def test_cell_subprocess_prints_one_json_line():
     assert phases["check"] >= 0
     # the control's timed runs each build and collect one query
     assert out["py4j_round_trips"] >= SB.RUNS
+    assert out["spark_jobs"] >= SB.RUNS
     # run_cell adds the subprocess wall; totals sum it and each phase
     totals = SB.phase_totals([{**out, "wall": 10.0}, {**out, "wall": 5.0}])
     assert totals == {"wall": 15.0, **{k: round(2 * v, 1)
